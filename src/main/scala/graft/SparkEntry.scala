@@ -129,10 +129,12 @@ object SparkEntry {
     val src = memoFixture(s"$dir|corpus|$tag")(build)
     val conf = s.sparkContext.hadoopConfiguration
     val srcP = new org.apache.hadoop.fs.Path(src)
+    val destP = new org.apache.hadoop.fs.Path(dest)
     val fs = srcP.getFileSystem(conf)
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, srcP, fs, new org.apache.hadoop.fs.Path(dest), false, conf)
-    ()
+    // an existing dest would receive the copy NESTED inside it
+    require(!fs.exists(destP), s"staged corpus destination $dest already exists")
+    require(org.apache.hadoop.fs.FileUtil.copy(fs, srcP, fs, destP, false, conf),
+      s"staging corpus copy $src -> $dest failed")
   }
 
   /** Deterministic-dedup base used by D5/D8: sk over l_orderkey alone

@@ -13,8 +13,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * double-counts it. Exactly-once therefore needs a transactional
   * guard, not just idempotence: each swap commits the applied batch
   * id ATOMICALLY with the state (a `_graft_applied_batch` marker
-  * written into the staging directory before the rename — the same
-  * rename that publishes the data publishes the marker). A batch
+  * written into the staging directory before the [[DirSwap]] seal —
+  * the same rename that publishes the data publishes the marker, and
+  * a staging directory missing either is unsealed, so recovery
+  * discards it and the replayed batch applies exactly once). A batch
   * re-delivered after a crash-between-swap-and-checkpoint-commit
   * finds its own id already recorded and skips; the marker's
   * underscore prefix keeps every parquet reader blind to it. This is
@@ -30,6 +32,11 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 object AggStateSink {
 
   private[sinks] val BatchMarker = "_graft_applied_batch"
+
+  /** The state swap's seal. Not the parquet `_SUCCESS`: the batch
+    * marker is written after the data job, so `_SUCCESS` alone would
+    * seal a staging directory that lacks its batch id. */
+  private val Swap = DirSwap("__staging", "__prev", "_GRAFT_STATE_READY")
 
   /** The batch id recorded by the last completed swap, if any. */
   def appliedBatch(spark: SparkSession, statePath: String): Option[Long] = {
@@ -63,9 +70,7 @@ object AggStateSink {
     val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(statePath)
-    val staging = new Path(statePath + "__staging")
-    val prev = new Path(statePath + "__prev")
-    MergeUpsert.recoverSwap(fs, target, staging, prev)
+    Swap.recover(fs, statePath)
 
     if (appliedBatch(spark, statePath).exists(_ >= batchId)) return false
 
@@ -106,9 +111,7 @@ object AggStateSink {
     val fs = new Path(statePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val target = new Path(statePath)
-    val staging = new Path(statePath + "__staging")
-    val prev = new Path(statePath + "__prev")
-    MergeUpsert.recoverSwap(fs, target, staging, prev)
+    Swap.recover(fs, statePath)
 
     if (appliedBatch(spark, statePath).exists(_ >= batchId)) return false
 
@@ -128,30 +131,17 @@ object AggStateSink {
   }
 
   /** Shared tail of the transaction: stage the next state, write the
-    * batch-id marker INTO the staging dir, and let one rename
+    * batch-id marker INTO the staging dir, and let one sealed swap
     * publish both. */
   private def commitState(
       fs: org.apache.hadoop.fs.FileSystem,
       statePath: String,
       next: DataFrame,
       batchId: Long): Unit = {
-    val target = new Path(statePath)
-    val staging = new Path(statePath + "__staging")
-    val prev = new Path(statePath + "__prev")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    next.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-    // marker rides the same rename as the data: state and applied-id
-    // publish atomically
+    val staging = Swap.staging(statePath)
+    next.write.mode(SaveMode.Overwrite).parquet(staging)
     val out = fs.create(new Path(staging, BatchMarker), true)
     try out.write(batchId.toString.getBytes("UTF-8")) finally out.close()
-
-    if (fs.exists(prev)) fs.delete(prev, true)
-    if (fs.exists(target)) {
-      if (!fs.rename(target, prev))
-        sys.error(s"state swap failed: could not move $target aside")
-    }
-    if (!fs.rename(staging, target))
-      sys.error(s"state swap failed: could not promote $staging")
-    fs.delete(prev, true)
+    Swap.commit(fs, statePath)
   }
 }

@@ -88,11 +88,15 @@ object BloomIndex {
 
   /** Incremental maintenance: new files gain per-file blooms at the
     * EXISTING geometry (read off a stored row, so collect-time sizing
-    * is sticky), vanished files' rows drop, old rows carry verbatim. */
+    * is sticky), vanished files' rows drop, old rows carry verbatim.
+    * The new index publishes through the same recoverable swap as the
+    * ANN sidecars ([[SidecarMaintenance.publishDir]]), healed on
+    * entry. */
   def refresh(spark: SparkSession, table: String, column: String): Unit = {
     val idx = indexPath(table)
     val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SidecarMaintenance.recoverPublish(spark, idx)
     require(fs.exists(new Path(idx)),
       s"no bloom index at $idx — bootstrap with collect() (sizing lives there)")
     val current = dataFilePaths(spark, table).toSet
@@ -116,8 +120,7 @@ object BloomIndex {
           bloomsOf(spark, table, fresh, column, words.length * 64, k))
       }
     merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$idx.next")
-    fs.delete(new Path(idx), true)
-    fs.rename(new Path(s"$idx.next"), new Path(idx))
+    SidecarMaintenance.publishDir(spark, idx)
   }
 
   /** The table bloom: bit-OR of every file bloom — bit-identical to

@@ -13,9 +13,9 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStrea
   * KB-sized files turn every scan into a listing/open-cost problem
   * long before bytes matter. `compactWork` bin-packs the zone's data
   * files into `targetBytes`-sized outputs with the same atomic
-  * write-new-then-swap discipline K2 uses ([[MergeUpsert.mergeInto]]),
-  * so a crash at any point leaves the table recoverable and readers
-  * always see a complete zone.
+  * write-new-then-swap discipline K2 uses ([[DirSwap]]), so a crash
+  * at any point leaves the table recoverable and readers always see
+  * a complete zone.
   *
   * Streaming-sink awareness (the part naive compactors get wrong):
   * when the zone carries a `_spark_metadata` FileStreamSink log, that
@@ -58,11 +58,19 @@ import org.apache.spark.sql.execution.streaming.sinks.{FileStreamSink, FileStrea
   */
 object Compaction {
 
-  /** Commit marker: written LAST into the staged zone, gates promote
-    * during crash recovery. The parquet `_SUCCESS` marker cannot gate
-    * here — the sink-log rewrite happens after the data write, so a
-    * staging dir can hold committed parquet and a half-written log. */
-  private val CommitMarker = "_GRAFT_COMPACTED"
+  /** The compaction swap, sealed by its own marker: the parquet
+    * `_SUCCESS` cannot seal here — the sink-log rewrite (or the
+    * `_zdict` copy) happens after the data write, so a staging dir
+    * can hold committed parquet and a half-written log. */
+  private val Swap = DirSwap("__cstaging", "__cprev", "_GRAFT_COMPACTED")
+
+  /** Heal an interrupted compaction swap of the zone at `workPath`.
+    * Run on entry by [[compactWork]] and by the streaming ingest into
+    * the zone, so an ingest never appends into a zone parked mid-swap
+    * (it would start a fresh sink log there). */
+  private[graft] def recover(fs: FileSystem, workPath: String): Unit = {
+    Swap.recover(fs, workPath); ()
+  }
 
   private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.filter { st =>
@@ -91,9 +99,8 @@ object Compaction {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
     val target = new Path(workPath)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(workPath + "__cstaging")
-    val prev = new Path(workPath + "__cprev")
-    recoverCompaction(fs, target, staging, prev)
+    val staging = new Path(Swap.staging(workPath))
+    recover(fs, workPath)
     require(fs.exists(target), s"no zone to compact at $workPath")
     require(!fs.listStatus(target).exists(st =>
       st.isDirectory && st.getPath.getName != FileStreamSink.metadataDir),
@@ -112,7 +119,6 @@ object Compaction {
       } else dataFiles(fs, target).map(_.getLen).sum
     val numFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
 
-    if (fs.exists(staging)) fs.delete(staging, true)
     // coalesce, not repartition: compaction must never shuffle the
     // zone. The scan itself does the bin-packing — maxPartitionBytes
     // is pinned to the target for this one read so splits track the
@@ -130,14 +136,7 @@ object Compaction {
     } finally spark.conf.set(mpbKey, mpbPrev)
 
     if (hasLog) rewriteSinkLog(spark, fs, target, staging)
-    fs.create(new Path(staging, CommitMarker), true).close()
-
-    if (fs.exists(prev)) fs.delete(prev, true)
-    if (!fs.rename(target, prev))
-      sys.error(s"compaction swap failed: could not move $target aside")
-    if (!fs.rename(staging, target))
-      sys.error(s"compaction swap failed: could not promote $staging")
-    fs.delete(prev, true)
+    Swap.commit(fs, workPath)
     dataFiles(fs, target).size
   }
 
@@ -172,8 +171,8 @@ object Compaction {
     * pass is a no-op returning [[PageTier]], so the call is
     * idempotent on a cadence.
     *
-    * Same staged write → commit marker → rename-swap discipline and
-    * crash recovery as [[compactWork]]. Flat (unpartitioned) zones
+    * Same staged write → sealed [[DirSwap]] and crash recovery as
+    * [[compactWork]]. Flat (unpartitioned) zones
     * without a streaming sink log — the shape
     * [[graft.sources.ZstdCorpus.writeCompressed]] produces. */
   def compactCorpusTier(
@@ -188,9 +187,8 @@ object Compaction {
       "targetBytes and targetRowsPerFile must be positive")
     val target = new Path(dir)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(dir + "__cstaging")
-    val prev = new Path(dir + "__cprev")
-    recoverCompaction(fs, target, staging, prev)
+    val staging = new Path(Swap.staging(dir))
+    recover(fs, dir)
     require(fs.exists(target), s"no corpus zone at $dir")
     require(!fs.listStatus(target).exists(_.isDirectory),
       s"$dir is partitioned or stream-logged — compactCorpusTier " +
@@ -198,7 +196,6 @@ object Compaction {
     val dictP = graft.sources.ZstdCorpus.dictPath(dir)
     if (!fs.exists(dictP)) return PageTier // already graduated
 
-    if (fs.exists(staging)) fs.delete(staging, true)
     val totalBytes = dataFiles(fs, target).map(_.getLen).sum
     val graduated = totalBytes >= graduateAtBytes
     if (!graduated) {
@@ -218,13 +215,7 @@ object Compaction {
       graft.sources.ZstdCorpus.graduate(
         spark, dir, staging.toString, textCol, targetRowsPerFile)
     }
-    fs.create(new Path(staging, CommitMarker), true).close()
-    if (fs.exists(prev)) fs.delete(prev, true)
-    if (!fs.rename(target, prev))
-      sys.error(s"corpus compaction swap failed: could not move $target aside")
-    if (!fs.rename(staging, target))
-      sys.error(s"corpus compaction swap failed: could not promote $staging")
-    fs.delete(prev, true)
+    Swap.commit(fs, dir)
     if (graduated) PageTier else DictTier
   }
 
@@ -262,31 +253,5 @@ object Compaction {
       if (!newLog.add(id, payload))
         sys.error(s"compaction log rewrite failed at batch $id")
     }
-  }
-
-  /** Crash recovery, same shape as [[MergeUpsert.recoverSwap]] but
-    * gated on the compaction's own commit marker (see its doc):
-    *  - target missing, staging committed: finish the swap;
-    *  - target missing, staging uncommitted, prev present: restore;
-    *  - target present: drop leftovers. */
-  private[sinks] def recoverCompaction(
-      fs: FileSystem,
-      target: Path, staging: Path, prev: Path): Unit = {
-    def stagingCommitted = fs.exists(new Path(staging, CommitMarker))
-    if (!fs.exists(target)) {
-      if (fs.exists(staging) && stagingCommitted) {
-        if (!fs.rename(staging, target))
-          sys.error(s"compaction recovery failed: could not promote $staging")
-        if (fs.exists(prev)) fs.delete(prev, true)
-      } else if (fs.exists(prev)) {
-        if (fs.exists(staging)) fs.delete(staging, true)
-        if (!fs.rename(prev, target))
-          sys.error(s"compaction recovery failed: could not restore $prev")
-      }
-    } else {
-      if (fs.exists(prev)) fs.delete(prev, true)
-      if (fs.exists(staging)) fs.delete(staging, true)
-    }
-    ()
   }
 }

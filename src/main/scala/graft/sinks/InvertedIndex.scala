@@ -89,7 +89,7 @@ object InvertedIndex {
   }
 
   /** Full (re)build, staged under `.next` and published by the
-    * journaled [[SidecarMaintenance.publishDir]] dance — an aborted
+    * sealed [[DirSwap]] ([[SidecarMaintenance.publishDir]]) — an aborted
     * rebuild (including a layout-guard trip) leaves any previous
     * index serving, and a crash mid-publish is rolled forward by
     * the next maintenance entry. `buckets` sizes the index

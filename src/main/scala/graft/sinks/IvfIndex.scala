@@ -68,9 +68,9 @@ object IvfIndex {
 
   /** Bootstrap / rebuild: sampled seeded KMeans over the table (via
     * [[IvfSearch.buildIndex]]), both sidecars built under
-    * `_ivf_cells.next` and published by the journaled
-    * [[SidecarMaintenance.publishDir]] dance — a crash anywhere
-    * before the marker (including a layout-guard trip) leaves the
+    * `_ivf_cells.next` and published by the sealed [[DirSwap]]
+    * ([[SidecarMaintenance.publishDir]]) — a crash anywhere
+    * before the seal (including a layout-guard trip) leaves the
     * previous index fully consistent and serving; a crash anywhere
     * after it is rolled forward by the next maintenance entry, so
     * no crash point leaves the table without a serving index. */
@@ -124,8 +124,8 @@ object IvfIndex {
       replacedPrefixes: Seq[String] = Nil): Unit = {
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // heal a crashed rebuild publish BEFORE the existence check — a
-    // crash between publishDir's renames can leave the index parked
-    // at `.next`/`.old`, and this entry must restore it, not wedge
+    // crash inside the DirSwap publish can leave the index parked at
+    // `.next`/`.old`, and this entry must restore it, not wedge
     SidecarMaintenance.recoverPublish(spark, cellsPath(table))
     Seq(centroidsPath(table), cellsPath(table)).foreach(p =>
       require(fs.exists(new Path(p)),

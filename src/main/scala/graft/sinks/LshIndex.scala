@@ -52,8 +52,8 @@ object LshIndex {
 
   /** Bootstrap / rebuild: one signature pass; buckets and the
     * (planes, seed) row are built under `_lsh_buckets.next` and
-    * published by the journaled, crash-recoverable
-    * [[SidecarMaintenance.publishDir]] dance. */
+    * published by the crash-recoverable [[DirSwap]]
+    * ([[SidecarMaintenance.publishDir]]). */
   def collect(
       spark: SparkSession,
       table: String,

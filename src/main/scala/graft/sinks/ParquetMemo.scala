@@ -19,8 +19,8 @@ import org.apache.spark.sql.types.StructType
   *     A sidecar's SCHEMA is fixed at creation by its family layout
   *     (`(file, vec_id, embedding, bucket)` etc. — commits append
   *     same-schema files, rewrites preserve it), so inference is paid
-  *     once per directory and memoized; rebuilds through
-  *     [[SidecarMaintenance.publishDir]] invalidate.
+  *     once per directory and memoized; rebuilds published through
+  *     [[DirSwap]] ([[SidecarMaintenance.publishDir]]) invalidate.
   *
   *  2. Index METADATA tables (LSH `(planes, seed)`, IVF centroids,
   *     PQ codebooks) are tiny one-to-nCells-row parquet tables read
@@ -52,8 +52,8 @@ private[graft] object ParquetMemo {
   private def key(dir: String): String = new Path(dir).toString
 
   /** Drop both memos for `dir` (and any meta dir beneath it) — called
-    * when a whole-directory swap ([[SidecarMaintenance.publishDir]] /
-    * its recovery) may have replaced the sidecar wholesale. */
+    * when a whole-directory [[DirSwap]] publish (or its recovery) may
+    * have replaced the sidecar wholesale. */
   def invalidate(dir: String): Unit = {
     val k = key(dir)
     schemaMemo.remove(k)

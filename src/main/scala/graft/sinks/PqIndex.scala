@@ -62,8 +62,8 @@ object PqIndex {
   /** Bootstrap / rebuild: driver-trained codebooks on a bounded
     * no-count sample (via [[PqSearch.buildIndex]]), one codegen'd
     * encode pass; codes and codebooks built under `_pq_codes.next`
-    * and published by the journaled, crash-recoverable
-    * [[SidecarMaintenance.publishDir]] dance. */
+    * and published by the crash-recoverable [[DirSwap]]
+    * ([[SidecarMaintenance.publishDir]]). */
   def collect(
       spark: SparkSession,
       table: String,

@@ -1373,8 +1373,7 @@ object SidecarMaintenance {
     * along inside it. */
   def recover(spark: SparkSession, dir: String): Unit = {
     val fs = fsFor(spark, dir)
-    if (fs.exists(new Path(s"$dir.next")) || fs.exists(new Path(s"$dir.old")))
-      recoverPublish(spark, dir)
+    recoverPublish(spark, dir)
     if (!fs.exists(new Path(dir))) return
     val journal = journalPath(dir)
     val staging = stagingPath(dir)
@@ -1578,67 +1577,39 @@ object SidecarMaintenance {
 
   // ── recoverable rebuild publish ─────────────────────────────────
   // A full rebuild ([[IvfIndex.collect]] and siblings) builds the
-  // whole index under `<dest>.next` and swaps it in. The r14 form
-  // (`delete(dest); rename(next, dest)`) had one bad crash point: a
-  // crash between the two left NO serving index. The journaled dance
-  // below closes it — every crash point leaves either the old index
-  // serving, the new one serving, or a state [[recoverPublish]]
-  // (called on entry by every maintenance operation) rolls forward.
+  // whole index under `<dest>.next` and publishes it with [[DirSwap]]:
+  // every crash point leaves either the old index serving, the new
+  // one serving, or a state [[recoverPublish]] (called on entry by
+  // every maintenance operation) rolls to one of them, where a bare
+  // `delete(dest); rename(next, dest)` leaves NO serving index
+  // between its two calls.
 
   private[graft] val PublishMarker = "_GRAFT_PUBLISH_READY"
 
-  /** Publish a fully-built, guard-passed `<dest>.next` over `dest`:
-    * seal `.next` with the publish marker (the commit point — an
-    * atomic empty-file create), move the old dir aside to
-    * `<dest>.old`, move `.next` in, clean up. Idempotent: every
-    * step re-runs safely, so [[recoverPublish]] IS the tail of this
-    * dance. */
-  def publishDir(spark: SparkSession, dest: String): Unit = {
-    val fs = fsFor(spark, dest)
-    require(fs.exists(new Path(s"$dest.next")),
-      s"nothing staged at $dest.next to publish")
-    fs.create(new Path(s"$dest.next", PublishMarker)).close()
-    recoverPublish(spark, dest)
-  }
+  // every writer of an index directory heals through [[recover]] or
+  // [[recoverPublish]] first, so a sealed `.next` is committed as is
+  private val Publish =
+    DirSwap(".next", ".old", PublishMarker, rollForwardOverLive = true)
+
+  /** Publish a fully-built, guard-passed `<dest>.next` over `dest`,
+    * then drop every in-JVM view of the replaced directory. */
+  def publishDir(spark: SparkSession, dest: String): Unit =
+    try Publish.commit(fsFor(spark, dest), dest)
+    finally forgetDir(dest)
 
   /** Heal any interrupted [[publishDir]] around `dest` — called on
     * entry by every maintenance operation (refresh / compact /
     * collect), so "the next maintenance entry restores a serving
-    * index" holds for every crash point of a rebuild:
-    *  - `.next` sealed (marker present): the rebuild COMMITTED —
-    *    roll forward (old aside, next in, old gone);
-    *  - `.next` unsealed: the rebuild died mid-build — discard it,
-    *    the old index was never touched;
-    *  - `dest` missing but `.old` present (a crash between the two
-    *    renames with no sealed `.next` — unreachable through this
-    *    protocol, but external interference happens): restore
-    *    `.old` as the serving index rather than serving nothing. */
-  def recoverPublish(spark: SparkSession, dest: String): Unit = {
-    val fs = fsFor(spark, dest)
-    val destP = new Path(dest)
-    val next = new Path(s"$dest.next")
-    val old = new Path(s"$dest.old")
-    if (fs.exists(next)) {
-      if (fs.exists(new Path(next, PublishMarker))) {
-        if (fs.exists(destP)) {
-          fs.delete(old, true) // stale .old from an older heal
-          fs.rename(destP, old)
-        }
-        fs.rename(next, destP)
-        covMemo.remove(dest) // the new dir starts a fresh coverage log
-        covView.remove(dest)
-        snapMemo.remove(dest)
-        ParquetMemo.invalidate(dest) // a rebuild may change the schema
-      } else fs.delete(next, true) // unsealed build — roll back
-    }
-    if (!fs.exists(destP) && fs.exists(old)) {
-      fs.rename(old, destP)
-      covMemo.remove(dest)
-      covView.remove(dest)
-      snapMemo.remove(dest)
-      ParquetMemo.invalidate(dest)
-    }
-    fs.delete(new Path(destP, PublishMarker), false)
-    fs.delete(old, true)
+    * index" holds for every crash point of a rebuild. */
+  def recoverPublish(spark: SparkSession, dest: String): Unit =
+    if (Publish.recover(fsFor(spark, dest), dest)) forgetDir(dest)
+
+  /** A swap may have replaced `dir` wholesale: the new dir starts a
+    * fresh coverage log and may carry a new schema. */
+  private def forgetDir(dir: String): Unit = {
+    covMemo.remove(dir)
+    covView.remove(dir)
+    snapMemo.remove(dir)
+    ParquetMemo.invalidate(dir)
   }
 }

@@ -121,13 +121,7 @@ object MergeUpsert {
     val storage = LakeStorage(spark)
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(trustedPath + "__staging")
-    // Aside-copies live in a SIBLING root, never inside the table —
-    // a leftover inside the table directory would be discovered as a
-    // bogus partition by every subsequent read.
-    val prevRoot = new Path(trustedPath + "__prev")
-
-    recoverPartitionSwap(fs, new Path(trustedPath), staging, prevRoot)
+    recoverTrusted(fs, trustedPath)
 
     if (!storage.exists(trustedPath)) {
       clusteredForPartitions(updates, partitionCol, zorderBy, zorderFiles)
@@ -173,9 +167,7 @@ object MergeUpsert {
     val storage = LakeStorage(spark)
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(trustedPath + "__staging")
-    val prevRoot = new Path(trustedPath + "__prev")
-    recoverPartitionSwap(fs, new Path(trustedPath), staging, prevRoot)
+    recoverTrusted(fs, trustedPath)
 
     if (!storage.exists(trustedPath)) {
       val payload = changes.drop((opCol +: seqCols): _*)
@@ -227,6 +219,9 @@ object MergeUpsert {
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val staging = new Path(trustedPath + "__staging")
+    // Aside-copies live in a SIBLING root, never inside the table —
+    // a leftover inside the table directory would be discovered as a
+    // bogus partition by every subsequent read.
     val prevRoot = new Path(trustedPath + "__prev")
 
     if (fs.exists(staging)) fs.delete(staging, true)
@@ -259,6 +254,27 @@ object MergeUpsert {
     ()
   }
 
+  /** Entry recovery for every writer of a TRUSTED table. The
+    * whole-table swap ([[Swap]]) and the per-partition swap share the
+    * `__staging`/`__prev` names, so their leftovers are told apart
+    * first: only the per-partition swap keeps the live table in place
+    * while its aside root holds nothing but bare partition
+    * directories (`col=value`); a whole-table aside is a complete
+    * former table (data files, `_SUCCESS`). Two existence checks when
+    * nothing needs healing. */
+  private def recoverTrusted(
+      fs: org.apache.hadoop.fs.FileSystem, trustedPath: String): Unit = {
+    val target = new Path(trustedPath)
+    val staging = new Path(Swap.staging(trustedPath))
+    val prevRoot = new Path(trustedPath + "__prev")
+    val staged = fs.exists(staging)
+    val parked = fs.exists(prevRoot)
+    if (parked && fs.exists(target) && fs.listStatus(prevRoot).forall(st =>
+        st.isDirectory && st.getPath.getName.contains('=')))
+      recoverPartitionSwap(fs, target, staging, prevRoot)
+    else if (staged || parked) Swap.recover(fs, trustedPath)
+  }
+
   /** Crash recovery for the per-partition swap: any partition present
     * in the aside root but missing from the table is restored; then
     * leftover staging/aside roots are dropped. (A partition present
@@ -286,16 +302,25 @@ object MergeUpsert {
     * are SIBLINGS of the table directory, never inside it. */
   val PrevSnapshotInfix = "__prev_"
 
+  /** The K2 swap layout: `<trusted>__staging` sealed by the parquet
+    * write's own `_SUCCESS`, the live table aside at `<trusted>__prev`
+    * during the swap. The per-partition swap uses the same two names;
+    * [[recoverTrusted]] routes each crash state to its own recovery. */
+  private val Swap = DirSwap("__staging", "__prev", "_SUCCESS")
+
+  private def newSnapshot(trustedPath: String): String =
+    trustedPath + PrevSnapshotInfix + System.currentTimeMillis()
+
   /** Full K2: read trusted (if present), merge, write-new-then-swap.
     *
     * Atomicity protocol (SURVEY.md §7.5 #3): write the merged result
-    * to `<trusted>__staging`, then swap via two renames with the old
+    * to `<trusted>__staging` and publish it with [[DirSwap]], the old
     * data preserved at `<trusted>__prev` until the swap completes.
-    * Every call starts with [[recoverSwap]], which finishes or rolls
-    * back an interrupted swap — so a crash at any rename boundary
-    * leaves the table recoverable and the NEXT merge sees a complete
-    * table, never an empty target that would make it mistake the
-    * update batch for the whole dataset.
+    * Every call starts with the swap's recovery, which finishes or
+    * rolls back an interrupted swap — so a crash at any rename
+    * boundary leaves the table recoverable and the NEXT merge sees a
+    * complete table, never an empty target that would make it
+    * mistake the update batch for the whole dataset.
     *
     * Retention (reference `cloud_utils.py:523`,
     * `delta_retention_hours=72`): with `retainPrevHours` set, the
@@ -338,11 +363,8 @@ object MergeUpsert {
     val storage = LakeStorage(spark)
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(trustedPath + "__staging")
-    val prev = new Path(trustedPath + "__prev")
-    val target = new Path(trustedPath)
 
-    recoverSwap(fs, target, staging, prev)
+    recoverTrusted(fs, trustedPath)
     retainPrevHours.foreach(gcPrevSnapshots(fs, trustedPath, _))
 
     val result =
@@ -351,8 +373,16 @@ object MergeUpsert {
         if (evolveSchema) mergedEvolved(trusted, updates, key, broadcastUpdates)
         else merged(trusted, updates, key, broadcastUpdates)
       } else updates
-
-    writeAndSwap(fs, trustedPath, result, retainPrevHours, zorderBy, zorderFiles)
+    val toWrite =
+      if (zorderBy.isEmpty) result
+      else {
+        val n =
+          if (zorderFiles > 0) zorderFiles
+          else result.sparkSession.sessionState.conf.numShufflePartitions
+        ZOrder.cluster(result, zorderBy, n)
+      }
+    toWrite.write.mode(SaveMode.Overwrite).parquet(Swap.staging(trustedPath))
+    Swap.commit(fs, trustedPath, retainPrevHours.map(_ => newSnapshot(trustedPath)))
   }
 
   /** Delete-aware merge semantics: fold an ordered I/U/D change log
@@ -402,8 +432,7 @@ object MergeUpsert {
     val storage = LakeStorage(spark)
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(fs, new Path(trustedPath),
-      new Path(trustedPath + "__staging"), new Path(trustedPath + "__prev"))
+    recoverTrusted(fs, trustedPath)
     retainPrevHours.foreach(gcPrevSnapshots(fs, trustedPath, _))
 
     // change payload schema == table schema by contract (scaladoc
@@ -419,51 +448,9 @@ object MergeUpsert {
         spark.read.schema(tableSchema).parquet(trustedPath)
       else spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payload.schema)
-    writeAndSwap(fs, trustedPath,
-      appliedChanges(trusted, changes, key, seqCols, opCol), retainPrevHours)
-  }
-
-  /** The K2 commit protocol: overwrite staging, rename the live
-    * table aside, promote staging, then drop or snapshot the old
-    * table per retention. Crash-recoverable on either side of the
-    * promote via [[recoverSwap]] at the next writer's entry. */
-  private def writeAndSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      trustedPath: String,
-      result: DataFrame,
-      retainPrevHours: Option[Double],
-      zorderBy: Seq[String] = Nil,
-      zorderFiles: Int = 0): Unit = {
-    val staging = new Path(trustedPath + "__staging")
-    val prev = new Path(trustedPath + "__prev")
-    val target = new Path(trustedPath)
-
-    val toWrite =
-      if (zorderBy.isEmpty) result
-      else {
-        val n =
-          if (zorderFiles > 0) zorderFiles
-          else result.sparkSession.sessionState.conf.numShufflePartitions
-        ZOrder.cluster(result, zorderBy, n)
-      }
-    if (fs.exists(staging)) fs.delete(staging, true)
-    toWrite.write.mode(SaveMode.Overwrite).parquet(staging.toString)
-
-    if (fs.exists(prev)) fs.delete(prev, true)
-    if (fs.exists(target)) {
-      if (!fs.rename(target, prev))
-        sys.error(s"merge swap failed: could not move $target aside")
-    }
-    if (!fs.rename(staging, target))
-      sys.error(s"merge swap failed: could not promote $staging")
-    if (fs.exists(prev)) {
-      if (retainPrevHours.isDefined) {
-        val snap = new Path(
-          trustedPath + PrevSnapshotInfix + System.currentTimeMillis())
-        if (!fs.rename(prev, snap))
-          sys.error(s"merge retention failed: could not snapshot $prev")
-      } else fs.delete(prev, true)
-    }
+    appliedChanges(trusted, changes, key, seqCols, opCol)
+      .write.mode(SaveMode.Overwrite).parquet(Swap.staging(trustedPath))
+    Swap.commit(fs, trustedPath, retainPrevHours.map(_ => newSnapshot(trustedPath)))
   }
 
   /** (epochMillis, path) of retained pre-merge snapshots, newest
@@ -494,16 +481,6 @@ object MergeUpsert {
       .foreach { case (_, p) => fs.delete(p, true) }
   }
 
-  /** Roll the table back to its newest retained pre-merge snapshot
-    * (undo of the last bad merge). Runs through the same
-    * write-then-swap protocol as the merge itself — the snapshot is
-    * staged (it already carries the parquet `_SUCCESS` commit marker)
-    * and promoted with [[recoverSwap]] covering every crash point.
-    * The rolled-back-FROM state is itself retained as a new snapshot,
-    * so a mistaken rollback is also undoable. (A crash in the narrow
-    * window after the snapshot is staged but before the table moves
-    * aside consumes that snapshot without effect — recovery keeps the
-    * intact table and deletes the stage; older snapshots remain.) */
   /** Time-travel read: the table as it stood at `epochMillis`.
     *
     * Each retained merge snapshots the PRE-merge table at swap time
@@ -514,9 +491,9 @@ object MergeUpsert {
     * oldest surviving snapshot resolves to that oldest snapshot (the
     * earliest state still on disk), loudly — callers wanting an
     * error instead should check [[prevSnapshots]] bounds themselves.
-    * Snapshots are immutable completed tables (they carry the
-    * parquet `_SUCCESS` marker), so the read needs no lock against
-    * concurrent merges. */
+    * Snapshots are immutable completed tables (whole former live
+    * versions, moved aside by the swap), so the read needs no lock
+    * against concurrent merges. */
   def snapshotAsOf(
       spark: SparkSession,
       trustedPath: String,
@@ -531,60 +508,22 @@ object MergeUpsert {
     }
   }
 
+  /** Roll the table back to its newest retained pre-merge snapshot
+    * (undo of the last bad merge). The snapshot directory itself is
+    * the staging side of the same [[DirSwap]] the merge uses, so every
+    * crash point recovers like a merge's: before the promote the
+    * snapshot stays a snapshot and the table is untouched; after it
+    * the rollback has happened. The rolled-back-FROM state is itself
+    * retained as a new snapshot, so a mistaken rollback is also
+    * undoable (a crash before that last rename loses only it). */
   def rollbackToPrev(spark: SparkSession, trustedPath: String): Unit = {
     val fs = new Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(trustedPath + "__staging")
-    val prev = new Path(trustedPath + "__prev")
-    val target = new Path(trustedPath)
-    recoverSwap(fs, target, staging, prev)
+    recoverTrusted(fs, trustedPath)
     val snaps = prevSnapshots(fs, trustedPath)
     require(snaps.nonEmpty, s"no retained __prev_ snapshot beside $trustedPath")
     val (_, newest) = snaps.head
-    if (fs.exists(staging)) fs.delete(staging, true)
-    if (!fs.rename(newest, staging))
-      sys.error(s"rollback failed: could not stage $newest")
-    if (fs.exists(target)) {
-      if (!fs.rename(target, prev))
-        sys.error(s"rollback swap failed: could not move $target aside")
-    }
-    if (!fs.rename(staging, target))
-      sys.error(s"rollback swap failed: could not promote $staging")
-    if (fs.exists(prev)) {
-      val snap = new Path(trustedPath + PrevSnapshotInfix + System.currentTimeMillis())
-      if (!fs.rename(prev, snap))
-        sys.error(s"rollback retention failed: could not snapshot $prev")
-    }
-  }
-
-  /** Crash recovery for the write-then-swap protocol. Interrupted
-    * states and their resolutions:
-    *  - target missing, staging present (crashed between the two
-    *    renames, or before the first): the staging result was fully
-    *    written (parquet commit protocol), so complete the swap;
-    *  - target missing, no staging, prev present (staging was already
-    *    promoted away or lost): roll back to the old table;
-    *  - target present: last swap completed — drop leftovers.
-    */
-  private[sinks] def recoverSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: Path, staging: Path, prev: Path): Unit = {
-    // _SUCCESS gates the promote: a staging dir without the commit
-    // marker is a half-written bootstrap write, not a swap candidate.
-    def stagingCommitted = fs.exists(new Path(staging, "_SUCCESS"))
-    if (!fs.exists(target)) {
-      if (fs.exists(staging) && stagingCommitted) {
-        if (!fs.rename(staging, target))
-          sys.error(s"merge recovery failed: could not promote $staging")
-        if (fs.exists(prev)) fs.delete(prev, true)
-      } else if (fs.exists(prev)) {
-        if (fs.exists(staging)) fs.delete(staging, true)
-        if (!fs.rename(prev, target))
-          sys.error(s"merge recovery failed: could not restore $prev")
-      }
-    } else if (fs.exists(prev)) {
-      fs.delete(prev, true)
-    }
-    ()
+    Swap.copy(stagingSuffix = newest.getName.stripPrefix(new Path(trustedPath).getName))
+      .commit(fs, trustedPath, Some(newSnapshot(trustedPath)))
   }
 }

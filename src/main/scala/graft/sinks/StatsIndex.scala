@@ -92,11 +92,13 @@ object StatsIndex {
     * swap) are dropped; surviving rows are carried verbatim — file
     * immutability makes that sound, and the poisoned-row spec proves
     * no old file is rescanned. Cost is O(new files) + one tiny index
-    * rewrite. */
+    * rewrite, published through the recoverable swap of
+    * [[SidecarMaintenance.publishDir]] and healed on entry. */
   def refresh(spark: SparkSession, table: String, cols: Seq[String]): Unit = {
     val idx = indexPath(table)
     val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    SidecarMaintenance.recoverPublish(spark, idx)
     if (!fs.exists(new Path(idx))) { collect(spark, table, cols); return }
     val current = dataFilePaths(spark, table).toSet
     // Bounded collect: one (file, …stats) row per data file — the
@@ -116,8 +118,7 @@ object StatsIndex {
       if (fresh.isEmpty) kept
       else kept.unionByName(statsOf(spark, table, fresh, cols))
     merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$idx.next")
-    fs.delete(new Path(idx), true)
-    fs.rename(new Path(s"$idx.next"), new Path(idx))
+    SidecarMaintenance.publishDir(spark, idx)
   }
 
   /** Files whose `[min, max]` interval for `column` can intersect

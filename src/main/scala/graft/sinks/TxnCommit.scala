@@ -4,16 +4,15 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Cross-table atomic commit: N staged table versions become visible
-  * all-or-nothing. The single-table K2 swap ([[MergeUpsert]]) keeps
-  * ONE table crash-consistent; pipelines routinely move several
-  * stores in one logical step — a fact table and its maintained
-  * aggregate state, a split written as clean + quarantine, a promote
-  * touching two zones — where a crash between per-table swaps would
-  * leave readers a MIXED version set. This is the lake-level analogue
-  * of a multi-table transaction log commit (what Delta/Iceberg do
-  * inside one table's log, lifted across tables), built from the same
-  * primitives the engine already trusts: parquet `_SUCCESS` write
-  * commitment, atomic rename, atomic marker-file create.
+  * all-or-nothing. The single-table swap ([[DirSwap]]) keeps ONE
+  * table crash-consistent; pipelines routinely move several stores in
+  * one logical step — a fact table and its maintained aggregate
+  * state, a split written as clean + quarantine, a promote touching
+  * two zones — where a crash between per-table swaps would leave
+  * readers a MIXED version set. This is the lake-level analogue of a
+  * multi-table transaction log commit (what Delta/Iceberg do inside
+  * one table's log, lifted across tables), built on the per-table
+  * [[DirSwap]] plus one journal.
   *
   * Protocol (journaled two-phase):
   *
@@ -24,37 +23,31 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *     `<journalDir>/txn.journal`, then `<journalDir>/txn.commit` is
   *     created. The marker create is the atomic instant: before it
   *     the transaction rolls back, after it it rolls forward.
-  *  3. APPLY — per table: live → `<table>__txprev`, staging → live.
-  *  4. CLEANUP — prev dirs and the journal are removed.
+  *  3. APPLY — per table, a [[DirSwap]] commit (live aside at
+  *     `<table>__txprev`, staging promoted, aside dropped).
+  *  4. CLEANUP — the marker and the journal are removed.
   *
-  * [[recover]] (idempotent; also run at the head of every
-  * [[commitAll]]) heals any predecessor: journal without marker →
-  * restore every table from its prev if needed and delete stagings;
-  * journal with marker → finish every unfinished swap. Per-table
-  * crash states mirror the single-table `recoverSwap` reasoning —
-  * each table is in exactly one of (not started | between renames |
-  * done), and each case has one safe move.
+  * Each staging's `_SUCCESS` is its [[DirSwap]] seal, but the journal
+  * marker, not the single-table swap, decides whether it is
+  * honoured. [[recover]] (idempotent; also run at the head of every
+  * [[commitAll]]) heals any predecessor: journal with marker → every
+  * table still staged finishes its [[DirSwap]] commit, whether or not
+  * its live version was already moved aside, and every other table's
+  * recovery drops a finished swap's aside copy; journal without
+  * marker → every staging is deleted FIRST, then the same recovery
+  * can only restore or drop the aside copy.
   *
   * Readers see the same brief per-table unavailability window the
   * single-table swap has (a rename pair), but never a committed
   * partial SET of tables. Writers must serialize externally (one
   * committer per journalDir) — same contract as every sink here.
-  *
-  * FILESYSTEM CONTRACT: the protocol's atomicity rests on atomic
-  * directory rename and atomic marker-file create, i.e. HDFS-like
-  * semantics (HDFS, local FS, Azure ABFS). On object stores whose
-  * "rename" is copy+delete (plain S3/GCS), the three clean per-table
-  * crash states stop being the only reachable states and the
-  * recovery reasoning does not hold — run the journal and tables on
-  * a rename-atomic store (or an atomic layer like S3+EMRFS-consistent
-  * views / a table format) there. Every table must also live on the
-  * SAME filesystem as the journal — renames cannot cross
-  * filesystems — which [[commitAll]] and [[recover]] enforce by URI.
+  * The filesystem contract is [[DirSwap]]'s; it adds that every table
+  * lives on the SAME filesystem as the journal, which [[commitAll]]
+  * and [[recover]] enforce by URI.
   */
 object TxnCommit {
 
-  private val StageSuffix = "__txstage"
-  private val PrevSuffix = "__txprev"
+  private val Swap = DirSwap("__txstage", "__txprev", "_SUCCESS")
 
   private def journalPath(dir: String) = new Path(dir, "txn.journal")
   private def markerPath(dir: String) = new Path(dir, "txn.commit")
@@ -95,9 +88,7 @@ object TxnCommit {
 
     // PREPARE: all stagings complete before anything becomes visible
     staged.foreach { case (df, table) =>
-      val st = new Path(table + StageSuffix)
-      if (fs.exists(st)) fs.delete(st, true)
-      df.write.mode(SaveMode.Overwrite).parquet(st.toString)
+      df.write.mode(SaveMode.Overwrite).parquet(Swap.staging(table))
     }
 
     // COMMIT POINT
@@ -107,32 +98,9 @@ object TxnCommit {
     finally j.close()
     fs.create(markerPath(journalDir), false).close()
 
-    applyForward(fs, staged.map(_._2))
+    staged.foreach { case (_, table) => Swap.commit(fs, table) }
     fs.delete(markerPath(journalDir), false)
     fs.delete(journalPath(journalDir), false)
-  }
-
-  /** Rolls every table to its staged version; idempotent per table
-    * (the three states of the rename pair each have one safe move). */
-  private def applyForward(fs: FileSystem, tables: Seq[String]): Unit = {
-    tables.foreach { table =>
-      val target = new Path(table)
-      val st = new Path(table + StageSuffix)
-      val prev = new Path(table + PrevSuffix)
-      def stagedCommitted = fs.exists(new Path(st, "_SUCCESS"))
-      if (fs.exists(st) && stagedCommitted) {
-        if (fs.exists(target)) {
-          if (fs.exists(prev)) fs.delete(prev, true)
-          if (!fs.rename(target, prev))
-            sys.error(s"txn apply failed: could not move $target aside")
-        }
-        if (!fs.rename(st, target))
-          sys.error(s"txn apply failed: could not promote $st")
-      }
-      // st absent (or uncommitted debris) with target present: this
-      // table's swap already finished in a prior attempt
-      if (fs.exists(prev)) fs.delete(prev, true)
-    }
   }
 
   /** Heals a crashed transaction at `journalDir`: no journal → no-op;
@@ -150,22 +118,16 @@ object TxnCommit {
         .map(_.trim).filter(_.nonEmpty).toList
       finally in.close()
     requireOneFilesystem(spark, fs, journalDir, tables)
-    if (fs.exists(markerPath(journalDir))) {
-      applyForward(fs, tables)
-      fs.delete(markerPath(journalDir), false)
-    } else {
-      tables.foreach { table =>
-        val target = new Path(table)
-        val st = new Path(table + StageSuffix)
-        val prev = new Path(table + PrevSuffix)
-        if (!fs.exists(target) && fs.exists(prev)) {
-          if (!fs.rename(prev, target))
-            sys.error(s"txn rollback failed: could not restore $prev")
-        }
-        if (fs.exists(st)) fs.delete(st, true)
-        if (fs.exists(prev)) fs.delete(prev, true)
+    val committed = fs.exists(markerPath(journalDir))
+    tables.foreach { table =>
+      val staged = fs.exists(new Path(Swap.staging(table)))
+      if (committed && staged) Swap.commit(fs, table)
+      else {
+        if (staged) fs.delete(new Path(Swap.staging(table)), true)
+        Swap.recover(fs, table)
       }
     }
+    if (committed) fs.delete(markerPath(journalDir), false)
     fs.delete(jp, false)
     ()
   }

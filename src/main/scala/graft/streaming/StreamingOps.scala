@@ -381,7 +381,8 @@ object StreamingOps {
 
   /** K1 as a STREAMING WRITE: an `AvailableNow` file stream over a
     * landing directory appended into the WORK zone as parquet, with a
-    * checkpoint. Exactly-once across restarts and crashes: the
+    * checkpoint. Heals an interrupted [[graft.sinks.Compaction]] swap
+    * of the zone first. Exactly-once across restarts and crashes: the
     * checkpoint's file-source log skips inputs committed by any prior
     * run, and the parquet sink's `_spark_metadata` log commits output
     * files atomically per micro-batch (readers ignore orphans from a
@@ -398,6 +399,8 @@ object StreamingOps {
       workPath: String,
       checkpointDir: String,
       maxFilesPerTrigger: Int = 1): Unit = {
+    graft.sinks.Compaction.recover(new org.apache.hadoop.fs.Path(workPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration), workPath)
     val q = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)

@@ -1,0 +1,76 @@
+package graft
+
+import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
+
+/** Crash injection for the commit protocols: the local filesystem
+  * under its own `faultfs` scheme (modelled on ScaleCheck's
+  * `CountingFs`) that throws on the k-th mutating call — `rename`,
+  * `create` or `delete` — touching a path below an armed root. A
+  * call that throws never reached the disk, so the state left behind
+  * is exactly the state of a writer killed between two calls.
+  *
+  * Calls inside Spark's `_temporary` task-attempt dirs are not
+  * counted: they are the parquet commit protocol's own business, and
+  * a staging write that dies there is the same crash state as one
+  * that dies on its `_SUCCESS` create, which IS counted.
+  *
+  * Register with `fs.faultfs.impl`; state is JVM-global because
+  * Hadoop caches one instance per scheme. */
+class FaultFs extends RawLocalFileSystem {
+  override def getScheme: String = "faultfs"
+  override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
+
+  override def rename(src: Path, dst: Path): Boolean = {
+    FaultFs.tick("rename", src, dst); super.rename(src, dst)
+  }
+  override def delete(p: Path, recursive: Boolean): Boolean = {
+    FaultFs.tick("delete", p); super.delete(p, recursive)
+  }
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int,
+      replication: Short, blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick("create", p)
+    super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(p: Path, permission: FsPermission, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick("create", p)
+    super.create(p, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def createNonRecursive(p: Path, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: Progressable): FSDataOutputStream = {
+    FaultFs.tick("create", p)
+    super.createNonRecursive(p, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+}
+
+object FaultFs {
+  @volatile private var root: String = null
+  @volatile private var failAt = Long.MaxValue
+  private val seen = new java.util.concurrent.atomic.AtomicLong
+
+  /** Count mutating calls below the local directory `localRoot` and
+    * fail the `k`-th. */
+  def arm(localRoot: String, k: Long): Unit = {
+    seen.set(0); failAt = k; root = localRoot.stripSuffix("/") + "/"
+  }
+
+  /** Stop counting and injecting. */
+  def disarm(): Unit = { root = null; failAt = Long.MaxValue }
+
+  /** Calls counted since the last [[arm]]. */
+  def counted: Long = seen.get
+
+  private def tick(op: String, paths: Path*): Unit = {
+    val r = root
+    val local = paths.map(p => Option(p.toUri.getPath).getOrElse("") + "/")
+    if (r != null && local.exists(_.startsWith(r)) &&
+        !local.exists(_.contains("/_temporary")) &&
+        seen.incrementAndGet() == failAt)
+      throw new java.io.IOException(s"injected fault at call #$failAt: $op ${paths.mkString(" -> ")}")
+  }
+}
