@@ -294,7 +294,8 @@ object Bench {
     // the complete map still rides the bench_part lines above and
     // bench_out.json. Membership is deterministic given the
     // measurements: mandatory rows first, then descending cost until
-    // the rendered line would exceed the budget.
+    // the rendered line would exceed the budget. "partial" says the
+    // map is a subset, so a reader judges completeness by n_queries.
     val mandatory = all.filter { case (k, _) =>
       k.matches("d[0-9].*") || k.startsWith("flow_ingest") || k.startsWith("flow_promote")
     }
@@ -303,7 +304,7 @@ object Bench {
       val qmap = entries.sortBy(_._1)
         .map { case (k, v) => graft.core.Json.quote(k) + ":" + fmt(v) }
         .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qmap,"sf":"$sfDir","passes":2,"agg":"min","n_queries":${all.length},"n_failed":$nFailed,"bench_parts":$nParts,"canary":$canaries,"canary_worst_part":${fmt(worstPart)},"canary_ref_used":$refJson,"full":"bench_out.json"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qmap,"partial":${entries.length < all.length},"sf":"$sfDir","passes":2,"agg":"min","n_queries":${all.length},"n_failed":$nFailed,"bench_parts":$nParts,"canary":$canaries,"canary_worst_part":${fmt(worstPart)},"canary_ref_used":$refJson,"full":"bench_out.json"}"""
     }
     val lineBudget = 1800 // leaves tail room for the trailing newline
     val selected = scala.collection.mutable.ArrayBuffer(mandatory: _*)

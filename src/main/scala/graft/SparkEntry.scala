@@ -934,8 +934,10 @@ object SparkEntry {
             .cast("decimal(12,2)"))
       // churned-base INPUT staged once per (sf dir, JVM) — pure input
       // staging (the landingFor discipline, r19): the maintained-state
-      // build, the rewrite probe, and the oracle all stay live
-      val basePath = memoFixture(s"$dir|mv-base-vb")(after.write.parquet(_))
+      // build, the rewrite probe, and the oracle all stay live. Keyed
+      // per query: the base is registered in MvCatalog, and a path
+      // shared with ext_mv_rewrite would alias the two registrations
+      val basePath = memoFixture(s"$dir|mv-base-vb|flow_stream_mv")(after.write.parquet(_))
       val statePath = s"$root/state"
       val shape = Seq(col("__sign"), col("o_orderkey"),
         col("o_orderstatus"), col("b"), col("v"))
@@ -1087,8 +1089,10 @@ object SparkEntry {
             .cast("decimal(12,2)"))
       // churned-base INPUT staged once per (sf dir, JVM) — pure input
       // staging (the landingFor discipline, r19): the maintained-state
-      // build, the rewrite probe, and the oracle all stay live
-      val basePath = memoFixture(s"$dir|mv-base-vb")(after.write.parquet(_))
+      // build, the rewrite probe, and the oracle all stay live. Keyed
+      // per query: the base is registered in MvCatalog, and a path
+      // shared with flow_stream_mv would alias the two registrations
+      val basePath = memoFixture(s"$dir|mv-base-vb|ext_mv_rewrite")(after.write.parquet(_))
       val statePath = s"$root/state"
       graft.operators.Cdc.maintainAgg(
           graft.operators.Cdc.aggState(before, Seq("o_orderstatus", "b"), Seq("v")),

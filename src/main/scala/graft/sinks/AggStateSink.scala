@@ -82,7 +82,7 @@ object AggStateSink {
       delta.drop("__sign").limit(0), groupCols, sumCols)
     val state =
       if (fs.exists(target)) spark.read
-        .schema(ParquetMemo.nullableTop(emptyState.schema)).parquet(statePath)
+        .schema(ParquetMemo.asNullable(emptyState.schema)).parquet(statePath)
       else emptyState
     val next = graft.operators.Cdc.maintainAgg(
       state, delta, groupCols, sumCols)
@@ -121,7 +121,7 @@ object AggStateSink {
       delta.drop("__sign").limit(0), groupCols, extCols)
     val state =
       if (fs.exists(target)) spark.read
-        .schema(ParquetMemo.nullableTop(emptyState.schema)).parquet(statePath)
+        .schema(ParquetMemo.asNullable(emptyState.schema)).parquet(statePath)
       else emptyState
     val next = graft.operators.Cdc.maintainExtrema(
       state, delta, baseAfter, groupCols, extCols)

@@ -3,9 +3,13 @@ package graft.sinks
 import graft.ext.IvfSearch
 import graft.functions.VectorFunctions
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** PERSISTED IVF ANN index — [[graft.ext.IvfSearch]]'s in-memory
   * build promoted to a lake sidecar with the index family's
@@ -96,7 +100,7 @@ object IvfIndex {
     idx.centroids.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
     requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.nullableTop(rows.schema)).parquet(next),
+      spark.read.schema(ParquetMemo.asNullable(rows.schema)).parquet(next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }
@@ -425,7 +429,7 @@ object IvfIndex {
     cents.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
     requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.nullableTop(saltedRows.schema))
+      spark.read.schema(ParquetMemo.asNullable(saltedRows.schema))
         .parquet(next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
@@ -581,6 +585,80 @@ object IvfIndex {
     refreshRefs(spark, dest, idCol, vecCol)
   }
 
+  /** The probe set of a query batch: every `(q_id, q_vec)` row of `q`
+    * paired with each of its `nProbe` nearest cells, and the distinct
+    * probed cells. Ranked on the driver over the memoized centroid
+    * rows, so a local query set costs no Spark job (any other costs
+    * its collect) and the probe set joins as a LocalRelation. The
+    * answer is bit-identical to the `row_number()` window over
+    * `partitionBy(q_id).orderBy(l2Sq asc, __cell asc)` on the query ×
+    * centroid cross join that it replaces:
+    *  - distance is [[VectorFunctions.l2Sq]]'s arithmetic: elements
+    *    cast to double, squared differences folded left from 0.0, null
+    *    when either vector is null, holds a null, or the lengths
+    *    differ;
+    *  - order is the window's: null distances first, NaN above every
+    *    number (`SQLOrderingUtil.compareDoubles`), ties to the lowest
+    *    cell, rows that share a `q_id` (NaN and -0.0 normalized, as
+    *    Spark does for partition keys) ranked together.
+    * Vector elements must be integral, float or double. */
+  private[graft] def probeSet(
+      spark: SparkSession,
+      q: DataFrame,
+      centroids: (StructType, Array[Row]),
+      nProbe: Int): (DataFrame, Array[Any]) = {
+    val (centSchema, centRows) = centroids
+    Seq(q.schema(1), centSchema("__centroid")).foreach(f => f.dataType match {
+      case ArrayType(ByteType | ShortType | IntegerType | LongType |
+          FloatType | DoubleType, _) =>
+      case t => throw new IllegalArgumentException(
+        s"IVF probe vector `${f.name}` must be an array of integral, " +
+          s"float or double elements, got ${t.simpleString}")
+    })
+    def doubles(v: scala.collection.Seq[Any]): Array[Double] =
+      if (v == null || v.contains(null)) null
+      else v.iterator.map(_.asInstanceOf[Number].doubleValue).toArray
+    def l2Sq(a: Array[Double], b: Array[Double]): java.lang.Double =
+      if (a == null || b == null || a.length != b.length) null
+      else {
+        var acc = 0.0
+        var i = 0
+        while (i < a.length) { val d = a(i) - b(i); acc += d * d; i += 1 }
+        acc
+      }
+    val (cellAt, centAt) = (centSchema.fieldIndex("__cell"), centSchema.fieldIndex("__centroid"))
+    val cells = centRows.map(_.getInt(cellAt))
+    val cents = centRows.map(r => doubles(r.getAs[scala.collection.Seq[Any]](centAt)))
+    val nearestFirst: Ordering[(java.lang.Double, Int)] = (x, y) => {
+      val byDist =
+        if (x._1 == null) { if (y._1 == null) 0 else -1 }
+        else if (y._1 == null) 1
+        else SQLOrderingUtil.compareDoubles(x._1, y._1)
+      if (byDist != 0) byDist else Integer.compare(x._2, y._2)
+    }
+    // java map: key equality is equals(), under which NaN == NaN
+    val byId = new java.util.LinkedHashMap[Any, mutable.ArrayBuffer[Row]]()
+    q.collect().foreach { r =>
+      val id = r.get(0) match {
+        case d: Double if d == 0.0 => 0.0
+        case f: Float if f == 0.0f => 0.0f
+        case b: Array[Byte] => b.toSeq
+        case v => v
+      }
+      byId.computeIfAbsent(id, _ => mutable.ArrayBuffer.empty) += r
+    }
+    val rows = byId.values.asScala.iterator.flatMap { group =>
+      group.iterator.flatMap { r =>
+        val v = doubles(r.getAs[scala.collection.Seq[Any]](1))
+        cents.indices.iterator.map(c => (r, l2Sq(v, cents(c)), cells(c)))
+      }.toArray.sortBy(p => (p._2, p._3))(nearestFirst).iterator
+        .take(nProbe).map { case (r, _, cell) => Row(r.get(0), r.get(1), cell) }
+    }.toArray
+    val schema = StructType(q.schema.fields :+ centSchema("__cell"))
+    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
+      rows.map(_.get(2)).distinct)
+  }
+
   /** Probe off the REFS sidecar: the probed cell set pushes as a
     * static partition filter exactly as in [[topK]], but the probe
     * yields candidate IDS only — their vectors come from ONE
@@ -605,25 +683,12 @@ object IvfIndex {
     // pre-commit truth instead of refusing for its whole duration
     // ([[SidecarMaintenance.snapshotRead]])
     val refsSnap = SidecarMaintenance.snapshotRead(spark, refsPath(table))
-    // centroids from the listing-signature memo (no read job), probes
-    // collected ONCE: the prior shape paid a localCheckpoint job, a
-    // distinct+collect job AND a broadcast-build job on the probe set
-    // — which is driver-bounded by contract (queries × nProbe) and
-    // becomes a LocalRelation, so the broadcast join side costs no
-    // job at all. The ranking arithmetic stays in Spark, bit-for-bit.
-    val cents = ParquetMemo.metaDF(spark, refsCentroidsPath(table))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val cellRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cdist").asc, col("__cell").asc)
-    val probesPlan = q.crossJoin(broadcast(cents))
-      .withColumn("__cdist", VectorFunctions.l2Sq(col("q_vec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(cellRank))
-      .where(col("__cr") <= nProbe)
-      .select(col("q_id"), col("q_vec"), col("__cell"))
-    val probeRows = probesPlan.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val probedCells: Array[Any] = probeRows.map(_.get(2)).distinct
+    // cells ranked on the driver over the memoized centroids
+    // ([[probeSet]]): a local query set pays no job before the
+    // scoring query, and the probe set joins as a LocalRelation
+    val (probes, probedCells) = probeSet(spark,
+      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
+      ParquetMemo.metaRows(spark, refsCentroidsPath(table)), nProbe)
     val candidates = refsSnap
       .where(col("__cell").isin(probedCells: _*))
       .select(col("vec_id").as("neighbor_id"), col("__cell"))
@@ -682,21 +747,10 @@ object IvfIndex {
     // committed-snapshot read: serves through a live commit window on
     // the pre-commit truth ([[SidecarMaintenance.snapshotRead]])
     val cellsSnap = SidecarMaintenance.snapshotRead(spark, cellsPath(table))
-    // see [[topKRefs]]: memoized centroids + one probe collect replace
-    // localCheckpoint + distinct-collect + broadcast-build jobs
-    val cents = ParquetMemo.metaDF(spark, centroidsPath(table))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"))
-    val cellRank = Window.partitionBy(col("q_id"))
-      .orderBy(col("__cdist").asc, col("__cell").asc)
-    val probesPlan = q.crossJoin(broadcast(cents))
-      .withColumn("__cdist", VectorFunctions.l2Sq(col("q_vec"), col("__centroid")))
-      .withColumn("__cr", row_number().over(cellRank))
-      .where(col("__cr") <= nProbe)
-      .select(col("q_id"), col("q_vec"), col("__cell"))
-    val probeRows = probesPlan.collect()
-    val probes = spark.createDataFrame(
-      java.util.Arrays.asList(probeRows: _*), probesPlan.schema)
-    val probedCells: Array[Any] = probeRows.map(_.get(2)).distinct
+    // driver-side cell ranking, as in [[topKRefs]]
+    val (probes, probedCells) = probeSet(spark,
+      queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
+      ParquetMemo.metaRows(spark, centroidsPath(table)), nProbe)
     val scored = cellsSnap
       .where(col("__cell").isin(probedCells: _*))
       .select(col("vec_id").as("neighbor_id"),

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftglue.ListedParquet
 import org.apache.spark.sql.types.StructType
 
 /** Driver-side memos that remove per-read SPARK JOBS from the sidecar
@@ -113,12 +114,33 @@ private[graft] object ParquetMemo {
     }
   }
 
-  /** `schema` with every top-level field nullable — what a parquet
-    * round trip reports for a just-written DataFrame's schema; lets
-    * write-then-validate paths pass the written schema to the
-    * read-back explicitly instead of paying an inference job. */
-  def nullableTop(schema: StructType): StructType =
-    StructType(schema.fields.map(_.copy(nullable = true)))
+  /** [[readFiles]] of exactly `files` without Spark's per-path
+    * planning: one listing per distinct parent directory (on the
+    * driver up to `parallelPartitionDiscovery.threshold` directories,
+    * Spark's listing job above it) replaces the reader's `exists` call
+    * per file and its "Listing leaf files" job once there are more
+    * than that many files. A file absent from its directory's listing
+    * fails here with Spark's `PATH_NOT_FOUND`, as the reader does. */
+  def readListed(spark: SparkSession, dir: String, files: Seq[String]): DataFrame = {
+    val fs = fsFor(spark, dir)
+    val paths = files.map(f => fs.makeQualified(new Path(f)))
+    val listed = ListedParquet.listLeafFiles(spark, paths.map(_.getParent).distinct)
+      .map(s => s.getPath -> s).toMap
+    val statuses = paths.map(p =>
+      listed.getOrElse(p, throw ListedParquet.pathNotFound(p.toString)))
+    val k = key(dir)
+    val memo = Option(schemaMemo.get(k))
+    val df = ListedParquet.read(spark, dir, statuses, memo)
+    if (memo.isEmpty) schemaMemo.put(k, df.schema)
+    df
+  }
+
+  /** `schema` with every field nullable, nested ones included — what
+    * a parquet round trip reports for a just-written DataFrame's
+    * schema; lets write-then-validate paths pass the written schema to
+    * the read-back explicitly instead of paying an inference job. */
+  def asNullable(schema: StructType): StructType =
+    ListedParquet.asNullable(schema)
 
   /** name:len:mtime of every plain file directly under `dir` — the
     * meta-table identity. One driver FS listing, no Spark job. */

@@ -361,13 +361,11 @@ object SidecarMaintenance {
       else footerCovRecs(spark, staging, stagedStatuses, statsCol)
         .getOrElse(graft.core.Jobs.described(spark,
           s"sidecar: staged stats ${new Path(dir).getName}") {
-        // explicit schema (what we just wrote, top-level nullable to
-        // match the parquet round trip) — skips the read's
-        // schema-inference job; partition columns are pruned by the
-        // projections below, so their dir-parsed type is irrelevant
-        val stagedSchema = newRows.map(r =>
-          org.apache.spark.sql.types.StructType(
-            r.schema.fields.map(_.copy(nullable = true))))
+        // explicit schema (what we just wrote, nullable to match the
+        // parquet round trip) — skips the read's schema-inference
+        // job; partition columns are pruned by the projections below,
+        // so their dir-parsed type is irrelevant
+        val stagedSchema = newRows.map(r => ParquetMemo.asNullable(r.schema))
         val rdr = spark.read.option("basePath", staging.toString)
         val base = stagedSchema.fold(rdr)(rdr.schema)
           .parquet(stagedFiles: _*)
@@ -1115,16 +1113,29 @@ object SidecarMaintenance {
     * refusal requireClean always gave) or an out-of-band deletion
     * (surfaced, not swallowed).
     *
-    * SCOPE of the in-method retry: it covers PLANNING-time misses
-    * only — the schema/footer read while CONSTRUCTING the DataFrame
-    * (typically one file). The returned DataFrame is lazy; a commit
-    * that deletes a non-schema-inference file AFTER this returns
-    * surfaces at the caller's ACTION as a raw missing-path failure.
-    * A caller whose action races live maintenance wraps the whole
-    * resolve-and-act sequence (probe construction AND its action) in
-    * [[retryOnSnapshotMiss]], which re-runs the body once against
-    * the newly committed generation — one retry closes the race
-    * because commits are serialized by the lease. */
+    * COST: the relation is planned from the committed file list
+    * ([[ParquetMemo.readListed]]) with no Spark job — one `_coverage`
+    * listing to resolve the generation (its log is parsed once per
+    * generation per JVM), one listing per distinct parent directory of
+    * the committed files (nCells for a cell-partitioned sidecar; a
+    * listing job only above `parallelPartitionDiscovery.threshold`
+    * directories) and the `basePath` directory check. The schema is
+    * memoized per directory, so only the first read of a directory in
+    * a JVM pays a footer-inference job. No filesystem round trip is
+    * made per file: HDFS returns block locations with the listing,
+    * other filesystems derive them from the file status.
+    *
+    * SCOPE of the in-method retry: PLANNING time checks that every
+    * committed file is present in its directory's listing; a missing
+    * one fails with `PATH_NOT_FOUND`, and the retry re-resolves the
+    * generation once. The returned DataFrame is lazy; a commit that
+    * deletes a file AFTER this returns surfaces at the caller's
+    * ACTION as a raw missing-path failure. A caller whose action
+    * races live maintenance wraps the whole resolve-and-act sequence
+    * (probe construction AND its action) in [[retryOnSnapshotMiss]],
+    * which re-runs the body once against the newly committed
+    * generation — one retry closes the race because commits are
+    * serialized by the lease. */
   /** Test hook: invoked with the sidecar dir between a
     * [[snapshotRead]]'s generation RESOLUTION and its read — the gap
     * a later commit's doomed deletions race (specs interleave a real
@@ -1140,7 +1151,7 @@ object SidecarMaintenance {
       case Some(files) =>
         val hook = onSnapshotResolve
         if (hook != null) hook(dir)
-        try ParquetMemo.readFiles(spark, dir, files)
+        try ParquetMemo.readListed(spark, dir, files)
         catch {
           case t: Throwable if isPathNotFound(t) =>
             requireClean(spark, dir) // crashed run → loud refusal
@@ -1153,7 +1164,7 @@ object SidecarMaintenance {
             // means an out-of-band deletion: surface it.
             resolve() match {
               case Some(fresh) if fresh != files =>
-                ParquetMemo.readFiles(spark, dir, fresh)
+                ParquetMemo.readListed(spark, dir, fresh)
               case _ => throw t
             }
         }

@@ -436,13 +436,13 @@ object MergeUpsert {
     retainPrevHours.foreach(gcPrevSnapshots(fs, trustedPath, _))
 
     // change payload schema == table schema by contract (scaladoc
-    // above), so the table read takes it EXPLICITLY (top-level
+    // above), so the table read takes it EXPLICITLY (every field
     // nullable, what a parquet round trip reports) — this is the
     // per-micro-batch hot path of the streaming CDC apply, and the
     // schema-inference job the bare read pays per batch is pure
     // overhead (guide §5: no driver-side jobs for known metadata)
     val payload = changes.drop((opCol +: seqCols): _*)
-    val tableSchema = ParquetMemo.nullableTop(payload.schema)
+    val tableSchema = ParquetMemo.asNullable(payload.schema)
     val trusted =
       if (storage.exists(trustedPath))
         spark.read.schema(tableSchema).parquet(trustedPath)

@@ -1105,7 +1105,7 @@ object StreamingOps {
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
             if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.nullableTop(payload.schema))
+              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
               .parquet(trustedPath)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1181,7 +1181,7 @@ object StreamingOps {
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
             if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.nullableTop(payload.schema))
+              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
               .parquet(trustedPath)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1246,7 +1246,7 @@ object StreamingOps {
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
             if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.nullableTop(payload.schema))
+              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
               .parquet(trustedPath)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

@@ -1,9 +1,12 @@
 package graft
 
 import graft.ext.IvfSearch
-import graft.sinks.IvfIndex
-import org.apache.spark.sql.DataFrame
+import graft.functions.VectorFunctions
+import graft.sinks.{IvfIndex, SidecarMaintenance}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The persisted IVF sidecar must be value-identical to the
@@ -400,6 +403,129 @@ class IvfIndexSpec extends AnyFunSuite {
         l.contains("ReadSchema:") && l.contains("embedding") &&
           !l.contains("label")),
         "the corpus re-rank scan must not read unused columns")
+    }
+  }
+
+  /** The Spark window plan that ranked probe cells before
+    * [[IvfIndex.probeSet]] moved the ranking to the driver — kept as
+    * the reference the driver-side ranking must equal bit for bit. */
+  private def windowProbes(q: DataFrame, cents: DataFrame, nProbe: Int): DataFrame = {
+    val cellRank = Window.partitionBy(col("q_id"))
+      .orderBy(col("__cdist").asc, col("__cell").asc)
+    q.crossJoin(broadcast(cents))
+      .withColumn("__cdist", VectorFunctions.l2Sq(col("q_vec"), col("__centroid")))
+      .withColumn("__cr", row_number().over(cellRank))
+      .where(col("__cr") <= nProbe)
+      .select(col("q_id"), col("q_vec"), col("__cell"))
+  }
+
+  test("driver-side probe ranking equals the Spark window plan bit for bit") {
+    val nan = Double.NaN
+    val centSchema = StructType(Seq(
+      StructField("__cell", IntegerType),
+      StructField("__centroid", ArrayType(DoubleType))))
+    // cells 1 and 3 coincide, 1 and 4 mirror around the origin, cell
+    // 5 sits at NaN distance from every query and cell 6 at a null one
+    val centRows = Array(
+      Row(0, Seq(0.0, 0.0)), Row(1, Seq(2.0, 0.0)), Row(2, Seq(0.0, 2.0)),
+      Row(3, Seq(2.0, 0.0)), Row(4, Seq(-2.0, 0.0)), Row(5, Seq(nan, 1.0)),
+      Row(6, Seq(null, 0.0)))
+    val cents = spark.createDataFrame(java.util.Arrays.asList(centRows: _*), centSchema)
+    val qSchema = StructType(Seq(
+      StructField("q_id", LongType),
+      StructField("q_vec", ArrayType(DoubleType))))
+    val qRows = Seq(
+      Row(1L, Seq(0.0, 0.0)),           // four cells tie at 4.0
+      Row(2L, Seq(1.0, 0.0)),           // ties across cells 0, 1, 3
+      Row(3L, null),                    // null vector: every distance null
+      Row(4L, Seq(1.0, null)),          // null element
+      Row(5L, Seq(nan, 0.0)),           // NaN element: every distance NaN
+      Row(6L, Seq(1.0, 2.0, 3.0)),      // wrong dimension
+      Row(7L, Seq(0.5, 0.5)),           // duplicate q_id, ranked jointly
+      Row(7L, Seq(1.9, 0.1)),
+      Row(null, Seq(0.1, 1.8)),         // null q_id, also duplicated
+      Row(null, Seq(-1.5, 0.2)),
+      Row(8L, Seq(Double.PositiveInfinity, 0.0)),
+      Row(9L, Seq(-0.0, 1.0)))
+    def asQuery(rows: Seq[Row]): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), qSchema)
+    // NaN != NaN under Row equality: compare rendered rows
+    def rendered(df: DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    for {
+      rows <- Seq(qRows, Seq.empty[Row])
+      floats <- Seq(false, true)
+      nProbe <- Seq(1, 2, 3, 6, 7, 10)
+    } {
+      val q0 = asQuery(rows)
+      val q = if (floats) q0.withColumn("q_vec", col("q_vec").cast("array<float>")) else q0
+      val want = windowProbes(q, cents, nProbe)
+      val (got, cells) = IvfIndex.probeSet(spark, q, (centSchema, centRows), nProbe)
+      val clue = s"rows=${rows.size} floats=$floats nProbe=$nProbe"
+      assert(got.schema === want.schema, clue)
+      assert(rendered(got) === rendered(want), clue)
+      assert(cells.toSet === want.select("__cell").collect().map(_.get(0)).toSet, clue)
+    }
+    // floating-point ids: NaN ids rank together, and so do 0.0 and -0.0
+    val dSchema = StructType(Seq(
+      StructField("q_id", DoubleType), StructField("q_vec", ArrayType(DoubleType))))
+    val dq = spark.createDataFrame(java.util.Arrays.asList(
+      Row(0.0, Seq(0.1, 0.1)), Row(-0.0, Seq(1.8, 0.3)),
+      Row(nan, Seq(0.2, 1.7)), Row(nan, Seq(-1.6, -0.1))), dSchema)
+    for (nProbe <- Seq(1, 2, 3)) {
+      val (got, _) = IvfIndex.probeSet(spark, dq, (centSchema, centRows), nProbe)
+      assert(rendered(got) === rendered(windowProbes(dq, cents, nProbe)), s"nProbe=$nProbe")
+    }
+  }
+
+  test("a steady-state topK over a local query set runs no listing job and no probe-ranking job") {
+    withTable() { path =>
+      IvfIndex.collect(spark, path, nCells = 4, writeSalt = 8)
+      IvfIndex.refresh(spark, path) // heal coverage → a committed generation
+      // grow the committed sidecar past the 32 explicit paths that
+      // Spark's reader lists without a job
+      val cellsDir = IvfIndex.cellsPath(path)
+      var next = 200
+      while (SidecarMaintenance.dataFiles(spark, cellsDir).size <= 32 && next < 500) {
+        SparkEntry.tbl(spark, sf, "embeddings")
+          .where(col("vec_id") >= next && col("vec_id") < next + 30)
+          .coalesce(1).write.mode("append").parquet(path)
+        IvfIndex.refresh(spark, path, writeSalt = 8)
+        next += 30
+      }
+      val nFiles = SidecarMaintenance.dataFiles(spark, cellsDir).size
+      assert(nFiles > 32, s"fixture: the sidecar holds only $nFiles files")
+      val corpus = spark.read.parquet(path)
+      val queries = spark.createDataFrame(java.util.Arrays.asList(
+        corpus.where(col("vec_id") < 4).collect(): _*), corpus.schema)
+      // the first probe of a directory pays its schema and centroid reads
+      IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2).collect()
+      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.add(Option(j.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse(j.stageInfos.map(_.name).mkString(";")))
+      }
+      def jobsNow(): List[String] = {
+        org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
+        scala.jdk.CollectionConverters.IteratorHasAsScala(jobs.iterator).asScala.toList
+      }
+      spark.sparkContext.addSparkListener(l)
+      val (planning, all, got) = try {
+        val df = IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2)
+        val planning = jobsNow()
+        val got = ranks(df)
+        (planning, jobsNow(), got)
+      } finally spark.sparkContext.removeSparkListener(l)
+      assert(planning.isEmpty,
+        s"building the probe must submit no job (listing, probe ranking): $planning")
+      assert(!all.exists(_.contains("Listing leaf files")), all.mkString("\n"))
+      // the exhaustive probe still equals brute force over the grown corpus
+      assert(ranks(IvfIndex.topK(spark, path, queries, k = 5, nProbe = 4)) ===
+        ranks(graft.ext.SimilaritySearch.bruteForceTopK(queries, corpus, k = 5)))
+      assert(got.nonEmpty)
     }
   }
 }

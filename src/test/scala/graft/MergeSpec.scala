@@ -356,6 +356,26 @@ class MergeSpec extends AnyFunSuite {
     assert(!fs.exists(new org.apache.hadoop.fs.Path(dir + "__prev")))
   }
 
+  test("applyChangesInto: a non-nullable nested payload field keeps the stored table's nulls") {
+    val dir = Files.createTempDirectory("graft-applynest").toString + "/t"
+    def log(sk: String, seq: Int, a: org.apache.spark.sql.Column) =
+      Seq((sk, seq, "I")).toDF("sk", "seq", "op")
+        .withColumn("s", org.apache.spark.sql.functions.struct(a.as("a")))
+    // stored row with a NULL nested field
+    MergeUpsert.applyChangesInto(spark, dir,
+      log("a", 1, org.apache.spark.sql.functions.lit(null).cast("int")))
+    // the next batch's payload declares s.a NOT NULL, as a literal
+    // struct does; the stored table is read back through that schema
+    val batch = log("b", 2, org.apache.spark.sql.functions.lit(7))
+    assert(!batch.schema("s").dataType
+      .asInstanceOf[org.apache.spark.sql.types.StructType]("a").nullable)
+    MergeUpsert.applyChangesInto(spark, dir, batch)
+    val got = spark.read.parquet(dir).select("sk", "s.a").collect()
+      .map(r => (r.getString(0), Option(r.get(1)))).toSet
+    assert(got === Set(("a", None), ("b", Some(7))),
+      "the stored row's NULL must survive, not read back as a default")
+  }
+
   // K3 (cloud_utils.py:172-247): recursive truncate + clearOrCreate
   test("K3 truncate and clearOrCreate") {
     val storage = LakeStorage(spark)

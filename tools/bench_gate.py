@@ -14,7 +14,9 @@ Either argument may be a raw Bench stdout line ({"metric":...,
 "queries":{...}}) or a driver round artifact (BENCH_r0N.json, whose
 "tail" field embeds that line in captured sbt output) — so the gate
 runs on exactly the file the judge grades, not only the builder's
-standalone run.
+standalone run. A raw line marked "partial":true (Bench's final stdout
+line) is judged like a partial tail: completeness by n_queries, not by
+which rows it holds.
 
 A query missing from the baseline is informational (new query); a
 query missing from the fresh run FAILS (a query was dropped or died —
@@ -31,7 +33,10 @@ def load_bench(path):
     {"partial": bool, "n_queries": int|None, "n_failed": int|None}."""
     obj = json.load(open(path))
     if "queries" in obj:
-        meta = {"partial": False, "n_queries": obj.get("n_queries"),
+        # Bench's final stdout line marks itself "partial": its map is
+        # the headline rows plus the costliest ones that fit the line
+        meta = {"partial": bool(obj.get("partial")),
+                "n_queries": obj.get("n_queries"),
                 "n_failed": obj.get("n_failed"), "value": obj.get("value")}
         return (obj["queries"], obj.get("canary"), obj.get("canary_ref"),
                 obj.get("canary_worst_part"), meta)

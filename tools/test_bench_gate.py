@@ -22,7 +22,8 @@ def run(fresh, base):
         bp = os.path.join(d, "base.json")
         json.dump(fresh, open(fp, "w"))
         json.dump(base, open(bp, "w"))
-        r = subprocess.run([sys.executable, GATE, fp, bp],
+        # cwd: the gate upgrades a partial line from ./bench_out.json
+        r = subprocess.run([sys.executable, GATE, fp, bp], cwd=d,
                            capture_output=True, text=True)
         return r.returncode, r.stdout
 
@@ -57,6 +58,17 @@ checks.append(("regression fails", rc == 1, rc, out))
 rc, out = run({"queries": {"q1": 1.0}, "canary": [0.44],
                "canary_worst_part": 0.44, "n_queries": 1, "n_failed": 0}, BASE)
 checks.append(("dropped query fails", rc == 1, rc, out))
+
+# 6. Bench's final stdout line, marked partial: a baseline row that
+#    did not fit the line is not a dropped query -> 0
+rc, out = run({"queries": {"q1": 1.0}, "partial": True, "canary": [0.44],
+               "canary_worst_part": 0.44, "n_queries": 2, "n_failed": 0}, BASE)
+checks.append(("partial line judged by n_queries", rc == 0, rc, out))
+
+# 7. ...but a partial line that declares fewer queries -> exit 1
+rc, out = run({"queries": {"q1": 1.0}, "partial": True, "canary": [0.44],
+               "canary_worst_part": 0.44, "n_queries": 1, "n_failed": 0}, BASE)
+checks.append(("partial line with n_queries drop fails", rc == 1, rc, out))
 
 failed = [c for c in checks if not c[1]]
 for name, ok, rc, out in checks:
