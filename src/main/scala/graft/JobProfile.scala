@@ -5,9 +5,11 @@ import org.apache.spark.scheduler._
 
 /** Dev harness (not part of the bench contract): run one declared
   * query with a job-level listener and print where the wall clock
-  * goes — per-Spark-job duration, task count, task time, shuffle
-  * bytes — plus the gaps BETWEEN jobs (driver-side work: FS calls,
-  * planning, collects). Guides optimization: a query whose time is
+  * goes — per-Spark-job duration, task count, task time, the
+  * longest task (ms and input rows), shuffle bytes — plus the gaps
+  * BETWEEN jobs (driver-side work: FS calls, planning, collects).
+  * A job whose longest task is most of its duration is held by one
+  * skewed task, not by its task count. Guides optimization: a query whose time is
   * 40 jobs of 80 ms is a job-count problem, not a plan problem.
   *
   * Usage: runMain graft.JobProfile <queryName> [sfDir] [cpus]
@@ -16,7 +18,8 @@ object JobProfile {
   private case class JobRec(
       id: Int, desc: String, submitted: Long, var completed: Long = 0L,
       var tasks: Int = 0, var taskTimeMs: Long = 0L,
-      var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L)
+      var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
+      var maxTaskMs: Long = 0L, var maxTaskRows: Long = 0L)
 
   def main(args: Array[String]): Unit = {
     val name = args(0)
@@ -58,6 +61,11 @@ object JobProfile {
             r.taskTimeMs += m.executorRunTime
             r.shuffleRead += m.shuffleReadMetrics.totalBytesRead
             r.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+            // the longest task: one task holding a job's critical path
+            if (m.executorRunTime > r.maxTaskMs) {
+              r.maxTaskMs = m.executorRunTime
+              r.maxTaskRows = m.inputMetrics.recordsRead
+            }
           }
         }
       }
@@ -79,7 +87,7 @@ object JobProfile {
       jobSum += dur
       prevEnd = math.max(prevEnd, r.completed)
       println(f"  job=${r.id}%3d dur=$dur%7.3f gapBefore=$gap%7.3f tasks=${r.tasks}%4d " +
-        f"taskTime=${r.taskTimeMs}%6d ms shufR=${r.shuffleRead}%8d shufW=${r.shuffleWrite}%8d  ${r.desc.take(110)}")
+        f"taskTime=${r.taskTimeMs}%6d ms maxTask=${r.maxTaskMs}%5d ms/${r.maxTaskRows}%7d rows shufR=${r.shuffleRead}%8d shufW=${r.shuffleWrite}%8d  ${r.desc.take(110)}")
     }
     println(f"PROFILE_SUM jobs=${jobs.size} jobTime=$jobSum%.3f s gaps=$gapSum%.3f s total=$total%.3f s")
     spark.stop()

@@ -5,6 +5,7 @@ import graft.sinks.MergeUpsert
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftglue.ListedParquet
 
 /** Incremental WORK → TRUSTED promotion: process only the WORK files
   * that appeared since the last promote, not the whole zone.
@@ -41,32 +42,57 @@ object IncrementalPromote {
   private final case class Watermark(mtime: Long, boundaryFiles: Set[String])
   private val NoWatermark = Watermark(Long.MinValue, Set.empty)
 
+  /** Hidden siblings of the watermark file `p` used while it is
+    * replaced: the new version before its rename, the old one beside
+    * it. */
+  private def tmpOf(p: Path) = new Path(p.getParent, s".${p.getName}.tmp")
+  private def asideOf(p: Path) = new Path(p.getParent, s".${p.getName}.prev")
+
   private def readWatermark(spark: SparkSession, p: Path): Watermark = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) NoWatermark
-    else {
-      val in = fs.open(p)
-      val raw = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
-      finally in.close()
-      val lines = raw.split("\n").toList
-      // A torn/empty watermark write (create+write is not atomic) must
-      // degrade to reprocessing — idempotent by K2 — not brick every
-      // future promote with a parse error.
-      lines.headOption.flatMap(_.trim.toLongOption) match {
-        case Some(wm) => Watermark(wm, lines.drop(1).map(_.trim).filter(_.nonEmpty).toSet)
-        case None =>
-          System.err.println(s"[promote] unreadable watermark at $p — reprocessing")
-          NoWatermark
-      }
+    // without `p`, a write died between its two renames: the old
+    // watermark is still whole beside it
+    Seq(p, asideOf(p)).find(fs.exists) match {
+      case None => NoWatermark
+      case Some(src) =>
+        val in = fs.open(src)
+        val raw = try new String(in.readAllBytes(), StandardCharsets.UTF_8)
+        finally in.close()
+        val lines = raw.split("\n").toList
+        // An unreadable watermark (one torn by an older, in-place
+        // writer, or edited by hand) must degrade to reprocessing —
+        // idempotent by K2 — not brick every future promote with a
+        // parse error.
+        lines.headOption.flatMap(_.trim.toLongOption) match {
+          case Some(wm) => Watermark(wm, lines.drop(1).map(_.trim).filter(_.nonEmpty).toSet)
+          case None =>
+            System.err.println(s"[promote] unreadable watermark at $src — reprocessing")
+            NoWatermark
+        }
     }
   }
 
+  /** Replace the watermark so that a crash leaves the old version or
+    * the new one, never a torn file (which would cost an O(zone)
+    * reprocess): write the new version to a hidden temp sibling, move
+    * the old one aside, rename the new one in, drop the old. Between
+    * the two renames [[readWatermark]] reads the aside copy. Plain
+    * renames only, because a Hadoop rename does not replace an
+    * existing file; it must be atomic, as the filesystem contract on
+    * [[graft.sinks.DirSwap]] requires. */
   private def writeWatermark(spark: SparkSession, p: Path, wm: Watermark): Unit = {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val (tmp, aside) = (tmpOf(p), asideOf(p))
+    val out = fs.create(tmp, true)
     try out.write((wm.mtime.toString +: wm.boundaryFiles.toSeq.sorted)
       .mkString("\n").getBytes(StandardCharsets.UTF_8))
     finally out.close()
+    if (fs.exists(p)) {
+      fs.delete(aside, false) // older than `p`: left by a crash before its delete
+      if (!fs.rename(p, aside)) sys.error(s"watermark write failed: could not move $p aside")
+    }
+    if (!fs.rename(tmp, p)) sys.error(s"watermark write failed: could not rename $tmp")
+    fs.delete(aside, false)
     ()
   }
 
@@ -105,7 +131,7 @@ object IncrementalPromote {
     }
     if (newFiles.isEmpty) return Result(0, 0L, wm.mtime)
 
-    val batch = spark.read.parquet(newFiles.map(_.getPath.toString): _*)
+    val batch = ListedParquet.read(spark, newFiles, None, None)
     val curated =
       Promote.transform(batch, skIds, hyphen, clock, deterministic).persist()
     try {

@@ -81,8 +81,8 @@ object AggStateSink {
     val emptyState = graft.operators.Cdc.aggState(
       delta.drop("__sign").limit(0), groupCols, sumCols)
     val state =
-      if (fs.exists(target)) spark.read
-        .schema(ParquetMemo.asNullable(emptyState.schema)).parquet(statePath)
+      if (fs.exists(target))
+ParquetMemo.readContract(spark, statePath, emptyState.schema)
       else emptyState
     val next = graft.operators.Cdc.maintainAgg(
       state, delta, groupCols, sumCols)
@@ -120,8 +120,8 @@ object AggStateSink {
     val emptyState = graft.operators.Cdc.extremaState(
       delta.drop("__sign").limit(0), groupCols, extCols)
     val state =
-      if (fs.exists(target)) spark.read
-        .schema(ParquetMemo.asNullable(emptyState.schema)).parquet(statePath)
+      if (fs.exists(target))
+ParquetMemo.readContract(spark, statePath, emptyState.schema)
       else emptyState
     val next = graft.operators.Cdc.maintainExtrema(
       state, delta, baseAfter, groupCols, extCols)

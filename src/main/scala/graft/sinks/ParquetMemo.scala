@@ -46,6 +46,8 @@ private[graft] object ParquetMemo {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
   private val rowsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, (String, StructType, Array[Row])]()
+  private val contractChecked =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   private def fsFor(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -63,7 +65,9 @@ private[graft] object ParquetMemo {
   }
 
   /** Test hook: simulate a fresh driver JVM. */
-  private[graft] def clearAll(): Unit = { schemaMemo.clear(); rowsMemo.clear() }
+  private[graft] def clearAll(): Unit = {
+    schemaMemo.clear(); rowsMemo.clear(); contractChecked.clear()
+  }
 
   /** Read an explicit file list under sidecar `dir` (basePath = dir)
     * with the memoized schema; first read per dir infers once and
@@ -130,9 +134,44 @@ private[graft] object ParquetMemo {
       listed.getOrElse(p, throw ListedParquet.pathNotFound(p.toString)))
     val k = key(dir)
     val memo = Option(schemaMemo.get(k))
-    val df = ListedParquet.read(spark, dir, statuses, memo)
+    val df = ListedParquet.read(spark, statuses, Some(dir), memo)
     if (memo.isEmpty) schemaMemo.put(k, df.schema)
     df
+  }
+
+  /** `spark.read.schema(asNullable(contract)).parquet(dir)` for an
+    * existing table whose schema is fixed by contract (the
+    * per-micro-batch reads of TRUSTED and aggregate state; every field
+    * nullable, as a parquet round trip reports it). An explicit schema silently drops
+    * stored columns the contract lacks and reads contract columns the
+    * table lacks as NULL, so the first read of each path (per contract)
+    * in this JVM compares the stored schema, from the footer inference
+    * would read, with the contract by field name and type (nullability
+    * aside), and fails naming both on any difference. */
+  def readContract(spark: SparkSession, dir: String, contract: StructType): DataFrame = {
+    val df = ListedParquet.readDir(spark, dir, Some(asNullable(contract)))
+    val k = key(dir)
+    if (contractChecked.get(k) != contract) {
+      ListedParquet.storedSchema(df).foreach { stored =>
+        def fields(s: StructType) = asNullable(s).map(f => f.name -> f.dataType).toMap
+        val (have, want) = (fields(stored), fields(contract))
+        val diverged = (have.keySet ++ want.keySet).filter(n => have.get(n) != want.get(n))
+        if (diverged.nonEmpty) throw new IllegalStateException(
+          s"stored schema at $dir diverged from its contract in " +
+            s"${diverged.toSeq.sorted.mkString(", ")}\n  stored:   ${stored.toDDL}" +
+            s"\n  contract: ${contract.toDDL}")
+        contractChecked.put(k, contract)
+      }
+    }
+    df
+  }
+
+  /** Row count of the parquet file at `path`, from its footer: one
+    * driver-side footer read, no Spark job. */
+  def footerRows(conf: org.apache.hadoop.conf.Configuration, path: Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    try r.getRecordCount finally r.close()
   }
 
   /** `schema` with every field nullable, nested ones included — what

@@ -178,12 +178,8 @@ object Purge {
     // staging it had just written; touched is a handful of files by
     // design, so O(touched) footer opens replace both jobs
     val conf = spark.sparkContext.hadoopConfiguration
-    def footerRows(paths: Seq[String]): Long = paths.map { p =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(p), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    }.sum
+    def footerRows(paths: Seq[String]): Long =
+      paths.map(p => ParquetMemo.footerRows(conf, new Path(p))).sum
     val nBefore = footerRows(touched)
     val nAfter = footerRows(fs.listStatus(staging).toSeq
       .map(_.getPath)

@@ -4,6 +4,7 @@ import graft.core.LakeStorage
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ListedParquet
 
 /** K1 — parquet append to WORK (reference
   * `shared_etls/etls/cloud_utils.py:438-475`). Plain append-mode
@@ -41,6 +42,27 @@ object ParquetAppend {
   * `updates` IS the dataset — force-broadcasting that would OOM the
   * cluster). Set `broadcastUpdates = true` only when the caller
   * KNOWS the batch is small and wants to skip AQE's first shuffle.
+  *
+  * The whole-table rewrite scans the stored table and writes the
+  * result in the same tasks, so it can run on no more cores than the
+  * stored files split into. A row group is the smallest unit a scan
+  * splits at, so a one-file, one-row-group table is read by ONE task,
+  * and that task writes it back as one file: every later merge stays
+  * on one core. So over a stored table the rewrite caps each output
+  * file at about one core's split of it: stored bytes / the
+  * parallelism `maxSplitBytes` divides by (`files.minPartitionNum`,
+  * else the leaf-node default parallelism), clamped to Spark's own
+  * `[openCostInBytes, maxPartitionBytes]` and converted to rows with
+  * the largest stored file's footer row count. The cap is derived
+  * from the table on every rewrite, not set as a writer option (a
+  * smaller `parquet.block.size` would also split the scan, but for
+  * every write of the session). That adds no shuffle and no setting: a first merge over a
+  * one-file table still runs in one task but leaves at least as many
+  * files as cores, and every later merge scans and writes on all of
+  * them. A table below `openCostInBytes` stays one file; at scale the
+  * cap is Spark's 128 MB split. The bootstrap write, the z-order path
+  * (`zorderFiles` sets its file count) and the per-partition swaps
+  * are not capped.
   */
 object MergeUpsert {
 
@@ -367,21 +389,21 @@ object MergeUpsert {
     recoverTrusted(fs, trustedPath)
     retainPrevHours.foreach(gcPrevSnapshots(fs, trustedPath, _))
 
-    val result =
-      if (storage.exists(trustedPath)) {
-        val trusted = spark.read.parquet(trustedPath)
-        if (evolveSchema) mergedEvolved(trusted, updates, key, broadcastUpdates)
-        else merged(trusted, updates, key, broadcastUpdates)
-      } else updates
-    val toWrite =
-      if (zorderBy.isEmpty) result
-      else {
-        val n =
-          if (zorderFiles > 0) zorderFiles
-          else result.sparkSession.sessionState.conf.numShufflePartitions
-        ZOrder.cluster(result, zorderBy, n)
-      }
-    toWrite.write.mode(SaveMode.Overwrite).parquet(Swap.staging(trustedPath))
+    val stored =
+      if (storage.exists(trustedPath)) Some(ListedParquet.readDir(spark, trustedPath, None))
+      else None
+    val result = stored.fold(updates) { trusted =>
+      if (evolveSchema) mergedEvolved(trusted, updates, key, broadcastUpdates)
+      else merged(trusted, updates, key, broadcastUpdates)
+    }
+    if (zorderBy.isEmpty) writeStaging(result, trustedPath, stored)
+    else {
+      val n =
+        if (zorderFiles > 0) zorderFiles
+        else result.sparkSession.sessionState.conf.numShufflePartitions
+      ZOrder.cluster(result, zorderBy, n)
+        .write.mode(SaveMode.Overwrite).parquet(Swap.staging(trustedPath))
+    }
     Swap.commit(fs, trustedPath, retainPrevHours.map(_ => newSnapshot(trustedPath)))
   }
 
@@ -436,21 +458,48 @@ object MergeUpsert {
     retainPrevHours.foreach(gcPrevSnapshots(fs, trustedPath, _))
 
     // change payload schema == table schema by contract (scaladoc
-    // above), so the table read takes it EXPLICITLY (every field
-    // nullable, what a parquet round trip reports) — this is the
+    // above), so the table read takes it EXPLICITLY, checked against
+    // the stored footer on the first read — this is the
     // per-micro-batch hot path of the streaming CDC apply, and the
     // schema-inference job the bare read pays per batch is pure
     // overhead (guide §5: no driver-side jobs for known metadata)
     val payload = changes.drop((opCol +: seqCols): _*)
-    val tableSchema = ParquetMemo.asNullable(payload.schema)
-    val trusted =
+    val stored =
       if (storage.exists(trustedPath))
-        spark.read.schema(tableSchema).parquet(trustedPath)
-      else spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payload.schema)
-    appliedChanges(trusted, changes, key, seqCols, opCol)
-      .write.mode(SaveMode.Overwrite).parquet(Swap.staging(trustedPath))
+        Some(ParquetMemo.readContract(spark, trustedPath, payload.schema))
+      else None
+    val trusted = stored.getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], payload.schema))
+    writeStaging(appliedChanges(trusted, changes, key, seqCols, opCol), trustedPath, stored)
     Swap.commit(fs, trustedPath, retainPrevHours.map(_ => newSnapshot(trustedPath)))
+  }
+
+  /** The staging write of a whole-table rewrite ([[mergeInto]]
+    * without z-order, [[applyChangesInto]]). Over a `stored` table it
+    * caps the rows per output file at about one core's split of that
+    * table (the "Scale posture" rule in the object doc). Rows per
+    * file come from the largest stored file's footer, read on the
+    * driver; the files come from the stored read's own file index. */
+  private def writeStaging(
+      rows: DataFrame, trustedPath: String, stored: Option[DataFrame]): Unit = {
+    val w = rows.write.mode(SaveMode.Overwrite)
+    stored.flatMap(rowsPerSplit).fold(w)(n => w.option("maxRecordsPerFile", n))
+      .parquet(Swap.staging(trustedPath))
+  }
+
+  private def rowsPerSplit(stored: DataFrame): Option[Long] = {
+    val spark = stored.sparkSession
+    val conf = spark.sessionState.conf
+    val files = ListedParquet.dataFiles(stored)
+    files.maxByOption(_.getLen).filter(_.getLen > 0).flatMap { largest =>
+      val rows = ParquetMemo.footerRows(spark.sparkContext.hadoopConfiguration, largest.getPath)
+      val perCore = files.map(_.getLen).sum / ListedParquet.splitParallelism(spark)
+      val target = math.min(conf.filesMaxPartitionBytes,
+        math.max(conf.filesOpenCostInBytes, perCore))
+      val n = math.max(1L, (BigInt(rows) * target / largest.getLen).toLong)
+      Option.when(rows > 0)(
+        if (conf.maxRecordsPerFile > 0) math.min(n, conf.maxRecordsPerFile) else n)
+    }
   }
 
   /** (epochMillis, path) of retained pre-merge snapshots, newest

@@ -1104,9 +1104,8 @@ object StreamingOps {
           // payload schema == table schema by contract; explicit
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
-            if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
-              .parquet(trustedPath)
+            if (storage.exists(trustedPath))
+              graft.sinks.ParquetMemo.readContract(spark, trustedPath, payload.schema)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               payload.schema)
@@ -1180,9 +1179,8 @@ object StreamingOps {
           // payload schema == table schema by contract; explicit
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
-            if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
-              .parquet(trustedPath)
+            if (storage.exists(trustedPath))
+              graft.sinks.ParquetMemo.readContract(spark, trustedPath, payload.schema)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               payload.schema)
@@ -1245,9 +1243,8 @@ object StreamingOps {
           // payload schema == table schema by contract; explicit
           // schema skips the per-micro-batch inference job (guide §5)
           val pre =
-            if (storage.exists(trustedPath)) spark.read
-              .schema(graft.sinks.ParquetMemo.asNullable(payload.schema))
-              .parquet(trustedPath)
+            if (storage.exists(trustedPath))
+              graft.sinks.ParquetMemo.readContract(spark, trustedPath, payload.schema)
             else spark.createDataFrame(
               spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
               payload.schema)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -21,6 +21,12 @@ import org.apache.hadoop.util.Progressable
 class FaultFs extends RawLocalFileSystem {
   override def getScheme: String = "faultfs"
   override def getUri: java.net.URI = java.net.URI.create("faultfs:///")
+
+  // plain statuses: the local ones load their permissions lazily
+  // through a `file:` URI, which fails under this scheme (`listFiles`)
+  override def listStatus(p: Path): Array[FileStatus] =
+    super.listStatus(p).map(s => new FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath))
 
   override def rename(src: Path, dst: Path): Boolean = {
     FaultFs.tick("rename", src, dst); super.rename(src, dst)
@@ -52,11 +58,12 @@ object FaultFs {
   @volatile private var root: String = null
   @volatile private var failAt = Long.MaxValue
   private val seen = new java.util.concurrent.atomic.AtomicLong
+  private val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** Count mutating calls below the local directory `localRoot` and
     * fail the `k`-th. */
   def arm(localRoot: String, k: Long): Unit = {
-    seen.set(0); failAt = k; root = localRoot.stripSuffix("/") + "/"
+    seen.set(0); log.clear(); failAt = k; root = localRoot.stripSuffix("/") + "/"
   }
 
   /** Stop counting and injecting. */
@@ -65,12 +72,21 @@ object FaultFs {
   /** Calls counted since the last [[arm]]. */
   def counted: Long = seen.get
 
+  /** The counted calls since the last [[arm]], in order, each as
+    * `op path` or `rename src -> dst` (local paths). */
+  def calls: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    log.asScala.toSeq
+  }
+
   private def tick(op: String, paths: Path*): Unit = {
     val r = root
     val local = paths.map(p => Option(p.toUri.getPath).getOrElse("") + "/")
     if (r != null && local.exists(_.startsWith(r)) &&
-        !local.exists(_.contains("/_temporary")) &&
-        seen.incrementAndGet() == failAt)
-      throw new java.io.IOException(s"injected fault at call #$failAt: $op ${paths.mkString(" -> ")}")
+        !local.exists(_.contains("/_temporary"))) {
+      log.add(s"$op ${local.map(_.stripSuffix("/")).mkString(" -> ")}")
+      if (seen.incrementAndGet() == failAt)
+        throw new java.io.IOException(s"injected fault at call #$failAt: $op ${paths.mkString(" -> ")}")
+    }
   }
 }

@@ -376,6 +376,137 @@ class MergeSpec extends AnyFunSuite {
       "the stored row's NULL must survive, not read back as a default")
   }
 
+  // ---- whole-table rewrite file sizing (MergeUpsert "Scale posture")
+
+  /** A session whose `openCostInBytes` is small enough that a 2 MB
+    * table spans several cores' splits, as a 16 MB+ one does at the
+    * default; the shared session is left alone. */
+  private def smallSplitSession() = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.openCostInBytes", (128 * 1024).toString)
+    s
+  }
+
+  /** One-file, one-row-group stored table of `n` rows over
+    * (sk, v, n): `v` is a hash, so the file does not compress away. */
+  private def oneFileTable(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) = {
+    s.range(n).selectExpr("cast(id as string) as sk",
+        "sha2(cast(id as string), 256) as v", "id as n")
+      .coalesce(1).write.parquet(dir)
+    val files = parquetFiles(dir)
+    assert(files.size == 1)
+    val in = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(files.head.toString), spark.sparkContext.hadoopConfiguration))
+    try assert(in.getRowGroups.size == 1) finally in.close()
+    files.head
+  }
+
+  private def parquetFiles(dir: String) =
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet")).toSeq
+
+  private def rowsPerFile(s: org.apache.spark.sql.SparkSession, dir: String): Seq[Long] =
+    s.read.parquet(dir).groupBy(input_file_name()).count().collect().map(_.getLong(1)).toSeq
+
+  /** Per-task input rows of the stage that wrote output during
+    * `body`: the file-scan tasks of the rewrite (tasks over the
+    * in-memory update batch read no input rows and are left out). */
+  private def writeStageReads(body: => Unit): Seq[Long] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) tasks.add((e.stageId,
+          e.taskMetrics.inputMetrics.recordsRead, e.taskMetrics.outputMetrics.recordsWritten))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    val byStage = tasks.asScala.toSeq.groupBy(_._1)
+    val writes = byStage.filter(_._2.exists(_._3 > 0))
+    assert(writes.size == 1, s"one write stage expected, got ${writes.keys}")
+    writes.head._2.map(_._2).filter(_ > 0)
+  }
+
+  /** The cap on a rewrite of one stored file of `len` bytes and
+    * `rows` rows: one core's split, clamped to Spark's split bounds. */
+  private def capOf(s: org.apache.spark.sql.SparkSession, len: Long, rows: Long): Long = {
+    val conf = s.sessionState.conf
+    val target = math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes, len / spark.sparkContext.defaultParallelism))
+    rows * target / len
+  }
+
+  private def assertSpread(reads: Seq[Long], what: String): Unit = {
+    val cores = spark.sparkContext.defaultParallelism
+    assert(reads.size >= cores, s"$what: ${reads.size} scan tasks on $cores cores")
+    val mean = reads.sum.toDouble / reads.size
+    assert(reads.max <= 2 * mean,
+      s"$what: largest task read ${reads.max} rows, mean $mean (${reads.sorted.reverse})")
+  }
+
+  test("mergeInto over a one-file table leaves core-sized files; the next merge runs on every core") {
+    val s = smallSplitSession()
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-msize").toString + "/t"
+    val n = 40000
+    val file = oneFileTable(s, dir, n)
+    assert(file.length / spark.sparkContext.defaultParallelism >=
+      s.sessionState.conf.filesOpenCostInBytes, "fixture must span several splits")
+    val cap = capOf(s, file.length, n)
+    val u1 = (0 until 400).map(i => ((i * 97).toString, "u1", -i.toLong)).toDF("sk", "v", "n")
+    val u2 = (0 until 400).map(i => ((i * 89 + 7).toString, "u2", i.toLong)).toDF("sk", "v", "n")
+      .union(Seq(("new", "u2", 0L)).toDF("sk", "v", "n"))
+    val base = s.read.parquet(dir).localCheckpoint() // the merges replace the stored files
+
+    MergeUpsert.mergeInto(s, dir, u1)
+    val sizes = rowsPerFile(s, dir)
+    assert(sizes.max <= cap, s"files of $sizes rows, cap $cap")
+    assert(sizes.count(_ > u1.count()) >= spark.sparkContext.defaultParallelism,
+      s"the stored rows must leave at least one file per core: $sizes")
+
+    assertSpread(writeStageReads(MergeUpsert.mergeInto(s, dir, u2)), "second mergeInto")
+    val want = MergeUpsert.merged(MergeUpsert.merged(base, u1), u2)
+    assert(s.read.parquet(dir).select("sk", "v", "n").as[(String, String, Long)].collect().toSet ==
+      want.as[(String, String, Long)].collect().toSet)
+  }
+
+  test("applyChangesInto over a one-file table leaves core-sized files; the next apply runs on every core") {
+    val s = smallSplitSession()
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-asize").toString + "/t"
+    val n = 40000
+    val file = oneFileTable(s, dir, n)
+    val cap = capOf(s, file.length, n)
+    def log(seq: Int, rows: Seq[(String, String, Long, String)]) =
+      rows.map { case (k, v, x, op) => (k, v, x, op, seq) }.toDF("sk", "v", "n", "op", "seq")
+    val c1 = log(1, (0 until 400).map(i => ((i * 97).toString, "c1", 1L, if (i % 4 == 0) "D" else "U")))
+    val c2 = log(2, (0 until 400).map(i => ((i * 89 + 7).toString, "c2", 2L, if (i % 5 == 0) "D" else "U")) :+
+      (("new", "c2", 2L, "I")))
+    val base = s.read.parquet(dir).localCheckpoint() // the merges replace the stored files
+
+    MergeUpsert.applyChangesInto(s, dir, c1)
+    val sizes = rowsPerFile(s, dir)
+    assert(sizes.max <= cap, s"files of $sizes rows, cap $cap")
+    assert(sizes.count(_ > c1.count()) >= spark.sparkContext.defaultParallelism,
+      s"the stored rows must leave at least one file per core: $sizes")
+
+    assertSpread(writeStageReads(MergeUpsert.applyChangesInto(s, dir, c2)), "second applyChangesInto")
+    val want = MergeUpsert.appliedChanges(MergeUpsert.appliedChanges(base, c1), c2)
+    assert(s.read.parquet(dir).select("sk", "v", "n").as[(String, String, Long)].collect().toSet ==
+      want.select("sk", "v", "n").as[(String, String, Long)].collect().toSet)
+  }
+
+  test("mergeInto over a table below openCostInBytes keeps its stored rows in one file") {
+    val dir = Files.createTempDirectory("graft-msmall").toString + "/t"
+    oneFileTable(spark, dir, 2000)
+    MergeUpsert.mergeInto(spark, dir, Seq(("5", "u", 0L), ("new", "u", 0L)).toDF("sk", "v", "n"))
+    val survivors = spark.read.parquet(dir).where(col("v") =!= "u")
+    assert(survivors.count() == 1999)
+    assert(survivors.select(input_file_name()).distinct().count() == 1,
+      "a table below openCostInBytes must not be split")
+  }
+
   // K3 (cloud_utils.py:172-247): recursive truncate + clearOrCreate
   test("K3 truncate and clearOrCreate") {
     val storage = LakeStorage(spark)
