@@ -1,9 +1,10 @@
 package graft.sinks
 
 import graft.functions.BloomSketch
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ListedParquet
 
 /** Targeted key deletion ("right to be forgotten") with MINIMAL file
   * rewrite — the lakehouse delete, without a metadata-log format:
@@ -36,14 +37,12 @@ import org.apache.spark.sql.functions._
   *  4. only files with ≥1 actual hit are rewritten (anti-join against
   *     the broadcast keys), one replacement file per rewritten input.
   *
-  * Crash contract (single-writer, same assumption as the K2 merge
-  * swap): replacements are staged under `.purge-staging` and
-  * committed with a marker, then a JOURNAL of the originals is
-  * written at the table root, then originals are deleted and staged
-  * files move in, then journal + staging vanish. [[recover]] (called
-  * automatically on entry) finishes a journaled swap or rolls back an
-  * uncommitted one — every crash point lands in exactly one of those
-  * two states, so no row is ever duplicated or half-deleted.
+  * Crash contract: the replacements and the originals they replace
+  * are one [[FileDelta]] commit (staging `.purge-staging`, journal
+  * `_purge_journal`), the same commit the per-partition TRUSTED
+  * writers make; [[recover]], run on entry, is the TRUSTED table's
+  * one recovery, so a purge crashed at any point is healed by the
+  * next purge or merge alike.
   *
   * Deletion keys are a broadcast-sized list by contract (a GDPR/
   * takedown list, not a table) — they ride every join as a broadcast
@@ -57,10 +56,6 @@ import org.apache.spark.sql.functions._
   * semi-join is broadcast).
   */
 object Purge {
-
-  private val CommitMarker = "_GRAFT_PURGE_COMMIT"
-  private def stagingPath(table: String) = new Path(table, ".purge-staging")
-  private def journalPath(table: String) = new Path(table, "_purge_journal")
 
   final case class Report(
       nDataFiles: Int,
@@ -79,14 +74,15 @@ object Purge {
       column: String): Report = {
     val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(spark, table)
+    MergeUpsert.recoverTrusted(fs, table)
 
     val files = BloomIndex.dataFilePaths(spark, table)
     require(files.nonEmpty, s"no data files under $table")
-    // ONE schema inference for the whole purge (r18): the verify and
-    // rewrite reads below reuse this schema instead of paying their
-    // own footer-inference job each
-    val tblSchema = spark.read.parquet(files.head).schema
+    // ONE schema inference for the whole purge, from the first file's
+    // footer on the driver (no Spark job): the verify and rewrite
+    // reads below reuse it instead of inferring their own
+    val tblSchema = ListedParquet.read(spark,
+      Seq(fs.getFileStatus(new Path(files.head))), None, None).schema
     val tableCols = tblSchema.fieldNames
     require(tableCols.contains(column), s"no column $column in $table")
     Seq("__key", "__file").foreach(r => require(!tableCols.contains(r),
@@ -168,8 +164,7 @@ object Purge {
       .parquet(touched: _*)
     val survivors = touchedDf
       .join(broadcast(keyVals), col(column) === col("__key"), "left_anti")
-    val staging = stagingPath(table)
-    fs.delete(staging, true)
+    val staging = MergeUpsert.Delta.staging(table)
     survivors.coalesce(touched.size)
       .write.mode(SaveMode.Overwrite).parquet(staging.toString)
     // deleted-row accounting from parquet FOOTER record counts
@@ -185,63 +180,13 @@ object Purge {
       .map(_.getPath)
       .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
       .map(_.toString))
-
-    // ── journal, then marker, then swap ────────────────────────────
-    // journal BEFORE marker: the journal write is not atomic, so it
-    // must land while recover() still rolls BACK (no marker). The
-    // atomic marker create is the single commit point; a roll-forward
-    // therefore always reads a complete journal — a truncated one
-    // would delete too few originals and leave duplicates behind.
-    val out = fs.create(journalPath(table))
-    out.write(touched.mkString("\n").getBytes("UTF-8"))
-    out.close()
-    fs.create(new Path(staging, CommitMarker)).close()
-    finishSwap(fs, table)
+    MergeUpsert.Delta.commit(fs, table, touched)
     Report(files.size, candidates.size, touched.size, nBefore - nAfter)
   }
 
-  /** Completes or rolls back an interrupted [[purge]]:
-    *  - journal present + staging committed → finish the swap
-    *    (idempotent: delete journaled originals still present, move
-    *    staged files not yet moved);
-    *  - journal present + staging uncommitted → roll back (originals
-    *    are all still in place — deletion only starts after the
-    *    committed journal exists);
-    *  - no journal → drop any stale staging dir. */
-  def recover(spark: SparkSession, table: String): Unit = {
-    val fs = new Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val journal = journalPath(table)
-    val staging = stagingPath(table)
-    if (fs.exists(journal)) {
-      val committed = fs.exists(new Path(staging, CommitMarker))
-      if (committed) finishSwap(fs, table)
-      else { fs.delete(staging, true); fs.delete(journal, false) }
-    } else if (fs.exists(staging)) {
-      fs.delete(staging, true)
-    }
-  }
-
-  private def finishSwap(fs: FileSystem, table: String): Unit = {
-    val journal = journalPath(table)
-    val staging = stagingPath(table)
-    val in = fs.open(journal)
-    val originals = scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString.split("\n").filter(_.nonEmpty)
-    in.close()
-    originals.foreach { f =>
-      val p = new Path(f)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-    fs.listStatus(staging).foreach { st =>
-      val name = st.getPath.getName
-      // data files only — the marker and any _SUCCESS stay behind
-      if (!name.startsWith("_") && !name.startsWith(".")) {
-        val dest = new Path(table, name)
-        if (!fs.exists(dest)) fs.rename(st.getPath, dest)
-      }
-    }
-    fs.delete(journal, false)
-    fs.delete(staging, true)
-  }
+  /** Completes or rolls back an interrupted [[purge]] — or whole-table
+    * merge, or per-partition write — of `table`. */
+  def recover(spark: SparkSession, table: String): Unit =
+    MergeUpsert.recoverTrusted(
+      new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration), table)
 }

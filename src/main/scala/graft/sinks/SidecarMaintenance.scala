@@ -16,30 +16,13 @@ import org.apache.spark.sql.functions._
   * the same per-file-partial layout [[InvertedIndex]]'s
   * `_termstats`/`_doclen` pioneered).
   *
-  * Crash contract (single-writer, the family's standing assumption —
-  * same as the K2 merge swap and [[Purge]]):
-  *  1. new rows are staged under `.maint-staging` (dot-prefixed, so
-  *     readers of the sidecar never see them), together with this
-  *     commit's COVERAGE DELTA record, and sealed with a commit
-  *     marker;
-  *  2. a JOURNAL listing the doomed files is written at the sidecar
-  *     root (`_maint_journal`, underscore-prefixed — invisible to
-  *     parquet reads);
-  *  3. doomed files are deleted, staged files move in (file renames
-  *     preserving their partition-relative paths), the coverage
-  *     delta moves into the `_coverage` log, journal and staging
-  *     vanish.
-  * [[recover]] — called on entry by every maintenance operation —
-  * finishes a journaled swap (marker present: deletes and moves are
-  * idempotent) or rolls one back (no marker: originals are all still
-  * in place, staging is garbage). Every crash point therefore lands
-  * in exactly one of two states: the old sidecar, or the new one —
-  * and because the coverage delta rides INSIDE the same commit
-  * window, the coverage log lands in the matching state too.
-  * Readers racing a live swap can see a torn view for the duration
-  * of step 3 only — the window the single-writer contract already
-  * accepts; [[requireClean]] lets read paths refuse loudly when a
-  * maintenance journal is present (see its doc for the race caveat).
+  * Crash contract: each commit is one [[FileDelta]] (staging
+  * `.maint-staging`, journal `_maint_journal`), run under a lease
+  * that makes the single-writer assumption loud; [[recover]] heals it
+  * on entry to every maintenance operation. The commit's COVERAGE
+  * DELTA is a staged log entry of that same commit, so the coverage
+  * log always matches the sidecar. [[requireClean]] lets directory
+  * read paths refuse loudly while a maintenance journal is present.
   *
   * 100 TB posture: bytes written per commit = staged batch +
   * survivors of the doomed files. A refresh that appends 1 GB to a
@@ -55,9 +38,10 @@ import org.apache.spark.sql.functions._
   */
 object SidecarMaintenance {
 
-  private[graft] val CommitMarker = "_GRAFT_MAINT_COMMIT"
-  private[graft] def stagingPath(dir: String) = new Path(dir, ".maint-staging")
-  private[graft] def journalPath(dir: String) = new Path(dir, "_maint_journal")
+  private val Delta = FileDelta(".maint-staging", "_maint_journal", "_GRAFT_MAINT_COMMIT")
+  private[graft] val CommitMarker = Delta.marker
+  private[graft] def stagingPath(dir: String) = Delta.staging(dir)
+  private[graft] def journalPath(dir: String) = Delta.journal(dir)
   private[graft] def leasePath(dir: String) = new Path(dir, "_maint_lease")
 
   /** Single-writer DETECTION for [[commitDelta]]: an atomic
@@ -259,14 +243,6 @@ object SidecarMaintenance {
   private def fsFor(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  // partition directories may legitimately start with `_` (e.g.
-  // `__cell=3`) — Spark's own hidden-path rule exempts names
-  // containing `=`, and so must this walk
-  private def visible(p: Path): Boolean = {
-    val n = p.getName
-    n.contains("=") || (!n.startsWith("_") && !n.startsWith("."))
-  }
-
   // test hook: per-root counter of recursive walks / corpus listings,
   // so specs can pin "this operation never lists the sidecar (or
   // corpus)" — the steady-state contract of [[planDelta]],
@@ -286,7 +262,7 @@ object SidecarMaintenance {
   private def walkStatuses(fs: FileSystem, root: Path): Seq[FileStatus] = {
     countWalk(root)
     def walk(p: Path): Seq[FileStatus] =
-      fs.listStatus(p).toSeq.filter(s => visible(s.getPath)).flatMap { s =>
+      fs.listStatus(p).toSeq.filter(s => FileDelta.visible(s.getPath)).flatMap { s =>
         if (s.isDirectory) walk(s.getPath) else Seq(s)
       }
     walk(root)
@@ -346,10 +322,11 @@ object SidecarMaintenance {
       case None => fs.mkdirs(staging)
     }
     // The commit's coverage delta — computed from the STAGED files
-    // (a delta-sized read) BEFORE the commit point, so the coverage
-    // log can never drift from the sidecar: rollback discards it
-    // with the staging dir, roll-forward moves it into `_coverage`
-    // alongside the data files it describes. With `statsCol` the
+    // (a delta-sized read) BEFORE the commit point and staged as a
+    // log entry of the same commit, so the coverage log can never
+    // drift from the sidecar: rollback discards it with the staging
+    // dir, roll-forward moves it into `_coverage` after the data
+    // files it describes. With `statsCol` the
     // record also carries each pair's id min/max — what lets
     // [[keptRows]] prune the clash guard's file list driver-side.
     val doomedRel = doomed.map(relPath(dir, _))
@@ -400,27 +377,18 @@ object SidecarMaintenance {
         }
       })
     val seq = nextSeq(fs, dir)
-    val covOut = fs.create(new Path(staging, f"$CovDeltaPrefix$seq%09d"))
+    val covOut = fs.create(new Path(coveragePath(staging.toString), f"delta-$seq%09d"))
     covOut.write((
       doomedRel.map(r => s"-\t$r") ++
         stagedRecs.map(rec => "+\t" + rec.line))
       .mkString("\n").getBytes("UTF-8"))
     covOut.close()
-    // journal BEFORE marker: the journal write is multi-byte and not
-    // atomic, so it must land while a crash still rolls BACK (no
-    // marker → recover discards staging+journal, originals intact).
-    // The marker create — an atomic empty-file create — is the one
-    // and only commit point; after it, recover rolls FORWARD off a
-    // journal that is known complete.
-    val out = fs.create(journalPath(dir))
-    out.write(doomed.mkString("\n").getBytes("UTF-8"))
-    out.close()
-    fs.create(new Path(staging, CommitMarker)).close()
-    // commit point reached, swap not yet run — the live-window state
-    // snapshot readers must serve through (test/witness hook)
-    val hook = onCommitPoint
-    if (hook != null) hook(dir)
-    finishSwap(fs, dir)
+    // at the commit point the swap has not yet run — the live-window
+    // state snapshot readers must serve through (test/witness hook)
+    Delta.commit(fs, dir, doomed, () => {
+      val hook = onCommitPoint
+      if (hook != null) hook(dir)
+    })
     advanceMemo(fs, dir, doomedRel.toSet, stagedRecs)
   }
 
@@ -776,7 +744,7 @@ object SidecarMaintenance {
   //                `+\t<corpus>\t<sidecarRel>\t<bytes>` adds a pair
   // Current map = latest base + every delta with seq > its seq, in
   // order. Delta records ride INSIDE the journaled commit window
-  // (staged before the marker, moved in by finishSwap), so under the
+  // (staged log entries of the [[FileDelta]] commit), so under the
   // single-writer contract the log is exactly consistent with the
   // sidecar at every recovered crash point — which is what lets the
   // steady state trust it without a full recursive listing. The
@@ -811,7 +779,6 @@ object SidecarMaintenance {
   // fold stays the implemented path.
 
   private[graft] def coveragePath(dir: String) = new Path(dir, "_coverage")
-  private val CovDeltaPrefix = "_covdelta-"
   private val CheckpointEvery = 64
 
   private def relPath(dir: String, f: String): String = {
@@ -1058,7 +1025,7 @@ object SidecarMaintenance {
   // reader spent a fixed fraction of wall-clock locked out. Instead,
   // a probe resolves its file list from the last COMMITTED coverage
   // generation and reads those files by explicit path: under
-  // [[finishSwap]]'s move-staged → flip-coverage → delete-doomed
+  // [[FileDelta]]'s move-staged → flip-coverage → delete-doomed
   // order, that list is fully on disk at every instant of the window,
   // so a probe racing a commit returns the pre-commit truth (or, past
   // the flip, the post-commit truth) — never a torn view and never a
@@ -1378,24 +1345,16 @@ object SidecarMaintenance {
   }
 
   /** Completes or rolls back an interrupted [[commitDelta]] (or
-    * [[publishDir]]) — the [[Purge.recover]] contract on a sidecar
-    * dir. Publish healing runs first: a rebuild crash can leave the
-    * sidecar itself renamed aside, and the journal (if any) rode
-    * along inside it. */
+    * [[publishDir]]). Publish healing runs first: a rebuild crash can
+    * leave the sidecar itself renamed aside, and the journal (if any)
+    * rode along inside it. */
   def recover(spark: SparkSession, dir: String): Unit = {
     val fs = fsFor(spark, dir)
     recoverPublish(spark, dir)
-    if (!fs.exists(new Path(dir))) return
-    val journal = journalPath(dir)
-    val staging = stagingPath(dir)
-    if (fs.exists(journal)) {
+    if (fs.exists(new Path(dir)) && Delta.recover(fs, dir)) {
       covMemo.remove(dir) // replayed commit: reload+validate from disk
       covView.remove(dir)
       snapMemo.remove(dir)
-      if (fs.exists(new Path(staging, CommitMarker))) finishSwap(fs, dir)
-      else { fs.delete(staging, true); fs.delete(journal, false) }
-    } else if (fs.exists(staging)) {
-      fs.delete(staging, true)
     }
   }
 
@@ -1524,66 +1483,6 @@ object SidecarMaintenance {
     if (victims.isEmpty) return
     val rows = ParquetMemo.readFiles(spark, dir, victims)
     commitDelta(spark, dir, Some(layout(rows)), victims, partCols, statsCol)
-  }
-
-  // Step order is the SNAPSHOT-ISOLATION contract for coverage-
-  // resolved readers ([[snapshotRead]]): (1) staged data files move
-  // in — new names, unreferenced by the committed log, invisible to
-  // a snapshot reader; (2) the coverage delta moves into the log —
-  // THE generation flip: a reader resolving before it gets the old
-  // record set, whose files are all still on disk because (3) the
-  // doomed deletions run LAST. So at every instant of the window
-  // (and at every crash point inside it) the log on disk names a
-  // file set that is fully present: probes serve the pre-flip truth
-  // before step 2 and the post-commit truth after it, never a torn
-  // view — where the r15 delete-first order gave readers a window
-  // with rows missing. The only residual race is a reader that
-  // resolves pre-flip and then delays its read past a LATER commit's
-  // step 3 deleting its files — one full commit window of grace,
-  // surfaced loudly as a missing-path read, never as silent partial
-  // rows.
-  private def finishSwap(fs: FileSystem, dir: String): Unit = {
-    val journal = journalPath(dir)
-    val staging = stagingPath(dir)
-    val in = fs.open(journal)
-    val doomed = scala.io.Source.fromInputStream(in, "UTF-8")
-      .mkString.split("\n").filter(_.nonEmpty)
-    in.close()
-    // (1) move staged data files in, preserving partition-relative
-    // paths (part-file names carry per-job UUIDs, so cross-commit
-    // collisions cannot happen; move-if-absent makes replay a no-op)
-    def move(p: Path, rel: Seq[String]): Unit =
-      fs.listStatus(p).foreach { st =>
-        val name = st.getPath.getName
-        if (visible(st.getPath)) {
-          if (st.isDirectory) move(st.getPath, rel :+ name)
-          else {
-            val destDir = rel.foldLeft(new Path(dir))(new Path(_, _))
-            fs.mkdirs(destDir)
-            val dest = new Path(destDir, name)
-            if (!fs.exists(dest)) fs.rename(st.getPath, dest)
-          }
-        }
-      }
-    move(staging, Seq.empty)
-    // (2) the commit's coverage delta joins the log (same idempotent
-    // move-if-absent: a replayed finishSwap finds it already there)
-    if (fs.exists(staging)) fs.listStatus(staging).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith(CovDeltaPrefix)) {
-        val cp = coveragePath(dir)
-        fs.mkdirs(cp)
-        val dest = new Path(cp, "delta-" + n.stripPrefix(CovDeltaPrefix))
-        if (!fs.exists(dest)) fs.rename(st.getPath, dest)
-      }
-    }
-    // (3) doomed deletions LAST — see the order contract above
-    doomed.foreach { f =>
-      val p = new Path(f)
-      if (fs.exists(p)) fs.delete(p, false)
-    }
-    fs.delete(journal, false)
-    fs.delete(staging, true)
   }
 
   // ── recoverable rebuild publish ─────────────────────────────────

@@ -61,7 +61,7 @@ object ParquetAppend {
   * files as cores, and every later merge scans and writes on all of
   * them. A table below `openCostInBytes` stays one file; at scale the
   * cap is Spark's 128 MB split. The bootstrap write, the z-order path
-  * (`zorderFiles` sets its file count) and the per-partition swaps
+  * (`zorderFiles` sets its file count) and the per-partition writers
   * are not capped.
   */
 object MergeUpsert {
@@ -116,17 +116,17 @@ object MergeUpsert {
 
   /** Partition-aware K2 for a hive-partitioned TRUSTED table: only
     * the partitions an update batch actually touches are read,
-    * merged, and swapped — the rest of the table is never scanned or
+    * merged, and replaced — the rest of the table is never scanned or
     * rewritten. This is the difference between an O(batch) and an
     * O(table) merge at 100 TB: a daily upsert touching 3 of 3000
     * date-partitions does 0.1% of the full-rewrite work.
     *
     * Protocol: compute the merged rows for the affected partitions
-    * into `<trusted>__staging/<part>=v/…`, then swap each affected
-    * partition directory (rename-aside, promote, drop old) — the same
-    * crash-recoverable two-rename dance as the whole-table path,
-    * applied per partition. Unaffected partition directories are
-    * untouched (their files keep their identity).
+    * into the table's delta staging (`<part>=v/…` inside it), then
+    * replace every file listed under those partitions with the
+    * staged ones as ONE [[FileDelta]] commit — the same commit
+    * [[Purge]] makes. Unaffected partition directories are untouched
+    * (their files keep their identity).
     *
     * Precondition: rows never move between partitions on update
     * (the partition column is part of the row identity) — same
@@ -160,7 +160,7 @@ object MergeUpsert {
     val trustedAffected = spark.read.parquet(trustedPath)
       .where(col(partitionCol).isin(affected: _*)) // partition pruning
     val mergedRows = merged(trustedAffected, updates, key)
-    stageAndSwapPartitions(spark, trustedPath, mergedRows, affected,
+    commitPartitions(fs, trustedPath, trustedAffected, mergedRows, affected,
       partitionCol, zorderBy, zorderFiles)
   }
 
@@ -169,7 +169,7 @@ object MergeUpsert {
     * of the CDC apply with the O(batch)-not-O(table) discipline of
     * [[mergeIntoPartitioned]]. At 100 TB this is the operator a
     * change-log consumer actually runs: a daily log touching 3 of
-    * 3000 date-partitions reads, rewrites, and swaps 0.1% of the
+    * 3000 date-partitions reads, rewrites, and replaces 0.1% of the
     * table; deletes land because the anti-join removes every touched
     * key before surviving upserts union back in.
     *
@@ -209,7 +209,7 @@ object MergeUpsert {
     val trustedAffected = spark.read.parquet(trustedPath)
       .where(col(partitionCol).isin(affected: _*)) // partition pruning
     val applied = appliedChanges(trustedAffected, changes, key, seqCols, opCol)
-    stageAndSwapPartitions(spark, trustedPath, applied, affected,
+    commitPartitions(fs, trustedPath, trustedAffected, applied, affected,
       partitionCol, Nil, 0)
   }
 
@@ -228,95 +228,39 @@ object MergeUpsert {
 
   /** Shared tail of the partition-scoped writers: stage the computed
     * rows hive-partitioned (optionally z-clustered within each
-    * partition), then swap each affected partition directory via the
-    * crash-recoverable rename dance. */
-  private def stageAndSwapPartitions(
-      spark: SparkSession,
+    * partition) in the table's delta staging, then commit them in
+    * place of every data file `read` listed under the affected
+    * partitions. A partition the batch emptied keeps no file, so
+    * readers see it absent. */
+  private def commitPartitions(
+      fs: org.apache.hadoop.fs.FileSystem,
       trustedPath: String,
+      read: DataFrame,
       rows: DataFrame,
       affected: Seq[Any],
       partitionCol: String,
       zorderBy: Seq[String],
       zorderFiles: Int): Unit = {
-    val fs = new Path(trustedPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = new Path(trustedPath + "__staging")
-    // Aside-copies live in a SIBLING root, never inside the table —
-    // a leftover inside the table directory would be discovered as a
-    // bogus partition by every subsequent read.
-    val prevRoot = new Path(trustedPath + "__prev")
-
-    if (fs.exists(staging)) fs.delete(staging, true)
+    // Hive-escapes the value exactly as the parquet writer did —
+    // spaces/colons/slashes in partition values map to %xx on disk.
+    val dirs = affected.map(v => org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+      .getPartitionPathString(partitionCol, v.toString)).toSet
+    val doomed = ListedParquet.dataFiles(read)
+      .map(_.getPath).filter(p => dirs(p.getParent.getName)).map(_.toString)
     clusteredForPartitions(rows, partitionCol, zorderBy, zorderFiles)
-      .write.partitionBy(partitionCol).parquet(staging.toString)
-
-    if (fs.exists(prevRoot)) fs.delete(prevRoot, true)
-    fs.mkdirs(prevRoot)
-    affected.foreach { v =>
-      // Hive-escapes the value exactly as the parquet writer did —
-      // spaces/colons/slashes in partition values map to %xx on disk.
-      val dir = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-        .getPartitionPathString(partitionCol, v.toString)
-      val src = new Path(staging, dir)
-      val dst = new Path(trustedPath, dir)
-      val prev = new Path(prevRoot, dir)
-      if (fs.exists(dst) && !fs.rename(dst, prev))
-        sys.error(s"partition swap failed: could not move $dst aside")
-      if (fs.exists(src)) {
-        if (!fs.rename(src, dst))
-          sys.error(s"partition swap failed: could not promote $src")
-      }
-      // else: the batch emptied this partition (delete-only winners) —
-      // moving the old directory aside IS the apply; a crash before
-      // the aside root drops restores it, and re-running the batch
-      // re-empties it (at-least-once on the batch, same as every swap)
-    }
-    fs.delete(prevRoot, true)
-    fs.delete(staging, true)
-    ()
+      .write.partitionBy(partitionCol).parquet(Delta.staging(trustedPath).toString)
+    Delta.commit(fs, trustedPath, doomed)
   }
 
-  /** Entry recovery for every writer of a TRUSTED table. The
-    * whole-table swap ([[Swap]]) and the per-partition swap share the
-    * `__staging`/`__prev` names, so their leftovers are told apart
-    * first: only the per-partition swap keeps the live table in place
-    * while its aside root holds nothing but bare partition
-    * directories (`col=value`); a whole-table aside is a complete
-    * former table (data files, `_SUCCESS`). Two existence checks when
-    * nothing needs healing. */
-  private def recoverTrusted(
+  /** Entry recovery for every writer of a TRUSTED table, and for
+    * [[Purge.purge]]: heal an interrupted whole-table swap first (it
+    * may have parked the table aside), then any file-level commit
+    * inside the table. Four existence checks when nothing needs
+    * healing. */
+  private[sinks] def recoverTrusted(
       fs: org.apache.hadoop.fs.FileSystem, trustedPath: String): Unit = {
-    val target = new Path(trustedPath)
-    val staging = new Path(Swap.staging(trustedPath))
-    val prevRoot = new Path(trustedPath + "__prev")
-    val staged = fs.exists(staging)
-    val parked = fs.exists(prevRoot)
-    if (parked && fs.exists(target) && fs.listStatus(prevRoot).forall(st =>
-        st.isDirectory && st.getPath.getName.contains('=')))
-      recoverPartitionSwap(fs, target, staging, prevRoot)
-    else if (staged || parked) Swap.recover(fs, trustedPath)
-  }
-
-  /** Crash recovery for the per-partition swap: any partition present
-    * in the aside root but missing from the table is restored; then
-    * leftover staging/aside roots are dropped. (A partition present
-    * in BOTH places means the promote completed — the aside copy is
-    * stale and deleted with its root.) */
-  private[sinks] def recoverPartitionSwap(
-      fs: org.apache.hadoop.fs.FileSystem,
-      target: Path, staging: Path, prevRoot: Path): Unit = {
-    if (fs.exists(prevRoot)) {
-      fs.listStatus(prevRoot).foreach { st =>
-        val dst = new Path(target, st.getPath.getName)
-        if (!fs.exists(dst)) {
-          if (!fs.rename(st.getPath, dst))
-            sys.error(s"partition recovery failed: could not restore ${st.getPath}")
-        }
-      }
-      fs.delete(prevRoot, true)
-    }
-    if (fs.exists(staging)) fs.delete(staging, true)
-    ()
+    Swap.recover(fs, trustedPath)
+    Delta.recover(fs, trustedPath)
   }
 
   /** Suffix infix for retained pre-merge snapshots:
@@ -326,9 +270,13 @@ object MergeUpsert {
 
   /** The K2 swap layout: `<trusted>__staging` sealed by the parquet
     * write's own `_SUCCESS`, the live table aside at `<trusted>__prev`
-    * during the swap. The per-partition swap uses the same two names;
-    * [[recoverTrusted]] routes each crash state to its own recovery. */
+    * during the swap. */
   private val Swap = DirSwap("__staging", "__prev", "_SUCCESS")
+
+  /** The file-level commit inside a TRUSTED table: the per-partition
+    * writers and [[Purge]] replace files of the table through it,
+    * under Purge's names. */
+  private[sinks] val Delta = FileDelta(".purge-staging", "_purge_journal", "_GRAFT_PURGE_COMMIT")
 
   private def newSnapshot(trustedPath: String): String =
     trustedPath + PrevSnapshotInfix + System.currentTimeMillis()

@@ -1,6 +1,8 @@
 package graft
 
+import graft.operators.Cdc
 import graft.sinks.{AggStateSink, BloomIndex, Compaction, IvfIndex, MergeUpsert, Purge, SidecarMaintenance, StatsIndex, TxnCommit}
+import graft.sources.ZstdCorpus
 import graft.streaming.StreamingOps
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
@@ -10,7 +12,8 @@ import scala.util.Try
 import scala.util.control.NonFatal
 
 /** Crash-injection matrix over every caller of the whole-directory
-  * swap ([[graft.sinks.DirSwap]]). For each caller and every k up to
+  * swap ([[graft.sinks.DirSwap]]) and of its file-level sibling
+  * ([[graft.sinks.FileDelta]]). For each caller and every k up to
   * the number of filesystem mutations its operation makes, the k-th
   * mutation fails ([[FaultFs]]) — the writer dies right there — and
   * then the caller's normal entry point runs. Readers must then see
@@ -46,6 +49,7 @@ class DirSwapCrashMatrixSpec extends AnyFunSuite {
       debris: String => Seq[String])
 
   private def withRoot[T](f: (String, String) => T): T = {
+    fs // registers the scheme, so a test runs on its own too
     val local = java.nio.file.Files.createTempDirectory("graft-swapmatrix").toString
     try f(local, s"faultfs://$local")
     finally FileUtil.fullyDelete(new java.io.File(local))
@@ -243,6 +247,128 @@ class DirSwapCrashMatrixSpec extends AnyFunSuite {
       // a staging written before the journal is dead until the next
       // commitAll overwrites it; recovery only owes the swap's aside
       debris = r => Seq(s"$r/a__txprev", s"$r/b__txprev", s"$r/txn/txn.journal")))
+  }
+
+  test("crash matrix: AggStateSink.maintainExtremaInto next batch") {
+    val s0 = Seq(("a", "g", 1), ("b", "g", 9), ("c", "h", 3)).toDF("k", "g", "v")
+    val s1 = Seq(("a", "g", 1), ("c", "h", 3), ("d", "h", 7)).toDF("k", "g", "v")
+    def maintain(r: String, before: DataFrame, after: DataFrame, batch: Long): Unit =
+      AggStateSink.maintainExtremaInto(spark, s"$r/s",
+        Cdc.signedDelta(before, after, Seq("k")), after, Seq("g"), Seq("v"), batch)
+    def state(path: String): Set[String] =
+      if (!exists(path)) Set.empty
+      else spark.read.parquet(path).collect().map(_.toSeq.mkString(",")).toSet
+    runMatrix(Caller("maintainExtremaInto next batch",
+      setup = r => maintain(r, s0.limit(0), s0, 0L),
+      op = r => maintain(r, s0, s1, 1L),
+      entry = r => maintain(r, s0, s1, 1L),
+      read = r => state(s"$r/s"),
+      debris = r => swapDebris(s"$r/s", "__staging", "__prev")))
+  }
+
+  test("crash matrix: Compaction.compactCorpusTier") {
+    val docs = (1 to 400).map(i => (i.toLong,
+      s"document $i: the ${i % 13} lakes feed ${i % 7} rivers and ${i * 31 % 97} streams"))
+      .toDF("doc_id", "text")
+    val dict = ZstdCorpus.trainDict(docs, dictBytes = 1024)
+    def dataFiles(z: String): Int =
+      fs.listStatus(new Path(z)).count(st => st.isFile && !st.getPath.getName.startsWith("_"))
+    runMatrix(Caller("compactCorpusTier",
+      setup = r => ZstdCorpus.writeCompressed(spark, docs.repartition(4), s"$r/z", dict = Some(dict)),
+      op = r => Compaction.compactCorpusTier(spark, s"$r/z", graduateAtBytes = Long.MaxValue),
+      entry = r => Compaction.compactCorpusTier(spark, s"$r/z", graduateAtBytes = Long.MaxValue),
+      // same documents either way; the file count tells the versions apart
+      read = r => (ZstdCorpus.readCompressed(spark, s"$r/z").select("doc_id", "text")
+        .as[(Long, String)].collect().toSet, dataFiles(s"$r/z")),
+      debris = r => swapDebris(s"$r/z", "__cstaging", "__cprev")))
+  }
+
+  // File-level commits ([[graft.sinks.FileDelta]]): the debris is the
+  // delta's staging and journal inside the directory, beside the
+  // whole-table swap's siblings where the directory is a TRUSTED table.
+
+  private def deltaDebris(dir: String, staging: String, journal: String) =
+    Seq(s"$dir/$staging", s"$dir/$journal")
+
+  private def trustedDebris(t: String) =
+    swapDebris(t, "__staging", "__prev") ++ deltaDebris(t, ".purge-staging", "_purge_journal")
+
+  /** 40 keys in 4 files, as a merge leaves them. */
+  private def mergedTable(t: String): Unit =
+    MergeUpsert.mergeInto(spark, t, (1 to 40).map(i => (s"k$i", i)).toDF("sk", "v").repartition(4))
+
+  private def purge(t: String, keys: String*): Unit =
+    Purge.purge(spark, t, keys.toDF("key"), "key", "sk")
+
+  test("crash matrix: Purge.purge") {
+    runMatrix(Caller("Purge.purge",
+      setup = r => mergedTable(s"$r/t"),
+      op = r => purge(s"$r/t", "k1", "k22"),
+      entry = r => purge(s"$r/t", "absent"),
+      read = r => rows(s"$r/t"),
+      debris = r => trustedDebris(s"$r/t")))
+  }
+
+  test("crash matrix: SidecarMaintenance.commitDelta via IvfIndex.refresh over an appended corpus") {
+    def vectors(from: Long, until: Long): DataFrame =
+      spark.range(from, until).select(col("id").as("vec_id"),
+        array((1 to 8).map(j => sin(col("id") * j).cast("float")): _*).as("embedding"))
+    runMatrix(Caller("IvfIndex.refresh commitDelta",
+      setup = { r =>
+        vectors(0, 120).repartition(2).write.parquet(s"$r/v")
+        IvfIndex.collect(spark, s"$r/v", nCells = 4)
+        vectors(120, 150).coalesce(1).write.mode("append").parquet(s"$r/v")
+      },
+      op = r => IvfIndex.refresh(spark, s"$r/v"),
+      entry = r => IvfIndex.refresh(spark, s"$r/v"),
+      read = r => spark.read.parquet(IvfIndex.cellsPath(s"$r/v"))
+        .select("vec_id").as[Long].collect().sorted.toSeq,
+      debris = r => deltaDebris(IvfIndex.cellsPath(s"$r/v"), ".maint-staging", "_maint_journal")))
+  }
+
+  test("crash matrix: MergeUpsert.mergeIntoPartitioned") {
+    runMatrix(Caller("mergeIntoPartitioned",
+      setup = r => MergeUpsert.mergeIntoPartitioned(spark, s"$r/t",
+        pkv(("a", 1, "p1"), ("b", 2, "p2"), ("c", 3, "p3"))),
+      op = r => MergeUpsert.mergeIntoPartitioned(spark, s"$r/t",
+        pkv(("a", 10, "p1"), ("b", 20, "p2"), ("d", 4, "p2"))),
+      entry = r => MergeUpsert.mergeIntoPartitioned(spark, s"$r/t", pkv()),
+      read = r => byPart(s"$r/t"),
+      debris = r => trustedDebris(s"$r/t")))
+  }
+
+  test("crash matrix: MergeUpsert.applyChangesIntoPartitioned, a batch that empties a partition") {
+    def log(rs: (String, Int, String, String, Int)*) = rs.toDF("sk", "v", "part", "op", "seq")
+    eachCrash("applyChangesIntoPartitioned",
+      setup = r => MergeUpsert.applyChangesIntoPartitioned(spark, s"$r/t",
+        log(("a", 1, "p1", "I", 1), ("b", 2, "p2", "I", 1), ("c", 3, "p3", "I", 1))),
+      op = r => MergeUpsert.applyChangesIntoPartitioned(spark, s"$r/t",
+        log(("b", 0, "p2", "D", 2), ("a", 10, "p1", "U", 2))),
+      read = r => byPart(s"$r/t")) { (r, old, fresh, at) =>
+      assert(old.contains("p2") && !fresh.contains("p2"), s"$at: the batch must empty p2")
+      MergeUpsert.applyChangesIntoPartitioned(spark, s"$r/t", log())
+      val seen = byPart(s"$r/t")
+      assert(seen == old || seen == fresh, s"$at: readers see $seen; old $old, new $fresh")
+      noDebris(at, trustedDebris(s"$r/t"))
+    }
+  }
+
+  // A purge crashed mid-commit, then a whole-table merge before any
+  // purge recovery: the merge's entry must finish or roll back the
+  // purge first, or its swap discards the purge's journal and staged
+  // survivors together with the half-purged table it rewrote.
+  test("crash matrix: Purge.purge, then a mergeInto before the purge's recovery (no row lost)") {
+    eachCrash("purge then mergeInto",
+      setup = r => mergedTable(s"$r/t"),
+      op = r => purge(s"$r/t", "k1", "k22"),
+      read = r => rows(s"$r/t")) { (r, old, fresh, at) =>
+      MergeUpsert.mergeInto(spark, s"$r/t", kv())
+      Purge.recover(spark, s"$r/t")
+      val seen = rows(s"$r/t")
+      assert(seen == old || seen == fresh,
+        s"$at: readers see ${seen.size} rows; old ${old.size}, purged ${fresh.size}")
+      noDebris(at, trustedDebris(s"$r/t"))
+    }
   }
 
   // The rows below put a writer that does NOT run the swap's recovery

@@ -143,23 +143,32 @@ class MergeSpec extends AnyFunSuite {
     assert(collectAll(trustedPath) == Set(("a", 1), ("z", 9), ("b", 2)))
   }
 
-  test("partition swap recovery restores a partition stranded in the aside root") {
+  test("partition delta recovery finishes a committed replacement whose originals are already deleted") {
     val dir = Files.createTempDirectory("graft-pcrash").toString
     val trustedPath = s"$dir/trusted"
     val init = Seq(("a", 1, "p1"), ("b", 2, "p2")).toDF("sk", "v", "part")
     MergeUpsert.mergeIntoPartitioned(spark, trustedPath, init, partitionCol = "part")
-    // simulate a crash mid-swap: p2 moved aside, never promoted
-    val prevRoot = java.nio.file.Paths.get(trustedPath + "__prev")
-    java.nio.file.Files.createDirectories(prevRoot)
-    java.nio.file.Files.move(
-      java.nio.file.Paths.get(s"$trustedPath/part=p2"),
-      prevRoot.resolve("part=p2"))
+    // simulate a crash mid-commit: journal and marker committed, p2's
+    // replacement staged, p2's originals already deleted
+    val fs = new org.apache.hadoop.fs.Path(trustedPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staging = new org.apache.hadoop.fs.Path(trustedPath, ".purge-staging")
+    val journal = new org.apache.hadoop.fs.Path(trustedPath, "_purge_journal")
+    val originals = fs.listStatus(new org.apache.hadoop.fs.Path(trustedPath, "part=p2"))
+      .map(_.getPath).filter(_.getName.endsWith(".parquet")).toSeq
+    originals.foreach(p => org.apache.hadoop.fs.FileUtil.copy(fs, p, fs,
+      new org.apache.hadoop.fs.Path(staging, s"part=p2/replacement-${p.getName}"), false,
+      spark.sparkContext.hadoopConfiguration))
+    val out0 = fs.create(journal)
+    out0.write(originals.mkString("\n").getBytes("UTF-8")); out0.close()
+    fs.create(new org.apache.hadoop.fs.Path(staging, "_GRAFT_PURGE_COMMIT")).close()
+    originals.foreach(fs.delete(_, false))
     MergeUpsert.mergeIntoPartitioned(spark, trustedPath,
       Seq(("a", 10, "p1")).toDF("sk", "v", "part"), partitionCol = "part")
     val out = spark.read.parquet(trustedPath)
       .collect().map(r => (r.getAs[String]("sk"), r.getAs[Int]("v"))).toSet
     assert(out == Set(("a", 10), ("b", 2)))
-    assert(!Files.exists(prevRoot))
+    assert(!fs.exists(staging) && !fs.exists(journal))
   }
 
   test("partitioned merge hive-escapes partition values") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.{BloomIndex, InvertedIndex, Purge}
+import graft.sinks.{BloomIndex, InvertedIndex, MergeUpsert, Purge}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -136,5 +136,41 @@ class PurgeSpec extends AnyFunSuite {
     val alive = InvertedIndex.phraseSearch(
       spark, table, "text", "doc_id", "doc 1 2 payload")
     assert(alive.select("doc_id").as[Long].collect().toSeq == Seq(102L))
+  }
+
+  private def jobsDuring(body: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(); ()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get
+  }
+
+  test("purge infers the table schema from a footer on the driver: no schema job") {
+    val table = freshTable()
+    val keys = Seq(101L, 303L).toDF("id")
+    // the key collect, the locate and verify scans and the survivors
+    // write, with their broadcasts; inferring the schema in a Spark
+    // job would make it 11
+    assert(jobsDuring(Purge.purge(spark, table, keys, "id", "doc_id")) == 10)
+    assert(spark.read.parquet(table).count() == 98)
+  }
+
+  test("purge heals a TRUSTED table parked mid-swap, then deletes the keyed rows") {
+    val root = java.nio.file.Files.createTempDirectory("graft-purge-parked").toString
+    val table = s"$root/t"
+    MergeUpsert.mergeInto(spark, table,
+      (0L until 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text").repartition(2))
+    // a whole-table swap killed after moving the live table aside
+    assert(fs.rename(new Path(table), new Path(s"${table}__prev")))
+    val r = Purge.purge(spark, table, Seq(3L, 7L).toDF("id"), "id", "doc_id")
+    assert(r.nRowsDeleted == 2)
+    assert(spark.read.parquet(table).select("doc_id").as[Long].collect().toSet ==
+      (0L until 20L).toSet -- Set(3L, 7L))
+    assert(!fs.exists(new Path(s"${table}__prev")) && !fs.exists(new Path(s"${table}__staging")))
   }
 }
