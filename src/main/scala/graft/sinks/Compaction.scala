@@ -68,9 +68,8 @@ object Compaction {
     * Run on entry by [[compactWork]] and by the streaming ingest into
     * the zone, so an ingest never appends into a zone parked mid-swap
     * (it would start a fresh sink log there). */
-  private[graft] def recover(fs: FileSystem, workPath: String): Unit = {
-    Swap.recover(fs, workPath); ()
-  }
+  private[graft] def recover(fs: FileSystem, workPath: String): Unit =
+    Swap.recover(fs, workPath)
 
   private def dataFiles(fs: FileSystem, dir: Path): Seq[FileStatus] =
     fs.listStatus(dir).toSeq.filter { st =>

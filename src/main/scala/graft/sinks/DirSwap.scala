@@ -83,10 +83,9 @@ private[graft] final case class DirSwap(
   }
 
   /** Heal any interrupted [[commit]] around `live` (see the class doc
-    * for the states). Returns whether anything was left to heal — so
-    * callers holding in-memory views of `live` know to drop them.
-    * Two existence checks when nothing needs healing. */
-  def recover(fs: FileSystem, live: String): Boolean = {
+    * for the states). Two existence checks when nothing needs
+    * healing. */
+  def recover(fs: FileSystem, live: String): Unit = {
     val st = new Path(staging(live))
     val aside = new Path(live + asideSuffix)
     val staged = fs.exists(st)
@@ -103,7 +102,6 @@ private[graft] final case class DirSwap(
         }
       }
     }
-    staged || parked
   }
 
   private def promote(fs: FileSystem, live: String, retainAs: Option[String]): Unit = {
@@ -187,14 +185,17 @@ private[graft] final case class FileDelta(
   }
 
   /** Heal an interrupted [[commit]] in `dir` (see the class doc).
-    * Returns whether a journaled commit was finished or rolled back,
-    * so callers holding in-memory views of `dir` know to drop them. */
-  def recover(fs: FileSystem, dir: String): Boolean = {
+    * `beforeRollForward` gets the staging directory of a committed
+    * commit before it is finished. */
+  def recover(
+      fs: FileSystem,
+      dir: String,
+      beforeRollForward: Path => Unit = _ => ()): Unit = {
     val j = journal(dir)
     val st = staging(dir)
-    val journaled = fs.exists(j)
-    if (journaled) {
+    if (fs.exists(j)) {
       if (fs.exists(new Path(st, marker))) {
+        beforeRollForward(st)
         val in = fs.open(j)
         val doomed =
           try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -206,7 +207,6 @@ private[graft] final case class FileDelta(
         fs.delete(j, false)
       }
     } else if (fs.exists(st)) fs.delete(st, true)
-    journaled
   }
 
   private def finish(fs: FileSystem, dir: String, doomed: Seq[String]): Unit = {

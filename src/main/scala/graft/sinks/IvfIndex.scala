@@ -100,7 +100,7 @@ object IvfIndex {
     idx.centroids.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
     requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.asNullable(rows.schema)).parquet(next),
+      ParquetMemo.readDir(spark, next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }
@@ -429,8 +429,7 @@ object IvfIndex {
     cents.coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
     requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.asNullable(saltedRows.schema))
-        .parquet(next),
+      ParquetMemo.readDir(spark, next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }

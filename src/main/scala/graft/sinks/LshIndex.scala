@@ -77,7 +77,7 @@ object LshIndex {
     Seq((planes, seed)).toDF("planes", "seed").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_meta")
     IvfIndex.requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.asNullable(rows.schema)).parquet(next),
+      ParquetMemo.readDir(spark, next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }
@@ -206,7 +206,7 @@ object LshIndex {
     Seq((planes, seed)).toDF("planes", "seed").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_meta")
     IvfIndex.requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.asNullable(rows.schema)).parquet(next),
+      ParquetMemo.readDir(spark, next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }

@@ -91,7 +91,7 @@ object PqIndex {
       .toDF("m", "ks", "dsub", "flat").coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$next/_codebooks")
     IvfIndex.requireOneRowPerVector(
-      spark.read.schema(ParquetMemo.asNullable(rows.schema)).parquet(next),
+      ParquetMemo.readDir(spark, next),
       onTrip = { fs.delete(new Path(next), true) })
     SidecarMaintenance.publishDir(spark, dest)
   }

@@ -35,7 +35,9 @@ import org.apache.spark.sql.graftglue.ListedParquet
   *     candidate-sliver scan to avoid); with NEITHER index this
   *     degrades to the one full broadcast-semi scan;
   *  4. only files with ≥1 actual hit are rewritten (anti-join against
-  *     the broadcast keys), one replacement file per rewritten input.
+  *     the broadcast keys), one replacement file per rewritten input,
+  *     under the table's partition directories on a hive-partitioned
+  *     table.
   *
   * Crash contract: the replacements and the originals they replace
   * are one [[FileDelta]] commit (staging `.purge-staging`, journal
@@ -78,12 +80,10 @@ object Purge {
 
     val files = BloomIndex.dataFilePaths(spark, table)
     require(files.nonEmpty, s"no data files under $table")
-    // ONE schema inference for the whole purge, from the first file's
-    // footer on the driver (no Spark job): the verify and rewrite
-    // reads below reuse it instead of inferring their own
-    val tblSchema = ListedParquet.read(spark,
-      Seq(fs.getFileStatus(new Path(files.head))), None, None).schema
-    val tableCols = tblSchema.fieldNames
+    // every read below is the one explicit-file read: no schema job,
+    // and the table's partition columns discovered under `table`
+    val tableDf = ParquetMemo.readFiles(spark, table, files)
+    val tableCols = tableDf.columns
     require(tableCols.contains(column), s"no column $column in $table")
     Seq("__key", "__file").foreach(r => require(!tableCols.contains(r),
       s"table column $r collides with purge's internal names"))
@@ -141,9 +141,7 @@ object Purge {
       case (Some(sc), false) => sc
       case (None, true) => bloomCands()
       case (None, false) =>
-        spark.read.option("basePath", table).schema(tblSchema)
-          .parquet(files: _*)
-          .select(col("_metadata.file_path").as("__file"), col(column))
+        tableDf.select(col("_metadata.file_path").as("__file"), col(column))
           .join(broadcast(keyVals), col(column) === col("__key"), "left_semi")
           .select("__file").distinct().collect().map(_.getString(0))
           .toSeq.sorted
@@ -151,22 +149,22 @@ object Purge {
     if (candidates.isEmpty) return Report(files.size, 0, 0, 0L)
 
     // ── verify: drop bloom false positives (candidate sliver only) ─
-    val candDf = spark.read.option("basePath", table).schema(tblSchema)
-      .parquet(candidates: _*)
-      .withColumn("__file", col("_metadata.file_path"))
-    val touched = candDf.select(col("__file"), col(column))
+    val touched = ParquetMemo.readFiles(spark, table, candidates)
+      .select(col("_metadata.file_path").as("__file"), col(column))
       .join(broadcast(keyVals), col(column) === col("__key"), "left_semi")
       .select("__file").distinct().collect().map(_.getString(0)).toSeq.sorted
     if (touched.isEmpty) return Report(files.size, candidates.size, 0, 0L)
 
-    // ── rewrite: survivors of the touched files, one file each ─────
-    val touchedDf = spark.read.option("basePath", table).schema(tblSchema)
-      .parquet(touched: _*)
+    // ── rewrite: survivors of the touched files, one file each, laid
+    //    out under the table's partition directories ──────────────
+    val touchedDf = ParquetMemo.readFiles(spark, table, touched)
     val survivors = touchedDf
       .join(broadcast(keyVals), col(column) === col("__key"), "left_anti")
     val staging = MergeUpsert.Delta.staging(table)
     survivors.coalesce(touched.size)
-      .write.mode(SaveMode.Overwrite).parquet(staging.toString)
+      .write.mode(SaveMode.Overwrite)
+      .partitionBy(ListedParquet.partitionSchema(touchedDf).fieldNames.toIndexedSeq: _*)
+      .parquet(staging.toString)
     // deleted-row accounting from parquet FOOTER record counts
     // (driver-side, exact) — the old shape paid one full count job
     // over the touched files and a second read+count job over the
@@ -176,10 +174,7 @@ object Purge {
     def footerRows(paths: Seq[String]): Long =
       paths.map(p => ParquetMemo.footerRows(conf, new Path(p))).sum
     val nBefore = footerRows(touched)
-    val nAfter = footerRows(fs.listStatus(staging).toSeq
-      .map(_.getPath)
-      .filter(p => !p.getName.startsWith("_") && !p.getName.startsWith("."))
-      .map(_.toString))
+    val nAfter = footerRows(SidecarMaintenance.dataFiles(spark, staging.toString))
     MergeUpsert.Delta.commit(fs, table, touched)
     Report(files.size, candidates.size, touched.size, nBefore - nAfter)
   }

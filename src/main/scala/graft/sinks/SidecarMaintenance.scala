@@ -3,6 +3,7 @@ package graft.sinks
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ListedParquet
 
 /** The index family's shared DELTA-COMMIT protocol: mutate a parquet
   * sidecar directory by ADDING a batch of new rows (written as fresh
@@ -342,7 +343,7 @@ object SidecarMaintenance {
         // parquet round trip) — skips the read's schema-inference
         // job; partition columns are pruned by the projections below,
         // so their dir-parsed type is irrelevant
-        val stagedSchema = newRows.map(r => ParquetMemo.asNullable(r.schema))
+        val stagedSchema = newRows.map(r => ListedParquet.asNullable(r.schema))
         val rdr = spark.read.option("basePath", staging.toString)
         val base = stagedSchema.fold(rdr)(rdr.schema)
           .parquet(stagedFiles: _*)
@@ -376,7 +377,8 @@ object SidecarMaintenance {
                   Long.MinValue, Long.MaxValue) }
         }
       })
-    val seq = nextSeq(fs, dir)
+    val logBefore = covRecords(fs, dir)
+    val seq = (logBefore.map(_._1) :+ 0L).max + 1
     val covOut = fs.create(new Path(coveragePath(staging.toString), f"delta-$seq%09d"))
     covOut.write((
       doomedRel.map(r => s"-\t$r") ++
@@ -389,7 +391,7 @@ object SidecarMaintenance {
       val hook = onCommitPoint
       if (hook != null) hook(dir)
     })
-    advanceMemo(fs, dir, doomedRel.toSet, stagedRecs)
+    advanceMemo(spark, fs, dir, covSignature(logBefore), doomedRel.toSet, stagedRecs)
   }
 
   /** Driver-side derivation of a commit's coverage records from the
@@ -600,21 +602,32 @@ object SidecarMaintenance {
       }
     }
 
-  // Derived planning view of the coverage map — absolute-path pairs,
-  // the covered-corpus-file Set and the per-sidecar-file id-range
-  // stats — memoized per memo state and advanced INCREMENTALLY by
-  // append-only commits, so a streaming cadence's per-batch
-  // [[planAppend]] does O(batch) driver work on the hot path instead
-  // of rebuilding an O(covered-file-count) string array + Set every
-  // micro-batch. Validity is the covMemo signature: any out-of-band
-  // change misses and recomputes once.
+  /** The coverage map's records with their planning view —
+    * absolute-path pairs, the covered-corpus-file Set and the
+    * per-sidecar-file id-range stats. Memoized under the `_coverage`
+    * listing it was read (and validated) at, and advanced
+    * INCREMENTALLY by this JVM's own append-only commits, so a
+    * streaming cadence's per-batch [[planAppend]] does O(batch)
+    * driver work instead of rebuilding an O(covered-file-count)
+    * array and Set every micro-batch. */
   private final case class CovView(
-      sig: String,
+      recs: Array[CovRec],
       pairsAbs: Array[(String, String)],
       indexed: Set[String],
-      stats: Map[String, (Long, Long)])
-  private val covView =
-    new java.util.concurrent.ConcurrentHashMap[String, CovView]()
+      stats: Map[String, (Long, Long)]) {
+    def appended(dir: String, staged: Array[CovRec]): CovView =
+      CovView(recs ++ staged,
+        pairsAbs ++ staged.map(r => (r.corpus, s"$dir/${r.rel}")),
+        indexed ++ staged.iterator.map(_.corpus),
+        stats ++ foldStats(dir, staged))
+  }
+
+  private object CovView {
+    def apply(dir: String, recs: Array[CovRec]): CovView = {
+      val pairs = recs.map(rec => (rec.corpus, s"$dir/${rec.rel}"))
+      CovView(recs, pairs, pairs.map(_._1).toSet, foldStats(dir, recs))
+    }
+  }
 
   /** Fold per-pair records into per-sidecar-file [lo, hi] ranges —
     * statless records poison their file to the full-range sentinel
@@ -636,47 +649,20 @@ object SidecarMaintenance {
     m.toMap
   }
 
-  /** The planning view, healing the log with one scan when
-    * absent/torn. */
-  private def planView(spark: SparkSession, dir: String): CovView = {
-    def build(recs: Array[CovRec], sig: String): CovView = {
-      val pairs = recs.map(rec => (rec.corpus, s"$dir/${rec.rel}"))
-      val view = CovView(sig, pairs, pairs.map(_._1).toSet,
-        foldStats(dir, recs))
-      if (sig != null) covView.put(dir, view)
-      view
-    }
-    readCoverage(spark, dir) match {
-      case Some(recs) =>
-        // a successful readCoverage guarantees covMemo holds these
-        // records under the CURRENT signature, so the cached view is
-        // valid iff its sig matches the memo's
-        val memo = covMemo.get(dir)
-        val sig = if (memo == null) null else memo._1
-        val v = covView.get(dir)
-        if (v != null && sig != null && v.sig == sig) v
-        else build(recs, sig)
-      case None =>
-        // heal LAZILY: bootstrap and out-of-band rewrites don't pay
-        // an extra scan — the first refresh after them does this one
-        // fallback scan and every refresh from then on plans for
-        // free. The cached view must NOT be consulted here: if the
-        // checkpoint write failed (e.g. rename lost to a concurrent
-        // writer) the memo signature can still match a view built
-        // from PRE-heal records — drop it and build from the scan
-        covView.remove(dir)
-        val scanned = scanPairs(spark, dir) // relative sidecar paths
-        checkpointCoverage(spark, dir, scanned)
-        build(scanned, null)
-    }
-  }
+  /** The planning view, healing the log with one scan when absent,
+    * torn or stale — LAZILY: bootstrap and out-of-band rewrites don't
+    * pay an extra scan, the first refresh after them does this one
+    * fallback scan and every refresh from then on plans for free. */
+  private def planView(spark: SparkSession, dir: String): CovView =
+    readCoverage(spark, dir)
+      .getOrElse(checkpointCoverage(spark, dir, scanPairs(spark, dir)))
 
   /** Corpus files the sidecar currently covers, from the coverage
     * log (memoized — no sidecar scan, no corpus listing); None when
     * the log is absent/torn (caller falls back to its own source of
     * truth, which also heals the log on the next refresh). */
   def coveredFiles(spark: SparkSession, dir: String): Option[Set[String]] =
-    readCoverage(spark, dir).map(_.map(_.corpus).toSet)
+    readCoverage(spark, dir).map(_.indexed)
 
   /** APPEND-ONLY plan: `candidates` (fully-qualified corpus file
     * paths — e.g. the files a streaming micro-batch just published)
@@ -749,11 +735,13 @@ object SidecarMaintenance {
   // sidecar at every recovered crash point — which is what lets the
   // steady state trust it without a full recursive listing. The
   // listing-based validation still runs whenever the log is loaded
-  // from DISK (fresh JVM, or the in-JVM memo's cheap signature check
-  // — one listing of the `_coverage` dir, O(commits since
-  // checkpoint) — misses): any out-of-band mutation, torn record, or
-  // parse failure fails that check and planDelta falls back to the
-  // scan, healing the log in place. PLANNING correctness never
+  // from DISK (fresh JVM, or a [[LakeMemo]] miss on the `_coverage`
+  // listing — one listing, O(commits since checkpoint), whose
+  // path:length:mtime signature changes with any commit, checkpoint,
+  // republish or out-of-band rewrite of the log): any out-of-band
+  // mutation, torn record, or parse failure fails that check and
+  // planDelta falls back to the scan, healing the log in place.
+  // PLANNING correctness never
   // depends on the log: a stale-missing entry re-indexes a file and
   // trips the duplicate guard loudly; the disk-load validation
   // catches the rest. The one thing that TRUSTS the log is the
@@ -768,7 +756,7 @@ object SidecarMaintenance {
   // deltas the log is folded into a fresh base (amortized
   // O(file-count / CheckpointEvery) per commit).
   //
-  // Memory posture: the memoized map holds one (corpus path,
+  // Memory posture: the memoized view holds one (corpus path,
   // sidecar-relative path, length) triple per corpus file — the
   // manifest-in-driver model every table format uses (~100 MB at a
   // million files, well inside a production driver). The log layout
@@ -803,79 +791,54 @@ object SidecarMaintenance {
         CovRec(c, relPath(dir, sf), len, Long.MinValue, Long.MaxValue) }
   }
 
-  /** The coverage log's records: (seq, isBase, path), sorted by seq. */
+  /** The coverage log's records: (seq, isBase, status), sorted by seq. */
   private def covRecords(
-      fs: FileSystem, dir: String): Seq[(Long, Boolean, Path)] = {
+      fs: FileSystem, dir: String): Seq[(Long, Boolean, FileStatus)] = {
     val cp = coveragePath(dir)
     if (!fs.exists(cp)) return Seq.empty
     fs.listStatus(cp).toSeq.flatMap { st =>
       val n = st.getPath.getName
       if (n.startsWith("base-"))
-        n.stripPrefix("base-").toLongOption.map((_, true, st.getPath))
+        n.stripPrefix("base-").toLongOption.map((_, true, st))
       else if (n.startsWith("delta-"))
-        n.stripPrefix("delta-").toLongOption.map((_, false, st.getPath))
+        n.stripPrefix("delta-").toLongOption.map((_, false, st))
       else None
     }.sortBy(_._1)
   }
 
-  private def nextSeq(fs: FileSystem, dir: String): Long =
-    (covRecords(fs, dir).map(_._1) :+ 0L).max + 1
+  /** The log listing's [[LakeMemo]] signature. */
+  private def covSignature(recs: Seq[(Long, Boolean, FileStatus)]): String =
+    LakeMemo.signature(recs.map(_._3))
 
-  /** The log's cheap identity — which records it holds. One small
-    * directory listing, O(commits since the last checkpoint). */
-  private def covSignature(recs: Seq[(Long, Boolean, Path)]): String =
-    recs.map(r => r._3.getName).mkString("\n")
+  // The coverage memos, both keyed by the `_coverage` directory and
+  // its listing signature: the listing-VALIDATED planning view, and
+  // the parsed but unvalidated records snapshot readers resolve. They
+  // stay apart because a snapshot hit must never imply validation.
+  private val Planned = new LakeMemo.Slot[CovView]
+  private val Committed = new LakeMemo.Slot[Array[CovRec]]
+  private def covKey(dir: String): String = coveragePath(dir).toString
 
-  // In-JVM memo of the LAST coverage map written or read per sidecar
-  // dir, keyed by the coverage log's record signature. A streaming
-  // driver refreshing every micro-batch then validates with ONE
-  // `_coverage` listing per plan and zero corpus-file-count work;
-  // [[commitDelta]] advances it in place. A signature mismatch
-  // (another process committed) misses and falls through to the
-  // disk load, which re-validates against the full file listing.
-  private val covMemo =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (String, Array[CovRec])]()
-
-  /** Test hook: simulate a fresh driver JVM (memo empty, only the
-    * on-disk log to go on). */
-  private[graft] def clearCoverageMemo(): Unit = {
-    covMemo.clear()
-    covView.clear()
-    snapMemo.clear()
-  }
-
+  /** Carry the planning view across this JVM's own commit: the view
+    * held under the pre-commit log listing `sigBefore`, less the
+    * doomed files' records plus the staged ones (appended in place
+    * for an APPEND-ONLY commit — the streaming hot path, O(batch)),
+    * stored under the post-commit listing. Without such a view the
+    * next plan loads and validates from disk. */
   private def advanceMemo(
+      spark: SparkSession,
       fs: FileSystem,
       dir: String,
+      sigBefore: String,
       doomedRel: Set[String],
-      stagedRecs: Array[CovRec]): Unit = {
-    val memo = covMemo.get(dir)
-    if (memo == null) return // next planDelta loads + validates from disk
-    val recs =
-      (if (doomedRel.isEmpty) memo._2
-       else memo._2.filterNot(p => doomedRel(p.rel))) ++ stagedRecs
-    val sig = covSignature(covRecords(fs, dir))
-    covMemo.put(dir, (sig, recs))
-    // advance the planning view in place for APPEND-ONLY commits
-    // (the streaming hot path: no doomed files, so the old view's
-    // pairs, covered-set and stats stay valid and just gain the
-    // staged entries — O(batch)); a commit with deletions
-    // invalidates it and the next plan recomputes once
-    val view = covView.get(dir)
-    if (view != null) {
-      if (doomedRel.isEmpty && view.sig == memo._1)
-        covView.put(dir, CovView(sig,
-          view.pairsAbs ++ stagedRecs.map(r => (r.corpus, s"$dir/${r.rel}")),
-          view.indexed ++ stagedRecs.iterator.map(_.corpus),
-          view.stats ++ foldStats(dir, stagedRecs)))
-      else covView.remove(dir)
+      stagedRecs: Array[CovRec]): Unit =
+    LakeMemo.get(Planned, covKey(dir), sigBefore).foreach { view =>
+      val next =
+        if (doomedRel.isEmpty) view.appended(dir, stagedRecs)
+        else CovView(dir, view.recs.filterNot(p => doomedRel(p.rel)) ++ stagedRecs)
+      val after = covRecords(fs, dir)
+      if (after.count(!_._2) > CheckpointEvery) checkpointCoverage(spark, dir, next.recs)
+      else LakeMemo.put(Planned, covKey(dir), covSignature(after), next)
     }
-    if (covRecords(fs, dir).count(!_._2) > CheckpointEvery) {
-      val spark = org.apache.spark.sql.SparkSession.active
-      checkpointCoverage(spark, dir, recs)
-    }
-  }
 
   /** Fold the log's base + deltas into the record array — the pure
     * parse, shared by the validated planning load ([[readCoverage]])
@@ -883,10 +846,10 @@ object SidecarMaintenance {
     * log is torn or has no base. */
   private def parseCoverage(
       fs: FileSystem,
-      recs: Seq[(Long, Boolean, Path)]): Option[Array[CovRec]] = {
+      recs: Seq[(Long, Boolean, FileStatus)]): Option[Array[CovRec]] = {
     val bases = recs.filter(_._2)
     if (bases.isEmpty) return None
-    val (baseSeq, _, basePath) = bases.last
+    val (baseSeq, _, base) = bases.last
     def lines(p: Path): Array[String] = {
       val in = fs.open(p)
       try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split("\n")
@@ -895,14 +858,14 @@ object SidecarMaintenance {
     }
     try {
       var pairs = scala.collection.mutable.LinkedHashSet.empty[CovRec]
-      lines(basePath).foreach { l =>
+      lines(base.getPath).foreach { l =>
         CovRec.parse(l.split("\t")) match {
           case Some(rec) => pairs += rec
           case None => return None // torn base
         }
       }
-      recs.filter(r => !r._2 && r._1 > baseSeq).foreach { case (_, _, p) =>
-        lines(p).foreach { l =>
+      recs.filter(r => !r._2 && r._1 > baseSeq).foreach { case (_, _, st) =>
+        lines(st.getPath).foreach { l =>
           val fields = l.split("\t")
           fields match {
             case Array("-", r) => pairs = pairs.filterNot(_.rel == r)
@@ -919,30 +882,25 @@ object SidecarMaintenance {
     } catch { case _: java.io.IOException => None }
   }
 
-  /** The coverage map as [[CovRec]] records, or None when the log is
+  /** The validated coverage map, or None when the log is
     * absent/torn/stale (caller heals with a scan). */
-  private def readCoverage(
-      spark: SparkSession,
-      dir: String): Option[Array[CovRec]] = {
+  private def readCoverage(spark: SparkSession, dir: String): Option[CovView] = {
     val fs = fsFor(spark, dir)
     val recs = covRecords(fs, dir)
     if (recs.isEmpty) return None
     val sig = covSignature(recs)
-    val memo = covMemo.get(dir)
-    if (memo != null && memo._1 == sig) return Some(memo._2)
-    // disk load: fold base + deltas, then validate the resulting
-    // sidecar file set against the actual listing — the one place
-    // the full listing still runs (once per JVM per sidecar, or
-    // after an out-of-band change). Validation is by sidecar file
-    // SET and LENGTHS both (an out-of-band rewrite that kept a name
-    // but changed bytes also invalidates).
-    parseCoverage(fs, recs).flatMap { arr =>
-      val actual = dataFileSizes(spark, dir)
-        .map { case (f, len) => (relPath(dir, f), len) }.toSet
-      if (arr.map(t => (t.rel, t.len)).toSet == actual) {
-        covMemo.put(dir, (sig, arr))
-        Some(arr)
-      } else None
+    // disk load on a miss: fold base + deltas, then validate the
+    // resulting sidecar file set against the actual listing — the one
+    // place the full listing still runs (once per JVM per log
+    // generation this JVM did not write itself). Validation is by
+    // sidecar file SET and LENGTHS both (an out-of-band rewrite that
+    // kept a name but changed bytes also invalidates).
+    LakeMemo.get(Planned, covKey(dir), sig).orElse {
+      parseCoverage(fs, recs).filter { arr =>
+        val actual = dataFileSizes(spark, dir)
+          .map { case (f, len) => (relPath(dir, f), len) }.toSet
+        arr.map(t => (t.rel, t.len)).toSet == actual
+      }.map(arr => LakeMemo.put(Planned, covKey(dir), sig, CovView(dir, arr)))
     }
   }
 
@@ -951,31 +909,33 @@ object SidecarMaintenance {
     * ~[[CheckpointEvery]] records. Also the fallback-scan healer:
     * O(file-count), paid once per heal / per CheckpointEvery
     * commits, never per refresh. `pairs` carry RELATIVE or absolute
-    * sidecar paths (normalized here). */
+    * sidecar paths (normalized here). Returns the view of `pairs`,
+    * memoized under the new log listing once the base landed. */
   private def checkpointCoverage(
       spark: SparkSession, dir: String,
-      pairs: Array[CovRec]): Unit = {
+      pairs: Array[CovRec]): CovView = {
     val fs = fsFor(spark, dir)
-    val rel = pairs.map(p => p.copy(rel = relPath(dir, p.rel)))
+    val view = CovView(dir, pairs.map(p => p.copy(rel = relPath(dir, p.rel))))
     val recs = covRecords(fs, dir)
     val seqNow = (recs.map(_._1) :+ 0L).max
     val cp = coveragePath(dir)
     fs.mkdirs(cp)
     val tmp = new Path(cp, f".base-$seqNow%09d.tmp")
     val out = fs.create(tmp, true)
-    out.write(rel.map(_.line).mkString("\n").getBytes("UTF-8"))
+    out.write(view.recs.map(_.line).mkString("\n").getBytes("UTF-8"))
     out.close()
     val dest = new Path(cp, f"base-$seqNow%09d")
     fs.delete(dest, false)
     if (fs.rename(tmp, dest)) {
       // superseded records go; a crash mid-cleanup is harmless (the
       // reader takes the max base and ignores deltas at or below it)
-      recs.foreach { case (s, isBase, p) =>
+      recs.foreach { case (s, isBase, st) =>
         if ((isBase && s < seqNow) || (!isBase && s <= seqNow))
-          fs.delete(p, false)
+          fs.delete(st.getPath, false)
       }
-      covMemo.put(dir, (covSignature(covRecords(fs, dir)), rel))
+      LakeMemo.put(Planned, covKey(dir), covSignature(covRecords(fs, dir)), view)
     } else fs.delete(tmp, false)
+    view
   }
 
   /** True when `t` is Spark's load-time missing-path failure — the
@@ -1003,13 +963,13 @@ object SidecarMaintenance {
     * plan and its tasks are covered by `ignoreMissingFiles`, exactly
     * as a directory-listed read covers its listing→read window.
     * None when no candidate survives. */
-  private[sinks] def readCandidateFiles(
+  private[graft] def readCandidateFiles(
       spark: SparkSession,
       table: String,
       files: Seq[String]): Option[DataFrame] = {
     if (files.isEmpty) return None
     def read(fs: Seq[String]): DataFrame =
-      ParquetMemo.readFilesLenient(spark, table, fs)
+      ParquetMemo.readFiles(spark, table, fs, ignoreMissing = true)
     try Some(read(files))
     catch {
       case t: Throwable if isPathNotFound(t) =>
@@ -1041,33 +1001,28 @@ object SidecarMaintenance {
     * inside a real commit window. */
   @volatile private[graft] var onCommitPoint: String => Unit = null
 
-  /** The last COMMITTED coverage generation's records — a memoized
-    * map when its signature matches the log on disk, else one parse
-    * of the log (no listing validation: a snapshot reader trusts the
-    * journaled commit protocol exactly as far as the files it then
-    * reads by explicit path — a stale record surfaces loudly as a
-    * missing-path read, never as wrong rows). None when the log is
-    * absent or torn. The parse memoizes into its OWN map (unvalidated
-    * records must never enter [[covMemo]], whose hits imply the
-    * listing-validated planning trust), so a reader-only JVM — the
-    * external-prober use case snapshot isolation serves — pays the
-    * O(covered-files) log parse once per generation, not per query:
-    * the steady-state probe resolves with one `_coverage` listing. */
-  private val snapMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Array[CovRec])]()
+  /** The last COMMITTED coverage generation's records — the memoized
+    * planning view or parse when either is held under the log's
+    * current listing, else one parse of the log (no listing
+    * validation: a snapshot reader trusts the journaled commit
+    * protocol exactly as far as the files it then reads by explicit
+    * path — a stale record surfaces loudly as a missing-path read,
+    * never as wrong rows). None when the log is absent or torn. The
+    * parse memoizes in its OWN slot (unvalidated records must never
+    * pass for the listing-validated planning view), so a reader-only
+    * JVM — the external-prober use case snapshot isolation serves —
+    * pays the O(covered-files) log parse once per generation, not per
+    * query: the steady-state probe resolves with one `_coverage`
+    * listing. */
   private[graft] def committedRecords(
       spark: SparkSession, dir: String): Option[Array[CovRec]] = {
     val fs = fsFor(spark, dir)
     val recs = covRecords(fs, dir)
     if (recs.isEmpty) return None
-    val sig = covSignature(recs)
-    val memo = covMemo.get(dir)
-    if (memo != null && memo._1 == sig) return Some(memo._2)
-    val snap = snapMemo.get(dir)
-    if (snap != null && snap._1 == sig) return Some(snap._2)
-    val parsed = parseCoverage(fs, recs)
-    parsed.foreach(arr => snapMemo.put(dir, (sig, arr)))
-    parsed
+    val (key, sig) = (covKey(dir), covSignature(recs))
+    LakeMemo.get(Planned, key, sig).map(_.recs)
+      .orElse(LakeMemo.get(Committed, key, sig))
+      .orElse(parseCoverage(fs, recs).map(LakeMemo.put(Committed, key, sig, _)))
   }
 
   /** Read the sidecar's last-committed snapshot: explicit file list
@@ -1081,16 +1036,17 @@ object SidecarMaintenance {
     * (surfaced, not swallowed).
     *
     * COST: the relation is planned from the committed file list
-    * ([[ParquetMemo.readListed]]) with no Spark job — one `_coverage`
-    * listing to resolve the generation (its log is parsed once per
-    * generation per JVM), one listing per distinct parent directory of
-    * the committed files (nCells for a cell-partitioned sidecar; a
-    * listing job only above `parallelPartitionDiscovery.threshold`
-    * directories) and the `basePath` directory check. The schema is
-    * memoized per directory, so only the first read of a directory in
-    * a JVM pays a footer-inference job. No filesystem round trip is
-    * made per file: HDFS returns block locations with the listing,
-    * other filesystems derive them from the file status.
+    * ([[ParquetMemo.readFiles]]) with no Spark job, on the first read
+    * in a JVM as on every later one — one `_coverage` listing to
+    * resolve the generation (its log is parsed once per generation per
+    * JVM), one listing per distinct parent directory of the committed
+    * files (nCells for a cell-partitioned sidecar; a listing job only
+    * above `parallelPartitionDiscovery.threshold` directories) and the
+    * `basePath` directory check. The schema is one footer read on the
+    * driver, memoized under that footer file's status, so it is paid
+    * again only when the file it was read from changed. No filesystem
+    * round trip is made per file: HDFS returns block locations with
+    * the listing, other filesystems derive them from the file status.
     *
     * SCOPE of the in-method retry: PLANNING time checks that every
     * committed file is present in its directory's listing; a missing
@@ -1118,7 +1074,7 @@ object SidecarMaintenance {
       case Some(files) =>
         val hook = onSnapshotResolve
         if (hook != null) hook(dir)
-        try ParquetMemo.readListed(spark, dir, files)
+        try ParquetMemo.readFiles(spark, dir, files, byDirectory = true)
         catch {
           case t: Throwable if isPathNotFound(t) =>
             requireClean(spark, dir) // crashed run → loud refusal
@@ -1131,7 +1087,7 @@ object SidecarMaintenance {
             // means an out-of-band deletion: surface it.
             resolve() match {
               case Some(fresh) if fresh != files =>
-                ParquetMemo.readListed(spark, dir, fresh)
+                ParquetMemo.readFiles(spark, dir, fresh, byDirectory = true)
               case _ => throw t
             }
         }
@@ -1351,11 +1307,13 @@ object SidecarMaintenance {
   def recover(spark: SparkSession, dir: String): Unit = {
     val fs = fsFor(spark, dir)
     recoverPublish(spark, dir)
-    if (fs.exists(new Path(dir)) && Delta.recover(fs, dir)) {
-      covMemo.remove(dir) // replayed commit: reload+validate from disk
-      covView.remove(dir)
-      snapMemo.remove(dir)
-    }
+    // Every commit stages its coverage delta. A committed crash state
+    // without one (built by hand, or by a binary that staged it
+    // elsewhere) would leave the log naming the files this roll-forward
+    // deletes, under an unchanged listing: drop the log, and the next
+    // plan heals it with one scan.
+    if (fs.exists(new Path(dir))) Delta.recover(fs, dir, staged =>
+      if (!fs.exists(coveragePath(staged.toString))) fs.delete(coveragePath(dir), true))
   }
 
   /** DIRECTORY read paths' loud-failure guard: a maintenance journal
@@ -1471,7 +1429,7 @@ object SidecarMaintenance {
     // the log is absent/stale (e.g. right after a full rebuild),
     // which the first refresh heals
     val sizes = readCoverage(spark, dir)
-      .map(_.map(rec => (s"$dir/${rec.rel}", rec.len))
+      .map(_.recs.map(rec => (s"$dir/${rec.rel}", rec.len))
         .distinct.toSeq.sortBy(_._1))
       .getOrElse(dataFileSizes(spark, dir))
     val victims = sizes
@@ -1501,25 +1459,14 @@ object SidecarMaintenance {
   private val Publish =
     DirSwap(".next", ".old", PublishMarker, rollForwardOverLive = true)
 
-  /** Publish a fully-built, guard-passed `<dest>.next` over `dest`,
-    * then drop every in-JVM view of the replaced directory. */
+  /** Publish a fully-built, guard-passed `<dest>.next` over `dest`. */
   def publishDir(spark: SparkSession, dest: String): Unit =
-    try Publish.commit(fsFor(spark, dest), dest)
-    finally forgetDir(dest)
+    Publish.commit(fsFor(spark, dest), dest)
 
   /** Heal any interrupted [[publishDir]] around `dest` — called on
     * entry by every maintenance operation (refresh / compact /
     * collect), so "the next maintenance entry restores a serving
     * index" holds for every crash point of a rebuild. */
   def recoverPublish(spark: SparkSession, dest: String): Unit =
-    if (Publish.recover(fsFor(spark, dest), dest)) forgetDir(dest)
-
-  /** A swap may have replaced `dir` wholesale: the new dir starts a
-    * fresh coverage log and may carry a new schema. */
-  private def forgetDir(dir: String): Unit = {
-    covMemo.remove(dir)
-    covView.remove(dir)
-    snapMemo.remove(dir)
-    ParquetMemo.invalidate(dir)
-  }
+    Publish.recover(fsFor(spark, dest), dest)
 }

@@ -407,7 +407,7 @@ object MergeUpsert {
 
     // change payload schema == table schema by contract (scaladoc
     // above), so the table read takes it EXPLICITLY, checked against
-    // the stored footer on the first read — this is the
+    // the stored footer on every read — this is the
     // per-micro-batch hot path of the streaming CDC apply, and the
     // schema-inference job the bare read pays per batch is pure
     // overhead (guide §5: no driver-side jobs for known metadata)

@@ -44,6 +44,20 @@ object ListedParquet {
       conf.parallelPartitionDiscoveryParallelism).flatMap(_._2)
   }
 
+  /** The statuses of exactly `files` (qualified paths), through
+    * [[listLeafFiles]] of the files themselves, as the reader lists
+    * them, or (`byDirectory`) of each distinct parent directory once —
+    * one listing per directory for a read of (nearly) whole
+    * directories, where per-file listing runs a job above the
+    * threshold. A file absent from the listing fails here with the
+    * reader's `PATH_NOT_FOUND`. */
+  def fileStatuses(spark: SparkSession, files: Seq[Path], byDirectory: Boolean): Seq[FileStatus] = {
+    val listed = listLeafFiles(spark,
+      if (byDirectory) files.map(_.getParent).distinct else files.distinct)
+      .map(s => s.getPath -> s).toMap
+    files.map(p => listed.getOrElse(p, throw pathNotFound(p.toString)))
+  }
+
   /** Spark's planning-time missing-path error (`PATH_NOT_FOUND`). */
   def pathNotFound(path: String): Throwable =
     QueryCompilationErrors.dataPathNotExistError(path)
@@ -55,7 +69,18 @@ object ListedParquet {
       spark: SparkSession,
       files: Seq[FileStatus],
       basePath: Option[String],
-      schema: Option[StructType]): DataFrame = {
+      schema: Option[StructType]): DataFrame =
+    read(spark, files, basePath.map("basePath" -> _).toMap, schema, footerSchema(spark, _))
+
+  /** [[read]] with the reader `options`, inferring a missing schema
+    * with `footer` as the footer-to-schema read (a memoizing caller
+    * passes its own). */
+  def read(
+      spark: SparkSession,
+      files: Seq[FileStatus],
+      options: Map[String, String],
+      schema: Option[StructType],
+      footer: FileStatus => StructType): DataFrame = {
     val byPath = files.map(s => s.getPath -> Array(s)).toMap
     val listed = new FileStatusCache {
       override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
@@ -63,45 +88,63 @@ object ListedParquet {
       def putLeafFiles(path: Path, leafFiles: Array[FileStatus]): Unit = ()
       def invalidateAll(): Unit = ()
     }
-    val options = basePath.map("basePath" -> _).toMap
     relation(spark, new InMemoryFileIndex(
-      spark, files.map(_.getPath), options, schema, listed), options, schema)
+      spark, files.map(_.getPath), options, schema, listed), options, schema, footer)
   }
 
   /** `spark.read[.schema(s)].parquet(dir)` for a directory the caller
     * knows exists: one driver-side listing of `dir`, and no schema
     * job. */
   def readDir(spark: SparkSession, dir: String, schema: Option[StructType]): DataFrame =
+    readDir(spark, dir, schema, footerSchema(spark, _))
+
+  /** [[readDir]] inferring a missing schema with `footer`. */
+  def readDir(
+      spark: SparkSession,
+      dir: String,
+      schema: Option[StructType],
+      footer: FileStatus => StructType): DataFrame =
     relation(spark, new InMemoryFileIndex(
-      spark, Seq(new Path(dir)), Map.empty, schema), Map.empty, schema)
+      spark, Seq(new Path(dir)), Map.empty, schema), Map.empty, schema, footer)
 
   private def relation(
       spark: SparkSession,
       index: InMemoryFileIndex,
       options: Map[String, String],
-      schema: Option[StructType]): DataFrame = {
+      schema: Option[StructType],
+      footer: FileStatus => StructType): DataFrame = {
     val partitionSchema = index.partitionSchema
     val resolver = spark.sessionState.conf.resolver
     val dataSchema = schema
       .map(s => StructType(s.filterNot(f =>
         partitionSchema.exists(p => resolver(p.name, f.name)))))
-      .orElse(inferSchema(spark, options, index.allFiles()))
-      .getOrElse(throw QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet"))
+      .orElse(inferSchema(spark, options, index.allFiles(), footer))
+      .getOrElse(throw missingRoot(spark, index)
+        .getOrElse(QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema,
       dataSchema.asNullable, None, new ParquetFileFormat, options)(spark))
   }
 
+  /** The reader's `PATH_NOT_FOUND` for a root of `index` that does
+    * not exist — checked only once a read found nothing to infer
+    * from, where the reader would have failed on it first. */
+  private def missingRoot(spark: SparkSession, index: InMemoryFileIndex): Option[Throwable] =
+    index.rootPaths.find { p =>
+      !p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    }.map(p => pathNotFound(p.toString))
+
   /** The data schema `ParquetFileFormat.inferSchema` gives for `files`.
-    * Without `mergeSchema` that is one footer's schema
-    * ([[footerSchema]] of [[footerToTouch]]), read here on the driver;
-    * with it, Spark's own inference runs, job and all. */
+    * Without `mergeSchema` that is one footer's schema (`footer` of
+    * [[footerToTouch]]), read on the driver; with it, Spark's own
+    * inference runs, job and all. */
   private def inferSchema(
       spark: SparkSession,
       options: Map[String, String],
-      files: Seq[FileStatus]): Option[StructType] =
+      files: Seq[FileStatus],
+      footer: FileStatus => StructType): Option[StructType] =
     if (new ParquetOptions(options, spark.sessionState.conf).mergeSchema)
       new ParquetFileFormat().inferSchema(spark, options, files)
-    else footerToTouch(files).map(footerSchema(spark, _))
+    else footerToTouch(files).map(footer)
 
   /** The footer non-merging inference reads: `_common_metadata`, else
     * `_metadata`, else the first data file by path. */
@@ -119,7 +162,7 @@ object ListedParquet {
     * footer (read here on the driver): the writer's stored Spark
     * schema if present, else the parquet schema under the session's
     * parquet confs. */
-  private def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
+  def footerSchema(spark: SparkSession, file: FileStatus): StructType = {
     val footer = ParquetFooterReader.readFooter(
       HadoopInputFile.fromStatus(file, spark.sessionState.newHadoopConf()),
       ParquetMetadataConverter.SKIP_ROW_GROUPS)
@@ -140,13 +183,19 @@ object ListedParquet {
       n.startsWith("_") || n.startsWith(".")
     }
 
+  /** The partition columns the file-source read `df` discovered;
+    * empty for any other plan. */
+  def partitionSchema(df: DataFrame): StructType =
+    fsRelation(df).fold(new StructType())(_._1.partitionSchema)
+
   /** What inference reports for the files behind the file-source read
     * `df`, whatever schema the read itself was given: [[inferSchema]]
-    * over the already-listed files, then the discovered partition
-    * columns. None for any other plan or for no files. */
-  def storedSchema(df: DataFrame): Option[StructType] =
+    * over the already-listed files, with `footer` as the footer read,
+    * then the discovered partition columns. None for any other plan
+    * or for no files. */
+  def storedSchema(df: DataFrame, footer: FileStatus => StructType): Option[StructType] =
     fsRelation(df).flatMap { case (r, index) =>
-      inferSchema(df.sparkSession, r.options, index.allFiles()).map { data =>
+      inferSchema(df.sparkSession, r.options, index.allFiles(), footer).map { data =>
         StructType(data.filterNot(f => r.partitionSchema.fieldNames.contains(f.name)) ++
           r.partitionSchema)
       }

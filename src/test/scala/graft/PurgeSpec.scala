@@ -173,4 +173,25 @@ class PurgeSpec extends AnyFunSuite {
       (0L until 20L).toSet -- Set(3L, 7L))
     assert(!fs.exists(new Path(s"${table}__prev")) && !fs.exists(new Path(s"${table}__staging")))
   }
+
+  test("purge on a hive-partitioned table rewrites inside the partitions; a partitioned merge then replaces the survivors") {
+    val root = java.nio.file.Files.createTempDirectory("graft-purge-partitioned").toString
+    val table = s"$root/t"
+    def part(i: Long) = if (i < 6) "p1" else "p2"
+    MergeUpsert.mergeIntoPartitioned(spark, table,
+      (0L until 12L).map(i => (i, s"doc $i", part(i))).toDF("doc_id", "text", "part").repartition(2),
+      key = "doc_id")
+    val r = Purge.purge(spark, table, Seq(2L, 8L).toDF("id"), "id", "doc_id")
+    assert(r.nRowsDeleted == 2)
+    assert(dataFiles(table).isEmpty, "no data file may land at the table root")
+    val survivors = (0L until 12L).filterNot(Set(2L, 8L))
+    assert(spark.read.parquet(table).select("doc_id", "part").as[(Long, String)].collect().toSet ==
+      survivors.map(i => (i, part(i))).toSet)
+    MergeUpsert.mergeIntoPartitioned(spark, table,
+      Seq((0L, "new 0", "p1")).toDF("doc_id", "text", "part"), key = "doc_id")
+    val after = spark.read.parquet(table).select("doc_id", "text", "part")
+      .as[(Long, String, String)].collect().toSeq
+    assert(after.sortBy(_._1) == survivors.map(i => (i, if (i == 0L) "new 0" else s"doc $i", part(i))))
+    assert(dataFiles(table).isEmpty)
+  }
 }

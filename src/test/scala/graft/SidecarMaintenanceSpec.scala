@@ -388,7 +388,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       assert(recordsRead(IvfIndex.refresh(spark, path)) === 0L)
       // and the zero-read plan survives a driver restart: with the
       // in-JVM memo gone, the on-disk manifest alone serves it
-      graft.sinks.SidecarMaintenance.clearCoverageMemo()
+      graft.sinks.LakeMemo.clear()
       assert(recordsRead(IvfIndex.refresh(spark, path)) === 0L)
     }
   }
@@ -425,7 +425,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
         true)
       out.write("garbage with no tabs\nand\ttwo\tmany\n".getBytes("UTF-8"))
       out.close()
-      SidecarMaintenance.clearCoverageMemo()
+      graft.sinks.LakeMemo.clear()
       val delta2 = delta.withColumn("vec_id", col("vec_id") + lit(1000000L))
       delta2.coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -953,7 +953,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       }
       // fresh JVM: only the on-disk log to go on — the disk load
       // must fold base+deltas and validate against the real listing
-      SidecarMaintenance.clearCoverageMemo()
+      graft.sinks.LakeMemo.clear()
       SparkEntry.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 300 && col("vec_id") < 310)
         .coalesce(1).write.mode("append").parquet(path)
