@@ -29,21 +29,24 @@ import org.apache.spark.sql.functions._
   * distributed listing by Spark's own explicit-path machinery lands on
   * pool or executor threads and is the engineered alternative to the
   * serial driver stall; the per-thread split is what separates the
-  * two.) */
+  * two.) A listing counts once: `RawLocalFileSystem.listStatus`
+  * stats each child through `getFileStatus`, which it does not count. */
 class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "cfs"
   override def getUri: java.net.URI = java.net.URI.create("cfs:///")
   override def getFileStatus(
       f: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus = {
-    CountingFs.record(); super.getFileStatus(f)
+    if (!CountingFs.listing.get) CountingFs.record(); super.getFileStatus(f)
   }
   override def listStatus(
       f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
-    CountingFs.record(); super.listStatus(f)
+    CountingFs.record(); CountingFs.listing.set(true)
+    try super.listStatus(f) finally CountingFs.listing.set(false)
   }
 }
 
 object CountingFs {
+  private val listing = ThreadLocal.withInitial[Boolean](() => false)
   private val perThread = new java.util.concurrent.ConcurrentHashMap[
     Long, java.util.concurrent.atomic.AtomicLong]()
   private[graft] def record(): Unit =

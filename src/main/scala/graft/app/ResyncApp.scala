@@ -1,6 +1,6 @@
 package graft.app
 
-import graft.core.{Clock, DatasetRef, LakePaths, LakeStorage}
+import graft.core.{Clock, Coerce, DatasetRef, Jobs, LakePaths, LakeStorage}
 import graft.ingest.{IngestLoop, StatusReporter}
 import graft.operators.Promote
 import graft.planner._
@@ -8,6 +8,7 @@ import graft.planner.Intervals.Interval
 import graft.sinks.{MergeUpsert, ParquetAppend}
 import graft.sources.{JdbcSource, MongoLikeSource}
 import java.time.LocalDate
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, max}
 
@@ -19,6 +20,7 @@ import org.apache.spark.sql.functions.{col, max}
   * `mongodb_carga` scripts (document source, retry without checkpoint
   * recovery), and the promote path
   * `shared_etls/etls/utils.py:754-819` + `cloud_utils.py:478-532`.
+  * Unlike the reference, chunks are extracted concurrently (`ingest`).
   */
 object ResyncJob {
 
@@ -43,7 +45,7 @@ object ResyncJob {
       src.maxIntWithMargin(spark, dataset, pc)
   }
 
-  /** Document-store semantics over the parquet-backed source: the
+  /** Document-store semantics ([[graft.sources.DocumentRanges]]): the
     * inclusive upper bound is `endExcl` itself (P6 already extended
     * it), reproducing the reference's boundary overlap.
     *
@@ -52,9 +54,9 @@ object ResyncJob {
     * `mongodb_carga_date.py:102-110`): when present, inference is
     * disabled on every ranged read — at 100 TB an inference pass is a
     * full extra collection scan. */
-  final case class MongoRanged(
-      src: MongoLikeSource,
-      schema: Option[org.apache.spark.sql.types.StructType] = None) extends RangedSource {
+  sealed abstract class DocumentRanged(
+      src: graft.sources.DocumentRanges,
+      schema: Option[org.apache.spark.sql.types.StructType]) extends RangedSource {
     def readRange(spark: SparkSession, pc: String, startIncl: String, endExcl: String): DataFrame =
       src.readRange(spark, pc, startIncl, endExcl, schema)
     def minValue(spark: SparkSession, pc: String): Any = src.minValue(spark, pc, schema)
@@ -62,20 +64,19 @@ object ResyncJob {
       src.maxIntWithMargin(spark, pc, schema)
   }
 
-  /** Adapter-seam variant of [[MongoRanged]]: identical S4–S6
-    * semantics, but the reader behind the URI is whatever
-    * [[graft.sources.DocStoreAdapters]] has registered for its scheme
-    * — the real mongo-spark connector in production, the parquet
-    * stand-in here. The resync flows are agnostic either way. */
+  /** Over the parquet-backed stand-in. */
+  final case class MongoRanged(
+      src: MongoLikeSource,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+    extends DocumentRanged(src, schema)
+
+  /** Over the adapter seam: whatever [[graft.sources.DocStoreAdapters]]
+    * has registered for the URI's scheme — the real mongo-spark
+    * connector in production, the parquet stand-in here. */
   final case class DocRanged(
       src: graft.sources.DocStoreSource,
-      schema: Option[org.apache.spark.sql.types.StructType] = None) extends RangedSource {
-    def readRange(spark: SparkSession, pc: String, startIncl: String, endExcl: String): DataFrame =
-      src.readRange(spark, pc, startIncl, endExcl, schema)
-    def minValue(spark: SparkSession, pc: String): Any = src.minValue(spark, pc, schema)
-    def maxIntWithMargin(spark: SparkSession, pc: String): Long =
-      src.maxIntWithMargin(spark, pc, schema)
-  }
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+    extends DocumentRanged(src, schema)
 
   /** §1.4 resolution for the document flows: registry file → existing
     * trusted schema → None (infer). */
@@ -105,70 +106,29 @@ object ResyncJob {
       reporter: StatusReporter = StatusReporter.Noop,
       idRequest: Option[String] = None,
       sleep: Long => Unit = Thread.sleep): Unit = {
-
-    val workPath = lake.work(ref)
-    val storage = LakeStorage(spark)
-    if (truncateFirst) storage.clearOrCreate(workPath) // K3 destructive init (§3.1 step 3)
+    if (truncateFirst) truncateWork(spark, lake.work(ref)) // K3 destructive init (§3.1 step 3)
 
     // P4 boundary resolution (§3.1 step 4)
     val bounds = Boundaries.resolveDates(
       cliStart, cliEnd,
-      sourceMin = toLocalDate(source.minValue(spark, pc)),
+      sourceMin = Coerce.toLocalDate(source.minValue(spark, pc)),
       today = LocalDate.now())
 
     // P1 width + P3 intervals (§3.1 step 5)
     val span = java.time.temporal.ChronoUnit.DAYS.between(bounds.start, bounds.end)
     val width = ChunkWidth.dateChunkDays(estimatedRows, span)
-    val plan = Intervals.dates(bounds.start, bounds.end, width)
-
-    def extract(iv: Interval[LocalDate]): Unit = {
-      val (s, e) = Intervals.halfOpenDates(iv) // P6 (§3.1 step 7)
-      val df = source.readRange(spark, pc, s.toString, e.toString)
-      ParquetAppend.write(df, workPath) // K1
-    }
-
-    // P5 recovery: probe WORK for max(pc), replan from there (§3.1 step 8)
-    val recover: Option[() => Option[LocalDate]] =
-      if (withRecovery) Some(() =>
-        if (!storage.exists(workPath)) None
-        else spark.read.parquet(workPath).select(max(col(pc))).head().get(0) match {
-          case null => None
-          case v => Some(toLocalDate(v))
-        })
-      else None
-
-    new IngestLoop[LocalDate](reporter = reporter, sleep = sleep).run(
-      // The reference threads an explicit request id through every
-      // status POST (`carga_date.py:43`, `utils.py:14-27`); the
-      // namespace.dataset default covers runs not driven by a
-      // scheduler that assigns ids.
-      idRequest = idRequest.getOrElse(s"${ref.namespace}.${ref.dataset}"),
-      plan = plan,
-      extract = extract,
-      recover = recover,
-      replan = cp => Intervals.dates(cp, bounds.end, width))
+    ingest[LocalDate](spark, source, pc, ref, lake,
+      plan = Intervals.dates(bounds.start, bounds.end, width),
+      halfOpen = Intervals.halfOpenDates, // P6 (§3.1 step 7)
+      checkpoint = Coerce.toLocalDate,
+      replan = cp => Intervals.dates(cp, bounds.end, width),
+      withRecovery, reporter, idRequest, sleep)
   }
 
-  /** Shared int-flow planning: P4 boundaries (note the margin
-    * round-trip — `maxIntWithMargin` already adds the +300000 margin
-    * the resolver re-applies, so it is subtracted here once) + P2
-    * width + P3 intervals. */
-  private def planIntChunks(
-      spark: SparkSession,
-      source: RangedSource,
-      pc: String,
-      cliStart: Option[Long],
-      cliEnd: Option[Long],
-      estimatedRows: Long): (Boundaries.Range[Long], List[Interval[Long]]) = {
-    val bounds = Boundaries.resolveInts(
-      cliStart, cliEnd,
-      sourceMin = toLong(source.minValue(spark, pc)),
-      sourceMax = source.maxIntWithMargin(spark, pc) - Boundaries.SecurityMargin)
-    (bounds, Intervals.ints(bounds.start, bounds.end,
-      ChunkWidth.intChunkWidth(estimatedRows)))
-  }
-
-  /** Integer-partitioned resync (carga_int flow, §3.2). */
+  /** Integer-partitioned resync (carga_int flow, §3.2). P4 boundaries
+    * (note the margin round-trip — `maxIntWithMargin` already adds the
+    * +300000 margin the resolver re-applies, so it is subtracted here
+    * once) + P2 width + P3 intervals. */
   def runInt(
       spark: SparkSession,
       source: RangedSource,
@@ -183,103 +143,101 @@ object ResyncJob {
       reporter: StatusReporter = StatusReporter.Noop,
       idRequest: Option[String] = None,
       sleep: Long => Unit = Thread.sleep): Unit = {
+    if (truncateFirst) truncateWork(spark, lake.work(ref))
 
-    val workPath = lake.work(ref)
-    val storage = LakeStorage(spark)
-    if (truncateFirst) storage.clearOrCreate(workPath)
-
-    val (bounds, plan) = planIntChunks(spark, source, pc, cliStart, cliEnd, estimatedRows)
+    val bounds = Boundaries.resolveInts(
+      cliStart, cliEnd,
+      sourceMin = Coerce.toLong(source.minValue(spark, pc)),
+      sourceMax = source.maxIntWithMargin(spark, pc) - Boundaries.SecurityMargin)
     val width = ChunkWidth.intChunkWidth(estimatedRows)
+    ingest[Long](spark, source, pc, ref, lake,
+      plan = Intervals.ints(bounds.start, bounds.end, width),
+      halfOpen = Intervals.halfOpenInts,
+      checkpoint = Coerce.toLong,
+      replan = cp => Intervals.ints(cp, bounds.end, width),
+      withRecovery, reporter, idRequest, sleep)
+  }
 
-    def extract(iv: Interval[Long]): Unit = {
-      val (s, e) = Intervals.halfOpenInts(iv)
-      ParquetAppend.write(source.readRange(spark, pc, s.toString, e.toString), workPath)
+  /** Staged chunks live in `<work>__chunks/<run>/<seq>`, never inside
+    * WORK, which readers list recursively. K3 truncates both. */
+  private def chunksRoot(workPath: String): String = workPath.stripSuffix("/") + "__chunks"
+  private def truncateWork(spark: SparkSession, workPath: String): Unit = {
+    LakeStorage(spark).clearOrCreate(workPath)
+    LakeStorage(spark).truncate(chunksRoot(workPath))
+  }
+
+  /** Both flows' chunk loop, P5 in its staged form: each chunk's
+    * `readRange` is written by one Spark job into its own staging dir,
+    * `min(plan size, defaultParallelism)` at once (one source cursor per
+    * executor slot, as `JdbcSource.readChunksParallel`), and published
+    * into WORK in plan order by moving each file not yet there, with a
+    * fresh mtime so WORK's mtimes keep plan order for
+    * `IncrementalPromote`. One resync per dataset at a time, as K3
+    * already requires: a run removes the whole chunk root when done. */
+  private def ingest[T](
+      spark: SparkSession,
+      source: RangedSource,
+      pc: String,
+      ref: DatasetRef,
+      lake: LakePaths,
+      plan: List[Interval[T]],
+      halfOpen: Interval[T] => (T, T),
+      checkpoint: Any => T,
+      replan: T => List[Interval[T]],
+      withRecovery: Boolean, reporter: StatusReporter, idRequest: Option[String],
+      sleep: Long => Unit): Unit = {
+    val name = s"${ref.namespace}.${ref.dataset}"
+    val workPath = lake.work(ref)
+    val work = new Path(workPath)
+    val fs = work.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = new Path(chunksRoot(workPath))
+    val runDir = new Path(root, java.util.UUID.randomUUID().toString)
+    val seq = new java.util.concurrent.atomic.AtomicInteger
+
+    def stage(iv: Interval[T]): Path = {
+      val (s, e) = halfOpen(iv)
+      val dir = new Path(runDir, seq.getAndIncrement().toString)
+      Jobs.described(spark, s"resync $name: chunk [$s, $e)") {
+        ParquetAppend.write(source.readRange(spark, pc, s.toString, e.toString), dir.toString) // K1
+      }
+      dir
     }
 
-    val recover: Option[() => Option[Long]] =
+    def publish(dir: Path): Unit = {
+      fs.mkdirs(work)
+      fs.listStatus(dir).foreach { st =>
+        val dst = new Path(work, st.getPath.getName)
+        if (!fs.exists(dst)) {
+          if (!fs.rename(st.getPath, dst)) throw new java.io.IOException(s"could not move ${st.getPath} to $dst")
+          fs.setTimes(dst, System.currentTimeMillis(), -1)
+        }
+      }
+      fs.delete(dir, true); ()
+    }
+
+    val recover: Option[() => Option[T]] = // P5: probe WORK for max(pc), replan (§3.1 step 8)
       if (withRecovery) Some(() =>
-        if (!storage.exists(workPath)) None
-        else Option(spark.read.parquet(workPath).select(max(col(pc))).head())
-          .filterNot(_.isNullAt(0)).map(r => toLong(r.get(0))))
+        if (!LakeStorage(spark).exists(workPath)) None
+        else Jobs.described(spark, s"resync $name: checkpoint probe") {
+          spark.read.parquet(workPath).select(max(col(pc))).head().get(0)
+        } match {
+          case null => None
+          case v => Some(checkpoint(v))
+        })
       else None
 
-    new IngestLoop[Long](reporter = reporter, sleep = sleep).run(
-      idRequest = idRequest.getOrElse(s"${ref.namespace}.${ref.dataset}"),
+    try new IngestLoop[T](reporter = reporter, sleep = sleep).runStaged[Path](
+      // the reference's explicit request id (`carga_date.py:43`,
+      // `utils.py:14-27`); namespace.dataset when no scheduler sets one
+      idRequest = idRequest.getOrElse(name),
       plan = plan,
-      extract = extract,
+      ahead = math.max(1, math.min(plan.size, spark.sparkContext.defaultParallelism)),
+      stage = stage,
+      publish = publish,
+      discard = dir => { fs.delete(dir, true); () },
       recover = recover,
-      replan = cp => Intervals.ints(cp, bounds.end, width))
-  }
-
-  /** Throughput variant of the int resync for JDBC sources: ONE
-    * parallel read over all planner chunks (each chunk a JDBC
-    * partition predicate — one DB cursor per executor slot) and one
-    * K1 append, instead of the reference's sequential
-    * chunk-at-a-time loop. Trades P5's per-chunk retry/checkpoint for
-    * pull throughput; on failure the whole load re-runs (K3 truncate
-    * + K2 upsert make that safe). Use when the source DB tolerates
-    * concurrent cursors and the window is large.
-    */
-  def runIntParallel(
-      spark: SparkSession,
-      source: JdbcSource,
-      dataset: String,
-      pc: String,
-      ref: DatasetRef,
-      lake: LakePaths,
-      cliStart: Option[Long] = None,
-      cliEnd: Option[Long] = None,
-      estimatedRows: Long,
-      truncateFirst: Boolean = true): Unit = {
-    val workPath = lake.work(ref)
-    if (truncateFirst) LakeStorage(spark).clearOrCreate(workPath)
-    val jdbc = JdbcRanged(source, dataset)
-    val (_, plan) = planIntChunks(spark, jdbc, pc, cliStart, cliEnd, estimatedRows)
-    val chunks = plan
-      .map(Intervals.halfOpenInts)
-      .map { case (a, b) => (a.toString, b.toString) }
-    ParquetAppend.write(
-      source.readChunksParallel(spark, dataset, pc, chunks), workPath)
-  }
-
-  /** Throughput variant of the DATE resync for JDBC sources — the
-    * reference's main entry point (`carga_date.py`) pulls its
-    * intervals one at a time through the driver loop; this maps the
-    * P1/P3/P4 date plan onto JDBC partition predicates exactly like
-    * [[runIntParallel]] does for the int archetype, so one read pulls
-    * every chunk concurrently (one DB cursor per executor slot) into
-    * one K1 append. Same trade as the int variant: P5's per-chunk
-    * retry/checkpoint is given up for pull throughput — on failure
-    * the whole load re-runs, which K3 truncate + K2 upsert make safe.
-    * `today` is injectable so tests and backfills pin the open end of
-    * the window.
-    */
-  def runDateParallel(
-      spark: SparkSession,
-      source: JdbcSource,
-      dataset: String,
-      pc: String,
-      ref: DatasetRef,
-      lake: LakePaths,
-      cliStart: Option[LocalDate] = None,
-      cliEnd: Option[LocalDate] = None,
-      estimatedRows: Long,
-      truncateFirst: Boolean = true,
-      today: => LocalDate = LocalDate.now()): Unit = {
-    val workPath = lake.work(ref)
-    if (truncateFirst) LakeStorage(spark).clearOrCreate(workPath)
-    val jdbc = JdbcRanged(source, dataset)
-    val bounds = Boundaries.resolveDates(
-      cliStart, cliEnd,
-      sourceMin = toLocalDate(jdbc.minValue(spark, pc)),
-      today = today)
-    val span = java.time.temporal.ChronoUnit.DAYS.between(bounds.start, bounds.end)
-    val width = ChunkWidth.dateChunkDays(estimatedRows, span)
-    val chunks = Intervals.dates(bounds.start, bounds.end, width)
-      .map(Intervals.halfOpenDates)
-      .map { case (s, e) => (s.toString, e.toString) }
-    ParquetAppend.write(
-      source.readChunksParallel(spark, dataset, pc, chunks), workPath)
+      replan = replan)
+    finally { fs.delete(root, true); () }
   }
 
   /** Promote flow (§3.4): WORK → T1 sk → T2 → T3 → T4 → K2 MERGE. */
@@ -295,7 +253,4 @@ object ResyncJob {
     val curated = Promote.transform(work, skIds, hyphen, clock, deterministic)
     MergeUpsert.mergeInto(spark, lake.trusted(ref), curated) // K2
   }
-
-  private def toLocalDate(v: Any): LocalDate = graft.core.Coerce.toLocalDate(v)
-  private def toLong(v: Any): Long = graft.core.Coerce.toLong(v)
 }

@@ -106,10 +106,16 @@ final case class JdbcSource(url: String, user: String, password: String, driver:
   *    by design, healed by T4 dedup downstream),
   *  - min/max boundary aggregates evaluated by Spark.
   */
-final case class MongoLikeSource(path: String) {
-
-  private def base(spark: SparkSession, schema: Option[StructType]): DataFrame =
+final case class MongoLikeSource(path: String) extends DocumentRanges {
+  protected def base(spark: SparkSession, schema: Option[StructType]): DataFrame =
     schema.fold(spark.read.parquet(path))(s => spark.read.schema(s).parquet(path))
+}
+
+/** S4-S6 over a document collection, shared by [[MongoLikeSource]] and
+  * [[DocStoreSource]]: `base` loads the collection, with inference
+  * disabled when a schema is resolved. */
+trait DocumentRanges {
+  protected def base(spark: SparkSession, schema: Option[StructType]): DataFrame
 
   /** S4 ranged scan: inclusive `pc BETWEEN start AND end`. The filter
     * is declarative, so Catalyst pushes it into the scan (with a real
@@ -237,31 +243,11 @@ object DocStoreAdapters {
 final case class DocStoreSource(
     uri: String,
     collection: String,
-    fallbackNamespace: String = "default") {
+    fallbackNamespace: String = "default") extends DocumentRanges {
 
   def database: String =
     graft.planner.ConnStrings.mongoDatabaseName(uri, fallbackNamespace)
 
-  private def base(spark: SparkSession, schema: Option[StructType]): DataFrame =
+  protected def base(spark: SparkSession, schema: Option[StructType]): DataFrame =
     DocStoreAdapters.forUri(uri).load(spark, uri, database, collection, schema)
-
-  /** S4 — inclusive ranged scan (with a real connector the filter
-    * pushes as a server-side `$match`). */
-  def readRange(
-      spark: SparkSession,
-      pc: String,
-      start: Any,
-      end: Any,
-      schema: Option[StructType] = None): DataFrame =
-    base(spark, schema).filter(col(pc).between(lit(start), lit(end)))
-
-  /** S5 — min boundary aggregate. */
-  def minValue(spark: SparkSession, pc: String, schema: Option[StructType] = None): Any =
-    base(spark, schema).agg(min(col(pc))).head().get(0)
-
-  /** S6 — max boundary + the +300000 margin. */
-  def maxIntWithMargin(spark: SparkSession, pc: String, schema: Option[StructType] = None): Long = {
-    val v = base(spark, schema).select(max(col(pc))).head().getLong(0)
-    v + Boundaries.SecurityMargin
-  }
 }

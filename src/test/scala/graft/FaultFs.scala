@@ -57,13 +57,15 @@ class FaultFs extends RawLocalFileSystem {
 object FaultFs {
   @volatile private var root: String = null
   @volatile private var failAt = Long.MaxValue
+  @volatile private var only: String => Boolean = _ => true
   private val seen = new java.util.concurrent.atomic.AtomicLong
   private val log = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 
   /** Count mutating calls below the local directory `localRoot` and
-    * fail the `k`-th. */
-  def arm(localRoot: String, k: Long): Unit = {
-    seen.set(0); log.clear(); failAt = k; root = localRoot.stripSuffix("/") + "/"
+    * fail the `k`-th. With `filter`, only the calls whose [[calls]]
+    * entry it accepts are counted. */
+  def arm(localRoot: String, k: Long, filter: String => Boolean = _ => true): Unit = {
+    seen.set(0); log.clear(); failAt = k; only = filter; root = localRoot.stripSuffix("/") + "/"
   }
 
   /** Stop counting and injecting. */
@@ -82,9 +84,10 @@ object FaultFs {
   private def tick(op: String, paths: Path*): Unit = {
     val r = root
     val local = paths.map(p => Option(p.toUri.getPath).getOrElse("") + "/")
+    val call = s"$op ${local.map(_.stripSuffix("/")).mkString(" -> ")}"
     if (r != null && local.exists(_.startsWith(r)) &&
-        !local.exists(_.contains("/_temporary"))) {
-      log.add(s"$op ${local.map(_.stripSuffix("/")).mkString(" -> ")}")
+        !local.exists(_.contains("/_temporary")) && only(call)) {
+      log.add(call)
       if (seen.incrementAndGet() == failAt)
         throw new java.io.IOException(s"injected fault at call #$failAt: $op ${paths.mkString(" -> ")}")
     }

@@ -80,21 +80,27 @@ class ResyncE2ESpec extends AnyFunSuite {
   test("int resync with mid-run failure recovers from the WORK checkpoint") {
     val lake = freshLake()
     val inner = ResyncJob.MongoRanged(MongoLikeSource(s"$sf/orders.parquet"))
-    // fail once, on the third chunk, after two successful writes
-    var failsLeft = 1
-    var calls = 0
+    val keys = spark.read.parquet(s"$sf/orders.parquet")
+      .agg(org.apache.spark.sql.functions.min("o_orderkey"),
+        org.apache.spark.sql.functions.max("o_orderkey")).head()
+    val maxKey = keys.getLong(1)
+    // fail once, on the second chunk, after the first chunk's write:
+    // chunks are extracted concurrently, so the fault is keyed on the
+    // chunk, and the counters are atomic
+    val second = graft.planner.Intervals.ints(keys.getLong(0), maxKey,
+      graft.planner.ChunkWidth.intChunkWidth(sourceRows))(1).start
+    val failsLeft = new java.util.concurrent.atomic.AtomicInteger(1)
+    val calls = new java.util.concurrent.atomic.AtomicInteger(0)
     val flaky = new ResyncJob.RangedSource {
       def readRange(s: SparkSession, pc: String, a: String, b: String) = {
-        calls += 1
-        if (calls == 3 && failsLeft > 0) { failsLeft -= 1; sys.error("transient source outage") }
+        calls.incrementAndGet()
+        if (a.toLong == second && failsLeft.compareAndSet(1, 0)) sys.error("transient source outage")
         inner.readRange(s, pc, a, b)
       }
       def minValue(s: SparkSession, pc: String) = inner.minValue(s, pc)
       def maxIntWithMargin(s: SparkSession, pc: String) = inner.maxIntWithMargin(s, pc)
     }
 
-    val maxKey = spark.read.parquet(s"$sf/orders.parquet")
-      .agg(org.apache.spark.sql.functions.max("o_orderkey")).head().getLong(0)
     ResyncJob.runInt(
       spark, flaky, pc = "o_orderkey",
       ref = ref, lake = lake,
@@ -102,6 +108,8 @@ class ResyncE2ESpec extends AnyFunSuite {
       estimatedRows = sourceRows,
       withRecovery = true,
       sleep = _ => ())
+
+    assert(failsLeft.get == 0, s"the injected outage must fire (${calls.get} reads)")
 
     ResyncJob.promote(spark, ref, lake, skIds = Seq("o_orderkey"),
       clock = Clock.ForOracle)
@@ -152,10 +160,12 @@ class ResyncE2ESpec extends AnyFunSuite {
 
     val lake = freshLake()
     val pref = DatasetRef("test", "db", "par2_t")
-    ResyncJob.runIntParallel(
+    ResyncJob.runInt(
       spark,
-      JdbcSource(url, "", "", Some("org.apache.derby.iapi.jdbc.AutoloadedDriver")),
-      dataset = "par2_t", pc = "id", ref = pref, lake = lake,
+      ResyncJob.JdbcRanged(
+        JdbcSource(url, "", "", Some("org.apache.derby.iapi.jdbc.AutoloadedDriver")),
+        "par2_t"),
+      pc = "id", ref = pref, lake = lake,
       cliEnd = Some(3000L), estimatedRows = 3000)
     val work = spark.read.parquet(lake.work(pref))
     assert(work.count() == 3000)

@@ -53,10 +53,12 @@ class ScaleOpsSpec extends AnyFunSuite {
       Files.createTempDirectory("graft-pardate").toString)
     val ref = graft.core.DatasetRef("test", "db", "pard_t")
     // estimatedRows < 100k with a 60-day span → P1 width 15 → 4 chunks
-    graft.app.ResyncJob.runDateParallel(
+    graft.app.ResyncJob.runDate(
       spark,
-      JdbcSource(url, "", "", Some("org.apache.derby.iapi.jdbc.AutoloadedDriver")),
-      dataset = "pard_t", pc = "d", ref = ref, lake = lake,
+      graft.app.ResyncJob.JdbcRanged(
+        JdbcSource(url, "", "", Some("org.apache.derby.iapi.jdbc.AutoloadedDriver")),
+        "pard_t"),
+      pc = "d", ref = ref, lake = lake,
       cliStart = Some(start), cliEnd = Some(start.plusDays(60)),
       estimatedRows = 600)
     val work = spark.read.parquet(lake.work(ref))
