@@ -10,7 +10,9 @@ import org.apache.spark.scheduler._
   * BETWEEN jobs (driver-side work: FS calls, planning, collects).
   * A job whose longest task is most of its duration is held by one
   * skewed task, not by its task count. Guides optimization: a query whose time is
-  * 40 jobs of 80 ms is a job-count problem, not a plan problem.
+  * 40 jobs of 80 ms is a job-count problem, not a plan problem. Last,
+  * the OS processes the measured pass started, by command, and how
+  * many of them a Hadoop filesystem call started.
   *
   * Usage: runMain graft.JobProfile <queryName> [sfDir] [cpus]
   */
@@ -71,9 +73,11 @@ object JobProfile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    val t0 = System.nanoTime()
-    val n = fn(spark, sfDir).count()
-    val total = (System.nanoTime() - t0) / 1e9
+    val ((n, total), starts) = graft.core.ProcessStarts.during {
+      val t0 = System.nanoTime()
+      val n = fn(spark, sfDir).count()
+      (n, (System.nanoTime() - t0) / 1e9)
+    }
     spark.sparkContext.removeSparkListener(listener)
 
     println(f"PROFILE $name rows=$n total=$total%.3f s  jobs=${jobs.size}")
@@ -90,6 +94,10 @@ object JobProfile {
         f"taskTime=${r.taskTimeMs}%6d ms maxTask=${r.maxTaskMs}%5d ms/${r.maxTaskRows}%7d rows shufR=${r.shuffleRead}%8d shufW=${r.shuffleWrite}%8d  ${r.desc.take(110)}")
     }
     println(f"PROFILE_SUM jobs=${jobs.size} jobTime=$jobSum%.3f s gaps=$gapSum%.3f s total=$total%.3f s")
+    // a shell-out per file (a chmod, an `ls -ld`) is driver time no job shows
+    val byCommand = starts.groupBy(_.command.takeWhile(_ != ' ')).map { case (c, s) => s"$c=${s.size}" }
+    println(s"PROFILE_PROCS started=${starts.size} hadoopFs=${starts.count(_.hadoopFs)} " +
+      byCommand.toSeq.sorted.mkString(" "))
     spark.stop()
   }
 }

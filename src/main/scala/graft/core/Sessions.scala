@@ -51,6 +51,18 @@ object Sessions {
       // planner strategy) — inert for plans that carry no marker
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
+      // `file:` lakes without libhadoop: the stock local filesystem
+      // forks `chmod`, `ls -ld` and `readlink` per file it creates,
+      // lists or renames. LocalLakeFs makes the same system calls
+      // in-process. Measured on a 4-vCPU VM, 200 files each, after
+      // warm-up: a checksummed create 6.0 -> 0.16 ms, a mkdirs 2.9 ->
+      // 0.05 ms, a listFiles entry 6.8 -> 0.08 ms. perfbench medians,
+      // 10 alternating pairs each, step_p50_s: upsert_stream 1.402 ->
+      // 1.160 s, backfill_jdbc_date 0.731 -> 0.596 s, ann_serve 0.559
+      // -> 0.504 s. FileContext (stream checkpoints) reads only the
+      // AbstractFileSystem key. Other schemes are untouched.
+      .config("spark.hadoop.fs.file.impl", classOf[LocalLakeFs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[LocalLakeFs.Afs].getName)
 
   def local(cpus: Int): SparkSession = {
     val s = builder(s"local[$cpus]", cpus).getOrCreate()

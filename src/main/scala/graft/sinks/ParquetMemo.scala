@@ -1,9 +1,13 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftglue.ListedParquet
 import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** The parquet reads of sidecars, corpus tables, contract tables and
   * index metadata: planned on the driver by [[ListedParquet]], with no
@@ -87,13 +91,19 @@ private[graft] object ParquetMemo {
     df
   }
 
-  /** Row count of the parquet file at `path`, from its footer: one
-    * driver-side footer read, no Spark job. */
-  def footerRows(conf: org.apache.hadoop.conf.Configuration, path: Path): Long = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
-    try r.getRecordCount finally r.close()
+  /** The footer of the parquet file at `path`: one driver-side read,
+    * no Spark job, with `conf`'s read options. The no-options
+    * `ParquetFileReader.open` builds a fresh `Configuration`, which
+    * re-parses Hadoop's default XML on every call. */
+  def footer(conf: org.apache.hadoop.conf.Configuration, path: Path): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      org.apache.parquet.HadoopReadOptions.builder(conf).build())
+    try r.getFooter finally r.close()
   }
+
+  /** Row count of the parquet file at `path`, from its [[footer]]. */
+  def footerRows(conf: org.apache.hadoop.conf.Configuration, path: Path): Long =
+    footer(conf, path).getBlocks.asScala.map(_.getRowCount).sum
 
   /** Collected rows (+ schema) of the tiny metadata table at `dir`,
     * memoized under the listing of its directory read. */

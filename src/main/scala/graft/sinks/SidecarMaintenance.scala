@@ -424,76 +424,72 @@ object SidecarMaintenance {
     val conf = spark.sparkContext.hadoopConfiguration
     val out = Array.newBuilder[CovRec]
     staged.foreach { st =>
-      val reader =
-        try org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(st.getPath, conf))
+      val footer =
+        try ParquetMemo.footer(conf, st.getPath)
         catch { case _: java.io.IOException => return None }
-      try {
-        val bs = reader.getFooter.getBlocks.asScala.filter(_.getRowCount > 0)
-        if (bs.nonEmpty) {
-          var corpus: String = null
-          var lo = Long.MaxValue
-          var hi = Long.MinValue
-          var nulls = 0L
-          var nonNull = false
-          for (b <- bs) {
-            val cols = b.getColumns.asScala
-            val fc = cols.find(_.getPath.toDotString == "file")
+      val bs = footer.getBlocks.asScala.filter(_.getRowCount > 0)
+      if (bs.nonEmpty) {
+        var corpus: String = null
+        var lo = Long.MaxValue
+        var hi = Long.MinValue
+        var nulls = 0L
+        var nonNull = false
+        for (b <- bs) {
+          val cols = b.getColumns.asScala
+          val fc = cols.find(_.getPath.toDotString == "file")
+            .getOrElse(return None)
+          if (fc.getPrimitiveType.getPrimitiveTypeName !=
+              PrimitiveTypeName.BINARY) return None
+          val fst = fc.getStatistics
+          if (fst == null || fst.isEmpty || !fst.isNumNullsSet ||
+              fst.getNumNulls != 0 || !fst.hasNonNullValue) return None
+          val mn = fst.genericGetMin
+            .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
+          val mx = fst.genericGetMax
+            .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
+          if (mn != mx || !mn.endsWith(".parquet")) return None
+          if (corpus == null) corpus = mn
+          else if (corpus != mn) return None
+          statsCol.foreach { sc =>
+            val cc = cols.find(_.getPath.toDotString == sc)
               .getOrElse(return None)
-            if (fc.getPrimitiveType.getPrimitiveTypeName !=
-                PrimitiveTypeName.BINARY) return None
-            val fst = fc.getStatistics
-            if (fst == null || fst.isEmpty || !fst.isNumNullsSet ||
-                fst.getNumNulls != 0 || !fst.hasNonNullValue) return None
-            val mn = fst.genericGetMin
-              .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
-            val mx = fst.genericGetMax
-              .asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8
-            if (mn != mx || !mn.endsWith(".parquet")) return None
-            if (corpus == null) corpus = mn
-            else if (corpus != mn) return None
-            statsCol.foreach { sc =>
-              val cc = cols.find(_.getPath.toDotString == sc)
-                .getOrElse(return None)
-              val pt = cc.getPrimitiveType
-              val okType = pt.getPrimitiveTypeName match {
-                case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
-                  pt.getLogicalTypeAnnotation match {
-                    case null => true
-                    case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                      i.isSigned
-                    case _ => false
-                  }
-                case _ => false
-              }
-              if (!okType) return None
-              val cst = cc.getStatistics
-              if (cst == null || cst.isEmpty || !cst.isNumNullsSet) return None
-              nulls += cst.getNumNulls
-              if (cst.hasNonNullValue) {
-                nonNull = true
-                val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
-                  case (a: java.lang.Long, b2: java.lang.Long) =>
-                    (a.longValue, b2.longValue)
-                  case (a: java.lang.Integer, b2: java.lang.Integer) =>
-                    (a.longValue, b2.longValue)
-                  case _ => return None
+            val pt = cc.getPrimitiveType
+            val okType = pt.getPrimitiveTypeName match {
+              case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
+                pt.getLogicalTypeAnnotation match {
+                  case null => true
+                  case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                    i.isSigned
+                  case _ => false
                 }
-                if (bLo < lo) lo = bLo
-                if (bHi > hi) hi = bHi
+              case _ => false
+            }
+            if (!okType) return None
+            val cst = cc.getStatistics
+            if (cst == null || cst.isEmpty || !cst.isNumNullsSet) return None
+            nulls += cst.getNumNulls
+            if (cst.hasNonNullValue) {
+              nonNull = true
+              val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
+                case (a: java.lang.Long, b2: java.lang.Long) =>
+                  (a.longValue, b2.longValue)
+                case (a: java.lang.Integer, b2: java.lang.Integer) =>
+                  (a.longValue, b2.longValue)
+                case _ => return None
               }
+              if (bLo < lo) lo = bLo
+              if (bHi > hi) hi = bHi
             }
           }
-          val rel = relPath(staging.toString, st.getPath.toString)
-          out += (statsCol match {
-            case Some(_) if nulls == 0 && nonNull =>
-              CovRec(corpus, rel, st.getLen, lo, hi)
-            case _ =>
-              CovRec(corpus, rel, st.getLen, Long.MinValue, Long.MaxValue)
-          })
         }
-      } finally reader.close()
+        val rel = relPath(staging.toString, st.getPath.toString)
+        out += (statsCol match {
+          case Some(_) if nulls == 0 && nonNull =>
+            CovRec(corpus, rel, st.getLen, lo, hi)
+          case _ =>
+            CovRec(corpus, rel, st.getLen, Long.MinValue, Long.MaxValue)
+        })
+      }
     }
     Some(out.result())
   }
@@ -1191,44 +1187,40 @@ object SidecarMaintenance {
     var hi = Long.MinValue
     var any = false
     paths.foreach { p =>
-      val reader =
-        try org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf))
+      val footer =
+        try ParquetMemo.footer(conf, new Path(p))
         catch { case _: java.io.IOException => return None }
-      try {
-        for (b <- reader.getFooter.getBlocks.asScala if b.getRowCount > 0) {
-          val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
-            .getOrElse(return None)
-          val pt = cc.getPrimitiveType
-          val okType = pt.getPrimitiveTypeName match {
-            case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
-              pt.getLogicalTypeAnnotation match {
-                case null => true
-                case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                  i.isSigned
-                case _ => false
-              }
-            case _ => false
-          }
-          if (!okType) return None
-          val cst = cc.getStatistics
-          if (cst == null || cst.isEmpty || !cst.isNumNullsSet ||
-              cst.getNumNulls > 0) return None
-          if (cst.hasNonNullValue) {
-            any = true
-            val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
-              case (a: java.lang.Long, b2: java.lang.Long) =>
-                (a.longValue, b2.longValue)
-              case (a: java.lang.Integer, b2: java.lang.Integer) =>
-                (a.longValue, b2.longValue)
-              case _ => return None
+      for (b <- footer.getBlocks.asScala if b.getRowCount > 0) {
+        val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
+          .getOrElse(return None)
+        val pt = cc.getPrimitiveType
+        val okType = pt.getPrimitiveTypeName match {
+          case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
+            pt.getLogicalTypeAnnotation match {
+              case null => true
+              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
+                i.isSigned
+              case _ => false
             }
-            if (bLo < lo) lo = bLo
-            if (bHi > hi) hi = bHi
-          }
+          case _ => false
         }
-      } finally reader.close()
+        if (!okType) return None
+        val cst = cc.getStatistics
+        if (cst == null || cst.isEmpty || !cst.isNumNullsSet ||
+            cst.getNumNulls > 0) return None
+        if (cst.hasNonNullValue) {
+          any = true
+          val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
+            case (a: java.lang.Long, b2: java.lang.Long) =>
+              (a.longValue, b2.longValue)
+            case (a: java.lang.Integer, b2: java.lang.Integer) =>
+              (a.longValue, b2.longValue)
+            case _ => return None
+          }
+          if (bLo < lo) lo = bLo
+          if (bHi > hi) hi = bHi
+        }
+      }
     }
     if (any) Some((lo, hi)) else None
   }

@@ -73,10 +73,15 @@ object MergeUpsert {
       key: String = "sk",
       broadcastUpdates: Boolean = false): DataFrame = {
     val upd = if (broadcastUpdates) broadcast(updates) else updates
-    trusted
-      .join(upd.select(col(key)), Seq(key), "left_anti")
+    inOrderOf(trusted, trusted.join(upd.select(col(key)), Seq(key), "left_anti"))
       .unionByName(updates)
   }
+
+  /** `df`'s columns in `stored`'s order: a `USING` join moves its key
+    * to the front, and a merge must store the table's columns where
+    * the bootstrap write put them. */
+  private def inOrderOf(stored: DataFrame, df: DataFrame): DataFrame =
+    df.select(stored.columns.toIndexedSeq.map(c => col(s"`${c.replace("`", "``")}`")): _*)
 
   /** Schema-evolution merge: like [[merged]], but the sides may
     * disagree on columns. The output schema is the union — trusted's
@@ -378,8 +383,7 @@ object MergeUpsert {
       opCol: String = "op"): DataFrame = {
     val latest = graft.operators.Cdc.latestPerKey(changes, Seq(key), seqCols)
     val upserts = latest.where(col(opCol) =!= "D").drop((opCol +: seqCols): _*)
-    trusted
-      .join(latest.select(col(key)), Seq(key), "left_anti")
+    inOrderOf(trusted, trusted.join(latest.select(col(key)), Seq(key), "left_anti"))
       .unionByName(upserts)
   }
 

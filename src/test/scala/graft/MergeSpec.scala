@@ -3,7 +3,7 @@ package graft
 import graft.core.LakeStorage
 import graft.sinks.{MergeUpsert, ParquetAppend}
 import java.nio.file.Files
-import org.apache.spark.sql.functions.{col, input_file_name, max, min}
+import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min}
 import org.scalatest.funsuite.AnyFunSuite
 
 class MergeSpec extends AnyFunSuite {
@@ -504,6 +504,26 @@ class MergeSpec extends AnyFunSuite {
     val want = MergeUpsert.appliedChanges(MergeUpsert.appliedChanges(base, c1), c2)
     assert(s.read.parquet(dir).select("sk", "v", "n").as[(String, String, Long)].collect().toSet ==
       want.select("sk", "v", "n").as[(String, String, Long)].collect().toSet)
+  }
+
+  test("mergeInto and applyChangesInto keep TRUSTED's column order across merges") {
+    val dir = Files.createTempDirectory("graft-morder").toString
+    val (merged, applied) = (s"$dir/merged", s"$dir/applied")
+    def batch(v: Int) = Seq(("k1", v, "a"), ("k2", v, "b")).toDF("k", "v", "sk")
+    MergeUpsert.mergeInto(spark, merged, batch(1))
+    val stored = spark.read.parquet(merged).columns.toSeq
+    assert(stored === Seq("k", "v", "sk"))
+    Seq(2, 3).foreach { v =>
+      MergeUpsert.mergeInto(spark, merged, batch(v))
+      assert(spark.read.parquet(merged).columns.toSeq === stored)
+    }
+    assert(spark.read.parquet(merged).where(col("v") =!= 3).isEmpty)
+    def changes(v: Int) = batch(v).withColumn("seq", lit(v.toLong)).withColumn("op", lit("U"))
+    MergeUpsert.applyChangesInto(spark, applied, changes(1))
+    Seq(2, 3).foreach { v =>
+      MergeUpsert.applyChangesInto(spark, applied, changes(v))
+      assert(spark.read.parquet(applied).columns.toSeq === stored)
+    }
   }
 
   test("mergeInto over a table below openCostInBytes keeps its stored rows in one file") {
