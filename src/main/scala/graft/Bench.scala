@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.queries.QueryRegistry
 
 object Bench {
 
@@ -65,7 +66,7 @@ object Bench {
   private def runQueries(spark: SparkSession, sfDir: String,
                          names: Seq[String]): Seq[(String, Double)] =
     names.map { name =>
-      val fn = SparkEntry.queries(name)
+      val fn = QueryRegistry(name).run
       val t0 = System.nanoTime()
       val ok = try { fn(spark, sfDir).count(); true } catch {
         case e: Throwable =>
@@ -192,7 +193,7 @@ object Bench {
     // Measurement parts: slices of ~20 queries plus the flow pair.
     // These are also the stdout reassembly parts, so each part line
     // carries the canary brackets its own numbers were captured under.
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = QueryRegistry.names
     val slices: Seq[(String, () => Seq[(String, Double)])] =
       names.grouped(20).zipWithIndex.map { case (g, i) =>
         s"part${i + 1}" -> (() => runQueries(spark, sfDir, g))

@@ -27,7 +27,7 @@ object ProbePlans {
       Files.writeString(Paths.get(s"$outDir/probe_${name}_$suffix.txt"), plan)
       println(s"[probeplans] wrote $name")
     }
-    val e = SparkEntry.tbl(spark, sfDir, "embeddings")
+    val e = graft.queries.Fixtures.tbl(spark, sfDir, "embeddings")
 
     val root = Files.createTempDirectory("graft-probeplans").toString
     val path = s"$root/vectors"

@@ -73,12 +73,12 @@ object ScaleCheck {
         df.withColumn(idCol, col(idCol) + lit(i * 100000000L)))
         .reduce(_ unionByName _)
 
-    val lineitem = SparkEntry.tbl(spark, sfDir, "lineitem")
-    val docs = SparkEntry.tbl(spark, sfDir, "documents")
-    val embs = SparkEntry.tbl(spark, sfDir, "embeddings")
-    val events = SparkEntry.tbl(spark, sfDir, "events")
-    val orders = SparkEntry.tbl(spark, sfDir, "orders")
-    val customer = SparkEntry.tbl(spark, sfDir, "customer")
+    val lineitem = graft.queries.Fixtures.tbl(spark, sfDir, "lineitem")
+    val docs = graft.queries.Fixtures.tbl(spark, sfDir, "documents")
+    val embs = graft.queries.Fixtures.tbl(spark, sfDir, "embeddings")
+    val events = graft.queries.Fixtures.tbl(spark, sfDir, "events")
+    val orders = graft.queries.Fixtures.tbl(spark, sfDir, "orders")
+    val customer = graft.queries.Fixtures.tbl(spark, sfDir, "customer")
     // synthetic node set for the clustering-fallback case: ids in
     // decade blocks so `% 10` chain edges survive grow()'s 1e8 offsets
     val chainNodes = spark.range(300000L).toDF("doc_id")

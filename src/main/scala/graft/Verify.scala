@@ -1,7 +1,8 @@
 package graft
 import graft.core.Json
+import graft.queries.QueryRegistry
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Also writes
   * _manifest.json (every declared query name + status) so the check
   * harness can detect queries that produced NO output instead of
@@ -15,12 +16,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = graft.core.Sessions.local(cpus)
     new java.io.File(outDir).mkdirs()
-    val selected =
-      if (only.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter(q => only.contains(q._1)).toSeq
-    val status = selected.sortBy(_._1).map { case (name, fn) =>
+    val selected = QueryRegistry.names.filter(n => only.isEmpty || only.contains(n))
+    val status = selected.map { name =>
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        QueryRegistry(name).run(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         name -> "ok"
       } catch {
@@ -39,7 +38,7 @@ object Verify {
       pairs.map { case (k, v) => s"${Json.quote(k)}: ${Json.quote(v)}" }
         .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
-      obj(SparkEntry.oracleSql.toSeq.sortBy(_._1)))
+      obj(QueryRegistry.specs.map(q => q.name -> q.oracleSql).sortBy(_._1)))
     Files.writeString(Paths.get(s"$outDir/_manifest.json"), obj(status))
     spark.stop()
   }

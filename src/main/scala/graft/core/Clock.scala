@@ -31,6 +31,6 @@ object Clock {
     def nowString: String = at
   }
 
-  /** The fixed instant used by all declared queries (SparkEntry). */
+  /** The fixed instant used by all declared queries (graft.queries). */
   val ForOracle: Clock = Fixed("2024-01-01 00:00:00")
 }

@@ -3,7 +3,7 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** Job labeling (optimization-guide §1.5): every substrate action
-  * site wraps itself in [[described]], so the Spark UI / JobProfile
+  * site wraps itself in [[described]], so the Spark UI / `Profile jobs`
   * attribute each of a query's jobs to the operator that submitted
   * it instead of an anonymous callsite. Descriptions are thread-local
   * in Spark; the previous value is restored so nested labels (e.g. a

@@ -121,19 +121,15 @@ class JoinElimRule(session: SparkSession)
     * rows). */
   private def eliminable(
       left: LogicalPlan, right: LogicalPlan, cond: Expression): Boolean = {
-    val path = relationPath(right) match {
+    val (lr, path) = relationPath(right) match {
       case Some(p) => p
       case None => return false
     }
     val keyCols = ConstraintCatalog.uniqueKey(path) match {
-      case Some(d) =>
-        // freshness-pinned constraints only hold for the verified
-        // file set — a drifted dimension executes the real join
-        // (TTL-memoized listing, same budget as the MV rule)
-        if (d.baseSignature.exists(_ != MvCatalog.cachedSignature(session, path)))
-          return false
-        d.cols
-      case None => return false
+      // freshness-pinned constraints only hold for the verified file
+      // set — a drifted dimension executes the real join
+      case Some(d) if MvCatalog.fresh(d.baseSignature, lr) => d.cols
+      case _ => return false
     }
     // resolve declared names against the right side's visible output
     val keyExprIds = right.output.filter(a => keyCols.contains(a.name)).map(_.exprId)
@@ -154,13 +150,13 @@ class JoinElimRule(session: SparkSession)
   /** Root path of the right side: the registered relation under any
     * attribute-only Projects and Filters (a filtered unique key stays
     * unique — subsets preserve uniqueness). */
-  private def relationPath(p: LogicalPlan): Option[String] = p match {
+  private def relationPath(p: LogicalPlan): Option[(LogicalRelation, String)] = p match {
     case f: Filter => relationPath(f.child)
     case pr: Project if pr.projectList.forall(_.isInstanceOf[AttributeReference]) =>
       relationPath(pr.child)
     case lr: LogicalRelation => lr.relation match {
       case h: HadoopFsRelation if h.location.rootPaths.length == 1 =>
-        Some(h.location.rootPaths.head.toString)
+        Some((lr, h.location.rootPaths.head.toString))
       case _ => None
     }
     case _ => None

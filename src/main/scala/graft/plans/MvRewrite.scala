@@ -10,7 +10,8 @@ import org.apache.spark.sql.catalyst.plans.logical
 import org.apache.spark.sql.catalyst.plans.logical.{
   Aggregate, Expand, Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.{
+  HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.types.{
   ByteType, DoubleType, IntegerType, LongType, ShortType}
 
@@ -194,26 +195,49 @@ object MvCatalog {
     ()
   }
 
-  /** File-set fingerprint of a table directory: every data file's
-    * (path, length, mtime) folded into one hash. One recursive
-    * driver-side listing — the same order of work the relation's own
-    * file index pays per query. */
-  def signature(spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    val entries = scala.collection.mutable.ArrayBuffer.empty[String]
-    while (it.hasNext) {
-      val st = it.next()
-      val name = st.getPath.toUri.getPath
-      // same visibility rule as the scan: no hidden/metadata files
-      if (!name.split('/').exists(s => s.startsWith("_") || s.startsWith(".")))
-        entries += s"$name:${st.getLen}:${st.getModificationTime}"
+  /** File-set fingerprint of a table: every visible data file's
+    * (path, length, mtime) folded into one hash. Visible is the scan's
+    * rule: no path segment starts with `_` or `.` (hidden and metadata
+    * files). Registration signs one recursive listing of the base; the
+    * optimizer signs the files the query's own relation already
+    * listed ([[fresh]]). */
+  def signature(files: Iterable[org.apache.hadoop.fs.FileStatus]): String = {
+    val entries = files.iterator.map(st => (st.getPath.toUri.getPath, st)).collect {
+      case (name, st) if !name.split('/').exists(s => s.startsWith("_") || s.startsWith(".")) =>
+        s"$name:${st.getLen}:${st.getModificationTime}"
     }
     java.security.MessageDigest.getInstance("MD5")
-      .digest(entries.sorted.mkString("\n").getBytes("UTF-8"))
+      .digest(entries.toSeq.sorted.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
   }
+
+  /** [[signature]] of a directory as it is now: one recursive
+    * driver-side listing, paid once per registration. */
+  def signature(spark: org.apache.spark.sql.SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = scala.collection.mutable.ArrayBuffer.empty[org.apache.hadoop.fs.FileStatus]
+    while (it.hasNext) files += it.next()
+    signature(files)
+  }
+
+  /** Whether a freshness pin holds for a scanned relation: unpinned
+    * always does; pinned, the relation's file index must have listed
+    * exactly the pinned file set. The index's listing is the one the
+    * scan will read, made when the query's read was planned, so the
+    * check makes no filesystem call and trusts no other query's
+    * listing; a relation without a listed file index is never fresh.
+    */
+  def fresh(pin: Option[String], lr: LogicalRelation): Boolean =
+    pin.forall { sig =>
+      lr.relation match {
+        case h: HadoopFsRelation => h.location match {
+          case idx: PartitioningAwareFileIndex => signature(idx.allFiles()) == sig
+          case _ => false
+        }
+        case _ => false
+      }
+    }
 
   /** Registers with the CURRENT base file-set pinned: the rewrite
     * then fires only while the base is bit-identical to what the
@@ -231,7 +255,7 @@ object MvCatalog {
     register(basePath, MvDef(groupCols, sumCols, statePath,
       baseSignature = Some(signature(spark, basePath))))
   def unregister(basePath: String): Unit = { mvs.remove(normalize(basePath)); () }
-  def clear(): Unit = { mvs.clear(); joinMvs.clear(); sigCache.clear() }
+  def clear(): Unit = { mvs.clear(); joinMvs.clear() }
 
   /** Join-view registry, keyed by the normalized (left, right) path
     * pair. Lookup also tries the swapped order — inner joins commute,
@@ -305,37 +329,6 @@ object MvCatalog {
         regId == fsId(basePath) => mv
     }
   def isEmpty: Boolean = mvs.isEmpty && joinMvs.isEmpty
-
-  /** TTL-memoized [[signature]] for the OPTIMIZER's freshness check:
-    * the rule sits in the operator-optimization batch, which runs to
-    * a fixed point — without memoization every Aggregate over a
-    * registered base pays a full recursive listing PER RULE
-    * ITERATION. The default TTL (500 ms,
-    * `spark.graft.mv.signatureCacheMs`; 0 disables) is sized to span
-    * back-to-back iterations of one optimization, not user-visible
-    * time: any real drift involves file writes that dwarf it. Note
-    * the freshness contract already has an inherent check-to-execute
-    * race — the file set can drift between the optimize-time
-    * signature check and execution — so the cache widens an existing
-    * window rather than opening a new one; deployments wanting the
-    * narrowest window set the TTL to 0 and pay a listing per
-    * iteration. Registration paths ([[registerFresh]]) stay
-    * uncached. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-  def cachedSignature(
-      spark: org.apache.spark.sql.SparkSession, path: String): String = {
-    val ttlMs = spark.sessionState.conf
-      .getConfString("spark.graft.mv.signatureCacheMs", "500").toLong
-    val now = System.nanoTime()
-    val hit = Option(sigCache.get(path))
-      .filter { case (t, _) => now - t < ttlMs * 1000000L }
-    hit.map(_._2).getOrElse {
-      val sig = signature(spark, path)
-      sigCache.put(path, (now, sig))
-      sig
-    }
-  }
 }
 
 class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
@@ -365,18 +358,14 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** Registered view for this relation, with the freshness pin
-    * checked (TTL-memoized listing: the optimizer batch re-runs this
-    * rule to a fixed point, and one listing per query is the budget,
-    * not one per iteration). */
+    * checked against the relation's own listing. */
   private def lookupMv(lr: LogicalRelation): Option[MvDef] = {
     val roots = lr.relation match {
       case h: HadoopFsRelation => h.location.rootPaths
       case _ => return None
     }
     if (roots.length != 1) return None
-    MvCatalog.lookup(roots.head.toString).filterNot(mv =>
-      mv.baseSignature.exists(
-        _ != MvCatalog.cachedSignature(session, roots.head.toString)))
+    MvCatalog.lookup(roots.head.toString).filter(mv => MvCatalog.fresh(mv.baseSignature, lr))
   }
 
   private sealed trait Out
@@ -625,8 +614,7 @@ class MvRewriteRule(session: SparkSession) extends Rule[LogicalPlan] {
     if (mv.joinType != queryType) return None
     // freshness pins, both sides (lookupJoin returned them in query
     // order)
-    if (mv.leftSignature.exists(_ != MvCatalog.cachedSignature(session, lPath)) ||
-        mv.rightSignature.exists(_ != MvCatalog.cachedSignature(session, rPath)))
+    if (!MvCatalog.fresh(mv.leftSignature, llr) || !MvCatalog.fresh(mv.rightSignature, rlr))
       return None
 
     // the join condition must be exactly the registered key

@@ -394,6 +394,39 @@ object SidecarMaintenance {
     advanceMemo(spark, fs, dir, covSignature(logBefore), doomedRel.toSet, stagedRecs)
   }
 
+  /** One column chunk's footer statistics where they equal Spark's
+    * cast-to-long: a plain signed INT32/INT64 column (no logical type,
+    * or a signed int annotation) with statistics and a known null
+    * count. Returns (null count, [min, max] of the non-null values, if
+    * any); None for anything else — fall back, never guess. Each
+    * caller keeps its own rule for nulls. */
+  private def footerLongStats(
+      cc: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData)
+      : Option[(Long, Option[(Long, Long)])] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import org.apache.parquet.schema.LogicalTypeAnnotation
+    val pt = cc.getPrimitiveType
+    val okType = pt.getPrimitiveTypeName match {
+      case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
+        pt.getLogicalTypeAnnotation match {
+          case null => true
+          case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation => i.isSigned
+          case _ => false
+        }
+      case _ => false
+    }
+    val cst = cc.getStatistics
+    if (!okType || cst == null || cst.isEmpty || !cst.isNumNullsSet) None
+    else if (!cst.hasNonNullValue) Some((cst.getNumNulls, None))
+    else (cst.genericGetMin, cst.genericGetMax) match {
+      case (a: java.lang.Long, b: java.lang.Long) =>
+        Some((cst.getNumNulls, Some((a.longValue, b.longValue))))
+      case (a: java.lang.Integer, b: java.lang.Integer) =>
+        Some((cst.getNumNulls, Some((a.longValue, b.longValue))))
+      case _ => None
+    }
+  }
+
   /** Driver-side derivation of a commit's coverage records from the
     * staged parquet FOOTERS — zero Spark jobs (r18, guide §5: the
     * driver does metadata work, not data work — but footer metadata
@@ -419,7 +452,6 @@ object SidecarMaintenance {
       staged: Seq[FileStatus],
       statsCol: Option[String]): Option[Array[CovRec]] = {
     import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     val out = Array.newBuilder[CovRec]
@@ -453,30 +485,11 @@ object SidecarMaintenance {
           statsCol.foreach { sc =>
             val cc = cols.find(_.getPath.toDotString == sc)
               .getOrElse(return None)
-            val pt = cc.getPrimitiveType
-            val okType = pt.getPrimitiveTypeName match {
-              case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
-                pt.getLogicalTypeAnnotation match {
-                  case null => true
-                  case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                    i.isSigned
-                  case _ => false
-                }
-              case _ => false
-            }
-            if (!okType) return None
-            val cst = cc.getStatistics
-            if (cst == null || cst.isEmpty || !cst.isNumNullsSet) return None
-            nulls += cst.getNumNulls
-            if (cst.hasNonNullValue) {
+            val (n, range) = footerLongStats(cc).getOrElse(return None)
+            // nulls degrade the pair to the full-range sentinel below
+            nulls += n
+            range.foreach { case (bLo, bHi) =>
               nonNull = true
-              val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
-                case (a: java.lang.Long, b2: java.lang.Long) =>
-                  (a.longValue, b2.longValue)
-                case (a: java.lang.Integer, b2: java.lang.Integer) =>
-                  (a.longValue, b2.longValue)
-                case _ => return None
-              }
               if (bLo < lo) lo = bLo
               if (bHi > hi) hi = bHi
             }
@@ -1179,8 +1192,6 @@ object SidecarMaintenance {
     * nothing; no rows at all => None. */
   def footerIdRange(
       spark: SparkSession, paths: Seq[String], c: String): Option[(Long, Long)] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    import org.apache.parquet.schema.LogicalTypeAnnotation
     import scala.jdk.CollectionConverters._
     val conf = spark.sparkContext.hadoopConfiguration
     var lo = Long.MaxValue
@@ -1193,30 +1204,11 @@ object SidecarMaintenance {
       for (b <- footer.getBlocks.asScala if b.getRowCount > 0) {
         val cc = b.getColumns.asScala.find(_.getPath.toDotString == c)
           .getOrElse(return None)
-        val pt = cc.getPrimitiveType
-        val okType = pt.getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT64 | PrimitiveTypeName.INT32 =>
-            pt.getLogicalTypeAnnotation match {
-              case null => true
-              case i: LogicalTypeAnnotation.IntLogicalTypeAnnotation =>
-                i.isSigned
-              case _ => false
-            }
-          case _ => false
-        }
-        if (!okType) return None
-        val cst = cc.getStatistics
-        if (cst == null || cst.isEmpty || !cst.isNumNullsSet ||
-            cst.getNumNulls > 0) return None
-        if (cst.hasNonNullValue) {
+        val (n, range) = footerLongStats(cc).getOrElse(return None)
+        // any null disables the range
+        if (n > 0) return None
+        range.foreach { case (bLo, bHi) =>
           any = true
-          val (bLo, bHi) = (cst.genericGetMin, cst.genericGetMax) match {
-            case (a: java.lang.Long, b2: java.lang.Long) =>
-              (a.longValue, b2.longValue)
-            case (a: java.lang.Integer, b2: java.lang.Integer) =>
-              (a.longValue, b2.longValue)
-            case _ => return None
-          }
           if (bLo < lo) lo = bLo
           if (bHi > hi) hi = bHi
         }

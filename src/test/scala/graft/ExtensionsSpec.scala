@@ -10,8 +10,8 @@ class ExtensionsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private val sf = "/root/testdata/sf0.001"
-  private def docs = SparkEntry.tbl(spark, sf, "documents")
-  private def embeddings = SparkEntry.tbl(spark, sf, "embeddings")
+  private def docs = graft.queries.Fixtures.tbl(spark, sf, "documents")
+  private def embeddings = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
 
   test("codegen dot product is bit-identical to the HOF fold") {
     val e = embeddings.limit(200)

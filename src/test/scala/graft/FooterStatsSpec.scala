@@ -160,7 +160,7 @@ class FooterStatsSpec extends AnyFunSuite {
       .createTempDirectory("graft-fusedguard").toString
     val table = s"$root/vectors"
     try {
-      val e = SparkEntry.tbl(spark, "/root/testdata/sf0.001", "embeddings")
+      val e = graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "embeddings")
       e.where(col("vec_id") % 2 === 0).coalesce(1).write.parquet(table)
       IvfIndex.collect(spark, table, nCells = 4)
       // disjoint fresh ids: refresh must pass through the fused guard

@@ -24,7 +24,7 @@ class IvfIndexSpec extends AnyFunSuite {
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-ivfidx").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, sf, "embeddings")
+    graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
       .write.parquet(path)
     try f(path)
@@ -56,7 +56,7 @@ class IvfIndexSpec extends AnyFunSuite {
       val centsBefore = spark.read.parquet(IvfIndex.centroidsPath(path))
         .as[(Int, Array[Double])].collect().toMap
       // append new vectors in a fresh file
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -160,7 +160,7 @@ class IvfIndexSpec extends AnyFunSuite {
   test("refs variant: exhaustive-probe topKRefs equals brute force after build + refresh") {
     withTable() { path =>
       IvfIndex.collectRefs(spark, path, nCells = 4)
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refreshRefs(spark, path)
@@ -280,7 +280,7 @@ class IvfIndexSpec extends AnyFunSuite {
     withTable(150) { path =>
       val dest = s"${new org.apache.hadoop.fs.Path(path).getParent}/clustered"
       IvfIndex.clusterCorpus(spark, path, dest, nCells = 8, filesPerCell = 2)
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 150 && col("vec_id") < 220)
         .localCheckpoint(true)
       IvfIndex.clusterAppend(spark, dest, batch, filesPerCell = 1)
@@ -319,7 +319,7 @@ class IvfIndexSpec extends AnyFunSuite {
       // is un-journaled (nondeterministic part names, no undo), so
       // the clash must trip BEFORE any bytes land, not after
       // refreshRefs finds the damage
-      val dup = SparkEntry.tbl(spark, sf, "embeddings")
+      val dup = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 50 && col("vec_id") < 70)
         .localCheckpoint(true)
       val e = intercept[IllegalArgumentException] {
@@ -354,7 +354,7 @@ class IvfIndexSpec extends AnyFunSuite {
       // re-ingest exactly those ids: the pre-append clash check must
       // NOT count the vanished file's stale refs rows (the keptRows
       // rule) — a raw-snapshot check would falsely reject this batch
-      val reingest = SparkEntry.tbl(spark, sf, "embeddings")
+      val reingest = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id").isin(victimIds.toSeq: _*))
         .localCheckpoint(true)
       IvfIndex.clusterAppend(spark, dest, reingest)
@@ -378,7 +378,7 @@ class IvfIndexSpec extends AnyFunSuite {
       // legal form (the least() fold needs the 1-vs-many branch only
       // for defense; the materializer can't produce a 1-cell layout)
       IvfIndex.clusterCorpus(spark, path, dest, nCells = 2)
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 40 && col("vec_id") < 60)
         .localCheckpoint(true)
       IvfIndex.clusterAppend(spark, dest, batch)
@@ -487,7 +487,7 @@ class IvfIndexSpec extends AnyFunSuite {
       val cellsDir = IvfIndex.cellsPath(path)
       var next = 200
       while (SidecarMaintenance.dataFiles(spark, cellsDir).size <= 32 && next < 500) {
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= next && col("vec_id") < next + 30)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path, writeSalt = 8)

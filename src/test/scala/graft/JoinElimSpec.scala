@@ -173,21 +173,16 @@ class JoinElimSpec extends AnyFunSuite with BeforeAndAfterEach {
     // the drift and fall back to executing the join.
     val (facts, dimPath) = fixture("fresh")
     ConstraintCatalog.registerUniqueFresh(spark, dimPath, Seq("pk"))
-    // signature memoization must not serve a pre-registration probe:
-    // lower the TTL to zero for the drift check below
-    spark.conf.set("spark.graft.mv.signatureCacheMs", "0")
-    try {
-      def q = facts.join(dim(dimPath), facts("fk") === col("pk"), "left")
-        .select(facts("fk"), facts("m"))
-      assert(!hasJoin(q), "pinned + unchanged dimension must eliminate")
-      // drift: append a duplicate key
-      Seq((1L, "dup")).toDF("pk", "label")
-        .coalesce(1).write.mode("append").parquet(dimPath)
-      assert(hasJoin(q), "drifted dimension must fall back to the join")
-      assert(q.collect().map(_.toString).sorted.toSeq === baseline(q))
-      // two fk=1 facts each match the duplicated pk=1 twice: 4+1+1
-      assert(q.count() === 6, "the duplicated pk=1 must surface twice per fk=1 fact")
-    } finally spark.conf.unset("spark.graft.mv.signatureCacheMs")
+    def q = facts.join(dim(dimPath), facts("fk") === col("pk"), "left")
+      .select(facts("fk"), facts("m"))
+    assert(!hasJoin(q), "pinned + unchanged dimension must eliminate")
+    // drift: append a duplicate key
+    Seq((1L, "dup")).toDF("pk", "label")
+      .coalesce(1).write.mode("append").parquet(dimPath)
+    assert(hasJoin(q), "drifted dimension must fall back to the join")
+    assert(q.collect().map(_.toString).sorted.toSeq === baseline(q))
+    // two fk=1 facts each match the duplicated pk=1 twice: 4+1+1
+    assert(q.count() === 6, "the duplicated pk=1 must surface twice per fk=1 fact")
   }
 
   test("catalog keys guard scheme/authority: no cross-filesystem aliasing") {

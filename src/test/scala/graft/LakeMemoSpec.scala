@@ -187,7 +187,7 @@ class LakeMemoSpec extends AnyFunSuite {
   test("in a cleared memo the probe-path reads run no inference job; a metaRows miss runs one") {
     val root = Files.createTempDirectory("graft-lakememo-jobs").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, "/root/testdata/sf0.001", "embeddings")
+    graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "embeddings")
       .where(col("vec_id") < 200).repartition(3).write.parquet(path)
     IvfIndex.collect(spark, path, nCells = 4)
     IvfIndex.refresh(spark, path) // heals the coverage log

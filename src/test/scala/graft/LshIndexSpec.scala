@@ -19,7 +19,7 @@ class LshIndexSpec extends AnyFunSuite {
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-lshidx").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, sf, "embeddings")
+    graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
       .write.parquet(path)
     try f(path)
@@ -48,7 +48,7 @@ class LshIndexSpec extends AnyFunSuite {
   test("refresh: new files signed off the metadata row alone, vanished files drop") {
     withTable() { path =>
       LshIndex.collect(spark, path, planes = 4, seed = 3L)
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       LshIndex.refresh(spark, path)
@@ -137,7 +137,7 @@ class LshIndexSpec extends AnyFunSuite {
   test("refs variant: exhaustive-radius topKRefs equals brute force after build + refresh") {
     withTable() { path =>
       LshIndex.collectRefs(spark, path, planes = 4)
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       LshIndex.refreshRefs(spark, path)
@@ -265,7 +265,7 @@ class LshIndexSpec extends AnyFunSuite {
     withTable(150) { path =>
       val dest = s"${new org.apache.hadoop.fs.Path(path).getParent}/clustered"
       LshIndex.clusterCorpus(spark, path, dest, planes = 3, filesPerBucket = 2)
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 150 && col("vec_id") < 220)
         .localCheckpoint(true)
       LshIndex.clusterAppend(spark, dest, batch, filesPerBucket = 1)

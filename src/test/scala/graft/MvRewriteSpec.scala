@@ -21,7 +21,6 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterEach {
   override def afterEach(): Unit = {
     MvCatalog.clear()
     spark.conf.set("spark.graft.mv.rewrite", "true")
-    spark.conf.unset("spark.graft.mv.signatureCacheMs")
   }
 
   private def tmp(tag: String): String =
@@ -333,9 +332,6 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!q.collect().exists(r => r.getString(0) == "C"))
   }
   test("freshness pin: a drifted base falls back to the base scan until re-registered") {
-    // TTL 0: the drift below must be visible on the very next probe,
-    // not after the signature memo expires
-    spark.conf.set("spark.graft.mv.signatureCacheMs", "0")
     val basePath = tmp("fresh-base")
     val statePath = tmp("fresh-state")
     baseDf.write.mode("overwrite").parquet(basePath)
@@ -361,6 +357,31 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterEach {
     MvCatalog.registerFresh(spark, basePath, Seq("g1", "g2"), Seq("v", "q"), statePath)
     assert(scansState(q, statePath, basePath), "re-pinned view must serve again")
     assert(q.collect().map(_.toString).sorted.toSeq === baseline(q))
+  }
+  test("freshness: a base rewritten out of band right after a served query is never served stale") {
+    val basePath = tmp("oob-base")
+    val statePath = tmp("oob-state")
+    baseDf.repartition(2).write.mode("overwrite").parquet(basePath)
+    Cdc.aggState(spark.read.parquet(basePath), Seq("g1", "g2"), Seq("v", "q"))
+      .write.mode("overwrite").parquet(statePath)
+    MvCatalog.registerFresh(spark, basePath, Seq("g1", "g2"), Seq("v", "q"), statePath)
+    def q = spark.read.parquet(basePath).groupBy("g1")
+      .agg(count(lit(1)).as("n"), sum(col("q")).as("s"))
+    val doomed = new java.io.File(basePath).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).head
+    assert(q.collect().map(_.toString).sorted.toSeq === baseline(q))
+    val served = q
+    assert(scansState(served, statePath, basePath), "pinned view must serve while fresh")
+    // out of band, no catalog call, right after the served query was
+    // planned: drop one of the base's two files
+    val t0 = System.nanoTime()
+    assert(doomed.delete())
+    val next = q
+    val paths = scanPaths(next)
+    info(f"served plan to next plan: ${(System.nanoTime() - t0) / 1e6}%.0f ms")
+    assert(paths.exists(_.startsWith(basePath)) && !paths.exists(_.startsWith(statePath)),
+      "the next query after an out-of-band rewrite must scan the base")
+    assert(next.collect().map(_.toString).sorted.toSeq === baseline(q))
   }
   test("HAVING (a filter above the aggregate) rides on top of the rewrite") {
     val (basePath, statePath, base) = fixture("having")
@@ -842,7 +863,6 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   test("join view freshness pin: drift under either base falls back to the join") {
-    spark.conf.set("spark.graft.mv.signatureCacheMs", "0")
     val (a, b) = joinDfs
     val aPath = tmp("jvf-a")
     val bPath = tmp("jvf-b")

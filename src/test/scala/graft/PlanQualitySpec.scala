@@ -16,7 +16,7 @@ class PlanQualitySpec extends AnyFunSuite {
   // star markers, exchange count). Post-AQE-final-plan assertions
   // would need the plan from an executed QueryExecution instead.
   private def planOf(name: String): String =
-    SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
+    graft.queries.QueryRegistry(name).run(spark, sf).queryExecution.executedPlan.toString
 
   test("d1: range predicate is pushed into the parquet scan") {
     val plan = planOf("d1_ranged_extract")
@@ -26,7 +26,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("projection prunes the read schema to selected columns") {
     import org.apache.spark.sql.functions._
-    val df = SparkEntry.tbl(spark, sf, "lineitem")
+    val df = graft.queries.Fixtures.tbl(spark, sf, "lineitem")
       .select(col("l_orderkey"), col("l_quantity"))
       .where(col("l_quantity") > 30)
     val plan = df.queryExecution.executedPlan.toString
@@ -124,7 +124,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("PQ ANN partial candidateK prunes map-side before the shuffle") {
     import graft.ext.PqSearch
     import org.apache.spark.sql.functions.col
-    val e = SparkEntry.tbl(spark, sf, "embeddings")
+    val e = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
     val plan = PqSearch.topK(e.where(col("vec_id") < 5),
       PqSearch.buildIndex(e, m = 8, ks = 16), k = 10, candidateK = 50)
       .queryExecution.executedPlan.toString
@@ -144,7 +144,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // shuffle (distinct + top-k window) — the embedding arrays stay
     // where they were read.
     import org.apache.spark.sql.functions.col
-    val e = SparkEntry.tbl(spark, sf, "embeddings")
+    val e = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
     val plan = graft.ext.SimilaritySearch
       .lshTopKDirected(e.where(col("vec_id") < 5), e, k = 10, planes = 6, nProbe = 16)
       .queryExecution.executedPlan.toString
@@ -208,11 +208,11 @@ class PlanQualitySpec extends AnyFunSuite {
       // partition along map-output boundaries, so a single-map-task
       // shuffle (what a one-file sf0.01 scan produces) has nothing to
       // split — at production scale the map side is thousands of tasks
-      val iv = SparkEntry.tbl(spark, dir, "orders").repartition(16)
+      val iv = graft.queries.Fixtures.tbl(spark, dir, "orders").repartition(16)
         .select(col("o_orderkey"), col("o_orderdate"),
           (col("o_orderdate") + expr("INTERVAL 7 DAYS")).as("o_end"))
       val out = graft.ext.Temporal.rangeJoinBinned(
-        iv, SparkEntry.tbl(spark, dir, "lineitem")
+        iv, graft.queries.Fixtures.tbl(spark, dir, "lineitem")
           .select("l_orderkey", "l_shipdate").repartition(16),
         "o_orderdate", "o_end", "l_shipdate",
         binSeconds = 400L * 365 * 86400)
@@ -323,7 +323,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("ivm maintain: ONE exchange for the union + re-aggregate, partial map-side") {
     import org.apache.spark.sql.functions._
     import graft.operators.Cdc
-    val o = SparkEntry.tbl(spark, sf, "orders").select(
+    val o = graft.queries.Fixtures.tbl(spark, sf, "orders").select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast("decimal(12,2)").as("v"))
     // checkpoint both inputs so the pin counts ONLY the maintenance
@@ -347,7 +347,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // the delta terms' churn sides are size-unknown statically, AQE
     // discovers they're small and broadcasts). The executed plan's
     // string carries both sections — cut at the Initial Plan marker.
-    val df = SparkEntry.queries("ext_ivm_join_agg")(spark, sf)
+    val df = graft.queries.QueryRegistry("ext_ivm_join_agg").run(spark, sf)
     df.collect()
     val full = df.queryExecution.executedPlan.toString
     val cut = full.indexOf("== Initial Plan ==")
@@ -375,7 +375,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // transition probe of A_old (broadcast transition keys) — all
     // explicit broadcast() hints, so the snapshots are scanned,
     // never shuffled.
-    val df = SparkEntry.queries("ext_ivm_left_join")(spark, sf)
+    val df = graft.queries.QueryRegistry("ext_ivm_left_join").run(spark, sf)
     df.collect()
     val full = df.queryExecution.executedPlan.toString
     val cut = full.indexOf("== Initial Plan ==")
@@ -401,7 +401,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("extrema IVM: endangered-key recompute is a broadcast semi, base never shuffled") {
     import org.apache.spark.sql.functions._
     import graft.operators.Cdc
-    val o = SparkEntry.tbl(spark, sf, "orders").select(
+    val o = graft.queries.Fixtures.tbl(spark, sf, "orders").select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast("decimal(12,2)").as("v"))
     val after = o.where(col("o_orderkey") % 10 =!= 0)
@@ -423,7 +423,7 @@ class PlanQualitySpec extends AnyFunSuite {
     import graft.operators.Cdc
     val sets = Seq(Seq("o_orderstatus", "o_orderpriority"),
       Seq("o_orderstatus"), Seq.empty[String])
-    val o = SparkEntry.tbl(spark, sf, "orders").select(
+    val o = graft.queries.Fixtures.tbl(spark, sf, "orders").select(
       col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
       col("o_totalprice").cast("decimal(12,2)").as("v"))
     val bootstrapPlan = Cdc.cubeState(
@@ -454,9 +454,9 @@ class PlanQualitySpec extends AnyFunSuite {
   test("bloom join: might_contain filters the fact scan stage, below the join exchange") {
     import org.apache.spark.sql.functions._
     import graft.operators.BloomJoin
-    val li = SparkEntry.tbl(spark, sf, "lineitem")
+    val li = graft.queries.Fixtures.tbl(spark, sf, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_quantity")
-    val dim = SparkEntry.tbl(spark, sf, "orders")
+    val dim = graft.queries.Fixtures.tbl(spark, sf, "orders")
       .where(col("o_totalprice") > 400000)
       .select("o_orderkey", "o_orderstatus")
     val plan = BloomJoin
@@ -510,7 +510,7 @@ class PlanQualitySpec extends AnyFunSuite {
   test("mv rewrite: state-served plan is one exchange over the pruned state scan") {
     import org.apache.spark.sql.functions._
     val root = java.nio.file.Files.createTempDirectory("graft-pq-mv").toString
-    val base = SparkEntry.tbl(spark, sf, "orders").select(
+    val base = graft.queries.Fixtures.tbl(spark, sf, "orders").select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast("decimal(12,2)").as("v"))
     base.write.parquet(s"$root/base")
@@ -547,7 +547,7 @@ class PlanQualitySpec extends AnyFunSuite {
     val root = java.nio.file.Files
       .createTempDirectory("graft-planq-ivf").toString
     try {
-      SparkEntry.tbl(spark, sf, "embeddings").limit(50)
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings").limit(50)
         .write.parquet(s"$root/vectors")
       graft.sinks.IvfIndex.collect(spark, s"$root/vectors", nCells = 4)
       val paths = spark.read.parquet(s"$root/vectors").inputFiles.toSeq
@@ -619,7 +619,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("bpe pair stats: two exchanges (word reduce, pair reduce), map-side partials") {
     val plan = graft.ext.Bpe.pairStats(
-      SparkEntry.tbl(spark, sf, "documents"), "text")
+      graft.queries.Fixtures.tbl(spark, sf, "documents"), "text")
       .queryExecution.executedPlan.toString
     val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
     assert(exchanges == 2,

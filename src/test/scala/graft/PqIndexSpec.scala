@@ -19,7 +19,7 @@ class PqIndexSpec extends AnyFunSuite {
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, sf, "embeddings")
+    graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
       .write.parquet(path)
     try f(path)
@@ -74,7 +74,7 @@ class PqIndexSpec extends AnyFunSuite {
     withTable() { path =>
       PqIndex.collect(spark, path, m = 8, ks = 16)
       val cbBefore = PqIndex.readCodebooks(spark, path)
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       PqIndex.refresh(spark, path)

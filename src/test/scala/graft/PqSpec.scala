@@ -13,7 +13,7 @@ class PqSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
   private val sf = "/root/testdata/sf0.001"
-  private def embeddings = SparkEntry.tbl(spark, sf, "embeddings")
+  private def embeddings = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
 
   private def collectVecs(n: Int): Array[(Long, Array[Double])] =
     embeddings.limit(n).collect()

@@ -25,7 +25,7 @@ class PublishRecoverySpec extends AnyFunSuite {
   private def withTable(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-pub").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, sf, "embeddings")
+    graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < 200).repartition(3)
       .write.parquet(path)
     try f(path)
@@ -139,7 +139,7 @@ class PublishRecoverySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-pubinv").toString
     val path = s"$root/docs"
     try {
-      SparkEntry.tbl(spark, sf, "documents")
+      graft.queries.Fixtures.tbl(spark, sf, "documents")
         .select("doc_id", "text").repartition(2).write.parquet(path)
       InvertedIndex.collect(spark, path, "text", "doc_id")
       val dest = InvertedIndex.indexPath(path)

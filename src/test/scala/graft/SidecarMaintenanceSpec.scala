@@ -23,7 +23,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
     val root = java.nio.file.Files.createTempDirectory("graft-maint").toString
     val path = s"$root/vectors"
-    SparkEntry.tbl(spark, sf, "embeddings")
+    graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
       .write.parquet(path)
     try f(path)
@@ -50,7 +50,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
     withTable() { path =>
       IvfIndex.collect(spark, path, nCells = 4)
       val before = fileSig(IvfIndex.cellsPath(path))
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -73,7 +73,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       // sidecar commit, so each has a carrier set disjoint from the
       // bootstrap's files — the layout that makes a later vanish a
       // targeted rewrite instead of a sidecar-wide one
-      val e = SparkEntry.tbl(spark, sf, "embeddings")
+      val e = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       e.where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -113,7 +113,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       LshIndex.collect(spark, path, planes = 4)
       val beforePq = fileSig(PqIndex.codesPath(path))
       val beforeLsh = fileSig(LshIndex.bucketsPath(path))
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       PqIndex.refresh(spark, path)
@@ -180,7 +180,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       IvfIndex.collect(spark, path, nCells = 4)
       val before = fileSig(IvfIndex.cellsPath(path))
       // the same NEW vector lands twice, in two separate fresh files
-      val dup = SparkEntry.tbl(spark, sf, "embeddings")
+      val dup = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") === 450)
       dup.coalesce(1).write.mode("append").parquet(path)
       dup.coalesce(1).write.mode("append").parquet(path)
@@ -401,7 +401,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       val fs = fsOf(cellsDir)
       // delta of 40 ids far above the corpus range: the clash
       // guard's range filter must prune every kept sidecar file
-      val delta = SparkEntry.tbl(spark, sf, "embeddings")
+      val delta = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 40)
         .withColumn("vec_id", col("vec_id") + lit(1000000L))
         .localCheckpoint(true)
@@ -465,7 +465,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       IvfIndex.collect(spark, path, nCells = 2)
       // five single-file refresh rounds -> small-file accumulation
       (0 until 5).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path)
@@ -483,7 +483,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       assert(ranks(IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2))
         === served)
       // and the NEXT refresh still works off the compacted layout
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 300 && col("vec_id") < 310)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -501,7 +501,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       // files are GRADUATED tiers, the delta accumulation is not
       val threshold = bootstrap.values.min
       (0 until 4).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path)
@@ -551,7 +551,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       val cellsDir = IvfIndex.cellsPath(path)
       val threshold = 1L << 20 // everything at fixture scale is "small"
       (0 until 3).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path, writeSalt = 4) // salted small files
@@ -584,7 +584,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       val cellsDir = IvfIndex.cellsPath(path)
       val threshold = fileSig(cellsDir).values.min
       (0 until 3).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path) // commits keep the coverage memo warm
@@ -622,7 +622,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       IvfIndex.refresh(spark, path) // heals coverage (statless entries)
       IvfIndex.compact(spark, path) // whole-sidecar rewrite WITH stats
       (0 until 2).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path)
@@ -781,7 +781,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       fs.setTimes(SidecarMaintenance.leasePath(cellsDir),
         System.currentTimeMillis() - 10 * 60 * 1000L, -1)
       val before = spark.read.parquet(cellsDir).count()
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 210)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -806,7 +806,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       // file's uuid name can sort below the originals).
       val victim = SidecarMaintenance.dataFiles(spark, path)
         .filterNot(_.contains("_ivf_cells")).min
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 240)
         .coalesce(1).write.mode("append").parquet(path)
       fsOf(path).delete(new Path(victim), false)
@@ -914,7 +914,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       val before = logRecs
       assert(before.keys.exists(_.startsWith("base-")), "heal writes a base")
       // one fixed small delta commit
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 200 && col("vec_id") < 210)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)
@@ -946,7 +946,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       val fs = fsOf(cellsDir)
       // several delta commits accumulate delta records
       (0 until 3).foreach { i =>
-        SparkEntry.tbl(spark, sf, "embeddings")
+        graft.queries.Fixtures.tbl(spark, sf, "embeddings")
           .where(col("vec_id") >= 200 + i * 10 && col("vec_id") < 210 + i * 10)
           .coalesce(1).write.mode("append").parquet(path)
         IvfIndex.refresh(spark, path)
@@ -954,7 +954,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
       // fresh JVM: only the on-disk log to go on — the disk load
       // must fold base+deltas and validate against the real listing
       graft.sinks.LakeMemo.clear()
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 300 && col("vec_id") < 310)
         .coalesce(1).write.mode("append").parquet(path)
       IvfIndex.refresh(spark, path)

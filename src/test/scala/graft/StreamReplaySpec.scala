@@ -30,7 +30,7 @@ class StreamReplaySpec extends AnyFunSuite {
       .createTempDirectory("graft-idemp-append").toString
     val corpus = s"$root/corpus"
     try {
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 50).repartition(2).localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batch, corpus, batchId = 0L,
         targetRowsPerFile = 16)
@@ -65,7 +65,7 @@ class StreamReplaySpec extends AnyFunSuite {
         === ranks(graft.ext.SimilaritySearch.bruteForceTopK(
           q, spark.read.parquet(corpus), k = 5)))
       // a DIFFERENT batch id appends rather than replaces
-      val batch2 = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch2 = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 50 && col("vec_id") < 80)
         .localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batch2, corpus, batchId = 1L)
@@ -81,7 +81,7 @@ class StreamReplaySpec extends AnyFunSuite {
     val oldCkpt = s"$root/oldckpt"
     val freshCkpt = s"$root/freshckpt"
     try {
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 40).localCheckpoint(true)
       // a pre-namespace stream's artifacts: un-namespaced batch-0
       // files in the corpus, a checkpoint with a committed batch and
@@ -132,7 +132,7 @@ class StreamReplaySpec extends AnyFunSuite {
     val corpus = s"$root/corpus"
     val landing = s"$root/landing"
     try {
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 60).coalesce(1).write.parquet(landing)
       def jobsDuring(f: => Unit): Long = {
         val n = new java.util.concurrent.atomic.AtomicLong
@@ -230,7 +230,7 @@ class StreamReplaySpec extends AnyFunSuite {
       // (p0 "already covered") and the eventual full reconcile would
       // drop p1/p2's sidecar rows while never re-indexing the changed
       // p0 — silently losing every row that moved into p0.
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 48).localCheckpoint(true)
       val (pub1, rep1) = StreamingOps.idempotentBatchAppend(
         spark, batch, corpus, batchId = 0L, targetRowsPerFile = 16)
@@ -274,7 +274,7 @@ class StreamReplaySpec extends AnyFunSuite {
     val corpus = s"$root/corpus"
     try {
       // delivery 1: 3 parts, indexed
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 48).localCheckpoint(true)
       val (pub1, _) = StreamingOps.idempotentBatchAppend(
         spark, batch, corpus, batchId = 0L, targetRowsPerFile = 16)
@@ -319,7 +319,7 @@ class StreamReplaySpec extends AnyFunSuite {
       .createTempDirectory("graft-amnesia2").toString
     val corpus = s"$root/corpus"
     try {
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 48).localCheckpoint(true)
       val (pub1, _) = StreamingOps.idempotentBatchAppend(
         spark, batch, corpus, batchId = 0L, targetRowsPerFile = 16)
@@ -364,7 +364,7 @@ class StreamReplaySpec extends AnyFunSuite {
       // sidecars key coverage on the same file NAMES — without the
       // replaced propagation they no-op on the republished p0 and
       // BM25's dl inner-join silently drops every doc that moved in
-      val batch = SparkEntry.tbl(spark, sf, "documents")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "documents")
         .where(col("doc_id") < 48).select("doc_id", "text")
         .localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batch, corpus,
@@ -392,7 +392,7 @@ class StreamReplaySpec extends AnyFunSuite {
       .createTempDirectory("graft-resweep").toString
     val corpus = s"$root/corpus"
     try {
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 48).localCheckpoint(true)
       // first delivery: small target → several part files
       StreamingOps.idempotentBatchAppend(spark, batch, corpus, batchId = 0L,
@@ -419,12 +419,12 @@ class StreamReplaySpec extends AnyFunSuite {
       .createTempDirectory("graft-append-only").toString
     val corpus = s"$root/corpus"
     try {
-      val batch = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 60).localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batch, corpus, batchId = 0L)
       IvfIndex.collect(spark, corpus, nCells = 4)
       IvfIndex.refresh(spark, corpus) // full form: heals + warms coverage
-      val batch2 = SparkEntry.tbl(spark, sf, "embeddings")
+      val batch2 = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 60 && col("vec_id") < 90)
         .localCheckpoint(true)
       val (published, _) = StreamingOps.idempotentBatchAppend(
@@ -460,7 +460,7 @@ class StreamReplaySpec extends AnyFunSuite {
       val landing = s"$root/landing"
       val corpus = s"$root/vectors"
       val ckpt = s"$root/ckpt"
-      SparkEntry.tbl(spark, sf, "embeddings").repartition(4)
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings").repartition(4)
         .write.parquet(landing)
       val schema = spark.read.parquet(landing).schema
       StreamingOps.streamIngestWithIvfIndex(
@@ -487,7 +487,7 @@ class StreamReplaySpec extends AnyFunSuite {
         === ranks(graft.ext.SimilaritySearch.bruteForceTopK(
           q, spark.read.parquet(corpus), k = 10)))
       // and the stream keeps ingesting NEW data afterwards
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .withColumn("vec_id", col("vec_id") + 1000)
         .limit(20).coalesce(1).write.mode("append").parquet(landing)
       StreamingOps.streamIngestWithIvfIndex(
@@ -507,7 +507,7 @@ class StreamReplaySpec extends AnyFunSuite {
       val landing = s"$root/landing"
       val corpus = s"$root/corpus"
       val ckpt = s"$root/ckpt"
-      SparkEntry.tbl(spark, sf, "documents")
+      graft.queries.Fixtures.tbl(spark, sf, "documents")
         .select("doc_id", "lang", "text").repartition(4)
         .write.parquet(landing)
       val schema = spark.read.parquet(landing).schema
@@ -547,7 +547,7 @@ class StreamReplaySpec extends AnyFunSuite {
       // 8 landing files at 1 file/trigger -> batches 0..7; cadence 4
       // compacts at batch 4 — so the final sidecar file count is far
       // below the one-commit-per-batch accumulation
-      SparkEntry.tbl(spark, sf, "embeddings")
+      graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 160).repartition(8)
         .write.parquet(landing)
       val schema = spark.read.parquet(landing).schema
@@ -589,7 +589,7 @@ class StreamReplaySpec extends AnyFunSuite {
     val corpus = s"$root/corpus"
     try {
       // run A lands its batch 0
-      val batchA = SparkEntry.tbl(spark, sf, "embeddings")
+      val batchA = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 50).localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batchA, corpus,
         batchId = 0L, runId = "runa")
@@ -599,7 +599,7 @@ class StreamReplaySpec extends AnyFunSuite {
       // SAME corpus; Spark restarts its batch ids at 0. Before the
       // namespace fix, this delivery deleted runa's ingest-b0 files
       // and silently replaced 50 rows with 30.
-      val batchB = SparkEntry.tbl(spark, sf, "embeddings")
+      val batchB = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") >= 50 && col("vec_id") < 80)
         .localCheckpoint(true)
       StreamingOps.idempotentBatchAppend(spark, batchB, corpus,

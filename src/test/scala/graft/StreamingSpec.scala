@@ -448,7 +448,7 @@ class StreamingSpec extends AnyFunSuite {
     val streamed = StreamingOps.availableNowHourly(spark, s"$sf/events.parquet")
       .collect().map(r => (r.getAs[Any](0).toString, r.getString(1),
         r.getLong(2), java.lang.Double.doubleToLongBits(r.getDouble(3)))).toSet
-    val batch = SparkEntry.tbl(spark, sf, "events")
+    val batch = graft.queries.Fixtures.tbl(spark, sf, "events")
       .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("win"),
         col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -466,7 +466,7 @@ class StreamingSpec extends AnyFunSuite {
       .availableNowClickAttribution(spark, s"$sf/events.parquet", attribution = "6 hours")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
-    val e = SparkEntry.tbl(spark, sf, "events")
+    val e = graft.queries.Fixtures.tbl(spark, sf, "events")
     val clicks = e.where(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         col("ts").as("click_ts"))

@@ -40,7 +40,7 @@ class TransformSpec extends AnyFunSuite {
   }
 
   test("T1 sk is stable across evaluations") {
-    val li = SparkEntry.tbl(spark, "/root/testdata/sf0.001", "lineitem")
+    val li = graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "lineitem")
     val a = SurrogateKey.addSk(li, Seq("l_orderkey", "l_linenumber"), hyphen = true)
       .select("sk").collect().map(_.getString(0)).sorted
     val b = SurrogateKey.addSk(li, Seq("l_orderkey", "l_linenumber"), hyphen = true)
@@ -110,7 +110,7 @@ class TransformSpec extends AnyFunSuite {
   // T5 (utils.py:754-819): chain order S7→T1→T2→T3→T4 and resulting
   // schema.
   test("T5 promote composes in order with expected schema") {
-    val li = SparkEntry.tbl(spark, "/root/testdata/sf0.001", "lineitem")
+    val li = graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "lineitem")
     val out = Promote.transform(li, Seq("l_orderkey"), hyphen = false,
       clock = Clock.ForOracle, deterministic = true)
     assert(out.columns.takeRight(2).toSeq == Seq("sk", "timestamp_kafka"))

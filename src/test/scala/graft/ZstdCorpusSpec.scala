@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class ZstdCorpusSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
-  private lazy val docs = SparkEntry.tbl(spark, sf, "documents")
+  private lazy val docs = graft.queries.Fixtures.tbl(spark, sf, "documents")
     .select("doc_id", "lang", "text")
 
   // the _zdict sidecar is part of the table's real footprint, so the
