@@ -1,17 +1,18 @@
 package graft
 
+import graft.core.Meter
 import graft.queries.QueryRegistry
-import scala.collection.mutable
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** Dev harness (not part of the bench contract): look at one declared
   * query at a time.
   *
   * Usage: runMain graft.Profile <mode> <args…>
-  *   - `jobs <query> [sfDir] [cpus]`: run it with a job-level listener
-  *     and print where the wall clock goes — per-Spark-job duration,
+  *   - `jobs <query> [sfDir] [cpus]`: run it under [[Meter]] and print
+  *     where the wall clock goes — per-Spark-job duration,
   *     task count, task time, the longest task (ms and input rows),
   *     shuffle bytes — plus the gaps BETWEEN jobs (driver-side work:
   *     FS calls, planning, collects). A job whose longest task is most
@@ -20,8 +21,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     problem, not a plan problem. Last, the OS processes the
   *     measured pass started, by command, and how many of them a
   *     Hadoop filesystem call started.
-  *   - `stream <query> [sfDir] [cpus]`: run it with a
-  *     [[StreamingQueryListener]] and print every micro-batch's
+  *   - `stream <query> [sfDir] [cpus]`: run it under [[Meter]] and
+  *     print every micro-batch's
   *     `durationMs` breakdown (triggerExecution, latestOffset,
   *     getBatch, queryPlanning, walCommit, commitOffsets, addBatch):
   *     what the streaming ENGINE spent the gaps between jobs on versus
@@ -35,12 +36,19 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *     sf0.01) on `SPARK_GRAFT_CPUS` cores (default 8). A query may
   *     do setup work (write a corpus, build an index) before it
   *     returns its DataFrame, so a plan costs about one untimed run.
+  *   - `probes <outDir> <suffix>`: the formatted plans of the probe
+  *     operators themselves (LSH and IVF `topK`/`topKRefs`, PQ
+  *     `topK`, `bm25TopKPruned`'s result) over indexes built once at
+  *     `SPARK_GRAFT_SF_DIR`, written to `probe_<name>_<suffix>.txt`.
+  *     Most index-lifecycle queries return a localCheckpoint'd union,
+  *     whose plan is just a ScanExistingRDD.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val rest = args.drop(1)
     args.headOption match {
       case Some("plan") => plan(rest)
+      case Some("probes") => probes(rest(0), rest(1))
       case Some(mode @ ("jobs" | "stream" | "time")) =>
         val name = rest(0)
         val sfDir = if (rest.length > 1) rest(1) else "/root/testdata/sf0.1"
@@ -55,7 +63,7 @@ object Profile {
         }
         spark.stop()
       case _ =>
-        System.err.println("usage: graft.Profile <jobs|stream|time|plan> <query…>")
+        System.err.println("usage: graft.Profile <jobs|stream|time|plan> <query…> | probes <outDir> <suffix>")
         sys.exit(2)
     }
   }
@@ -67,72 +75,34 @@ object Profile {
     graft.core.Sessions.settle(spark)
   }
 
-  private case class JobRec(
-      id: Int, desc: String, submitted: Long, var completed: Long = 0L,
-      var tasks: Int = 0, var taskTimeMs: Long = 0L,
-      var shuffleRead: Long = 0L, var shuffleWrite: Long = 0L,
-      var maxTaskMs: Long = 0L, var maxTaskRows: Long = 0L)
-
   private def jobs(spark: SparkSession, name: String, sfDir: String, fn: () => Long): Unit = {
     warm(spark, sfDir, fn)
-    val jobs = mutable.LinkedHashMap.empty[Int, JobRec]
-    val stageToJob = mutable.Map.empty[Int, Int]
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized {
-        // job-property callsite first (survives streaming-thread jobs
-        // whose stage names are empty), then stage names as fallback
-        val fromProps = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short")))
-        val site = fromProps.getOrElse(
-          e.stageInfos.map(_.name).filter(_.nonEmpty).distinct.mkString(" <- "))
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .map(d => s"$d | $site").getOrElse(site)
-        jobs(e.jobId) = JobRec(e.jobId, desc, e.time)
-        e.stageIds.foreach(s => stageToJob(s) = e.jobId)
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = jobs.synchronized {
-        jobs.get(e.jobId).foreach(_.completed = e.time)
-      }
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = jobs.synchronized {
-        for (j <- stageToJob.get(e.stageId); r <- jobs.get(j)) {
-          r.tasks += 1
-          val m = e.taskMetrics
-          if (m != null) {
-            r.taskTimeMs += m.executorRunTime
-            r.shuffleRead += m.shuffleReadMetrics.totalBytesRead
-            r.shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-            // the longest task: one task holding a job's critical path
-            if (m.executorRunTime > r.maxTaskMs) {
-              r.maxTaskMs = m.executorRunTime
-              r.maxTaskRows = m.inputMetrics.recordsRead
-            }
-          }
-        }
+    val (((n, total), starts), r) = Meter.during(spark) {
+      graft.core.ProcessStarts.during {
+        val t0 = System.nanoTime()
+        val n = fn()
+        (n, (System.nanoTime() - t0) / 1e9)
       }
     }
-    spark.sparkContext.addSparkListener(listener)
-    val ((n, total), starts) = graft.core.ProcessStarts.during {
-      val t0 = System.nanoTime()
-      val n = fn()
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
-    spark.sparkContext.removeSparkListener(listener)
 
-    println(f"PROFILE $name rows=$n total=$total%.3f s  jobs=${jobs.size}")
+    println(f"PROFILE $name rows=$n total=$total%.3f s  jobs=${r.jobs.size}")
     var prevEnd = 0L
     var jobSum = 0.0
     var gapSum = 0.0
-    jobs.values.foreach { r =>
-      val dur = (r.completed - r.submitted) / 1e3
-      val gap = if (prevEnd == 0) 0.0 else (r.submitted - prevEnd) / 1e3
+    r.jobs.foreach { j =>
+      val t = r.of(j)
+      // the longest task: one task holding a job's critical path
+      val (maxMs, maxRows) = t.tasks.filter(_.runMs > 0).maxByOption(_.runMs)
+        .fold((0L, 0L))(m => (m.runMs, m.inputRecords))
+      val dur = (j.completed - j.submitted) / 1e3
+      val gap = if (prevEnd == 0) 0.0 else (j.submitted - prevEnd) / 1e3
       if (prevEnd != 0 && gap > 0) gapSum += gap
       jobSum += dur
-      prevEnd = math.max(prevEnd, r.completed)
-      println(f"  job=${r.id}%3d dur=$dur%7.3f gapBefore=$gap%7.3f tasks=${r.tasks}%4d " +
-        f"taskTime=${r.taskTimeMs}%6d ms maxTask=${r.maxTaskMs}%5d ms/${r.maxTaskRows}%7d rows shufR=${r.shuffleRead}%8d shufW=${r.shuffleWrite}%8d  ${r.desc.take(110)}")
+      prevEnd = math.max(prevEnd, j.completed)
+      println(f"  job=${j.id}%3d dur=$dur%7.3f gapBefore=$gap%7.3f tasks=${t.tasks.size}%4d " +
+        f"taskTime=${t.runMs}%6d ms maxTask=$maxMs%5d ms/$maxRows%7d rows shufR=${t.shuffleReadBytes}%8d shufW=${t.shuffleWriteBytes}%8d  ${j.label.take(110)}")
     }
-    println(f"PROFILE_SUM jobs=${jobs.size} jobTime=$jobSum%.3f s gaps=$gapSum%.3f s total=$total%.3f s")
+    println(f"PROFILE_SUM jobs=${r.jobs.size} jobTime=$jobSum%.3f s gaps=$gapSum%.3f s total=$total%.3f s")
     // a shell-out per file (a chmod, an `ls -ld`) is driver time no job shows
     val byCommand = starts.groupBy(_.command.takeWhile(_ != ' ')).map { case (c, s) => s"$c=${s.size}" }
     println(s"PROFILE_PROCS started=${starts.size} hadoopFs=${starts.count(_.hadoopFs)} " +
@@ -141,29 +111,17 @@ object Profile {
 
   private def stream(spark: SparkSession, name: String, sfDir: String, fn: () => Long): Unit = {
     warm(spark, sfDir, fn)
-    val lines = mutable.ArrayBuffer.empty[String]
-    val listener = new StreamingQueryListener {
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit =
-        lines.synchronized {
-          val p = e.progress
-          import scala.jdk.CollectionConverters._
-          val d = p.durationMs.asScala.toSeq.sortBy(-_._2).map {
-            case (k, v) => f"$k=$v%d" }.mkString(" ")
-          lines += f"BATCH ${p.batchId}%3d rows=${p.numInputRows}%7d  $d"
-        }
+    val ((n, total), r) = Meter.during(spark) {
+      val t0 = System.nanoTime()
+      val n = fn()
+      (n, (System.nanoTime() - t0) / 1e9)
     }
-    spark.streams.addListener(listener)
-    val t0 = System.nanoTime()
-    val n = fn()
-    val total = (System.nanoTime() - t0) / 1e9
-    spark.streams.removeListener(listener)
-    println(f"STREAMPROFILE $name rows=$n total=$total%.3f s batches=${lines.size}")
-    lines.foreach(println)
+    println(f"STREAMPROFILE $name rows=$n total=$total%.3f s batches=${r.progress.size}")
+    r.progress.foreach { p =>
+      val d = p.durationMs.asScala.toSeq.sortBy(-_._2).map {
+        case (k, v) => f"$k=$v%d" }.mkString(" ")
+      println(f"BATCH ${p.batchId}%3d rows=${p.numInputRows}%7d  $d")
+    }
   }
 
   private def time(spark: SparkSession, name: String, fn: () => Long, reps: Int): Unit = {
@@ -195,5 +153,54 @@ object Profile {
       } finally graft.core.Sessions.settle(spark)
     }
     spark.stop()
+  }
+
+  private def probes(outDir: String, suffix: String): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+    val spark = graft.core.Sessions.local(8)
+    Files.createDirectories(Paths.get(outDir))
+    def dump(name: String, df: DataFrame): Unit = {
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      Files.writeString(Paths.get(s"$outDir/probe_${name}_$suffix.txt"), plan)
+      println(s"[probeplans] wrote $name")
+    }
+    val root = Files.createTempDirectory("graft-probeplans").toString
+    val droot = Files.createTempDirectory("graft-probeplans-docs").toString
+    try {
+      val path = s"$root/vectors"
+      graft.queries.Fixtures.tbl(spark, sfDir, "embeddings").repartition(3).write.parquet(path)
+      val q = spark.read.parquet(path).where(col("vec_id") < 5)
+
+      graft.sinks.LshIndex.collect(spark, path, planes = 4)
+      dump("lsh_topk",
+        graft.sinks.LshIndex.topK(spark, path, q, k = 10, probeRadius = 4))
+      graft.sinks.LshIndex.collectRefs(spark, path, planes = 4)
+      dump("lsh_topkrefs",
+        graft.sinks.LshIndex.topKRefs(spark, path, q, k = 10, probeRadius = 4))
+      graft.sinks.IvfIndex.collect(spark, path, nCells = 8)
+      dump("ivf_topk",
+        graft.sinks.IvfIndex.topK(spark, path, q, k = 10, nProbe = 8))
+      graft.sinks.IvfIndex.collectRefs(spark, path, nCells = 8)
+      dump("ivf_topkrefs",
+        graft.sinks.IvfIndex.topKRefs(spark, path, q, k = 10, nProbe = 8))
+      graft.sinks.PqIndex.collect(spark, path, m = 8, ks = 16)
+      dump("pq_topk",
+        graft.sinks.PqIndex.topK(spark, path, q, k = 10,
+          candidateK = Int.MaxValue))
+
+      val dpath = s"$droot/docs"
+      spark.read.parquet(s"$sfDir/documents.parquet").write.parquet(dpath)
+      graft.sinks.InvertedIndex.collect(spark, dpath, "text", "doc_id")
+      graft.sinks.InvertedIndex.buildRetrievalStats(spark, dpath)
+      dump("bm25_pruned",
+        graft.sinks.InvertedIndex
+          .bm25TopKPruned(spark, dpath, "the quick brown fox", k = 5).topK)
+    } finally {
+      val storage = new graft.core.LakeStorage(spark.sparkContext.hadoopConfiguration)
+      storage.truncate(root)
+      storage.truncate(droot)
+      spark.stop()
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Clock
+import graft.core.{Clock, Meter}
 import graft.ext._
 import graft.operators.Promote
 import org.apache.spark.sql.DataFrame
@@ -87,6 +87,11 @@ object ScaleCheck {
       val t0 = System.nanoTime()
       val n = f
       ((System.nanoTime() - t0) / 1e9, n)
+    }
+    /** (output bytes, input records) of the tasks `f` ran. */
+    def writtenAndRead(f: => Unit): (Long, Long) = {
+      val r = Meter.during(spark)(f)._2
+      (r.outputBytes, r.inputRecords)
     }
 
     // trained once OUTSIDE the timed windows (the deployment
@@ -924,21 +929,9 @@ object ScaleCheck {
       // the whole base through the Expand
       def bench(path: String, rewrite: Boolean): (Double, Long) = {
         spark.conf.set("spark.graft.mv.rewrite", rewrite.toString)
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        val (t, _) =
-          try { val r = timed(q(path).count())
-            org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-            r }
-          finally spark.sparkContext.removeSparkListener(l)
+        val ((t, _), r) = Meter.during(spark)(timed(q(path).count()))
         graft.core.Sessions.settle(spark)
-        (t, acc.get)
+        (t, r.inputRecords)
       }
       val (r1, rr1) = bench(p1, rewrite = true)
       val (rk, rrk) = bench(pk, rewrite = true)
@@ -971,23 +964,9 @@ object ScaleCheck {
       }
       val p1 = prep(embs, "v1")
       val pk = prep(grow(embs, "vec_id"), "vk")
-      def recordsRead(f: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        // no settle() here: it would drop the localCheckpoint blocks
-        // of the pinned query frames between measurements
-        acc.get
-      }
+      // no settle() between measurements: it would drop the
+      // localCheckpoint blocks of the pinned query frames
+      def recordsRead(f: => Unit): Long = Meter.during(spark)(f)._2.inputRecords
       // replica 0 of grow() keeps original ids, so the same query
       // set exists at both scales; the READ covers the UNION of the
       // batch's probed cells, so a small batch keeps the fraction
@@ -1037,30 +1016,6 @@ object ScaleCheck {
       }
       val p1 = prep(embs, "v1")
       val pk = prep(grow(embs, "vec_id"), "vk")
-      // (bytes written, records read) per refresh: written is the
-      // O(delta) COMMIT witness; read is the O(delta) PLANNING
-      // witness — the coverage cache replaces the sidecar `file`
-      // scan and the guard's kept-side range filter prunes whole
-      // files by footer stats, so neither side scales with corpus
-      def refreshIo(f: => Unit): (Long, Long) = {
-        val w = new java.util.concurrent.atomic.AtomicLong
-        val r = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              w.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-              r.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-            }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        (w.get, r.get)
-      }
-      def bytesWritten(f: => Unit): Long = refreshIo(f)._1
       // the FIXED delta: 500 fresh vectors, ids disjoint from every
       // grow() replica, appended identically to both corpora
       val delta = embs.limit(500)
@@ -1068,13 +1023,18 @@ object ScaleCheck {
         .localCheckpoint(true)
       delta.coalesce(1).write.mode("append").parquet(p1)
       delta.coalesce(1).write.mode("append").parquet(pk)
+      // (bytes written, records read) per refresh: written is the
+      // O(delta) COMMIT witness; read is the O(delta) PLANNING
+      // witness — the coverage cache replaces the sidecar `file`
+      // scan and the guard's kept-side range filter prunes whole
+      // files by footer stats, so neither side scales with corpus
       Seq[(String, String => Unit)](
         ("ivfidx_refresh", p => graft.sinks.IvfIndex.refresh(spark, p)),
         ("lshidx_refresh", p => graft.sinks.LshIndex.refresh(spark, p)),
         ("pqidx_refresh", p => graft.sinks.PqIndex.refresh(spark, p))
       ).foreach { case (tag, go) =>
-        val (b1, r1) = refreshIo(go(p1))
-        val (bk, rk) = refreshIo(go(pk))
+        val (b1, r1) = writtenAndRead(go(p1))
+        val (bk, rk) = writtenAndRead(go(pk))
         println(f"$tag%-18s bytes written $b1 -> $bk (x${bk.toDouble / b1}%.2f, O(delta) iff ~1)")
         println(f"$tag%-18s records read  $r1 -> $rk (x${rk.toDouble / math.max(1L, r1)}%.2f, O(delta) iff ~1)")
       }
@@ -1095,10 +1055,10 @@ object ScaleCheck {
         .select("doc_id", "text").localCheckpoint(true)
       docDelta.coalesce(1).write.mode("append").parquet(d1)
       docDelta.coalesce(1).write.mode("append").parquet(dk)
-      val i1 = bytesWritten(
-        graft.sinks.InvertedIndex.refresh(spark, d1, "text", "doc_id"))
-      val ik = bytesWritten(
-        graft.sinks.InvertedIndex.refresh(spark, dk, "text", "doc_id"))
+      val i1 = writtenAndRead(
+        graft.sinks.InvertedIndex.refresh(spark, d1, "text", "doc_id"))._1
+      val ik = writtenAndRead(
+        graft.sinks.InvertedIndex.refresh(spark, dk, "text", "doc_id"))._1
       println(f"invidx_refresh     bytes written $i1 -> $ik (x${ik.toDouble / i1}%.2f, O(delta) iff ~1)")
       new graft.core.LakeStorage(spark.sparkContext.hadoopConfiguration)
         .truncate(root)
@@ -1118,24 +1078,8 @@ object ScaleCheck {
       val root = java.nio.file.Files
         .createTempDirectory("graft-scale-sf1").toString
       def io(f: => Unit): (Long, Long, Long) = {
-        val w = new java.util.concurrent.atomic.AtomicLong
-        val r = new java.util.concurrent.atomic.AtomicLong
-        val sh = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              w.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-              r.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-              sh.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
-            }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        (w.get, r.get, sh.get)
+        val r = Meter.during(spark)(f)._2
+        (r.outputBytes, r.inputRecords, r.shuffleWriteBytes)
       }
       val cBefore = Bench.canary(spark)
 
@@ -1372,25 +1316,6 @@ object ScaleCheck {
     if (only.exists(_.contains("compact_tiered"))) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-scale-tiered").toString
-      def compactIo(f: => Unit): (Long, Long) = {
-        val w = new java.util.concurrent.atomic.AtomicLong
-        val r = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              w.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-              r.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-            }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        (w.get, r.get)
-      }
-      def ioBytes(f: => Unit): Long = compactIo(f)._1
       def deltaAt(i: Int): DataFrame = embs.limit(500)
         .withColumn("vec_id", col("vec_id") + lit((i + 1) * 1000000000000L))
       def prepVec(d: DataFrame, tag: String): String = {
@@ -1414,8 +1339,8 @@ object ScaleCheck {
         ("lshidx_compact", p =>
           graft.sinks.LshIndex.compactSmall(spark, p, smallBytes = small))
       ).foreach { case (tag, go) =>
-        val (b1, r1) = compactIo(go(v1))
-        val (bk, rk) = compactIo(go(vk))
+        val (b1, r1) = writtenAndRead(go(v1))
+        val (bk, rk) = writtenAndRead(go(vk))
         println(f"$tag%-18s bytes written $b1 -> $bk (x${bk.toDouble / math.max(1L, b1)}%.2f, O(accumulated delta) iff ~1)")
         println(f"$tag%-18s records read  $r1 -> $rk (x${rk.toDouble / math.max(1L, r1)}%.2f, O(accumulated delta) iff ~1)")
       }
@@ -1435,10 +1360,10 @@ object ScaleCheck {
       }
       val t1 = prepDocsT(docs, "t1")
       val tk = prepDocsT(grow(docs, "doc_id"), "tk")
-      val ib1 = ioBytes(
-        graft.sinks.InvertedIndex.compactSmall(spark, t1, smallBytes = 96L << 10))
-      val ibk = ioBytes(
-        graft.sinks.InvertedIndex.compactSmall(spark, tk, smallBytes = 96L << 10))
+      val ib1 = writtenAndRead(
+        graft.sinks.InvertedIndex.compactSmall(spark, t1, smallBytes = 96L << 10))._1
+      val ibk = writtenAndRead(
+        graft.sinks.InvertedIndex.compactSmall(spark, tk, smallBytes = 96L << 10))._1
       println(f"invidx_compact     bytes written $ib1 -> $ibk (x${ibk.toDouble / math.max(1L, ib1)}%.2f, O(accumulated delta) iff ~1)")
       new graft.core.LakeStorage(spark.sparkContext.hadoopConfiguration)
         .truncate(root)
@@ -1455,24 +1380,6 @@ object ScaleCheck {
     if (only.exists(_.contains("stream_refresh"))) {
       val root = java.nio.file.Files
         .createTempDirectory("graft-scale-streamref").toString
-      def refreshIo(f: => Unit): (Long, Long) = {
-        val w = new java.util.concurrent.atomic.AtomicLong
-        val r = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null) {
-              w.addAndGet(t.taskMetrics.outputMetrics.bytesWritten)
-              r.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-            }
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        (w.get, r.get)
-      }
       def prep(d: DataFrame, tag: String): (String, String, String) = {
         val landing = s"$root/$tag/landing"
         val corpus = s"$root/$tag/vectors"
@@ -1508,8 +1415,8 @@ object ScaleCheck {
       graft.sinks.SidecarMaintenance.trackWalks(c1) // opt-in counting
       graft.sinks.SidecarMaintenance.trackWalks(ck)
       val (l01, l0k) = (listingsOf(c1), listingsOf(ck))
-      val (w1, r1) = refreshIo(resume(l1, c1, k1))
-      val (wk, rk) = refreshIo(resume(lk, ck, kk))
+      val (w1, r1) = writtenAndRead(resume(l1, c1, k1))
+      val (wk, rk) = writtenAndRead(resume(lk, ck, kk))
       println(f"stream_refresh     bytes written $w1 -> $wk (x${wk.toDouble / math.max(1L, w1)}%.2f, O(batch) iff ~1)")
       println(f"stream_refresh     records read  $r1 -> $rk (x${rk.toDouble / math.max(1L, r1)}%.2f, O(batch) iff ~1)")
       println(s"stream_refresh     corpus listings during resumed batch: " +
@@ -1538,21 +1445,7 @@ object ScaleCheck {
       val root = s"cfs://$rootLocal"
       val nCells = 16
       val nProbe = 4
-      def probeIo(f: => Unit): Long = {
-        val r = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              r.addAndGet(t.taskMetrics.inputMetrics.bytesRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        r.get
-      }
+      def probeIo(f: => Unit): Long = Meter.during(spark)(f)._2.inputBytes
       def prep(d: DataFrame, tag: String, files: Int): String = {
         val raw = s"$root/$tag-raw"
         val p = s"$root/$tag"

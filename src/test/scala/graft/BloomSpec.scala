@@ -100,8 +100,7 @@ class BloomSpec extends AnyFunSuite {
 
   test("bloom index: merged == direct build bit-identical; refresh scans only new files") {
     import graft.sinks.BloomIndex
-    val t = java.nio.file.Files
-      .createTempDirectory("graft-bloomidx").toString + "/corpus"
+    val t = SparkTestSession.tmp("bloomidx").toString + "/corpus"
     spark.range(0L, 4000L).select(col("id").as("k"))
       .repartition(4).write.parquet(t)
     BloomIndex.collect(spark, t, "k", expectedItems = 5000, fpp = 0.01)

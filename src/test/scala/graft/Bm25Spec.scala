@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.ext.TextAnalysis
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,7 +67,7 @@ class Bm25Spec extends AnyFunSuite {
   }
 
   test("index-served statistics are value-identical to the corpus path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bm25spec").toString + "/docs"
+    val dir = SparkTestSession.tmp("bm25spec").toString + "/docs"
     docs.toDF("doc_id", "text").repartition(2).write.parquet(dir)
     graft.sinks.InvertedIndex.collect(spark, dir, "text", "doc_id")
     val fromCorpus = TextAnalysis.bm25Stats(spark.read.parquet(dir), "fast key")
@@ -97,22 +98,8 @@ class Bm25Spec extends AnyFunSuite {
     } ++ Seq((n + 1, "zzneedle first"), (n + 2, "zzneedle second"),
       (n + 3, "zzneedle third"))
     withIndexedCorpus(corpus) { path =>
-      def shuffledRecords(f: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue
-            .flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        acc.get
-      }
+      def shuffledRecords(f: => Unit): Long =
+        Meter.during(spark)(f)._2.shuffleReadRecords
       val viaSidecar = shuffledRecords {
         graft.sinks.InvertedIndex
           .bm25StatsFromIndex(spark, path, "zzneedle").count()
@@ -153,8 +140,7 @@ class Bm25Spec extends AnyFunSuite {
   // ── MaxScore-pruned top-k off the index ─────────────────────────
 
   private def withIndexedCorpus(rows: Seq[(Long, String)])(f: String => Unit): Unit = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-maxscore").toString
+    val root = SparkTestSession.tmp("maxscore").toString
     val path = s"$root/corpus"
     rows.toDF("doc_id", "text").repartition(2).write.parquet(path)
     graft.sinks.InvertedIndex.collect(spark, path, "text", "doc_id")
@@ -220,22 +206,8 @@ class Bm25Spec extends AnyFunSuite {
         (n + 2, "zzzrare zzcommon second hit"),
         (n + 3, "zzzrare zzcommon third hit"))
     withIndexedCorpus(corpus) { path =>
-      def shuffledRecords(f: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.shuffleReadMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue
-            .flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        acc.get
-      }
+      def shuffledRecords(f: => Unit): Long =
+        Meter.during(spark)(f)._2.shuffleReadRecords
       val full = shuffledRecords {
         graft.sinks.InvertedIndex
           .bm25TopKPruned(spark, path, "zzzrare zzcommon", k = 2,

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.LakeStorage
 import graft.sinks.Bucketed
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,7 +10,7 @@ class BucketedSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def withRoot(f: String => Unit): Unit = {
-    val root = Files.createTempDirectory("graft-bucketed-spec").toString
+    val root = SparkTestSession.tmp("bucketed-spec").toString
     try f(root)
     finally new LakeStorage(spark.sparkContext.hadoopConfiguration).truncate(root)
   }

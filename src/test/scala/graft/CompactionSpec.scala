@@ -24,7 +24,7 @@ class CompactionSpec extends AnyFunSuite {
     Event(id, Timestamp.valueOf("2024-01-01 00:01:00"), id % 3, "click", id.toDouble)
 
   test("streamed zone: compaction shrinks files, keeps rows, and the stream resumes") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact").toString
+    val root = SparkTestSession.tmp("compact").toString
     val landing = s"$root/landing"
     val work = s"$root/work"
     val ckpt = s"$root/ckpt"
@@ -62,7 +62,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("plain zone: bin-packs to the requested target size") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact2").toString
+    val root = SparkTestSession.tmp("compact2").toString
     val work = s"$root/work"
     (0L until 600L).map(ev).toDF().repartition(6).write.parquet(work)
     assert(dataFiles(work).size == 6)
@@ -76,7 +76,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("crash between staging commit and swap: recovery finishes the promote") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact3").toString
+    val root = SparkTestSession.tmp("compact3").toString
     val work = s"$root/work"
     (1L to 4L).map(ev).toDF().repartition(4).write.parquet(work)
     // simulate the crash window: staging fully committed (marker
@@ -94,7 +94,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("crash before staging commit: recovery restores the original zone") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact4").toString
+    val root = SparkTestSession.tmp("compact4").toString
     val work = s"$root/work"
     (1L to 4L).map(ev).toDF().repartition(4).write.parquet(work)
     // uncommitted staging (no marker — half-written), target aside
@@ -107,7 +107,7 @@ class CompactionSpec extends AnyFunSuite {
   }
 
   test("partitioned zones are rejected with the contract") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact5").toString
+    val root = SparkTestSession.tmp("compact5").toString
     val work = s"$root/work"
     (1L to 4L).map(ev).toDF().withColumn("p", $"event_id" % 2)
       .write.partitionBy("p").parquet(work)

@@ -14,7 +14,7 @@ class CorpusIOSpec extends AnyFunSuite {
     StructField("lang", StringType)))
 
   test("JSONL round-trip preserves escapes, unicode and nulls exactly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio").toString
+    val dir = SparkTestSession.tmp("corpusio").toString
     val docs = Seq(
       (1L, "plain text", Some("en")),
       (2L, "line\nbreak \"quoted\" tab\there", Some("en")),
@@ -28,7 +28,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("malformed lines quarantine into _corrupt instead of failing the read") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio2")
+    val dir = SparkTestSession.tmp("corpusio2")
     val f = dir.resolve("part.jsonl")
     java.nio.file.Files.writeString(f,
       """{"doc_id": 1, "text": "good", "lang": "en"}
@@ -50,7 +50,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("CSV round-trip preserves quoting, the null sentinel, and numeric fidelity") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio3").toString
+    val dir = SparkTestSession.tmp("corpusio3").toString
     val rows = Seq(
       (1L, Some("has,comma"), Some(1.5)),
       (2L, Some("has \"quotes\" inside"), Some(0.1 + 0.2)), // non-representable double
@@ -79,7 +79,7 @@ class CorpusIOSpec extends AnyFunSuite {
   test("readCsv verifies each file's header names against the schema") {
     // enforceSchema=false: a column-reordered file must FAIL, not be
     // silently misread by position
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio5")
+    val dir = SparkTestSession.tmp("corpusio5")
     val f = dir.resolve("part.csv")
     java.nio.file.Files.writeString(f,
       """s,id,v
@@ -98,7 +98,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("malformed CSV rows quarantine into _corrupt") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio4")
+    val dir = SparkTestSession.tmp("corpusio4")
     val f = dir.resolve("part.csv")
     java.nio.file.Files.writeString(f,
       """id,s,v
@@ -123,7 +123,7 @@ class CorpusIOSpec extends AnyFunSuite {
   }
 
   test("quarantineSplit persists clean rows and the exact raw corrupt lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-corpusio6")
+    val dir = SparkTestSession.tmp("corpusio6")
     val f = dir.resolve("part.jsonl")
     java.nio.file.Files.writeString(f,
       """{"doc_id": 1, "text": "good", "lang": "en"}

@@ -50,7 +50,7 @@ class DirSwapCrashMatrixSpec extends AnyFunSuite {
 
   private def withRoot[T](f: (String, String) => T): T = {
     fs // registers the scheme, so a test runs on its own too
-    val local = java.nio.file.Files.createTempDirectory("graft-swapmatrix").toString
+    val local = SparkTestSession.tmp("swapmatrix").toString
     try f(local, s"faultfs://$local")
     finally FileUtil.fullyDelete(new java.io.File(local))
   }

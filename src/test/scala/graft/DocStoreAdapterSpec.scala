@@ -88,7 +88,7 @@ class DocStoreAdapterSpec extends AnyFunSuite with BeforeAndAfterEach {
         s.read.parquet(s"$sf/$collection.parquet")
     })
     val lake = LakePaths(
-      java.nio.file.Files.createTempDirectory("graft-docseam").toString)
+      SparkTestSession.tmp("docseam").toString)
     val ref = DatasetRef("test", "fakedb", "orders")
     val src = DocStoreSource("fakedb://host/?database=tpch", "orders")
     val truth = spark.read.parquet(s"$sf/orders.parquet")

@@ -71,8 +71,7 @@ class FooterStatsSpec extends AnyFunSuite {
       .map(_.map(r => (r.corpus, r.rel, r.len, r.lo, r.hi)).toSet)
 
   test("footerCovRecs == staged-stats aggregation on single-corpus-file stages") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-footercov").toString
+    val root = SparkTestSession.tmp("footercov").toString
     try {
       // two corpus files, staged one-per-commit like a refresh does
       Seq(1L, 2L, 3L).toDF("vec_id").coalesce(1)
@@ -96,8 +95,7 @@ class FooterStatsSpec extends AnyFunSuite {
   }
 
   test("footerCovRecs: nulls in the stats column degrade to the sentinel, exactly like the aggregation") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-footernull").toString
+    val root = SparkTestSession.tmp("footernull").toString
     try {
       Seq(Some(5L), None, Some(9L)).toDF("vec_id")
         .withColumn("file", lit("file:/corpus/a.parquet"))
@@ -112,8 +110,7 @@ class FooterStatsSpec extends AnyFunSuite {
   }
 
   test("footerCovRecs returns None (fallback) when a staged file mixes corpus files or the id is non-integral") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-footermix").toString
+    val root = SparkTestSession.tmp("footermix").toString
     try {
       Seq((1L, "file:/corpus/a.parquet"), (2L, "file:/corpus/b.parquet"))
         .toDF("vec_id", "file").coalesce(1).write.parquet(s"$root/mixed")
@@ -129,8 +126,7 @@ class FooterStatsSpec extends AnyFunSuite {
   }
 
   test("footerIdRange == idRangeOf on integral ids; None on nulls/strings") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-footerrange").toString
+    val root = SparkTestSession.tmp("footerrange").toString
     try {
       Seq(7L, 3L, 11L).toDF("vec_id").coalesce(1)
         .write.parquet(s"$root/ints")
@@ -156,8 +152,7 @@ class FooterStatsSpec extends AnyFunSuite {
   }
 
   test("fused one-job guard: same trips and passes as the aggregation form") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-fusedguard").toString
+    val root = SparkTestSession.tmp("fusedguard").toString
     val table = s"$root/vectors"
     try {
       val e = graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "embeddings")

@@ -2,7 +2,6 @@ package graft
 
 import graft.functions.TextFunctions
 import graft.sinks.InvertedIndex
-import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -24,7 +23,7 @@ class InvertedIndexSpec extends AnyFunSuite {
       .select("doc_id").as[Long].collect().toSet
 
   private def freshCorpus(rows: Seq[(Long, String)]): String = {
-    val dir = Files.createTempDirectory("graft-invidx").toString + "/docs"
+    val dir = SparkTestSession.tmp("invidx").toString + "/docs"
     rows.toDF("doc_id", "text").repartition(2).write.parquet(dir)
     dir
   }
@@ -79,7 +78,7 @@ class InvertedIndexSpec extends AnyFunSuite {
 
   test("vanished data files' postings drop on refresh") {
     // one row per file (range split), so deleting doc 1's file keeps doc 2
-    val dir = Files.createTempDirectory("graft-invidx").toString + "/docs"
+    val dir = SparkTestSession.tmp("invidx").toString + "/docs"
     Seq((1L, "solo posting"), (2L, "other words")).toDF("doc_id", "text")
       .repartitionByRange(2, col("doc_id")).write.parquet(dir)
     val table = dir
@@ -99,7 +98,7 @@ class InvertedIndexSpec extends AnyFunSuite {
   }
 
   test("streaming maintenance: checkpointed resume refreshes only new batches' files") {
-    val root = Files.createTempDirectory("graft-invidx-stream").toString
+    val root = SparkTestSession.tmp("invidx-stream").toString
     val landing = s"$root/landing"
     val corpus = s"$root/corpus"
     val schema = Seq((0L, "")).toDF("doc_id", "text").schema
@@ -166,7 +165,7 @@ class InvertedIndexSpec extends AnyFunSuite {
     // two appends carrying the SAME doc id plant the split the df/dl
     // sidecar statistics cannot survive; the build must refuse, and
     // must not leave a half-trusted index behind
-    val dir = Files.createTempDirectory("graft-invidx").toString + "/docs"
+    val dir = SparkTestSession.tmp("invidx").toString + "/docs"
     Seq((1L, "first half of the doc")).toDF("doc_id", "text")
       .coalesce(1).write.parquet(dir)
     Seq((1L, "second half elsewhere"), (2L, "clean doc")).toDF("doc_id", "text")

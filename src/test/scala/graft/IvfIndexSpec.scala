@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.ext.IvfSearch
 import graft.functions.VectorFunctions
 import graft.sinks.{IvfIndex, SidecarMaintenance}
@@ -22,7 +23,7 @@ class IvfIndexSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft-ivfidx").toString
+    val root = SparkTestSession.tmp("ivfidx").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
@@ -108,22 +109,7 @@ class IvfIndexSpec extends AnyFunSuite {
       // differing input-records term is the cells scan itself
       val queries = spark.read.parquet(path).where(col("vec_id") < 2)
         .localCheckpoint(true)
-      def inputRecords(f: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue
-            .flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        acc.get
-      }
+      def inputRecords(f: => Unit): Long = Meter.during(spark)(f)._2.inputRecords
       val narrow = inputRecords {
         IvfIndex.topK(spark, path, queries, k = 3, nProbe = 1).count() }
       val full = inputRecords {
@@ -500,27 +486,12 @@ class IvfIndexSpec extends AnyFunSuite {
         corpus.where(col("vec_id") < 4).collect(): _*), corpus.schema)
       // the first probe of a directory pays its schema and centroid reads
       IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2).collect()
-      val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.add(Option(j.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse(j.stageInfos.map(_.name).mkString(";")))
-      }
-      def jobsNow(): List[String] = {
-        org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-        scala.jdk.CollectionConverters.IteratorHasAsScala(jobs.iterator).asScala.toList
-      }
-      spark.sparkContext.addSparkListener(l)
-      val (planning, all, got) = try {
-        val df = IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2)
-        val planning = jobsNow()
-        val got = ranks(df)
-        (planning, jobsNow(), got)
-      } finally spark.sparkContext.removeSparkListener(l)
-      assert(planning.isEmpty,
-        s"building the probe must submit no job (listing, probe ranking): $planning")
+      val (df, planning) =
+        Meter.during(spark)(IvfIndex.topK(spark, path, queries, k = 5, nProbe = 2))
+      val (got, execution) = Meter.during(spark)(ranks(df))
+      val all = planning.labels ++ execution.labels
+      assert(planning.jobs.isEmpty,
+        s"building the probe must submit no job (listing, probe ranking): ${planning.labels}")
       assert(!all.exists(_.contains("Listing leaf files")), all.mkString("\n"))
       // the exhaustive probe still equals brute force over the grown corpus
       assert(ranks(IvfIndex.topK(spark, path, queries, k = 5, nProbe = 4)) ===

@@ -23,7 +23,7 @@ class JoinElimSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-je-$tag").toString
+    SparkTestSession.tmp(s"je-$tag").toString
 
   /** facts(fk, m) — fk 99 has no dimension row; dim(pk, label). */
   private def fixture(tag: String): (DataFrame, String) = {

@@ -1,7 +1,6 @@
 package graft
 
 import graft.core.LakeLogger
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -26,7 +25,7 @@ class LakeLoggerSpec extends AnyFunSuite {
   }
 
   test("flush persists each message exactly once, one file per batch") {
-    val dir = Files.createTempDirectory("graft-log").toString + "/logs"
+    val dir = SparkTestSession.tmp("log").toString + "/logs"
     val log = new LakeLogger(spark.sparkContext.hadoopConfiguration, dir, "job1")
     log.info("first")
     log.warn("second")
@@ -47,7 +46,7 @@ class LakeLoggerSpec extends AnyFunSuite {
   }
 
   test("empty flush writes nothing; close is an idempotent flush") {
-    val dir = Files.createTempDirectory("graft-log2").toString + "/logs"
+    val dir = SparkTestSession.tmp("log2").toString + "/logs"
     val log = new LakeLogger(spark.sparkContext.hadoopConfiguration, dir, "job2")
     log.flush()
     log.close()

@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.Meter
 import graft.sinks.{IvfIndex, LakeMemo, MergeUpsert, ParquetMemo, SidecarMaintenance}
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
@@ -17,7 +17,7 @@ class LakeMemoSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmp(name: String) = Files.createTempDirectory(s"graft-$name").toString + "/t"
+  private def tmp(name: String) = SparkTestSession.tmp(name).toString + "/t"
 
   private def fsOf(path: String) = new Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -26,17 +26,7 @@ class LakeMemoSpec extends AnyFunSuite {
     fsOf(dir).listStatus(new Path(dir)).toSeq.map(_.getPath)
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(); ()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
+  private def jobsDuring(body: => Unit): Int = Meter.during(spark)(body)._2.jobs.size
 
   /** Replace the one-file parquet table at `dir` by `df`: under new
     * file names, or (`sameNames`) as the same file, name and mtime
@@ -185,7 +175,7 @@ class LakeMemoSpec extends AnyFunSuite {
   }
 
   test("in a cleared memo the probe-path reads run no inference job; a metaRows miss runs one") {
-    val root = Files.createTempDirectory("graft-lakememo-jobs").toString
+    val root = SparkTestSession.tmp("lakememo-jobs").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, "/root/testdata/sf0.001", "embeddings")
       .where(col("vec_id") < 200).repartition(3).write.parquet(path)

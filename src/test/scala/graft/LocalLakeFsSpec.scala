@@ -34,7 +34,7 @@ class LocalLakeFsSpec extends AnyFunSuite {
   }
 
   private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft-llfs-$tag").toString
+    SparkTestSession.tmp(s"llfs-$tag").toString
 
   /** Every mode bit (setuid, setgid and sticky included) of each
     * entry below `dir`, by relative name. */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.ext.SimilaritySearch
 import graft.sinks.LshIndex
 import org.apache.spark.sql.DataFrame
@@ -17,7 +18,7 @@ class LshIndexSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft-lshidx").toString
+    val root = SparkTestSession.tmp("lshidx").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
@@ -89,22 +90,7 @@ class LshIndexSpec extends AnyFunSuite {
       LshIndex.collect(spark, path, planes = 4)
       val queries = spark.read.parquet(path).where(col("vec_id") < 2)
         .localCheckpoint(true)
-      def inputRecords(f: => Unit): Long = {
-        val acc = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-            if (t.taskMetrics != null)
-              acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue
-            .flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        acc.get
-      }
+      def inputRecords(f: => Unit): Long = Meter.during(spark)(f)._2.inputRecords
       val home = inputRecords {
         LshIndex.topK(spark, path, queries, k = 3, probeRadius = 0).count() }
       val full = inputRecords {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.LakeStorage
+import graft.core.{LakeStorage, Meter}
 import graft.sinks.{MergeUpsert, ParquetAppend}
 import java.nio.file.Files
 import org.apache.spark.sql.functions.{col, input_file_name, lit, max, min}
@@ -57,7 +57,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("mergeInto(evolveSchema=true): the stored table widens across merges") {
-    val dir = Files.createTempDirectory("graft-evolve").toString
+    val dir = SparkTestSession.tmp("evolve").toString
     val trustedPath = s"$dir/trusted"
     MergeUpsert.mergeInto(spark, trustedPath,
       Seq(("a", 1), ("b", 2)).toDF("sk", "v"))
@@ -72,7 +72,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("snapshotAsOf: merge-granular time travel across the retention window") {
-    val dir = Files.createTempDirectory("graft-asof").toString
+    val dir = SparkTestSession.tmp("asof").toString
     val trustedPath = s"$dir/trusted"
     def state(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getAs[String]("sk"), r.getAs[Int]("v"))).toSet
@@ -101,7 +101,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("K2 mergeInto: bootstrap, upsert, swap leaves no staging debris") {
-    val dir = Files.createTempDirectory("graft-merge").toString
+    val dir = SparkTestSession.tmp("merge").toString
     val trustedPath = s"$dir/trusted"
     // bootstrap: no trusted yet → updates become the table
     MergeUpsert.mergeInto(spark, trustedPath, Seq(("a", 1), ("b", 2)).toDF("sk", "v"))
@@ -115,7 +115,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("swap recovery: a crash between the renames does not lose the table") {
-    val dir = Files.createTempDirectory("graft-crash").toString
+    val dir = SparkTestSession.tmp("crash").toString
     val trustedPath = s"$dir/trusted"
     MergeUpsert.mergeInto(spark, trustedPath, Seq(("a", 1), ("b", 2)).toDF("sk", "v"))
     // simulate a crash after `rename(target, prev)`: table gone,
@@ -130,7 +130,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("swap recovery: a committed staging dir is promoted, a half-written one discarded") {
-    val dir = Files.createTempDirectory("graft-crash2").toString
+    val dir = SparkTestSession.tmp("crash2").toString
     val trustedPath = s"$dir/trusted"
     MergeUpsert.mergeInto(spark, trustedPath, Seq(("a", 1)).toDF("sk", "v"))
     // crash after staging write + target moved aside, before promote
@@ -144,7 +144,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("partition delta recovery finishes a committed replacement whose originals are already deleted") {
-    val dir = Files.createTempDirectory("graft-pcrash").toString
+    val dir = SparkTestSession.tmp("pcrash").toString
     val trustedPath = s"$dir/trusted"
     val init = Seq(("a", 1, "p1"), ("b", 2, "p2")).toDF("sk", "v", "part")
     MergeUpsert.mergeIntoPartitioned(spark, trustedPath, init, partitionCol = "part")
@@ -172,7 +172,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("partitioned merge hive-escapes partition values") {
-    val dir = Files.createTempDirectory("graft-pesc").toString
+    val dir = SparkTestSession.tmp("pesc").toString
     val trustedPath = s"$dir/trusted"
     val init = Seq(("a", 1, "2024-01-01 00:00:00")).toDF("sk", "v", "part")
     MergeUpsert.mergeIntoPartitioned(spark, trustedPath, init, partitionCol = "part")
@@ -184,7 +184,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("partition-aware merge rewrites only affected partitions") {
-    val dir = Files.createTempDirectory("graft-pmerge").toString
+    val dir = SparkTestSession.tmp("pmerge").toString
     val trustedPath = s"$dir/trusted"
     val init = Seq(
       ("a", 1, "p1"), ("b", 2, "p1"),
@@ -211,7 +211,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("partitioned apply: deletes land, only touched partitions rewrite, emptied partition drops") {
-    val dir = Files.createTempDirectory("graft-papply").toString
+    val dir = SparkTestSession.tmp("papply").toString
     val trustedPath = s"$dir/trusted"
     val init = Seq(
       ("a", 1, "p1", "I", 1), ("b", 2, "p1", "I", 1),
@@ -253,7 +253,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("partitioned merge with zorderBy clusters within partitions, content identical") {
-    val dir = Files.createTempDirectory("graft-pzmerge").toString
+    val dir = SparkTestSession.tmp("pzmerge").toString
     val trustedPath = s"$dir/trusted"
     // two partitions, x/y grid payload inside each
     val init = spark.range(8000).selectExpr(
@@ -287,7 +287,7 @@ class MergeSpec extends AnyFunSuite {
   // timestamped snapshot; rollback undoes a bad merge; GC drops
   // snapshots past the window.
   test("retained merge keeps a rollback window; rollback undoes a bad merge") {
-    val dir = Files.createTempDirectory("graft-retain").toString
+    val dir = SparkTestSession.tmp("retain").toString
     val trustedPath = s"$dir/trusted"
     val fs = new org.apache.hadoop.fs.Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -310,7 +310,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("retention GC drops snapshots older than the window, keeps recent ones") {
-    val dir = Files.createTempDirectory("graft-retain-gc").toString
+    val dir = SparkTestSession.tmp("retain-gc").toString
     val trustedPath = s"$dir/trusted"
     val fs = new org.apache.hadoop.fs.Path(trustedPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -334,14 +334,14 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("K1 parquet append accumulates batches") {
-    val dir = Files.createTempDirectory("graft-append").toString + "/work"
+    val dir = SparkTestSession.tmp("append").toString + "/work"
     ParquetAppend.write(Seq(("a", 1)).toDF("sk", "v"), dir)
     ParquetAppend.write(Seq(("b", 2)).toDF("sk", "v"), dir)
     assert(spark.read.parquet(dir).count() == 2)
   }
 
   test("applyChangesInto: bootstrap, delete-aware apply, idempotent replay") {
-    val dir = Files.createTempDirectory("graft-apply").toString + "/trusted"
+    val dir = SparkTestSession.tmp("apply").toString + "/trusted"
     def table() = spark.read.parquet(dir).collect()
       .map(r => (r.getAs[String]("sk"), r.getAs[Int]("v"))).toSet
     // bootstrap from a log that already contains a delete
@@ -366,7 +366,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("applyChangesInto: a non-nullable nested payload field keeps the stored table's nulls") {
-    val dir = Files.createTempDirectory("graft-applynest").toString + "/t"
+    val dir = SparkTestSession.tmp("applynest").toString + "/t"
     def log(sk: String, seq: Int, a: org.apache.spark.sql.Column) =
       Seq((sk, seq, "I")).toDF("sk", "seq", "op")
         .withColumn("s", org.apache.spark.sql.functions.struct(a.as("a")))
@@ -421,20 +421,10 @@ class MergeSpec extends AnyFunSuite {
     * `body`: the file-scan tasks of the rewrite (tasks over the
     * in-memory update batch read no input rows and are left out). */
   private def writeStageReads(body: => Unit): Seq[Long] = {
-    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long, Long)]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (e.taskMetrics != null) tasks.add((e.stageId,
-          e.taskMetrics.inputMetrics.recordsRead, e.taskMetrics.outputMetrics.recordsWritten))
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    import scala.jdk.CollectionConverters._
-    val byStage = tasks.asScala.toSeq.groupBy(_._1)
-    val writes = byStage.filter(_._2.exists(_._3 > 0))
+    val writes = Meter.during(spark)(body)._2.tasks.groupBy(_.stage)
+      .filter(_._2.exists(_.outputRecords > 0))
     assert(writes.size == 1, s"one write stage expected, got ${writes.keys}")
-    writes.head._2.map(_._2).filter(_ > 0)
+    writes.head._2.map(_.inputRecords).filter(_ > 0)
   }
 
   /** The cap on a rewrite of one stored file of `len` bytes and
@@ -457,7 +447,7 @@ class MergeSpec extends AnyFunSuite {
   test("mergeInto over a one-file table leaves core-sized files; the next merge runs on every core") {
     val s = smallSplitSession()
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-msize").toString + "/t"
+    val dir = SparkTestSession.tmp("msize").toString + "/t"
     val n = 40000
     val file = oneFileTable(s, dir, n)
     assert(file.length / spark.sparkContext.defaultParallelism >=
@@ -483,7 +473,7 @@ class MergeSpec extends AnyFunSuite {
   test("applyChangesInto over a one-file table leaves core-sized files; the next apply runs on every core") {
     val s = smallSplitSession()
     import s.implicits._
-    val dir = Files.createTempDirectory("graft-asize").toString + "/t"
+    val dir = SparkTestSession.tmp("asize").toString + "/t"
     val n = 40000
     val file = oneFileTable(s, dir, n)
     val cap = capOf(s, file.length, n)
@@ -507,7 +497,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("mergeInto and applyChangesInto keep TRUSTED's column order across merges") {
-    val dir = Files.createTempDirectory("graft-morder").toString
+    val dir = SparkTestSession.tmp("morder").toString
     val (merged, applied) = (s"$dir/merged", s"$dir/applied")
     def batch(v: Int) = Seq(("k1", v, "a"), ("k2", v, "b")).toDF("k", "v", "sk")
     MergeUpsert.mergeInto(spark, merged, batch(1))
@@ -527,7 +517,7 @@ class MergeSpec extends AnyFunSuite {
   }
 
   test("mergeInto over a table below openCostInBytes keeps its stored rows in one file") {
-    val dir = Files.createTempDirectory("graft-msmall").toString + "/t"
+    val dir = SparkTestSession.tmp("msmall").toString + "/t"
     oneFileTable(spark, dir, 2000)
     MergeUpsert.mergeInto(spark, dir, Seq(("5", "u", 0L), ("new", "u", 0L)).toDF("sk", "v", "n"))
     val survivors = spark.read.parquet(dir).where(col("v") =!= "u")
@@ -539,7 +529,7 @@ class MergeSpec extends AnyFunSuite {
   // K3 (cloud_utils.py:172-247): recursive truncate + clearOrCreate
   test("K3 truncate and clearOrCreate") {
     val storage = LakeStorage(spark)
-    val dir = Files.createTempDirectory("graft-trunc").toString + "/ds"
+    val dir = SparkTestSession.tmp("trunc").toString + "/ds"
     ParquetAppend.write(Seq(("a", 1)).toDF("sk", "v"), dir)
     assert(storage.exists(dir))
     storage.truncate(dir)

@@ -28,7 +28,7 @@ class MergeZOrderSpec extends AnyFunSuite {
     df.collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
 
   test("mergeInto(zorderBy): content == plain merge; maintained table skips on y") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mzorder").toString
+    val root = SparkTestSession.tmp("mzorder").toString
     val trustedPath = s"$root/trusted"
     val all = grid(20000)
     val boot = all.where(col("id") % 2 === 0)
@@ -71,7 +71,7 @@ class MergeZOrderSpec extends AnyFunSuite {
   }
 
   test("zorderFiles=0 derives file count from session shuffle parallelism") {
-    val root = java.nio.file.Files.createTempDirectory("graft-mzorder0").toString
+    val root = SparkTestSession.tmp("mzorder0").toString
     val trustedPath = s"$root/trusted"
     MergeUpsert.mergeInto(spark, trustedPath, grid(2000), key = "id",
       zorderBy = Seq("x"))

@@ -24,7 +24,7 @@ class MvRewriteSpec extends AnyFunSuite with BeforeAndAfterEach {
   }
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-mv-$tag").toString
+    SparkTestSession.tmp(s"mv-$tag").toString
 
   /** Two group columns (one nullable), a decimal and a long sum
     * column (both nullable), an all-null sum group. */

@@ -90,7 +90,7 @@ class ObjectStoreAdapterSpec extends AnyFunSuite with BeforeAndAfterEach {
 
     // a bare local path never touches the adapter
     val before = store.calls.size
-    val tmp = java.nio.file.Files.createTempDirectory("graft-oslocal").toString
+    val tmp = SparkTestSession.tmp("oslocal").toString
     lake.clearOrCreate(s"$tmp/ds")
     assert(lake.exists(s"$tmp/ds"))
     assert(store.calls.size === before, "local path leaked into the adapter")
@@ -180,7 +180,7 @@ class ObjectStoreAdapterSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(BucketNames.build("lake_", "my_space", hyphenate = false) === "lake_my_space")
 
     // the Hadoop adapter realizes the same trait over a local root
-    val root = java.nio.file.Files.createTempDirectory("graft-osfs").toString
+    val root = SparkTestSession.tmp("osfs").toString
     val fsAdapter = new HadoopFsBucketAdapter(
       spark.sparkContext.hadoopConfiguration, root)
     assert(!fsAdapter.bucketExists("zone"))

@@ -509,7 +509,7 @@ class PlanQualitySpec extends AnyFunSuite {
   }
   test("mv rewrite: state-served plan is one exchange over the pruned state scan") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft-pq-mv").toString
+    val root = SparkTestSession.tmp("pq-mv").toString
     val base = graft.queries.Fixtures.tbl(spark, sf, "orders").select(
       col("o_orderkey"), col("o_orderstatus"),
       col("o_totalprice").cast("decimal(12,2)").as("v"))
@@ -544,8 +544,7 @@ class PlanQualitySpec extends AnyFunSuite {
     // delta-rows × nCells per refresh. Pin the narrow plan so a
     // refactor can't reintroduce it.
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-planq-ivf").toString
+    val root = SparkTestSession.tmp("planq-ivf").toString
     try {
       graft.queries.Fixtures.tbl(spark, sf, "embeddings").limit(50)
         .write.parquet(s"$root/vectors")
@@ -585,8 +584,7 @@ class PlanQualitySpec extends AnyFunSuite {
 
   test("join-view MV rewrite: the served plan has NO join and exactly one group-by exchange") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-pq-jmv").toString
+    val root = SparkTestSession.tmp("pq-jmv").toString
     try {
       val a = spark.range(100).select(col("id").as("k"),
         (col("id") % 7).cast("long").as("w"))

@@ -17,7 +17,7 @@ class PqIndexSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft-pqidx").toString
+    val root = SparkTestSession.tmp("pqidx").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)

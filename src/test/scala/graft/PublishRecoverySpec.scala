@@ -23,7 +23,7 @@ class PublishRecoverySpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def withTable(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft-pub").toString
+    val root = SparkTestSession.tmp("pub").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < 200).repartition(3)
@@ -136,7 +136,7 @@ class PublishRecoverySpec extends AnyFunSuite {
   }
 
   test("inverted index shares the dance: between-renames crash heals through refresh") {
-    val root = java.nio.file.Files.createTempDirectory("graft-pubinv").toString
+    val root = SparkTestSession.tmp("pubinv").toString
     val path = s"$root/docs"
     try {
       graft.queries.Fixtures.tbl(spark, sf, "documents")

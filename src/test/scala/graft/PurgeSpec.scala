@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.sinks.{BloomIndex, InvertedIndex, MergeUpsert, Purge}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -16,8 +17,7 @@ class PurgeSpec extends AnyFunSuite {
   /** 4 files × 25 rows, ids partition-aligned so each file holds one
     * id century. */
   private def freshTable(): String = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-purge").toString
+    val root = SparkTestSession.tmp("purge").toString
     val table = s"$root/t"
     (0 until 4).foreach { f =>
       (0L until 25L).map(i => (f * 100L + i, s"doc $f $i payload"))
@@ -138,17 +138,7 @@ class PurgeSpec extends AnyFunSuite {
     assert(alive.select("doc_id").as[Long].collect().toSeq == Seq(102L))
   }
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(); ()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
+  private def jobsDuring(body: => Unit): Int = Meter.during(spark)(body)._2.jobs.size
 
   test("purge infers the table schema from a footer on the driver: no schema job") {
     val table = freshTable()
@@ -161,7 +151,7 @@ class PurgeSpec extends AnyFunSuite {
   }
 
   test("purge heals a TRUSTED table parked mid-swap, then deletes the keyed rows") {
-    val root = java.nio.file.Files.createTempDirectory("graft-purge-parked").toString
+    val root = SparkTestSession.tmp("purge-parked").toString
     val table = s"$root/t"
     MergeUpsert.mergeInto(spark, table,
       (0L until 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text").repartition(2))
@@ -175,7 +165,7 @@ class PurgeSpec extends AnyFunSuite {
   }
 
   test("purge on a hive-partitioned table rewrites inside the partitions; a partitioned merge then replaces the survivors") {
-    val root = java.nio.file.Files.createTempDirectory("graft-purge-partitioned").toString
+    val root = SparkTestSession.tmp("purge-partitioned").toString
     val table = s"$root/t"
     def part(i: Long) = if (i < 6) "p1" else "p2"
     MergeUpsert.mergeIntoPartitioned(spark, table,

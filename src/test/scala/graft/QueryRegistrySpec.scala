@@ -143,7 +143,7 @@ class QueryRegistrySpec extends AnyFunSuite {
     assert(Fixtures.memoFixture(key)(_ => fail("memo rebuilt")) === built)
     val landing = Fixtures.landingFor(spark, sf, "customer", 2)
     assert(landing.startsWith(root + "/"), landing)
-    val dest = Files.createTempDirectory("graft-registry-corpus").toString + "/corpus"
+    val dest = SparkTestSession.tmp("registry-corpus").toString + "/corpus"
     val tag = s"registry-spec-${System.nanoTime()}"
     try {
       Fixtures.stagedCorpus(spark, sf, tag, dest) { p =>

@@ -3,7 +3,6 @@ package graft
 import graft.app.ResyncJob
 import graft.core.{Clock, DatasetRef, LakePaths}
 import graft.sources.{JdbcSource, MongoLikeSource}
-import java.nio.file.Files
 import java.sql.DriverManager
 import java.time.LocalDate
 import org.apache.spark.sql.SparkSession
@@ -20,7 +19,7 @@ class ResyncE2ESpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
   private def freshLake() =
-    LakePaths(Files.createTempDirectory("graft-lake").toString)
+    LakePaths(SparkTestSession.tmp("lake").toString)
   private val ref = DatasetRef("test", "tpch", "orders")
 
   private def sourceRows: Long =

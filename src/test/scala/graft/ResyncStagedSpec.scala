@@ -1,7 +1,7 @@
 package graft
 
 import graft.app.ResyncJob
-import graft.core.{Clock, DatasetRef, LakePaths}
+import graft.core.{Clock, DatasetRef, LakePaths, Meter}
 import graft.sources.JdbcSource
 import java.sql.DriverManager
 import java.time.LocalDate
@@ -21,7 +21,7 @@ class ResyncStagedSpec extends AnyFunSuite {
 
   private def withRoot[T](f: (String, String) => T): T = {
     conf.set("fs.faultfs.impl", classOf[FaultFs].getName)
-    val local = java.nio.file.Files.createTempDirectory("graft-resyncstaged").toString
+    val local = SparkTestSession.tmp("resyncstaged").toString
     try f(local, s"faultfs://$local")
     finally FileUtil.fullyDelete(new java.io.File(local))
   }
@@ -89,25 +89,16 @@ class ResyncStagedSpec extends AnyFunSuite {
     }
     conn.close()
 
-    val lake = LakePaths(java.nio.file.Files.createTempDirectory("graft-stagedjobs").toString)
-    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        labels.add(String.valueOf(Option(e.properties).map(_.getProperty("spark.job.description")).orNull)); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
+    val lake = LakePaths(SparkTestSession.tmp("stagedjobs").toString)
+    val (_, r) = Meter.during(spark) {
       ResyncJob.runDate(spark,
         ResyncJob.JdbcRanged(
           JdbcSource(url, "", "", Some("org.apache.derby.iapi.jdbc.AutoloadedDriver")), "jobs_t"),
         pc = "d", ref = ref, lake = lake,
         cliEnd = Some(start.plusDays(60)), estimatedRows = 600) // starts at the source's min(d)
-      org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-
-    import scala.jdk.CollectionConverters._
-    val (chunks, others) = labels.asScala.toList.partition(_.startsWith("resync db.staged_t: chunk ["))
+    }
+    val labels = r.labels
+    val (chunks, others) = labels.partition(_.startsWith("resync db.staged_t: chunk ["))
     // 60 days at P1 width 15: four full chunks and the P6 end sliver
     assert(chunks.size == 5, labels)
     assert(chunks.distinct.size == 5, "one job per chunk")

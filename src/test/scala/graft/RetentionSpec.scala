@@ -16,8 +16,7 @@ class RetentionSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration)
 
   private def fixture(tag: String, withNull: Boolean = false): String = {
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft-ret-$tag").toString
+    val root = SparkTestSession.tmp(s"ret-$tag").toString
     val rows = Seq(
       ("2024-01", 1L), ("2024-01", 2L),
       ("2024-02", 3L), ("2024-03", 4L), ("2024-04", 5L)) ++

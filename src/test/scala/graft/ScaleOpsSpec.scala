@@ -6,7 +6,6 @@ import graft.operators.Skew
 import graft.sinks.ParquetAppend
 import graft.sources.JdbcSource
 import java.net.InetSocketAddress
-import java.nio.file.Files
 import java.sql.DriverManager
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -50,7 +49,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     conn.close()
 
     val lake = graft.core.LakePaths(
-      Files.createTempDirectory("graft-pardate").toString)
+      SparkTestSession.tmp("pardate").toString)
     val ref = graft.core.DatasetRef("test", "db", "pard_t")
     // estimatedRows < 100k with a 60-day span → P1 width 15 → 4 chunks
     graft.app.ResyncJob.runDate(
@@ -94,7 +93,7 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("partitioned WORK layout prunes on the partition column") {
-    val dir = Files.createTempDirectory("graft-partwork").toString + "/work"
+    val dir = SparkTestSession.tmp("partwork").toString + "/work"
     val df = spark.range(100).select(
       col("id"), (col("id") % 4).cast("string").as("ingest_bucket"))
     ParquetAppend.writePartitioned(df, dir, Seq("ingest_bucket"))

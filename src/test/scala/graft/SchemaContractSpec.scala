@@ -1,7 +1,7 @@
 package graft
 
+import graft.core.Meter
 import graft.sinks.{AggStateSink, MergeUpsert, ParquetMemo}
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.struct
 import org.apache.spark.sql.graftglue.ListedParquet
@@ -17,19 +17,9 @@ class SchemaContractSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def tmp(name: String) = Files.createTempDirectory(s"graft-$name").toString + "/t"
+  private def tmp(name: String) = SparkTestSession.tmp(name).toString + "/t"
 
-  private def jobsDuring(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        n.incrementAndGet(); ()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    n.get
-  }
+  private def jobsDuring(body: => Unit): Int = Meter.during(spark)(body)._2.jobs.size
 
   /** A parquet file written without Spark's schema metadata: a
     * TIMESTAMP(NANOS) column (read as a long under the session's

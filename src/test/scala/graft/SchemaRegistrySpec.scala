@@ -17,7 +17,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
       StructField("b", ArrayType(IntegerType)))))))
 
   test("tier 1: JSON file registry parses StructType.fromJson files") {
-    val dir = Files.createTempDirectory("graft-schemas")
+    val dir = SparkTestSession.tmp("schemas")
     Files.writeString(dir.resolve("ns_ds.json"), schema.json)
     val reg = JsonFileRegistry(dir.toString)
     assert(reg.resolve("ns", "ds").contains(schema))
@@ -25,7 +25,7 @@ class SchemaRegistrySpec extends AnyFunSuite {
   }
 
   test("tier 2: existing-table registry round-trips the trusted schema through JSON") {
-    val dir = Files.createTempDirectory("graft-trusted").toString
+    val dir = SparkTestSession.tmp("trusted").toString
     Seq((1L, "x")).toDF("id", "v").write.parquet(s"$dir/ns/ds")
     val reg = ExistingTableRegistry(spark, (n, d) => s"$dir/$n/$d")
     val got = reg.resolve("ns", "ds")
@@ -35,9 +35,9 @@ class SchemaRegistrySpec extends AnyFunSuite {
   }
 
   test("chain resolves in registry-first order; empty chain means infer") {
-    val dir = Files.createTempDirectory("graft-schemas2")
+    val dir = SparkTestSession.tmp("schemas2")
     Files.writeString(dir.resolve("ns_ds.json"), schema.json)
-    val tableDir = Files.createTempDirectory("graft-trusted2").toString
+    val tableDir = SparkTestSession.tmp("trusted2").toString
     Seq((1L, "x")).toDF("other", "cols").write.parquet(s"$tableDir/ns/ds")
     val chain = ChainedRegistry(
       JsonFileRegistry(dir.toString),

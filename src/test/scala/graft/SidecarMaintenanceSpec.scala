@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.sinks.{IvfIndex, LshIndex, PqIndex, SidecarMaintenance}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -21,7 +22,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def withTable(n: Int = 200)(f: String => Unit): Unit = {
-    val root = java.nio.file.Files.createTempDirectory("graft-maint").toString
+    val root = SparkTestSession.tmp("maint").toString
     val path = s"$root/vectors"
     graft.queries.Fixtures.tbl(spark, sf, "embeddings")
       .where(col("vec_id") < n).repartition(3)
@@ -129,7 +130,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
 
   test("inverted-index refresh (postings + retrieval stats) appends without rewriting pre-existing sidecar files") {
     import graft.sinks.InvertedIndex
-    val root = java.nio.file.Files.createTempDirectory("graft-maint-inv").toString
+    val root = SparkTestSession.tmp("maint-inv").toString
     val table = s"$root/docs"
     try {
       Seq((1L, "alpha beta gamma"), (2L, "beta gamma delta"))
@@ -360,21 +361,7 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
 
   // ── coverage cache: O(delta) refresh PLANNING ───────────────────
 
-  private def recordsRead(f: => Unit): Long = {
-    val acc = new java.util.concurrent.atomic.AtomicLong
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null)
-          acc.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      f
-      org.apache.spark.graftglue.SparkGlue.flushListeners(spark.sparkContext)
-    } finally spark.sparkContext.removeSparkListener(l)
-    acc.get
-  }
+  private def recordsRead(f: => Unit): Long = Meter.during(spark)(f)._2.inputRecords
 
   test("refresh plans from the coverage cache: the first plan heals it, every later no-op reads ZERO") {
     withTable() { path =>

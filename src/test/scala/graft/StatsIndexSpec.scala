@@ -16,7 +16,7 @@ class StatsIndexSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-statsidx").toString
+    SparkTestSession.tmp("statsidx").toString
 
   /** 10 files, each holding one contiguous band of k: file i covers
     * [i*100, i*100+99] — tight ranges so a band predicate prunes. */

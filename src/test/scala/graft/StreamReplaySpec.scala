@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.Meter
 import graft.sinks.{IvfIndex, SidecarMaintenance}
 import graft.streaming.StreamingOps
 import org.apache.hadoop.fs.Path
@@ -26,8 +27,7 @@ class StreamReplaySpec extends AnyFunSuite {
     df.as[(Long, Long, Long)].collect().toSet
 
   test("idempotentBatchAppend: re-delivering a batch republishes the SAME files, no duplicates") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-idemp-append").toString
+    val root = SparkTestSession.tmp("idemp-append").toString
     val corpus = s"$root/corpus"
     try {
       val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
@@ -75,8 +75,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("pre-namespace checkpoint migration: the owning stream sweeps legacy names on replay; a fresh stream never does") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-legacy-mig").toString
+    val root = SparkTestSession.tmp("legacy-mig").toString
     val corpus = s"$root/corpus"
     val oldCkpt = s"$root/oldckpt"
     val freshCkpt = s"$root/freshckpt"
@@ -127,28 +126,13 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("file-backed batches publish in ONE executor pass: nParts from input-file bytes, no count() job") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-onepass").toString
+    val root = SparkTestSession.tmp("onepass").toString
     val corpus = s"$root/corpus"
     val landing = s"$root/landing"
     try {
       graft.queries.Fixtures.tbl(spark, sf, "embeddings")
         .where(col("vec_id") < 60).coalesce(1).write.parquet(landing)
-      def jobsDuring(f: => Unit): Long = {
-        val n = new java.util.concurrent.atomic.AtomicLong
-        val l = new org.apache.spark.scheduler.SparkListener {
-          override def onJobStart(
-              j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-            n.incrementAndGet()
-        }
-        spark.sparkContext.addSparkListener(l)
-        try {
-          f
-          org.apache.spark.graftglue.SparkGlue
-            .flushListeners(spark.sparkContext)
-        } finally spark.sparkContext.removeSparkListener(l)
-        n.get
-      }
+      def jobsDuring(f: => Unit): Int = Meter.during(spark)(f)._2.jobs.size
       // the r15 form paid a count() job ON TOP of the shuffle+write;
       // with byte-derived nParts the publish runs exactly the jobs
       // the bare write costs (the pin is NO EXTRA PASS, not an
@@ -189,8 +173,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("a pre-namespace checkpoint that STARTED but never committed a batch still owns its legacy files") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-legacy-offsets").toString
+    val root = SparkTestSession.tmp("legacy-offsets").toString
     try {
       // the crash shape the commits-only detection missed: a
       // pre-namespace run published batch 0's un-namespaced corpus
@@ -219,8 +202,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("config-changed replay re-indexes republished names: the index must not serve the stale binding") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-replaced-reindex").toString
+    val root = SparkTestSession.tmp("replaced-reindex").toString
     val corpus = s"$root/corpus"
     try {
       // the ADVICE r15 scenario: delivery 1 lands 3 parts and the
@@ -269,8 +251,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("replay whose PRIOR attempt crashed between publish and refresh: prefixes vanish what the sweep can no longer see") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-amnesia").toString
+    val root = SparkTestSession.tmp("amnesia").toString
     val corpus = s"$root/corpus"
     try {
       // delivery 1: 3 parts, indexed
@@ -315,8 +296,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("replay whose PRIOR attempt crashed between sweep and publish: prefixes re-index the republished name the sweep reported nothing for") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-amnesia2").toString
+    val root = SparkTestSession.tmp("amnesia2").toString
     val corpus = s"$root/corpus"
     try {
       val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
@@ -354,8 +334,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("config-changed replay propagates to the retrieval-stats sidecars: BM25 keeps every moved-in doc") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-replaced-stats").toString
+    val root = SparkTestSession.tmp("replaced-stats").toString
     val corpus = s"$root/corpus"
     try {
       import graft.sinks.InvertedIndex
@@ -388,8 +367,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("replayed delivery with FEWER parts (config changed) still sweeps the larger prior delivery") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-resweep").toString
+    val root = SparkTestSession.tmp("resweep").toString
     val corpus = s"$root/corpus"
     try {
       val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
@@ -415,8 +393,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("appended-only refresh plans without LISTING the corpus; result equals the full-diff form") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-append-only").toString
+    val root = SparkTestSession.tmp("append-only").toString
     val corpus = s"$root/corpus"
     try {
       val batch = graft.queries.Fixtures.tbl(spark, sf, "embeddings")
@@ -454,8 +431,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("IVF stream: replaying the last committed batch after a 'crash' keeps the stream green") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-replay-ivf").toString
+    val root = SparkTestSession.tmp("replay-ivf").toString
     try {
       val landing = s"$root/landing"
       val corpus = s"$root/vectors"
@@ -501,8 +477,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("inverted-index stream: replaying the last committed batch keeps search exact, no duplicate docs") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-replay-inv").toString
+    val root = SparkTestSession.tmp("replay-inv").toString
     try {
       val landing = s"$root/landing"
       val corpus = s"$root/corpus"
@@ -539,8 +514,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("streaming compaction cadence repacks the sidecar without changing answers") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-stream-compact-ann").toString
+    val root = SparkTestSession.tmp("stream-compact-ann").toString
     try {
       val landing = s"$root/landing"
       val corpus = s"$root/vectors"
@@ -566,8 +540,7 @@ class StreamReplaySpec extends AnyFunSuite {
   // ── run-id namespacing: a fresh checkpoint must not clobber ─────
 
   test("ingestRunId: stable across the checkpoint's lifetime, fresh after a checkpoint reset") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-runid").toString
+    val root = SparkTestSession.tmp("runid").toString
     try {
       val ckpt = s"$root/ckpt"
       val id1 = StreamingOps.ingestRunId(spark, ckpt)
@@ -584,8 +557,7 @@ class StreamReplaySpec extends AnyFunSuite {
   }
 
   test("a NEW stream's batch 0 must not delete a previous run's batch-0 corpus files") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-runid-clobber").toString
+    val root = SparkTestSession.tmp("runid-clobber").toString
     val corpus = s"$root/corpus"
     try {
       // run A lands its batch 0

@@ -53,7 +53,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("workStream discovers WORK files incrementally and feeds streaming promote") {
-    val workDir = java.nio.file.Files.createTempDirectory("graft-workstream").toString + "/work"
+    val workDir = SparkTestSession.tmp("workstream").toString + "/work"
     val batch1 = Seq(ev(1, "2024-01-01 00:01:00", 1, "click", 1.0),
       ev(2, "2024-01-01 00:02:00", 1, "view", 2.0)).toDF()
     graft.sinks.ParquetAppend.write(batch1, workDir)
@@ -94,8 +94,7 @@ class StreamingSpec extends AnyFunSuite {
     import graft.core.{Clock, DatasetRef, LakePaths}
     import graft.operators.IncrementalPromote
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamflow").toString
+    val root = SparkTestSession.tmp("streamflow").toString
     val lake = LakePaths(s"$root/lake")
     val ref = DatasetRef("spec", "stream", "events")
     val landing = s"$root/landing"
@@ -135,8 +134,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming CDC apply: restart resumes mid-log, final table == batch apply truth") {
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamcdc").toString
+    val root = SparkTestSession.tmp("streamcdc").toString
     val landing = s"$root/changes"
     val trusted = s"$root/trusted"
     val ckpt = s"$root/ckpt"
@@ -183,8 +181,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming IVM: replayed batch skipped (transactional guard), restart resumes") {
     import graft.sinks.AggStateSink
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamivm").toString
+    val root = SparkTestSession.tmp("streamivm").toString
     def d(rows: (Int, String, Option[Int])*) =
       rows.toDF("__sign", "g", "v")
     def state(path: String): Map[String, (Long, Long, Option[String])] =
@@ -240,8 +237,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC apply with piggybacked IVM: state tracks the table across restart") {
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamcdcivm").toString
+    val root = SparkTestSession.tmp("streamcdcivm").toString
     val landing = s"$root/changes"
     val trusted = s"$root/trusted"
     val statePath = s"$root/state"
@@ -294,8 +290,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC apply with piggybacked JOIN-view IVM: state == recompute over table ⟕ dim across restart") {
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamjoinivm").toString
+    val root = SparkTestSession.tmp("streamjoinivm").toString
     val landing = s"$root/changes"
     val trusted = s"$root/trusted"
     val dimPath = s"$root/dim"
@@ -356,8 +351,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("CDC apply with piggybacked EXTREMA: state tracks the table across restart") {
     import graft.streaming.StreamingOps
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-streamcdcext").toString
+    val root = SparkTestSession.tmp("streamcdcext").toString
     val landing = s"$root/changes"
     val trusted = s"$root/trusted"
     val statePath = s"$root/state"
@@ -413,7 +407,7 @@ class StreamingSpec extends AnyFunSuite {
     // batch cut (delta <= gap) disagree unless the streaming gap is
     // widened by 1 µs. Batch truth: 10:00/11:00/12:00 are ONE session
     // (each delta == gap, not > gap); 14:00 starts a second.
-    val dir = java.nio.file.Files.createTempDirectory("graft-sessboundary")
+    val dir = SparkTestSession.tmp("sessboundary")
     // the harness glob-filters on the fixture FILE name — write a
     // single-file parquet like the testdata fixtures, not a directory
     val stage = s"$dir/stage"
@@ -492,8 +486,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamValidateRoute: routes per rules, restarts append-only, replays idempotently") {
     import graft.ext.Expectations._
     import org.apache.spark.sql.functions.lit
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-route").toString
+    val root = SparkTestSession.tmp("route").toString
     val landing = s"$root/landing"
     val rows1 = Seq(
       (Some(1L), 10.0, "O"), (Some(2L), -5.0, "O"),   // -5 → range
@@ -541,8 +534,7 @@ class StreamingSpec extends AnyFunSuite {
   test("streamValidateRoute: all-clean stream leaves a readable empty quarantine") {
     import graft.ext.Expectations._
     import org.apache.spark.sql.functions.lit
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-route-clean").toString
+    val root = SparkTestSession.tmp("route-clean").toString
     val landing = s"$root/landing"
     Seq((1L, 1.0), (2L, 2.0)).toDF("fk", "amt")
       .coalesce(1).write.parquet(landing)

@@ -18,7 +18,7 @@ class TxnCommitSpec extends AnyFunSuite {
     spark.sparkContext.hadoopConfiguration)
 
   private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft-txn-$tag").toString
+    SparkTestSession.tmp(s"txn-$tag").toString
 
   private def v(version: Int, tag: String): DataFrame =
     Seq((version, tag)).toDF("version", "tag")

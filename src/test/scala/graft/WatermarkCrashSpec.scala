@@ -25,7 +25,7 @@ class WatermarkCrashSpec extends AnyFunSuite {
   }
 
   private def withLake[T](f: (String, LakePaths) => T): T = {
-    val local = java.nio.file.Files.createTempDirectory("graft-wmcrash").toString
+    val local = SparkTestSession.tmp("wmcrash").toString
     fs // registers the faultfs scheme
     try f(local, LakePaths(s"faultfs://$local"))
     finally FileUtil.fullyDelete(new java.io.File(local))

@@ -17,7 +17,7 @@ class ZOrderSpec extends AnyFunSuite {
       col("id"))
 
   private def fileSpans(df: DataFrame, c: String): Seq[Long] = {
-    val root = java.nio.file.Files.createTempDirectory("graft-zspan").toString
+    val root = SparkTestSession.tmp("zspan").toString
     df.write.parquet(s"$root/t")
     val spans = spark.read.parquet(s"$root/t")
       .groupBy(input_file_name())
@@ -85,7 +85,7 @@ class ZOrderSpec extends AnyFunSuite {
     // node's row-count metric counts rows actually decoded after
     // footer-stats pruning — files whose y-range misses the
     // predicate contribute zero.
-    val root = java.nio.file.Files.createTempDirectory("graft-zskip").toString
+    val root = SparkTestSession.tmp("zskip").toString
     ZOrder.cluster(grid(20000), Seq("x", "y"), numFiles = 16)
       .write.parquet(s"$root/z")
     grid(20000).repartition(16).write.parquet(s"$root/r")
@@ -105,7 +105,7 @@ class ZOrderSpec extends AnyFunSuite {
   }
 
   test("compactWork with zorderBy keeps rows, hits the file target, and clusters") {
-    val root = java.nio.file.Files.createTempDirectory("graft-zcompact").toString
+    val root = SparkTestSession.tmp("zcompact").toString
     val work = s"$root/work"
     grid(20000).repartition(32).write.parquet(work)
     val bytes = new org.apache.hadoop.fs.Path(work)

@@ -44,7 +44,7 @@ class ZstdCorpusSpec extends AnyFunSuite {
   }
 
   test("dict round-trip is exact for every document, nulls pass through") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zstd").toString
+    val dir = SparkTestSession.tmp("zstd").toString
     val withNull = docs.withColumn("text",
       when(col("doc_id") % 97 === 0, lit(null)).otherwise(col("text")))
     ZstdCorpus.writeCompressed(spark, withNull, s"$dir/z")
@@ -58,7 +58,7 @@ class ZstdCorpusSpec extends AnyFunSuite {
   }
 
   test("dictionary economics: wins the small-file (streaming-delta) regime, dict-less ablation, honest big-file loss") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zstd-sz").toString
+    val dir = SparkTestSession.tmp("zstd-sz").toString
     val sidecarBytes = 64 << 10 // fixed, amortized O(1) over a corpus
     def dataBytes(d: String): Long = dirBytes(d) - (
       if (new org.apache.hadoop.fs.Path(s"$d/_zdict").getFileSystem(
@@ -123,7 +123,7 @@ class ZstdCorpusSpec extends AnyFunSuite {
 
   test("compactCorpusTier: merges under the boundary, graduates over it, idempotent after") {
     import graft.sinks.Compaction
-    val dir = java.nio.file.Files.createTempDirectory("graft-ztier").toString
+    val dir = SparkTestSession.tmp("ztier").toString
     val zone = s"$dir/z"
     ZstdCorpus.writeCompressed(spark, docs.repartition(6), zone)
     val fs = new org.apache.hadoop.fs.Path(zone)
@@ -159,7 +159,7 @@ class ZstdCorpusSpec extends AnyFunSuite {
   }
 
   test("delta appends compress against the SAME frozen dictionary and stay readable") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zstd-delta").toString
+    val dir = SparkTestSession.tmp("zstd-delta").toString
     val first = docs.where(col("doc_id") % 5 =!= 0)
     val delta = docs.where(col("doc_id") % 5 === 0)
     val d = ZstdCorpus.writeCompressed(spark, first, s"$dir/z")
@@ -177,7 +177,7 @@ class ZstdCorpusSpec extends AnyFunSuite {
   }
 
   test("column pruning drops the decompression with the text column") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zstd-prune").toString
+    val dir = SparkTestSession.tmp("zstd-prune").toString
     ZstdCorpus.writeCompressed(spark, docs, s"$dir/z")
     val noText = ZstdCorpus.readCompressed(spark, s"$dir/z").select("doc_id", "lang")
     val plan = noText.queryExecution.executedPlan.toString

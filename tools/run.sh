@@ -1,7 +1,7 @@
 #!/bin/bash
 # Direct-JVM runner for graft main classes (dev tool; the driver still
 # uses `sbt "runMain ..."`). Usage: tools/run.sh graft.Profile
-# <jobs|stream|time|plan> <query…>
+# <jobs|stream|time|plan> <query…> | probes <outDir> <suffix>
 # Mirrors build.sbt's forked-run JVM flags.
 cd "$(dirname "$0")/.." || exit 1
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
