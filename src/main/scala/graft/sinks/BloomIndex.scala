@@ -2,7 +2,7 @@ package graft.sinks
 
 import graft.functions.BloomSketch
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted per-file bloom index for a lake table column — the
@@ -79,48 +79,25 @@ object BloomIndex {
       expectedItems: Long,
       fpp: Double = 0.01): Unit = {
     val (m, k) = BloomSketch.sized(expectedItems, fpp)
-    val files = dataFilePaths(spark, table)
-    require(files.nonEmpty, s"no data files under $table")
-    bloomsOf(spark, table, files, column, m, k)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
+    SidecarMaintenance.rebuildPerFile(spark, table, indexPath(table), refresh = false)(
+      (files, _) => bloomsOf(spark, table, files, column, m, k))
   }
 
   /** Incremental maintenance: new files gain per-file blooms at the
     * EXISTING geometry (read off a stored row, so collect-time sizing
     * is sticky), vanished files' rows drop, old rows carry verbatim.
     * The new index publishes through the same recoverable swap as the
-    * ANN sidecars ([[SidecarMaintenance.publishDir]]), healed on
+    * ANN sidecars ([[SidecarMaintenance.rebuildPerFile]]), healed on
     * entry. */
   def refresh(spark: SparkSession, table: String, column: String): Unit = {
     val idx = indexPath(table)
-    val fs = new Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, idx)
-    require(fs.exists(new Path(idx)),
-      s"no bloom index at $idx — bootstrap with collect() (sizing lives there)")
-    val current = dataFilePaths(spark, table).toSet
-    val existing = spark.read.parquet(idx).localCheckpoint(true)
-    val indexed = existing.select("file").collect().map(_.getString(0)).toSet
-    val fresh = (current -- indexed).toSeq.sorted
-    // anti-join on the (small) vanished set — never a
-    // file-count-sized IN expression
-    val kept = {
-      import spark.implicits._
-      existing.join(
-        broadcast((indexed -- current).toSeq.toDF("file")),
-        Seq("file"), "left_anti")
-    }
-    val merged =
-      if (fresh.isEmpty) kept
-      else {
-        val sample = existing.select("bloom").head().getAs[Array[Byte]](0)
+    SidecarMaintenance.rebuildPerFile(spark, table, idx, refresh = true,
+      missing = Some(s"no bloom index at $idx — bootstrap with collect() (sizing lives there)")) {
+      (files, existing) =>
+        val sample = existing.get.select("bloom").head().getAs[Array[Byte]](0)
         val (k, words) = BloomSketch.fromBytes(sample)
-        kept.unionByName(
-          bloomsOf(spark, table, fresh, column, words.length * 64, k))
-      }
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$idx.next")
-    SidecarMaintenance.publishDir(spark, idx)
+        bloomsOf(spark, table, files, column, words.length * 64, k)
+    }
   }
 
   /** The table bloom: bit-OR of every file bloom — bit-identical to

@@ -63,10 +63,21 @@ object InvertedIndex {
       .agg(sort_array(collect_list(col("pos"))).as("positions"))
       .select(col("file"), col("col").as("token"), col("id"), col("positions"))
 
-  private def writeClustered(postings: DataFrame, dest: String, buckets: Int): Unit =
-    postings.repartitionByRange(buckets, col("token"), col("id"))
+  /** Range-cluster postings on (token, id) into `buckets` files. */
+  private def clustered(postings: DataFrame, buckets: Int): DataFrame =
+    postings.select("file", "token", "id", "positions")
+      .repartitionByRange(buckets, col("token"), col("id"))
       .sortWithinPartitions("token", "id")
-      .write.mode(SaveMode.Overwrite).parquet(dest)
+
+  /** The family's layout contract, stated once: a document's rows
+    * live in ONE data file. Fails naming up to five offending `ids`. */
+  private def requireOneFile(ids: Array[org.apache.spark.sql.Row]): Unit =
+    require(ids.isEmpty,
+      s"documents present in MORE THAN ONE data file: ids " +
+        s"${ids.map(_.get(0)).mkString(", ")}${if (ids.length == 5) ", …" else ""} — " +
+        "the index family's df/dl statistics assume one file per document " +
+        "(append new ids, purge-rewrite whole files); compact the table so " +
+        "each document's rows live in a single file, then rebuild")
 
   /** The index family's layout assumption, ENFORCED at build time: a
     * document's rows live in ONE data file (appends add new ids,
@@ -76,20 +87,13 @@ object InvertedIndex {
     * check is an index-sized two-column aggregate over the just-
     * written postings (never the corpus); violations fail LOUDLY
     * before the index becomes (or replaces) the live one. */
-  private def requireOneFilePerDoc(spark: SparkSession, idxDir: String): Unit = {
-    val offenders = spark.read.parquet(idxDir)
+  private def requireOneFilePerDoc(spark: SparkSession, idxDir: String): Unit =
+    requireOneFile(spark.read.parquet(idxDir)
       .groupBy("id").agg(count_distinct(col("file")).as("__nf"))
-      .where(col("__nf") > 1).limit(5).collect()
-    require(offenders.isEmpty,
-      s"documents present in MORE THAN ONE data file: ids " +
-        s"${offenders.map(_.get(0)).mkString(", ")}${if (offenders.length == 5) ", …" else ""} — " +
-        "the index family's df/dl statistics assume one file per document " +
-        "(append new ids, purge-rewrite whole files); compact the table so " +
-        "each document's rows live in a single file, then rebuild")
-  }
+      .where(col("__nf") > 1).limit(5).collect())
 
   /** Full (re)build, staged under `.next` and published by the
-    * sealed [[DirSwap]] ([[SidecarMaintenance.publishDir]]) — an aborted
+    * sealed [[DirSwap]] ([[SidecarMaintenance.rebuild]]) — an aborted
     * rebuild (including a layout-guard trip) leaves any previous
     * index serving, and a crash mid-publish is rolled forward by
     * the next maintenance entry. `buckets` sizes the index
@@ -103,20 +107,11 @@ object InvertedIndex {
       buckets: Int = 4): Unit = {
     val files = BloomIndex.dataFilePaths(spark, table)
     require(files.nonEmpty, s"no data files under $table")
-    val idx = indexPath(table)
-    val fs = new Path(idx).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, idx)
-    fs.delete(new Path(s"$idx.next"), true)
-    writeClustered(
-      postingsOf(spark, table, files, textCol, idCol), s"$idx.next", buckets)
-    try requireOneFilePerDoc(spark, s"$idx.next")
-    catch { case e: Throwable =>
-      // never leave a layout-violating index where queries would
-      // silently trust its statistics
-      fs.delete(new Path(s"$idx.next"), true)
-      throw e
+    SidecarMaintenance.rebuild(spark, indexPath(table)) { next =>
+      clustered(postingsOf(spark, table, files, textCol, idCol), buckets)
+        .write.mode(SaveMode.Overwrite).parquet(next)
+      requireOneFilePerDoc(spark, next)
     }
-    SidecarMaintenance.publishDir(spark, idx)
   }
 
   /** Repack the WHOLE index into `buckets` GLOBALLY token-range-
@@ -129,10 +124,7 @@ object InvertedIndex {
       table: String,
       buckets: Int = 4): Unit = {
     SidecarMaintenance.compact(spark, indexPath(table), Seq.empty,
-      statsCol = Some("id"))(
-      _.select("file", "token", "id", "positions")
-        .repartitionByRange(buckets, col("token"), col("id"))
-        .sortWithinPartitions("token", "id"))
+      statsCol = Some("id"))(clustered(_, buckets))
     val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(termStatsPath(table), docLenPath(table)).foreach { p =>
@@ -156,10 +148,7 @@ object InvertedIndex {
       smallBytes: Long = 32L << 20): Unit = {
     SidecarMaintenance.compactSmall(
       spark, indexPath(table), Seq.empty, smallBytes,
-      statsCol = Some("id"))(
-      _.select("file", "token", "id", "positions")
-        .repartitionByRange(1, col("token"), col("id"))
-        .sortWithinPartitions("token", "id"))
+      statsCol = Some("id"))(clustered(_, 1))
     val fs = new Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     Seq(termStatsPath(table), docLenPath(table)).foreach { p =>
@@ -169,119 +158,74 @@ object InvertedIndex {
     }
   }
 
-  /** The pre-mutation form of the layout guard for O(delta) refresh:
-    * the fresh files' postings must not split a document within the
-    * delta, nor re-introduce an id the kept index already carries
-    * (`keptIdx` is None when no index rows survive — nothing to
-    * clash with). */
-  private def requireDeltaOneFilePerDoc(
-      freshPost: DataFrame, keptIdx: Option[DataFrame]): Unit = {
-    def fail(ids: Array[org.apache.spark.sql.Row]): Unit =
-      require(ids.isEmpty,
-        s"documents present in MORE THAN ONE data file: ids " +
-          s"${ids.map(_.get(0)).mkString(", ")}${if (ids.length == 5) ", …" else ""} — " +
-          "the index family's df/dl statistics assume one file per document " +
-          "(append new ids, purge-rewrite whole files); compact the table so " +
-          "each document's rows live in a single file, then rebuild")
-    fail(freshPost.groupBy("id").agg(count_distinct(col("file")).as("__nf"))
-      .where(col("__nf") > 1).limit(5).collect())
-    // a clash id lies inside the fresh batch's [min, max], so that
-    // range is pushed onto the kept side — parquet row-group stats
-    // skip index files whose id range can't overlap the batch
-    if (keptIdx.isEmpty) return
-    val Array(bounds) = freshPost
-      .agg(min(col("id")).as("lo"), max(col("id")).as("hi")).collect()
-    if (bounds.isNullAt(0)) return
-    fail(keptIdx.get.select("id")
-      .where(col("id").between(lit(bounds.get(0)), lit(bounds.get(1))))
-      .join(broadcast(freshPost.select("id").distinct()), Seq("id"), "left_semi")
-      .limit(5).collect())
-  }
-
-  /** One-job fusion of [[requireDeltaOneFilePerDoc]]'s fresh-side
-    * statistics (r18, mirroring [[IvfIndex.guardFreshAgainstKept]]):
-    * the per-id file count, the id range for kept-file pruning
-    * ([[SidecarMaintenance.idRangeOf]] semantics) and the native
-    * bounds all come from ONE aggregation; the clash probe is
-    * unchanged. Offender collection (error path only) re-runs the old
-    * query for the message. */
-  /** ONE-job, tokenization-free form of the layout guard (r18): with
-    * the fresh id bounds already known from the corpus files' parquet
-    * footers ([[SidecarMaintenance.footerIdRange]]), the guard reads
-    * the fresh side at DOC level straight from the corpus (id column
-    * only — no posting explode, no tokenizer) and collapses the
-    * more-than-one-file check and the fresh-vs-kept clash check into
-    * a single per-id aggregation. Null-id rule unchanged: null ids
-    * only trip as fresh-side multi-file documents (the old equality
-    * clash join never matched them). One deliberate tightening: a
-    * token-less (empty-text) document was invisible to the
-    * posting-level guard; the doc-level read sees it, so a layout
-    * violation involving an empty document now rejects too — strictly
-    * stricter, never looser. */
-  private def guardDeltaOneFilePerDocFused(
-      spark: SparkSession, table: String, idCol: String, idxDir: String,
-      plan: SidecarMaintenance.DeltaPlan, bounds: (Long, Long)): Unit = {
-    def fail(ids: Array[org.apache.spark.sql.Row]): Unit =
-      require(ids.isEmpty,
-        s"documents present in MORE THAN ONE data file: ids " +
-          s"${ids.map(_.get(0)).mkString(", ")}${if (ids.length == 5) ", …" else ""} — " +
-          "the index family's df/dl statistics assume one file per document " +
-          "(append new ids, purge-rewrite whole files); compact the table so " +
-          "each document's rows live in a single file, then rebuild")
-    val (lo, hi) = bounds
-    val freshDocs = ParquetMemo.readFiles(spark, table, plan.fresh)
-      .select(col(idCol).as("id"), col("_metadata.file_path").as("file"))
-      .withColumn("__fresh", lit(1L))
-    val both = SidecarMaintenance.keptRows(spark, idxDir, plan, Some(bounds)) match {
-      case Some(k) => freshDocs.unionByName(
-        k.select(col("id"))
-          .where(col("id").between(lit(lo), lit(hi)))
-          .withColumn("file", lit(null).cast("string"))
-          .withColumn("__fresh", lit(0L)))
-      case None => freshDocs
-    }
-    fail(both.groupBy("id")
-      .agg(count_distinct(when(col("__fresh") === 1L, col("file")))
-          .as("__nf"),
-        sum(lit(1L) - col("__fresh")).as("__nk"))
-      .where(col("__nf") > 1L ||
-        (col("__nf") >= 1L && col("__nk") >= 1L && col("id").isNotNull))
-      .limit(5).collect())
-  }
-
+  /** The pre-mutation layout guard of [[refresh]]: the fresh files'
+    * documents must not split a document across files within the
+    * delta, nor re-introduce an id the kept index already carries.
+    *
+    * With the fresh id bounds known from the corpus files' parquet
+    * footers ([[SidecarMaintenance.footerIdRange]]) it is ONE job and
+    * tokenization-free (r18): the fresh side is read at DOC level
+    * straight from the corpus (id column only — no posting explode,
+    * no tokenizer), and the more-than-one-file check and the
+    * fresh-vs-kept clash check collapse into a single per-id
+    * aggregation. One deliberate tightening over the posting-level
+    * form: a token-less (empty-text) document was invisible to it; the
+    * doc-level read sees it, so a violation involving an empty
+    * document now rejects too. Without the bounds, one aggregation
+    * over the (checkpointed) fresh postings yields the per-id file
+    * count and the id range for kept-file pruning
+    * ([[SidecarMaintenance.idRangeOf]] semantics), then the clash
+    * probe runs; offender collection (error path only) re-runs the
+    * per-id count for the message. Null ids only trip as fresh-side
+    * multi-file documents (an equality clash join never matches
+    * them). */
   private def guardDeltaOneFilePerDoc(
-      spark: SparkSession, freshPost: DataFrame, idxDir: String,
-      plan: SidecarMaintenance.DeltaPlan): Unit = {
-    def fail(ids: Array[org.apache.spark.sql.Row]): Unit =
-      require(ids.isEmpty,
-        s"documents present in MORE THAN ONE data file: ids " +
-          s"${ids.map(_.get(0)).mkString(", ")}${if (ids.length == 5) ", …" else ""} — " +
-          "the index family's df/dl statistics assume one file per document " +
-          "(append new ids, purge-rewrite whole files); compact the table so " +
-          "each document's rows live in a single file, then rebuild")
-    val g = freshPost.groupBy("id")
-      .agg(count_distinct(col("file")).as("__nf"))
-    val Array(st) = g.agg(
-      sum(when(col("__nf") > 1, 1L).otherwise(0L)).as("dups"),
-      count(lit(1)).as("n"),
-      min(col("id")).as("lo"), max(col("id")).as("hi"),
-      min(col("id").cast("long")).as("llo"),
-      max(col("id").cast("long")).as("lhi"),
-      sum(when(col("id").cast("long").isNull, 1L).otherwise(0L))
-        .as("badcast"))
-      .collect()
-    if (st.getLong(0) > 0L)
-      fail(g.where(col("__nf") > 1).limit(5).collect())
-    if (st.getLong(1) == 0L) return
-    val idRange =
-      if (st.getLong(6) > 0L || st.isNullAt(4)) None
-      else Some((st.getLong(4), st.getLong(5)))
-    val kept = SidecarMaintenance.keptRows(spark, idxDir, plan, idRange)
-    if (kept.isEmpty || st.isNullAt(2)) return
-    fail(kept.get.select("id")
-      .where(col("id").between(lit(st.get(2)), lit(st.get(3))))
-      .join(broadcast(freshPost.select("id").distinct()), Seq("id"), "left_semi")
-      .limit(5).collect())
+      spark: SparkSession, table: String, idCol: String, idxDir: String)(
+      freshPost: DataFrame, plan: SidecarMaintenance.DeltaPlan,
+      bounds: Option[(Long, Long)]): Unit = bounds match {
+    case Some((lo, hi)) =>
+      val freshDocs = ParquetMemo.readFiles(spark, table, plan.fresh)
+        .select(col(idCol).as("id"), col("_metadata.file_path").as("file"))
+        .withColumn("__fresh", lit(1L))
+      val both = SidecarMaintenance.keptRows(spark, idxDir, plan, bounds) match {
+        case Some(k) => freshDocs.unionByName(
+          k.select(col("id"))
+            .where(col("id").between(lit(lo), lit(hi)))
+            .withColumn("file", lit(null).cast("string"))
+            .withColumn("__fresh", lit(0L)))
+        case None => freshDocs
+      }
+      requireOneFile(both.groupBy("id")
+        .agg(count_distinct(when(col("__fresh") === 1L, col("file")))
+            .as("__nf"),
+          sum(lit(1L) - col("__fresh")).as("__nk"))
+        .where(col("__nf") > 1L ||
+          (col("__nf") >= 1L && col("__nk") >= 1L && col("id").isNotNull))
+        .limit(5).collect())
+    case None =>
+      val g = freshPost.groupBy("id")
+        .agg(count_distinct(col("file")).as("__nf"))
+      val Array(st) = g.agg(
+        sum(when(col("__nf") > 1, 1L).otherwise(0L)).as("dups"),
+        count(lit(1)).as("n"),
+        min(col("id")).as("lo"), max(col("id")).as("hi"),
+        min(col("id").cast("long")).as("llo"),
+        max(col("id").cast("long")).as("lhi"),
+        sum(when(col("id").cast("long").isNull, 1L).otherwise(0L))
+          .as("badcast"))
+        .collect()
+      if (st.getLong(0) > 0L)
+        requireOneFile(g.where(col("__nf") > 1).limit(5).collect())
+      if (st.getLong(1) == 0L) return
+      val idRange =
+        if (st.getLong(6) > 0L || st.isNullAt(4)) None
+        else Some((st.getLong(4), st.getLong(5)))
+      val kept = SidecarMaintenance.keptRows(spark, idxDir, plan, idRange)
+      if (kept.isEmpty || st.isNullAt(2)) return
+      requireOneFile(kept.get.select("id")
+        .where(col("id").between(lit(st.get(2)), lit(st.get(3))))
+        .join(broadcast(freshPost.select("id").distinct()), Seq("id"), "left_semi")
+        .limit(5).collect())
   }
 
   /** Incremental maintenance at O(delta) WRITE I/O
@@ -305,41 +249,16 @@ object InvertedIndex {
       replaced: Set[String] = Set.empty,
       replacedPrefixes: Seq[String] = Nil): Unit = {
     val idx = indexPath(table)
+    // footer bounds → the one-job doc-level guard and no checkpoint:
+    // the postings build then runs exactly once, inside the staging
+    // write. Unusable footers (non-integral ids, nulls) keep the
+    // checkpointed aggregation form.
+    SidecarMaintenance.refreshDelta(spark, table, idx, Seq(idx),
+      "inverted index", "collect()", idCol, "id", Nil, clustered(_, buckets),
+      appendedOnly, replaced, replacedPrefixes)(
+      postingsOf(spark, table, _, textCol, idCol))(
+      guardDeltaOneFilePerDoc(spark, table, idCol, idx))
     val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, idx)
-    require(fs.exists(new Path(idx)),
-      s"no inverted index at $idx — bootstrap with collect()")
-    val plan = appendedOnly match {
-      case Some(c) => SidecarMaintenance.planAppend(spark, idx, c, replaced,
-        replacedPrefixes)
-      case None => SidecarMaintenance.planDelta(spark, idx,
-        BloomIndex.dataFilePaths(spark, table).toSet)
-    }
-    val freshPost =
-      if (plan.fresh.isEmpty) None
-      else {
-        // footer bounds → fused doc-level guard (one job, no
-        // tokenizer) and no checkpoint: the postings build then runs
-        // exactly once, inside the staging write. Unusable footers
-        // (non-integral ids, nulls) keep the checkpointed
-        // aggregation form.
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        hint match {
-          case Some(bounds) =>
-            guardDeltaOneFilePerDocFused(spark, table, idCol, idx, plan, bounds)
-            Some(postingsOf(spark, table, plan.fresh, textCol, idCol))
-          case None =>
-            val fp = postingsOf(spark, table, plan.fresh, textCol, idCol)
-              .localCheckpoint(true)
-            guardDeltaOneFilePerDoc(spark, fp, idx, plan)
-            Some(fp)
-        }
-      }
-    SidecarMaintenance.applyDelta(spark, idx, plan, freshPost, Seq.empty,
-      _.select("file", "token", "id", "positions")
-        .repartitionByRange(buckets, col("token"), col("id"))
-        .sortWithinPartitions("token", "id"),
-      statsCol = Some("id"))
     // Sidecar freshness is COUPLED to the index (ADVICE r10): if the
     // retrieval-stats sidecars exist, a refresh that left them stale
     // would silently drop refreshed-in documents from BM25 (dl is

@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.ext.IvfSearch
 import graft.functions.VectorFunctions
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
@@ -73,7 +72,7 @@ object IvfIndex {
   /** Bootstrap / rebuild: sampled seeded KMeans over the table (via
     * [[IvfSearch.buildIndex]]), both sidecars built under
     * `_ivf_cells.next` and published by the sealed [[DirSwap]]
-    * ([[SidecarMaintenance.publishDir]]) — a crash anywhere
+    * ([[SidecarMaintenance.rebuild]]) — a crash anywhere
     * before the seal (including a layout-guard trip) leaves the
     * previous index fully consistent and serving; a crash anywhere
     * after it is rolled forward by the next maintenance entry, so
@@ -85,24 +84,36 @@ object IvfIndex {
       vecCol: String = "embedding",
       nCells: Int = 16,
       seed: Long = 42L,
-      writeSalt: Int = 1): Unit = {
-    val corpus = ParquetMemo.readDir(spark, table)
+      writeSalt: Int = 1): Unit =
+    SidecarMaintenance.rebuild(spark, cellsPath(table)) { next =>
+      val idx = IvfSearch.buildIndex(corpusOf(spark, table, idCol, vecCol), nCells, seed)
+      fillVectors(spark, next, salted(idx.assigned, writeSalt), Seq("__cell"),
+        "_centroids", idx.centroids)
+    }
+
+  /** Every vector of `table` as (file, vec_id, embedding). */
+  private[sinks] def corpusOf(
+      spark: SparkSession, table: String, idCol: String, vecCol: String): DataFrame =
+    ParquetMemo.readDir(spark, table)
       .select(col("_metadata.file_path").as("file"),
         col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val idx = IvfSearch.buildIndex(corpus, nCells, seed)
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = cellsPath(table)
-    SidecarMaintenance.recoverPublish(spark, dest)
-    val next = s"$dest.next"
-    fs.delete(new Path(next), true)
-    val rows = salted(idx.assigned, writeSalt)
-    rows.write.mode(SaveMode.Overwrite).partitionBy("__cell").parquet(next)
-    idx.centroids.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
-    requireOneRowPerVector(
-      ParquetMemo.readDir(spark, next),
-      onTrip = { fs.delete(new Path(next), true) })
-    SidecarMaintenance.publishDir(spark, dest)
+
+  /** Fill a vector sidecar's rebuild directory `next`: `rows`
+    * (directory-partitioned by `partCols`), the model table (IVF
+    * centroids, LSH (planes, seed), PQ codebooks) as ONE file under
+    * `next/<model>`, then the one-row-per-vector guard over what was
+    * written. */
+  private[sinks] def fillVectors(
+      spark: SparkSession,
+      next: String,
+      rows: DataFrame,
+      partCols: Seq[String],
+      model: String,
+      modelRows: DataFrame): Unit = {
+    val w = rows.write.mode(SaveMode.Overwrite)
+    (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w).parquet(next)
+    modelRows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$next/$model")
+    requireOneRowPerVector(ParquetMemo.readDir(spark, next))
   }
 
   /** Incremental maintenance, pure file-set arithmetic over the
@@ -125,44 +136,14 @@ object IvfIndex {
       writeSalt: Int = 1,
       appendedOnly: Option[Set[String]] = None,
       replaced: Set[String] = Set.empty,
-      replacedPrefixes: Seq[String] = Nil): Unit = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // heal a crashed rebuild publish BEFORE the existence check — a
-    // crash inside the DirSwap publish can leave the index parked at
-    // `.next`/`.old`, and this entry must restore it, not wedge
-    SidecarMaintenance.recoverPublish(spark, cellsPath(table))
-    Seq(centroidsPath(table), cellsPath(table)).foreach(p =>
-      require(fs.exists(new Path(p)),
-        s"no IVF index at $p — bootstrap with collect()"))
-    val plan = appendedOnly match {
-      case Some(c) => SidecarMaintenance.planAppend(spark, cellsPath(table),
-        c, replaced, replacedPrefixes)
-      case None => SidecarMaintenance.planDelta(spark, cellsPath(table),
-        BloomIndex.dataFilePaths(spark, table).toSet)
-    }
-    val freshAssigned =
-      if (plan.fresh.isEmpty) None
-      else {
-        // footer-derived fresh bounds (zero jobs) let the guard run
-        // its ONE-job fused form, which reads only the id column —
-        // then the checkpoint materialization is pure overhead and
-        // the staging write re-derives the (cheap, codegen) assign
-        // from the corpus files. The aggregation fallback consumes
-        // the assigned frame three times, so it keeps the checkpoint.
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        val fa0 = assignFiles(spark, table, plan.fresh, idCol, vecCol,
-            ParquetMemo.metaDF(spark, centroidsPath(table)))
-        val fa = if (hint.isDefined) fa0 else fa0.localCheckpoint(true)
-        // guard BEFORE any mutation: a trip leaves the live index
-        // untouched. Rows of vanished files don't count — a
-        // purge-rewritten file's ids legitimately reappear fresh.
-        guardFreshAgainstKept(spark, fa, cellsPath(table), plan, hint)
-        Some(fa)
-      }
-    SidecarMaintenance.applyDelta(spark, cellsPath(table), plan,
-      freshAssigned, Seq("__cell"), salted(_, writeSalt),
-      statsCol = Some("vec_id"))
-  }
+      replacedPrefixes: Seq[String] = Nil): Unit =
+    SidecarMaintenance.refreshDelta(spark, table, cellsPath(table),
+      Seq(centroidsPath(table), cellsPath(table)), "IVF index", "collect()",
+      idCol, "vec_id", Seq("__cell"), salted(_, writeSalt),
+      appendedOnly, replaced, replacedPrefixes)(
+      assignFiles(spark, table, _, idCol, vecCol,
+        ParquetMemo.metaDF(spark, centroidsPath(table))))(
+      vectorGuard(spark, cellsPath(table)))
 
   /** Repack the WHOLE cells sidecar (one journaled rewrite) —
     * O(sidecar) by design, an explicit offline layout reset. The
@@ -234,147 +215,125 @@ object IvfIndex {
       .select("file", "vec_id", "embedding", "__cell")
   }
 
-  /** The committed refs rows still BACKED by a live corpus file —
-    * the kept side [[clusterAppend]]'s pre-append clash check runs
-    * against (shared with [[LshIndex.clusterAppend]]). Rows of
-    * vanished corpus files are dropped via one broadcast semi-join
-    * on the current file list, mirroring
-    * [[SidecarMaintenance.keptRows]]' vanish-aware rule on the
-    * refresh path. */
-  private[sinks] def clusterAppendKeptRefs(
-      spark: SparkSession, dest: String, refsDir: String): DataFrame = {
-    import spark.implicits._
-    val current = BloomIndex.dataFilePaths(spark, dest)
-    SidecarMaintenance.snapshotRead(spark, refsDir)
-      .join(broadcast(current.toDF("file")), Seq("file"), "left_semi")
-  }
+  /** The family's layout contract, stated once: a vector's row must
+    * live in ONE corpus data file. Fails naming up to five `ids`
+    * indexed more than once. */
+  private def requireNoneTwice(ids: Array[Row]): Unit =
+    require(ids.isEmpty,
+      s"vectors indexed more than once: ids " +
+        s"${ids.map(_.get(0)).mkString(", ")} — a vector's row " +
+        "must live in ONE corpus data file (append new ids, " +
+        "purge-rewrite whole files); compact, then rebuild")
 
-  /** The family's layout contract: a vector's row must live in ONE
-    * corpus data file (append new ids, purge-rewrite whole files). */
-  private[sinks] def requireOneRowPerVector(
-      rows: DataFrame, onTrip: => Unit): Unit = {
-    val offenders = rows.groupBy("vec_id").agg(count(lit(1)).as("__n"))
-      .where(col("__n") > 1).limit(5).collect()
-    if (offenders.nonEmpty) {
-      onTrip
-      require(offenders.isEmpty,
-        s"vectors indexed more than once: ids " +
-          s"${offenders.map(_.get(0)).mkString(", ")} — a vector's row " +
-          "must live in ONE corpus data file (append new ids, " +
-          "purge-rewrite whole files); compact, then rebuild")
-    }
-  }
+  /** The build-time form of the contract, over every row written. */
+  private def requireOneRowPerVector(rows: DataFrame): Unit =
+    requireNoneTwice(rows.groupBy("vec_id").agg(count(lit(1)).as("__n"))
+      .where(col("__n") > 1).limit(5).collect())
 
-  /** One-job fusion of the refresh guard's fresh-side statistics
-    * (r18): the old shape ran THREE aggregation jobs over the fresh
-    * batch (duplicate check, [[SidecarMaintenance.idRangeOf]] for
-    * kept-file pruning, native-typed bounds for the kept-row filter)
-    * plus the clash probe — this computes all three statistics in ONE
-    * aggregation, then runs the same pruned clash probe. The
-    * duplicate-offender collection (error path only) re-runs the old
-    * query purely to name the ids in the failure message. Semantics
-    * are identical to `requireNoVectorClash(fresh, keptRows(spark,
-    * dir, plan, idRangeOf(fresh, "vec_id")))`. */
+  /** The vector sidecars' refresh guard for [[SidecarMaintenance.refreshDelta]]:
+    * fresh rows against the sidecar rows the delta KEEPS
+    * ([[SidecarMaintenance.keptRows]] — rows of vanished files don't
+    * count, a purge-rewritten file's ids legitimately reappear fresh). */
+  private[sinks] def vectorGuard(spark: SparkSession, dir: String)
+      : (DataFrame, SidecarMaintenance.DeltaPlan, Option[(Long, Long)]) => Unit =
+    (rows, plan, bounds) => guardFreshAgainstKept(spark, rows,
+      SidecarMaintenance.keptRows(spark, dir, plan, _), bounds)
+
+  /** The one pre-append duplicate-id guard: the `fresh` ids must be
+    * duplicate-free within themselves and against the rows `kept`
+    * returns for the fresh id range (None: nothing kept to clash
+    * with). A clash id lies inside the fresh batch's [min, max] by
+    * definition, so that range prunes the kept side — by file list
+    * ([[SidecarMaintenance.keptRows]]) and by a pushed filter that
+    * parquet row-group stats answer — and monotonic ingest ids make
+    * the guard read ~nothing of the kept side.
+    *
+    * With the fresh bounds known (`freshIdRange`, from the corpus
+    * files' footers, [[SidecarMaintenance.footerIdRange]]) the
+    * in-batch duplicate check and the fresh-vs-kept clash check
+    * collapse into ONE per-id aggregation: an id trips when it occurs
+    * twice on the fresh side, or on both sides. Without them one
+    * aggregation over the fresh ids yields the duplicate count and
+    * the bounds, then the pruned clash probe runs. Null ids only trip
+    * as fresh duplicates (equality joins never match them). */
   private[sinks] def guardFreshAgainstKept(
-      spark: SparkSession, fresh: DataFrame, dir: String,
-      plan: SidecarMaintenance.DeltaPlan,
-      freshIdRange: Option[(Long, Long)] = None): Unit = freshIdRange match {
+      spark: SparkSession,
+      fresh: DataFrame,
+      kept: Option[(Long, Long)] => Option[DataFrame],
+      freshIdRange: Option[(Long, Long)]): Unit = freshIdRange match {
     case Some((lo, hi)) =>
-      // ONE-job form (r18): the fresh bounds came from the corpus
-      // files' parquet footers ([[SidecarMaintenance.footerIdRange]] —
-      // exact, driver-side, zero jobs), so the kept-file pruning and
-      // the kept-side row-group filter need no bounds aggregation, and
-      // the in-batch duplicate check and the fresh-vs-kept clash check
-      // collapse into a single per-id aggregation: an id trips when it
-      // occurs twice on the fresh side, or on both sides. The
-      // null-id rule is unchanged — null ids only trip as FRESH
-      // duplicates (equality joins never matched them before).
       val freshSide = fresh.select(col("vec_id"))
         .withColumn("__fresh", lit(1L))
-      val both = SidecarMaintenance.keptRows(spark, dir, plan, freshIdRange) match {
+      val both = kept(freshIdRange) match {
         case Some(k) => freshSide.unionByName(
           k.select(col("vec_id"))
             .where(col("vec_id").between(lit(lo), lit(hi)))
             .withColumn("__fresh", lit(0L)))
         case None => freshSide
       }
-      val offenders = both.groupBy("vec_id")
+      requireNoneTwice(both.groupBy("vec_id")
         .agg(sum(col("__fresh")).as("__nf"),
           sum(lit(1L) - col("__fresh")).as("__nk"))
         .where(col("__nf") > 1L ||
           (col("__nf") >= 1L && col("__nk") >= 1L && col("vec_id").isNotNull))
-        .limit(5).collect()
-      require(offenders.isEmpty,
-        s"vectors indexed more than once: ids " +
-          s"${offenders.map(_.get(0)).mkString(", ")} — a vector's row " +
-          "must live in ONE corpus data file (append new ids, " +
-          "purge-rewrite whole files); compact, then rebuild")
-    case None => guardFreshAgainstKeptAgg(spark, fresh, dir, plan)
+        .limit(5).collect())
+    case None =>
+      val g = fresh.groupBy("vec_id").agg(count(lit(1)).as("__n"))
+      val Array(st) = g.agg(
+        sum(when(col("__n") > 1, 1L).otherwise(0L)).as("dups"),
+        count(lit(1)).as("n"),
+        min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"),
+        min(col("vec_id").cast("long")).as("llo"),
+        max(col("vec_id").cast("long")).as("lhi"),
+        sum(when(col("vec_id").cast("long").isNull, 1L).otherwise(0L))
+          .as("badcast"))
+        .collect()
+      // the offenders' ids come from re-running the per-id count
+      if (st.getLong(0) > 0L) requireOneRowPerVector(fresh)
+      if (st.getLong(1) == 0L) return // empty fresh batch: nothing to clash
+      // a non-long id is invisible to the long range: no pruning then
+      val idRange =
+        if (st.getLong(6) > 0L || st.isNullAt(4)) None
+        else Some((st.getLong(4), st.getLong(5)))
+      val k = kept(idRange)
+      if (k.isEmpty || st.isNullAt(2)) return
+      requireNoneTwice(k.get.select("vec_id")
+        .where(col("vec_id").between(lit(st.get(2)), lit(st.get(3))))
+        .join(broadcast(fresh.select("vec_id").distinct()),
+          Seq("vec_id"), "left_semi")
+        .limit(5).collect())
   }
 
-  private def guardFreshAgainstKeptAgg(
-      spark: SparkSession, fresh: DataFrame, dir: String,
-      plan: SidecarMaintenance.DeltaPlan): Unit = {
-    val g = fresh.groupBy("vec_id").agg(count(lit(1)).as("__n"))
-    val Array(st) = g.agg(
-      sum(when(col("__n") > 1, 1L).otherwise(0L)).as("dups"),
-      count(lit(1)).as("n"),
-      min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"),
-      min(col("vec_id").cast("long")).as("llo"),
-      max(col("vec_id").cast("long")).as("lhi"),
-      sum(when(col("vec_id").cast("long").isNull, 1L).otherwise(0L))
-        .as("badcast"))
-      .collect()
-    if (st.getLong(0) > 0L) requireOneRowPerVector(fresh, onTrip = ())
-    if (st.getLong(1) == 0L) return // empty fresh batch: nothing to clash
-    val idRange =
-      if (st.getLong(6) > 0L || st.isNullAt(4)) None
-      else Some((st.getLong(4), st.getLong(5)))
-    val kept = SidecarMaintenance.keptRows(spark, dir, plan, idRange)
-    if (kept.isEmpty || st.isNullAt(2)) return
-    val clash = kept.get.select("vec_id")
-      .where(col("vec_id").between(lit(st.get(2)), lit(st.get(3))))
-      .join(broadcast(fresh.select("vec_id").distinct()),
-        Seq("vec_id"), "left_semi")
-      .limit(5).collect()
-    require(clash.isEmpty,
-      s"vectors indexed more than once: ids " +
-        s"${clash.map(_.get(0)).mkString(", ")} — a vector's row " +
-        "must live in ONE corpus data file (append new ids, " +
-        "purge-rewrite whole files); compact, then rebuild")
+  /** [[clusterAppend]]'s pre-append guard (shared with
+    * [[LshIndex.clusterAppend]]): the batch's ids against the
+    * committed refs rows at `refsDir` still BACKED by a live corpus
+    * file of `dest` — rows of vanished corpus files drop via one
+    * broadcast semi-join on the current file list, the vanish-aware
+    * rule [[SidecarMaintenance.keptRows]] applies on the refresh
+    * path. */
+  private[sinks] def requireNewIds(
+      spark: SparkSession, dest: String, refsDir: String,
+      batch: DataFrame, idCol: String): Unit = {
+    import spark.implicits._
+    guardFreshAgainstKept(spark, batch.select(col(idCol).as("vec_id")), _ => {
+      val current = BloomIndex.dataFilePaths(spark, dest)
+      Some(SidecarMaintenance.snapshotRead(spark, refsDir)
+        .join(broadcast(current.toDF("file")), Seq("file"), "left_semi"))
+    }, None)
   }
 
-  /** Pre-append guard: the fresh batch must be duplicate-free both
-    * within itself and against the rows staying in the index.
-    *
-    * A clash id lies inside the fresh batch's [min, max] by
-    * definition, so that range is pushed as a filter on the kept
-    * side — parquet row-group stats then skip every sidecar file
-    * whose id range doesn't overlap the batch. Monotonic ingest ids
-    * (the common case) make the guard read ~nothing instead of the
-    * whole sidecar's id column per refresh. `keptRows` is None when
-    * the sidecar carries no surviving rows at all (every corpus file
-    * vanished) — nothing to clash with, only the batch-internal
-    * check applies. */
-  private[sinks] def requireNoVectorClash(
-      freshRows: DataFrame, keptRows: Option[DataFrame]): Unit = {
-    requireOneRowPerVector(freshRows, onTrip = ())
-    if (keptRows.isEmpty) return
-    val Array(bounds) = freshRows
-      .agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"))
-      .collect()
-    if (bounds.isNullAt(0)) return // empty or all-null fresh batch
-    val clash = keptRows.get.select("vec_id")
-      .where(col("vec_id").between(lit(bounds.get(0)), lit(bounds.get(1))))
-      .join(broadcast(freshRows.select("vec_id").distinct()),
-        Seq("vec_id"), "left_semi")
-      .limit(5).collect()
-    require(clash.isEmpty,
-      s"vectors indexed more than once: ids " +
-        s"${clash.map(_.get(0)).mkString(", ")} — a vector's row " +
-        "must live in ONE corpus data file (append new ids, " +
-        "purge-rewrite whole files); compact, then rebuild")
-  }
+  /** Write `rows` to `dest` clustered by the `part` column: ONE range
+    * exchange on (part, id) into `n` files, each sorted, `part`
+    * dropped — the layout [[clusterCorpus]] and [[clusterAppend]]
+    * (and their LSH forms) keep, each partition's rows in contiguous
+    * files. */
+  private[sinks] def writeClustered(
+      rows: DataFrame, part: String, idCol: String, n: Int,
+      dest: String, mode: SaveMode): Unit =
+    rows.repartitionByRange(n, col(part), col(idCol))
+      .sortWithinPartitions(col(part), col(idCol))
+      .drop(part)
+      .write.mode(mode).parquet(dest)
 
   // ── embedding-free REFS variant ─────────────────────────────────
   // `_ivf_cells` duplicates every embedding (the sidecar IS the
@@ -405,34 +364,19 @@ object IvfIndex {
       nCells: Int = 16,
       seed: Long = 42L,
       writeSalt: Int = 1,
-      centroids: Option[DataFrame] = None): Unit = {
-    val (cents, rows) = centroids match {
-      case Some(c) =>
-        (c, assignFiles(spark, table,
-          BloomIndex.dataFilePaths(spark, table), idCol, vecCol, c)
-          .drop("embedding"))
-      case None =>
-        val corpus = ParquetMemo.readDir(spark, table)
-          .select(col("_metadata.file_path").as("file"),
-            col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        val idx = IvfSearch.buildIndex(corpus, nCells, seed)
-        (idx.centroids, idx.assigned.drop("embedding"))
+      centroids: Option[DataFrame] = None): Unit =
+    SidecarMaintenance.rebuild(spark, refsPath(table)) { next =>
+      val (cents, rows) = centroids match {
+        case Some(c) =>
+          (c, assignFiles(spark, table,
+            BloomIndex.dataFilePaths(spark, table), idCol, vecCol, c)
+            .drop("embedding"))
+        case None =>
+          val idx = IvfSearch.buildIndex(corpusOf(spark, table, idCol, vecCol), nCells, seed)
+          (idx.centroids, idx.assigned.drop("embedding"))
+      }
+      fillVectors(spark, next, saltedRefs(rows, writeSalt), Seq("__cell"), "_centroids", cents)
     }
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = refsPath(table)
-    SidecarMaintenance.recoverPublish(spark, dest)
-    val next = s"$dest.next"
-    fs.delete(new Path(next), true)
-    val saltedRows = saltedRefs(rows, writeSalt)
-    saltedRows
-      .write.mode(SaveMode.Overwrite).partitionBy("__cell").parquet(next)
-    cents.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$next/_centroids")
-    requireOneRowPerVector(
-      ParquetMemo.readDir(spark, next),
-      onTrip = { fs.delete(new Path(next), true) })
-    SidecarMaintenance.publishDir(spark, dest)
-  }
 
   /** O(delta) maintenance of the refs sidecar — [[refresh]] on the
     * embedding-free rows, frozen centroids. */
@@ -441,29 +385,13 @@ object IvfIndex {
       table: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      writeSalt: Int = 1): Unit = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, refsPath(table))
-    Seq(refsCentroidsPath(table), refsPath(table)).foreach(p =>
-      require(fs.exists(new Path(p)),
-        s"no IVF refs index at $p — bootstrap with collectRefs()"))
-    val plan = SidecarMaintenance.planDelta(spark, refsPath(table),
-      BloomIndex.dataFilePaths(spark, table).toSet)
-    val freshAssigned =
-      if (plan.fresh.isEmpty) None
-      else {
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        val fa0 = assignFiles(spark, table, plan.fresh, idCol, vecCol,
-            ParquetMemo.metaDF(spark, refsCentroidsPath(table)))
-          .drop("embedding")
-        val fa = if (hint.isDefined) fa0 else fa0.localCheckpoint(true)
-        guardFreshAgainstKept(spark, fa, refsPath(table), plan, hint)
-        Some(fa)
-      }
-    SidecarMaintenance.applyDelta(spark, refsPath(table), plan,
-      freshAssigned, Seq("__cell"), saltedRefs(_, writeSalt),
-      statsCol = Some("vec_id"))
-  }
+      writeSalt: Int = 1): Unit =
+    SidecarMaintenance.refreshDelta(spark, table, refsPath(table),
+      Seq(refsCentroidsPath(table), refsPath(table)), "IVF refs index",
+      "collectRefs()", idCol, "vec_id", Seq("__cell"), saltedRefs(_, writeSalt))(
+      assignFiles(spark, table, _, idCol, vecCol,
+        ParquetMemo.metaDF(spark, refsCentroidsPath(table))).drop("embedding"))(
+      vectorGuard(spark, refsPath(table)))
 
   /** Size-tiered amortizer for the refs sidecar (unsalted merge —
     * see [[compactSmall]]). */
@@ -517,11 +445,7 @@ object IvfIndex {
     val back =
       if (vecCol == "embedding") idx.assigned
       else idx.assigned.withColumnRenamed("embedding", vecCol)
-    back
-      .repartitionByRange(nCells * filesPerCell, col("__cell"), col(idCol))
-      .sortWithinPartitions(col("__cell"), col(idCol))
-      .drop("__cell")
-      .write.mode(SaveMode.Overwrite).parquet(dest)
+    writeClustered(back, "__cell", idCol, nCells * filesPerCell, dest, SaveMode.Overwrite)
     // the refs build reuses THIS quantizer: refs cells and the file
     // layout are the same geometry by construction, not two
     // independently-trained lookalikes
@@ -571,16 +495,9 @@ object IvfIndex {
     // reject them until a refresh ran). The corpus listing this
     // costs is one refreshRefs (below) pays anyway; the batch
     // id-range still pushes onto the refs scan.
-    requireNoVectorClash(
-      batch.select(col(idCol).as("vec_id")),
-      Some(clusterAppendKeptRefs(spark, dest, refsPath(dest))))
-    batch
-      .withColumn("__cell", nearestCellCol(centRows, vecCol))
-      .repartitionByRange(centRows.length * filesPerCell,
-        col("__cell"), col(idCol))
-      .sortWithinPartitions(col("__cell"), col(idCol))
-      .drop("__cell")
-      .write.mode(SaveMode.Append).parquet(dest)
+    requireNewIds(spark, dest, refsPath(dest), batch, idCol)
+    writeClustered(batch.withColumn("__cell", nearestCellCol(centRows, vecCol)),
+      "__cell", idCol, centRows.length * filesPerCell, dest, SaveMode.Append)
     refreshRefs(spark, dest, idCol, vecCol)
   }
 
@@ -676,11 +593,10 @@ object IvfIndex {
       nProbe: Int = 4,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    // ONE committed-snapshot resolution serves both refs reads below:
-    // the probe runs THROUGH a live refresh's commit window on the
-    // pre-commit truth instead of refusing for its whole duration
-    // ([[SidecarMaintenance.snapshotRead]])
+    // ONE committed-snapshot resolution serves both refs reads of
+    // [[probeTopK]]: the probe runs THROUGH a live refresh's commit
+    // window on the pre-commit truth instead of refusing for its whole
+    // duration ([[SidecarMaintenance.snapshotRead]])
     val refsSnap = SidecarMaintenance.snapshotRead(spark, refsPath(table))
     // cells ranked on the driver over the memoized centroids
     // ([[probeSet]]): a local query set pays no job before the
@@ -688,46 +604,8 @@ object IvfIndex {
     val (probes, probedCells) = probeSet(spark,
       queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
       ParquetMemo.metaRows(spark, refsCentroidsPath(table)), nProbe)
-    val candidates = refsSnap
-      .where(col("__cell").isin(probedCells: _*))
-      .select(col("vec_id").as("neighbor_id"), col("__cell"))
-      .join(broadcast(probes), Seq("__cell"))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .select("q_id", "q_vec", "neighbor_id")
-    // the re-rank corpus read is FILE-PRUNED to the candidate files
-    // (bounded by the probed cells' coverage — a corpus fraction at
-    // partial nProbe), not a full column pass over the table; the
-    // file set comes from its own partition-pruned refs scan so the
-    // candidates plan keeps the __cell PartitionFilters visible.
-    // A refs index stale w.r.t. a corpus DELETION may still name
-    // vanished files — reconciled EXCEPTION-DRIVEN
-    // ([[SidecarMaintenance.readCandidateFiles]]): the steady-state
-    // probe pays zero extra metadata RPCs, and only an actually-
-    // missing path triggers one batched corpus listing + retry.
-    // Dropped files' candidates score absent, exactly as the
-    // full-table read served them.
-    val candFiles = refsSnap
-      .where(col("__cell").isin(probedCells: _*))
-      .select("file").distinct().as[String]
-      .collect().toSeq.sorted
-    val corpusRead =
-      SidecarMaintenance.readCandidateFiles(spark, table, candFiles)
-    if (corpusRead.isEmpty)
-      // same schema as the non-empty path (q_id/neighbor_id take the
-      // id column's type), just zero rows
-      return probes.select(col("q_id"), col("q_id").as("neighbor_id"))
-        .withColumn("rank", lit(0L)).limit(0)
-    val corpus = corpusRead.get
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = candidates.join(corpus, Seq("neighbor_id"))
-      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored
-      .select(col("q_id"), col("neighbor_id"), col("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rank"))
+    probeTopK(spark, table, refsSnap, "__cell", probedCells, probes, k,
+      refs = true, idCol, vecCol)
   }
 
   /** Probe the persisted index: rank cells per query against the
@@ -750,13 +628,68 @@ object IvfIndex {
     val (probes, probedCells) = probeSet(spark,
       queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
       ParquetMemo.metaRows(spark, centroidsPath(table)), nProbe)
-    val scored = cellsSnap
-      .where(col("__cell").isin(probedCells: _*))
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("c_vec"), col("__cell"))
-      .join(broadcast(probes), Seq("__cell"))
+    probeTopK(spark, table, cellsSnap, "__cell", probedCells, probes, k,
+      refs = false, idCol, vecCol)
+  }
+
+  /** The probe tail of the IVF and LSH indexes: the rows of the
+    * sidecar snapshot `snap` in the probed partitions (`part` in
+    * `probed`, a STATIC partition filter) pair with the `probes` rows
+    * (q_id, q_vec, part) that probe them, a query never with itself.
+    * Candidate vectors come from the sidecar's `embedding` column, or
+    * for a refs sidecar (`refs`) from ONE corpus read of just the
+    * candidate FILES, column-pruned to (id, vector) — at partial
+    * probes a corpus fraction in both files and columns, so re-rank
+    * reads scale with the probe, not the corpus. That file set comes
+    * from its own partition-pruned scan, so the candidates plan keeps
+    * its PartitionFilters. A refs index stale w.r.t. a corpus
+    * DELETION may still name vanished files, reconciled
+    * EXCEPTION-DRIVEN ([[SidecarMaintenance.readCandidateFiles]]):
+    * zero extra metadata RPCs in the steady state, one batched corpus
+    * listing + retry only when a path vanished; dropped files'
+    * candidates score absent. Exact cosine top-k
+    * ([[rankByCosine]]). */
+  private[sinks] def probeTopK(
+      spark: SparkSession,
+      table: String,
+      snap: DataFrame,
+      part: String,
+      probed: Seq[Any],
+      probes: DataFrame,
+      k: Int,
+      refs: Boolean,
+      idCol: String,
+      vecCol: String): DataFrame = {
+    import spark.implicits._
+    val inProbed = snap.where(col(part).isin(probed: _*))
+    if (!refs) return rankByCosine(inProbed
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"), col(part))
+      .join(broadcast(probes), Seq(part))
       .where(col("q_id") =!= col("neighbor_id"))
-      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
+      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec"))), k)
+    val candidates = inProbed
+      .select(col("vec_id").as("neighbor_id"), col(part))
+      .join(broadcast(probes), Seq(part))
+      .where(col("q_id") =!= col("neighbor_id"))
+      .select("q_id", "q_vec", "neighbor_id")
+    val candFiles = inProbed.select("file").distinct().as[String].collect().toSeq.sorted
+    SidecarMaintenance.readCandidateFiles(spark, table, candFiles) match {
+      case Some(corpus) => rankByCosine(candidates
+        .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec")),
+          Seq("neighbor_id"))
+        .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec"))), k)
+      case None =>
+        // same schema as the non-empty path (q_id/neighbor_id take the
+        // id column's type), just zero rows
+        probes.select(col("q_id"), col("q_id").as("neighbor_id"))
+          .withColumn("rank", lit(0L)).limit(0)
+    }
+  }
+
+  /** The exact re-rank every ANN probe ends with: per query, the
+    * scored candidates by `cos` descending, ties to the lower
+    * neighbor id, the first `k` as (q_id, neighbor_id, rank). */
+  private[sinks] def rankByCosine(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored

@@ -1,9 +1,7 @@
 package graft.sinks
 
 import graft.functions.VectorFunctions
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** PERSISTED hyperplane-LSH ANN index — the third member of the
@@ -53,7 +51,7 @@ object LshIndex {
   /** Bootstrap / rebuild: one signature pass; buckets and the
     * (planes, seed) row are built under `_lsh_buckets.next` and
     * published by the crash-recoverable [[DirSwap]]
-    * ([[SidecarMaintenance.publishDir]]). */
+    * ([[SidecarMaintenance.rebuild]]). */
   def collect(
       spark: SparkSession,
       table: String,
@@ -61,32 +59,39 @@ object LshIndex {
       vecCol: String = "embedding",
       planes: Int = 4,
       seed: Long = 0L,
-      writeSalt: Int = 1): Unit = {
+      writeSalt: Int = 1): Unit =
+    build(spark, table, bucketsPath(table), idCol, vecCol, planes, seed)(
+      salted(_, writeSalt))
+
+  /** The (whole-corpus) rebuild of a buckets or refs sidecar at
+    * `dest`: one signature pass, `shape`d, and the (planes, seed)
+    * row. */
+  private def build(
+      spark: SparkSession, table: String, dest: String,
+      idCol: String, vecCol: String, planes: Int, seed: Long)(
+      shape: DataFrame => DataFrame): Unit = {
     import spark.implicits._
-    require(planes >= 1 && planes <= 12,
-      s"bucket directories number 2^planes; planes=$planes")
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = bucketsPath(table)
-    SidecarMaintenance.recoverPublish(spark, dest)
-    val next = s"$dest.next"
-    fs.delete(new Path(next), true)
-    val rows = salted(signFiles(spark, table,
-      BloomIndex.dataFilePaths(spark, table), idCol, vecCol, planes, seed),
-      writeSalt)
-    rows.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(next)
-    Seq((planes, seed)).toDF("planes", "seed").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$next/_meta")
-    IvfIndex.requireOneRowPerVector(
-      ParquetMemo.readDir(spark, next),
-      onTrip = { fs.delete(new Path(next), true) })
-    SidecarMaintenance.publishDir(spark, dest)
+    requirePlanes(planes)
+    SidecarMaintenance.rebuild(spark, dest) { next =>
+      IvfIndex.fillVectors(spark, next, shape(signFiles(spark, table,
+        BloomIndex.dataFilePaths(spark, table), idCol, vecCol, planes, seed)),
+        Seq("bucket"), "_meta", Seq((planes, seed)).toDF("planes", "seed"))
+    }
   }
 
-  private[graft] def readMeta(spark: SparkSession, table: String): (Int, Long) = {
-    // listing-signature memo: zero Spark jobs in the steady state
-    // (the old head() shape paid a schema-inference job + a fetch job
-    // on every refresh and every probe) — [[ParquetMemo.metaHead]]
-    val r = ParquetMemo.metaHead(spark, metaPath(table))
+  private def requirePlanes(planes: Int): Unit =
+    require(planes >= 1 && planes <= 12,
+      s"bucket directories number 2^planes; planes=$planes")
+
+  private[graft] def readMeta(spark: SparkSession, table: String): (Int, Long) =
+    modelAt(spark, metaPath(table))
+
+  /** The (planes, seed) row at `dir` — listing-signature memo, zero
+    * Spark jobs in the steady state (the old head() shape paid a
+    * schema-inference job + a fetch job on every refresh and every
+    * probe) — [[ParquetMemo.metaHead]]. */
+  private def modelAt(spark: SparkSession, dir: String): (Int, Long) = {
+    val r = ParquetMemo.metaHead(spark, dir)
     (r.getAs[Int]("planes"), r.getAs[Long]("seed"))
   }
 
@@ -102,32 +107,14 @@ object LshIndex {
       writeSalt: Int = 1,
       appendedOnly: Option[Set[String]] = None,
       replaced: Set[String] = Set.empty,
-      replacedPrefixes: Seq[String] = Nil): Unit = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, bucketsPath(table))
-    Seq(metaPath(table), bucketsPath(table)).foreach(p =>
-      require(fs.exists(new Path(p)),
-        s"no LSH index at $p — bootstrap with collect()"))
-    val (planes, seed) = readMeta(spark, table)
-    val plan = appendedOnly match {
-      case Some(c) => SidecarMaintenance.planAppend(spark, bucketsPath(table),
-        c, replaced, replacedPrefixes)
-      case None => SidecarMaintenance.planDelta(spark, bucketsPath(table),
-        BloomIndex.dataFilePaths(spark, table).toSet)
-    }
-    val freshSigned =
-      if (plan.fresh.isEmpty) None
-      else {
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        val fa0 = signFiles(spark, table, plan.fresh, idCol, vecCol, planes, seed)
-        val fa = if (hint.isDefined) fa0 else fa0.localCheckpoint(true)
-        IvfIndex.guardFreshAgainstKept(spark, fa, bucketsPath(table), plan, hint)
-        Some(fa)
-      }
-    SidecarMaintenance.applyDelta(spark, bucketsPath(table), plan,
-      freshSigned, Seq("bucket"), salted(_, writeSalt),
-      statsCol = Some("vec_id"))
-  }
+      replacedPrefixes: Seq[String] = Nil): Unit =
+    SidecarMaintenance.refreshDelta(spark, table, bucketsPath(table),
+      Seq(metaPath(table), bucketsPath(table)), "LSH index", "collect()",
+      idCol, "vec_id", Seq("bucket"), salted(_, writeSalt),
+      appendedOnly, replaced, replacedPrefixes)({
+      val (planes, seed) = readMeta(spark, table)
+      signFiles(spark, table, _, idCol, vecCol, planes, seed)
+    })(IvfIndex.vectorGuard(spark, bucketsPath(table)))
 
   /** Repack the WHOLE buckets sidecar — explicit offline op; the
     * streaming-cadence amortizer is [[compactSmall]]. */
@@ -190,32 +177,9 @@ object LshIndex {
       vecCol: String = "embedding",
       planes: Int = 4,
       seed: Long = 0L,
-      writeSalt: Int = 1): Unit = {
-    import spark.implicits._
-    require(planes >= 1 && planes <= 12,
-      s"bucket directories number 2^planes; planes=$planes")
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = refsPath(table)
-    SidecarMaintenance.recoverPublish(spark, dest)
-    val next = s"$dest.next"
-    fs.delete(new Path(next), true)
-    val rows = saltedRefs(signFiles(spark, table,
-      BloomIndex.dataFilePaths(spark, table), idCol, vecCol, planes, seed)
-      .drop("embedding"), writeSalt)
-    rows.write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(next)
-    Seq((planes, seed)).toDF("planes", "seed").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$next/_meta")
-    IvfIndex.requireOneRowPerVector(
-      ParquetMemo.readDir(spark, next),
-      onTrip = { fs.delete(new Path(next), true) })
-    SidecarMaintenance.publishDir(spark, dest)
-  }
-
-  private[graft] def readRefsMeta(
-      spark: SparkSession, table: String): (Int, Long) = {
-    val r = ParquetMemo.metaHead(spark, refsMetaPath(table))
-    (r.getAs[Int]("planes"), r.getAs[Long]("seed"))
-  }
+      writeSalt: Int = 1): Unit =
+    build(spark, table, refsPath(table), idCol, vecCol, planes, seed)(
+      rows => saltedRefs(rows.drop("embedding"), writeSalt))
 
   /** O(delta) maintenance of the refs sidecar — [[refresh]] on the
     * embedding-free rows. */
@@ -224,29 +188,13 @@ object LshIndex {
       table: String,
       idCol: String = "vec_id",
       vecCol: String = "embedding",
-      writeSalt: Int = 1): Unit = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, refsPath(table))
-    Seq(refsMetaPath(table), refsPath(table)).foreach(p =>
-      require(fs.exists(new Path(p)),
-        s"no LSH refs index at $p — bootstrap with collectRefs()"))
-    val (planes, seed) = readRefsMeta(spark, table)
-    val plan = SidecarMaintenance.planDelta(spark, refsPath(table),
-      BloomIndex.dataFilePaths(spark, table).toSet)
-    val freshSigned =
-      if (plan.fresh.isEmpty) None
-      else {
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        val fa0 = signFiles(spark, table, plan.fresh, idCol, vecCol,
-            planes, seed).drop("embedding")
-        val fa = if (hint.isDefined) fa0 else fa0.localCheckpoint(true)
-        IvfIndex.guardFreshAgainstKept(spark, fa, refsPath(table), plan, hint)
-        Some(fa)
-      }
-    SidecarMaintenance.applyDelta(spark, refsPath(table), plan,
-      freshSigned, Seq("bucket"), saltedRefs(_, writeSalt),
-      statsCol = Some("vec_id"))
-  }
+      writeSalt: Int = 1): Unit =
+    SidecarMaintenance.refreshDelta(spark, table, refsPath(table),
+      Seq(refsMetaPath(table), refsPath(table)), "LSH refs index",
+      "collectRefs()", idCol, "vec_id", Seq("bucket"), saltedRefs(_, writeSalt))({
+      val (planes, seed) = modelAt(spark, refsMetaPath(table))
+      signFiles(spark, table, _, idCol, vecCol, planes, seed).drop("embedding")
+    })(IvfIndex.vectorGuard(spark, refsPath(table)))
 
   /** Size-tiered amortizer for the refs sidecar (unsalted merge —
     * see [[compactSmall]]). */
@@ -287,16 +235,11 @@ object LshIndex {
       filesPerBucket: Int = 1): Unit = {
     require(filesPerBucket >= 1,
       s"filesPerBucket ($filesPerBucket) must be >= 1")
-    require(planes >= 1 && planes <= 12,
-      s"bucket directories number 2^planes; planes=$planes")
-    spark.read.parquet(table)
+    requirePlanes(planes)
+    IvfIndex.writeClustered(spark.read.parquet(table)
       .withColumn("__bucket",
-        VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed))
-      .repartitionByRange((1 << planes) * filesPerBucket,
-        col("__bucket"), col(idCol))
-      .sortWithinPartitions(col("__bucket"), col(idCol))
-      .drop("__bucket")
-      .write.mode(SaveMode.Overwrite).parquet(dest)
+        VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed)),
+      "__bucket", idCol, (1 << planes) * filesPerBucket, dest, SaveMode.Overwrite)
     collectRefs(spark, dest, idCol, vecCol, planes, seed)
   }
 
@@ -319,23 +262,17 @@ object LshIndex {
       filesPerBucket: Int = 1): Unit = {
     require(filesPerBucket >= 1,
       s"filesPerBucket ($filesPerBucket) must be >= 1")
-    val (planes, seed) = readRefsMeta(spark, dest)
+    val (planes, seed) = modelAt(spark, refsMetaPath(dest))
     // Reject duplicate-id batches BEFORE the (un-journaled,
     // nondeterministically-named) corpus append mutates dest — see
     // [[IvfIndex.clusterAppend]]'s pre-check for the rationale,
     // including the vanish-aware kept side (a purge-rewritten file's
     // ids legitimately reappear fresh).
-    IvfIndex.requireNoVectorClash(
-      batch.select(col(idCol).as("vec_id")),
-      Some(IvfIndex.clusterAppendKeptRefs(spark, dest, refsPath(dest))))
-    batch
+    IvfIndex.requireNewIds(spark, dest, refsPath(dest), batch, idCol)
+    IvfIndex.writeClustered(batch
       .withColumn("__bucket",
-        VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed))
-      .repartitionByRange((1 << planes) * filesPerBucket,
-        col("__bucket"), col(idCol))
-      .sortWithinPartitions(col("__bucket"), col(idCol))
-      .drop("__bucket")
-      .write.mode(SaveMode.Append).parquet(dest)
+        VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed)),
+      "__bucket", idCol, (1 << planes) * filesPerBucket, dest, SaveMode.Append)
     refreshRefs(spark, dest, idCol, vecCol)
   }
 
@@ -357,66 +294,14 @@ object LshIndex {
       probeRadius: Int = 1,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    // ONE committed-snapshot resolution serves both refs reads below
+    // ONE committed-snapshot resolution serves both refs reads
     // ([[SidecarMaintenance.snapshotRead]]): the probe runs THROUGH a
     // live refresh's commit window on the pre-commit truth
     val refsSnap = SidecarMaintenance.snapshotRead(spark, refsPath(table))
-    val (planes, seed) = readRefsMeta(spark, table)
-    require(probeRadius >= 0 && probeRadius <= planes,
-      s"probeRadius ($probeRadius) must be in [0, planes=$planes]")
-    val masks = (0 until (1 << planes))
-      .filter(m => java.lang.Integer.bitCount(m) <= probeRadius)
-    val probes = expr(
-      s"transform(array(${masks.mkString(",")}), m -> sig0 ^ CAST(m AS BIGINT))")
-    // probe set collected ONCE (driver-bounded by contract: queries ×
-    // Hamming ball) and re-joined as a LocalRelation — replaces the
-    // localCheckpoint + distinct-collect + broadcast-build jobs
-    val qPlan = queries
-      .withColumn("sig0",
-        VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed))
-      .withColumn("bucket", explode(probes))
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"), col("bucket"))
-    val qRows = qPlan.collect()
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qPlan.schema)
-    val probedBuckets = qRows.map(_.getLong(2).toInt).distinct
-    val candidates = refsSnap
-      .where(col("bucket").isin(probedBuckets: _*))
-      .select(col("vec_id").as("neighbor_id"), col("bucket"))
-      .join(broadcast(q), Seq("bucket"))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .select("q_id", "q_vec", "neighbor_id")
-    // file set from its own partition-pruned refs scan (keeps the
-    // bucket PartitionFilters visible in the candidates plan).
-    // Vanished corpus files a stale refs index still names are
-    // reconciled EXCEPTION-DRIVEN
-    // ([[SidecarMaintenance.readCandidateFiles]]): zero extra
-    // metadata RPCs in the steady state, one batched corpus listing
-    // + retry only when a path actually vanished. Dropped files'
-    // candidates score absent, exactly as the full-table read served
-    // them.
-    val candFiles = refsSnap
-      .where(col("bucket").isin(probedBuckets: _*))
-      .select("file").distinct().as[String]
-      .collect().toSeq.sorted
-    val corpusRead =
-      SidecarMaintenance.readCandidateFiles(spark, table, candFiles)
-    if (corpusRead.isEmpty)
-      // same schema as the non-empty path, zero rows
-      return q.select(col("q_id"), col("q_id").as("neighbor_id"))
-        .withColumn("rank", lit(0L)).limit(0)
-    val corpus = corpusRead.get
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = candidates.join(corpus, Seq("neighbor_id"))
-      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored
-      .select(col("q_id"), col("neighbor_id"), col("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rank"))
+    val (q, probedBuckets) = probeSet(spark, queries,
+      modelAt(spark, refsMetaPath(table)), probeRadius, idCol, vecCol)
+    IvfIndex.probeTopK(spark, table, refsSnap, "bucket", probedBuckets, q, k,
+      refs = true, idCol, vecCol)
   }
 
   /** Multi-probe search off the persisted buckets: each query probes
@@ -434,41 +319,42 @@ object LshIndex {
     // committed-snapshot read: serves through a live commit window
     // ([[SidecarMaintenance.snapshotRead]])
     val bucketsSnap = SidecarMaintenance.snapshotRead(spark, bucketsPath(table))
-    val (planes, seed) = readMeta(spark, table)
+    val (q, probedBuckets) = probeSet(spark, queries, readMeta(spark, table),
+      probeRadius, idCol, vecCol)
+    IvfIndex.probeTopK(spark, table, bucketsSnap, "bucket", probedBuckets, q, k,
+      refs = false, idCol, vecCol)
+  }
+
+  /** The probe set of a query batch: every query (q_id, q_vec) with
+    * each bucket within Hamming radius `probeRadius` of its home
+    * signature under `model` (planes, seed), and the distinct probed
+    * buckets. Collected ONCE (driver-bounded by contract: queries ×
+    * Hamming ball) and re-joined as a LocalRelation — replaces the
+    * localCheckpoint + distinct-collect + broadcast-build jobs. The
+    * buckets are INTEGER, the type partition inference reads
+    * `bucket=N` directories back as: a long literal would wrap the
+    * partition column in a cast and kill the pruning. */
+  private def probeSet(
+      spark: SparkSession,
+      queries: DataFrame,
+      model: (Int, Long),
+      probeRadius: Int,
+      idCol: String,
+      vecCol: String): (DataFrame, Seq[Any]) = {
+    val (planes, seed) = model
     require(probeRadius >= 0 && probeRadius <= planes,
       s"probeRadius ($probeRadius) must be in [0, planes=$planes]")
     val masks = (0 until (1 << planes))
       .filter(m => java.lang.Integer.bitCount(m) <= probeRadius)
     val probes = expr(
       s"transform(array(${masks.mkString(",")}), m -> sig0 ^ CAST(m AS BIGINT))")
-    // probe set collected ONCE and re-joined as a LocalRelation —
-    // replaces the localCheckpoint + distinct-collect +
-    // broadcast-build jobs (see [[topKRefs]])
     val qPlan = queries
       .withColumn("sig0",
         VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed))
       .withColumn("bucket", explode(probes))
       .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"), col("bucket"))
     val qRows = qPlan.collect()
-    val q = spark.createDataFrame(
-      java.util.Arrays.asList(qRows: _*), qPlan.schema)
-    // partition-column type inference reads `bucket=N` directories
-    // back as INTEGER; the probe literals must match that type or the
-    // implicit cast wraps the partition column and kills the pruning
-    val probedBuckets = qRows.map(_.getLong(2).toInt).distinct
-    val scored = bucketsSnap
-      .where(col("bucket").isin(probedBuckets: _*))
-      .select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("c_vec"), col("bucket"))
-      .join(broadcast(q), Seq("bucket"))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored
-      .select(col("q_id"), col("neighbor_id"), col("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rank"))
+    (spark.createDataFrame(java.util.Arrays.asList(qRows: _*), qPlan.schema),
+      qRows.map(_.getLong(2).toInt).distinct.toSeq)
   }
 }

@@ -2,7 +2,6 @@ package graft.sinks
 
 import graft.ext.PqSearch
 import graft.functions.{PqAdcScore, PqCodebooks, PqEncode, PqLut, VectorFunctions}
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,7 +62,7 @@ object PqIndex {
     * no-count sample (via [[PqSearch.buildIndex]]), one codegen'd
     * encode pass; codes and codebooks built under `_pq_codes.next`
     * and published by the crash-recoverable [[DirSwap]]
-    * ([[SidecarMaintenance.publishDir]]). */
+    * ([[SidecarMaintenance.rebuild]]). */
   def collect(
       spark: SparkSession,
       table: String,
@@ -73,28 +72,15 @@ object PqIndex {
       ks: Int = 16,
       iters: Int = 10,
       seed: Long = 42L,
-      buckets: Int = 4): Unit = {
-    import spark.implicits._
-    val corpus = ParquetMemo.readDir(spark, table)
-      .select(col("_metadata.file_path").as("file"),
-        col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val idx = PqSearch.buildIndex(corpus, m, ks, iters, seed)
-    val cb = idx.codebooks
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dest = codesPath(table)
-    SidecarMaintenance.recoverPublish(spark, dest)
-    val next = s"$dest.next"
-    fs.delete(new Path(next), true)
-    val rows = clustered(idx.encoded, buckets)
-    rows.write.mode(SaveMode.Overwrite).parquet(next)
-    Seq((cb.m, cb.ks, cb.dsub, cb.flat))
-      .toDF("m", "ks", "dsub", "flat").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$next/_codebooks")
-    IvfIndex.requireOneRowPerVector(
-      ParquetMemo.readDir(spark, next),
-      onTrip = { fs.delete(new Path(next), true) })
-    SidecarMaintenance.publishDir(spark, dest)
-  }
+      buckets: Int = 4): Unit =
+    SidecarMaintenance.rebuild(spark, codesPath(table)) { next =>
+      import spark.implicits._
+      val idx = PqSearch.buildIndex(IvfIndex.corpusOf(spark, table, idCol, vecCol),
+        m, ks, iters, seed)
+      val cb = idx.codebooks
+      IvfIndex.fillVectors(spark, next, clustered(idx.encoded, buckets), Nil,
+        "_codebooks", Seq((cb.m, cb.ks, cb.dsub, cb.flat)).toDF("m", "ks", "dsub", "flat"))
+    }
 
   private[graft] def readCodebooks(spark: SparkSession, table: String): PqCodebooks = {
     // listing-signature memo — zero Spark jobs in the steady state
@@ -116,35 +102,17 @@ object PqIndex {
       buckets: Int = 4,
       appendedOnly: Option[Set[String]] = None,
       replaced: Set[String] = Set.empty,
-      replacedPrefixes: Seq[String] = Nil): Unit = {
-    val fs = new Path(table).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, codesPath(table))
-    Seq(codebooksPath(table), codesPath(table)).foreach(p =>
-      require(fs.exists(new Path(p)),
-        s"no PQ index at $p — bootstrap with collect()"))
-    val plan = appendedOnly match {
-      case Some(c) => SidecarMaintenance.planAppend(spark, codesPath(table),
-        c, replaced, replacedPrefixes)
-      case None => SidecarMaintenance.planDelta(spark, codesPath(table),
-        BloomIndex.dataFilePaths(spark, table).toSet)
-    }
-    val freshCodes =
-      if (plan.fresh.isEmpty) None
-      else {
-        val cb = readCodebooks(spark, table)
-        val hint = SidecarMaintenance.footerIdRange(spark, plan.fresh, idCol)
-        val fc0 = ParquetMemo.readFiles(spark, table, plan.fresh)
-          .select(col("_metadata.file_path").as("file"),
-            col(idCol).as("vec_id"),
-            PqEncode(col(vecCol), cb).as("__codes"))
-        val fc = if (hint.isDefined) fc0 else fc0.localCheckpoint(true)
-        IvfIndex.guardFreshAgainstKept(spark, fc, codesPath(table), plan, hint)
-        Some(fc)
-      }
-    SidecarMaintenance.applyDelta(spark, codesPath(table), plan,
-      freshCodes, Seq.empty, clustered(_, buckets),
-      statsCol = Some("vec_id"))
-  }
+      replacedPrefixes: Seq[String] = Nil): Unit =
+    SidecarMaintenance.refreshDelta(spark, table, codesPath(table),
+      Seq(codebooksPath(table), codesPath(table)), "PQ index", "collect()",
+      idCol, "vec_id", Nil, clustered(_, buckets),
+      appendedOnly, replaced, replacedPrefixes)({ fresh =>
+      val cb = readCodebooks(spark, table)
+      ParquetMemo.readFiles(spark, table, fresh)
+        .select(col("_metadata.file_path").as("file"),
+          col(idCol).as("vec_id"),
+          PqEncode(col(vecCol), cb).as("__codes"))
+    })(IvfIndex.vectorGuard(spark, codesPath(table)))
 
   /** Repack the WHOLE codes sidecar — explicit offline op; the
     * streaming-cadence amortizer is [[compactSmall]]. */
@@ -202,15 +170,10 @@ object PqIndex {
     val corpusVecs = ParquetMemo.readDir(spark, table)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
         VectorFunctions.norm(col(vecCol)).as("c_nrm"))
-    val wCos = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    corpusVecs.join(broadcast(cands), Seq("neighbor_id"))
+    IvfIndex.rankByCosine(corpusVecs.join(broadcast(cands), Seq("neighbor_id"))
       .join(qVec, Seq("q_id"))
       .withColumn("cos",
         VectorFunctions.dot(col("q_vec"), col("c_vec"))
-          / (col("q_nrm") * col("c_nrm")))
-      .withColumn("rank", row_number().over(wCos).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rank"))
+          / (col("q_nrm") * col("c_nrm"))), k)
   }
 }

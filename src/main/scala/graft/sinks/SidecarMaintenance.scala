@@ -72,31 +72,48 @@ object SidecarMaintenance {
       dir: String,
       owner: String = java.util.UUID.randomUUID().toString): Unit = {
     val lease = leasePath(dir)
-    // EXCLUSIVE create is the mutex. HDFS and object stores make
-    // fs.create(path, overwrite=false) atomic server-side; the LOCAL
-    // filesystems' implementation is check-then-act, which under two
-    // racing acquirers can succeed TWICE (both saw "absent") — route
-    // local schemes through POSIX O_EXCL (nio createFile), which the
-    // kernel serializes.
+    val ownerBytes = owner.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    def localFile(p: Path): Option[java.io.File] = fs match {
+      case l: org.apache.hadoop.fs.LocalFileSystem => Some(l.pathToFile(p))
+      case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(r.pathToFile(p))
+      case _ => None
+    }
+    // `src` moved to `dst` unless `dst` exists. The local filesystems'
+    // rename REPLACES an existing target, so there the move is a hard
+    // link, which the kernel refuses atomically when `dst` exists, then
+    // an unlink of `src`; HDFS and object stores refuse a rename onto
+    // an existing path themselves.
+    def moveNoReplace(src: Path, dst: Path): Boolean =
+      (localFile(src), localFile(dst)) match {
+        case (Some(s), Some(d)) =>
+          try {
+            java.nio.file.Files.createLink(d.toPath, s.toPath)
+            java.nio.file.Files.delete(s.toPath)
+            true
+          } catch { case _: java.io.IOException => false }
+        case _ =>
+          try fs.rename(src, dst)
+          catch { case _: java.io.IOException => false }
+      }
+    // EXCLUSIVE create is the mutex, and the lease is born holding its
+    // owner id. HDFS and object stores make fs.create(path,
+    // overwrite=false) atomic server-side; the LOCAL filesystems'
+    // implementation is check-then-act, which under two racing
+    // acquirers can succeed TWICE — there the id is written to a
+    // unique sibling and published with [[moveNoReplace]]'s link.
     def create(): Unit = {
       fs.mkdirs(new Path(dir))
-      val localFile = fs match {
-        case l: org.apache.hadoop.fs.LocalFileSystem => Some(l.pathToFile(lease))
-        case r: org.apache.hadoop.fs.RawLocalFileSystem => Some(r.pathToFile(lease))
-        case _ => None
-      }
-      localFile match {
-        case Some(f) =>
-          try java.nio.file.Files.createFile(f.toPath)
-          catch {
-            case e: java.nio.file.FileAlreadyExistsException =>
-              throw new java.io.IOException(s"lease exists: $lease", e)
+      localFile(lease) match {
+        case Some(_) =>
+          val tmp = new Path(dir, s"_maint_lease.new-${java.util.UUID.randomUUID()}")
+          java.nio.file.Files.write(localFile(tmp).get.toPath, ownerBytes)
+          if (!moveNoReplace(tmp, lease)) {
+            java.nio.file.Files.deleteIfExists(localFile(tmp).get.toPath)
+            throw new java.io.IOException(s"lease exists: $lease")
           }
-          java.nio.file.Files.write(f.toPath,
-            owner.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         case None =>
           val out = fs.create(lease, false)
-          try out.write(owner.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          try out.write(ownerBytes)
           finally out.close()
       }
     }
@@ -106,26 +123,14 @@ object SidecarMaintenance {
       try System.currentTimeMillis() -
         fs.getFileStatus(lease).getModificationTime < leaseGraceMs
       catch { case _: java.io.FileNotFoundException => false } // released
-    def holder: String =
+    def ownerOf(p: Path): String =
       try {
-        val in = fs.open(lease)
+        val in = fs.open(p)
         val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
         if (s.isEmpty) "<unrecorded>" else s
       } catch { case _: java.io.IOException => "<unrecorded>" }
-    // a refusal can race the holder's create→write window (the file
-    // exists before its owner id is flushed) — poll briefly so the
-    // error NAMES a live holder instead of reporting <unrecorded>;
-    // a genuinely unrecorded lease (pre-owner-id writer, a bare
-    // test fixture) still reports as such after the wait
-    def namedHolder: String = {
-      var h = holder
-      var waited = 0
-      while (h == "<unrecorded>" && waited < 20) {
-        Thread.sleep(100); waited += 1; h = holder
-      }
-      h
-    }
+    def holder: String = ownerOf(lease)
     try create()
     catch {
       case _: java.io.IOException =>
@@ -140,7 +145,7 @@ object SidecarMaintenance {
         // time on rename).
         val orphanOwner = holder
         require(!inFlight && !young,
-          s"another maintainer ($namedHolder) holds the commit lease at " +
+          s"another maintainer ($holder) holds the commit lease at " +
             s"$lease — sidecar maintenance is single-writer: serialize " +
             "maintainers (a crashed run heals through recover(), which " +
             "consumes its journal and staging first; its lease expires " +
@@ -166,26 +171,17 @@ object SidecarMaintenance {
         // there a young claim is someone's live lease. Either failure
         // puts the file back and refuses.
         if (claimed) {
-          def claimOwner: String =
-            try {
-              val in = fs.open(claim)
-              val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-              if (s.isEmpty) "<unrecorded>" else s
-            } catch { case _: java.io.IOException => "<unrecorded>" }
           val claimAge =
             try System.currentTimeMillis() -
               fs.getFileStatus(claim).getModificationTime
             catch { case _: java.io.FileNotFoundException => Long.MaxValue }
           val isOrphan =
-            if (orphanOwner != "<unrecorded>") claimOwner == orphanOwner
+            if (orphanOwner != "<unrecorded>") ownerOf(claim) == orphanOwner
             else claimAge >= leaseGraceMs
           if (!isOrphan) {
-            val restored =
-              try fs.rename(claim, lease)
-              catch { case _: java.io.IOException => false }
+            val restored = moveNoReplace(claim, lease)
             require(requirement = false,
-              s"another maintainer (${if (restored) namedHolder else holder}) " +
+              s"another maintainer ($holder) " +
                 s"re-acquired the commit lease at $lease during our orphan " +
                 "takeover — sidecar maintenance is single-writer; let the " +
                 "winner's commit finish" +
@@ -201,16 +197,14 @@ object SidecarMaintenance {
           // within moments (claim → delete → create is three local
           // metadata ops); (b) the live holder RELEASED it between
           // our failed create and the rename — the lease stays
-          // absent. Wait out (a) FIRST: attempting the create
-          // immediately would race the winner's own re-create on
-          // filesystems whose exclusive create is check-then-act
-          // (local FS; real stores are atomic) and let both proceed.
+          // absent. Wait out (a) FIRST, so the breaker that won the
+          // claim is the one that re-creates the lease.
           var waited = 0
           while (!fs.exists(lease) && waited < 20) {
             Thread.sleep(100); waited += 1
           }
           require(!fs.exists(lease),
-            s"another maintainer ($namedHolder) won the orphan takeover " +
+            s"another maintainer ($holder) won the orphan takeover " +
               s"of the commit lease at $lease — sidecar maintenance " +
               "is single-writer; let the winner's commit finish")
           // released: the lease is free — same exclusive create as
@@ -219,7 +213,7 @@ object SidecarMaintenance {
           catch {
             case _: java.io.IOException =>
               require(requirement = false,
-                s"another maintainer ($namedHolder) took the commit " +
+                s"another maintainer ($holder) took the commit " +
                   s"lease at $lease after its holder released it — " +
                   "sidecar maintenance is single-writer")
           }
@@ -234,7 +228,7 @@ object SidecarMaintenance {
         catch {
           case _: java.io.IOException =>
             require(requirement = false,
-              s"another maintainer ($namedHolder) took the commit lease at " +
+              s"another maintainer ($holder) took the commit lease at " +
                 s"$lease between our orphan claim and re-create — " +
                 "sidecar maintenance is single-writer")
         }
@@ -707,7 +701,7 @@ object SidecarMaintenance {
     * batch's deterministic name prefix vanishes every covered entry
     * any attempt of the batch produced, whatever this attempt
     * observed. */
-  def planAppend(
+  private def planAppend(
       spark: SparkSession,
       dir: String,
       candidates: Set[String],
@@ -1259,6 +1253,108 @@ object SidecarMaintenance {
     commitDelta(spark, dir, newRows, doomed, partCols, statsCol)
   }
 
+  /** The one refresh of a delta-maintained index (IVF cells and refs,
+    * LSH buckets and refs, PQ codes, inverted postings), in one order:
+    *  1. heal an interrupted rebuild publish, so a parked index is
+    *     restored instead of failing the next check;
+    *  2. require every `required` path (the index `dir` and the model
+    *     its fresh rows are built from), naming the `index` and its
+    *     `bootstrap` call;
+    *  3. plan the delta: exactly the `appendedOnly` candidates through
+    *     [[planAppend]] (no corpus listing, no vanish detection), else
+    *     the listed corpus through [[planDelta]];
+    *  4. take the fresh corpus files' `idCol` bounds from their
+    *     footers ([[footerIdRange]], no job);
+    *  5. build the fresh rows with `fresh` (evaluated once, after step
+    *     2, so a model read fails as "no index" when there is none),
+    *     checkpointed only without footer bounds: the guard's
+    *     aggregation form reads them several times, its one-job form
+    *     once, and the staging write then re-derives them cheaply;
+    *  6. `guard(rows, plan, bounds)` before any mutation — a trip
+    *     leaves the live index untouched;
+    *  7. [[applyDelta]] with `partCols`, `layout` and `statsCol`.
+    * Each phase's jobs run as `sidecar: plan|guard|apply <dir>`. */
+  def refreshDelta(
+      spark: SparkSession,
+      table: String,
+      dir: String,
+      required: Seq[String],
+      index: String,
+      bootstrap: String,
+      idCol: String,
+      statsCol: String,
+      partCols: Seq[String],
+      layout: DataFrame => DataFrame,
+      appendedOnly: Option[Set[String]] = None,
+      replaced: Set[String] = Set.empty,
+      replacedPrefixes: Seq[String] = Nil)(
+      fresh: => Seq[String] => DataFrame)(
+      guard: (DataFrame, DeltaPlan, Option[(Long, Long)]) => Unit): Unit = {
+    def phase[T](name: String)(body: => T): T =
+      graft.core.Jobs.described(spark, s"sidecar: $name ${new Path(dir).getName}")(body)
+    val (plan, build) = phase("plan") {
+      recoverPublish(spark, dir)
+      val fs = fsFor(spark, dir)
+      required.foreach(p => require(fs.exists(new Path(p)),
+        s"no $index at $p — bootstrap with $bootstrap"))
+      val build = fresh
+      (appendedOnly match {
+        case Some(c) => planAppend(spark, dir, c, replaced, replacedPrefixes)
+        case None => planDelta(spark, dir, BloomIndex.dataFilePaths(spark, table).toSet)
+      }, build)
+    }
+    val rows =
+      if (plan.fresh.isEmpty) None
+      else phase("guard") {
+        val bounds = footerIdRange(spark, plan.fresh, idCol)
+        val built = build(plan.fresh)
+        val rows = if (bounds.isDefined) built else built.localCheckpoint(true)
+        guard(rows, plan, bounds)
+        Some(rows)
+      }
+    phase("apply")(applyDelta(spark, dir, plan, rows, partCols, layout, Some(statsCol)))
+  }
+
+  /** Rebuild, through [[rebuild]], an index of one row per corpus data
+    * file of `table` (`_stats`, `_bloom`): `rowsOf(files, index)`
+    * builds the rows of `files`. A `refresh` over an existing index
+    * carries the rows of files still present verbatim (file
+    * immutability makes that sound), drops vanished files' rows and
+    * builds rows only for the files it lacks, passing the current
+    * index; anything else builds every file's rows with `index` None.
+    * A refresh that finds no index fails with `missing` when given. */
+  private[sinks] def rebuildPerFile(
+      spark: SparkSession,
+      table: String,
+      dest: String,
+      refresh: Boolean,
+      missing: Option[String] = None)(
+      rowsOf: (Seq[String], Option[DataFrame]) => DataFrame): Unit =
+    rebuild(spark, dest) { next =>
+      import spark.implicits._
+      val indexed = refresh && fsFor(spark, dest).exists(new Path(dest))
+      for (m <- missing if refresh && !indexed) require(requirement = false, m)
+      val files = BloomIndex.dataFilePaths(spark, table)
+      val rows =
+        if (!indexed) {
+          require(files.nonEmpty, s"no data files under $table")
+          rowsOf(files, None)
+        } else {
+          // bounded collect: one row per data file — the same
+          // O(#files) scale as the directory listing itself
+          val existing = spark.read.parquet(dest).localCheckpoint(true)
+          val have = existing.select("file").collect().map(_.getString(0)).toSet
+          val current = files.toSet
+          val fresh = (current -- have).toSeq.sorted
+          // anti-join on the (small) vanished set — never a
+          // file-count-sized IN expression
+          val kept = existing.join(
+            broadcast((have -- current).toSeq.toDF("file")), Seq("file"), "left_anti")
+          if (fresh.isEmpty) kept else kept.unionByName(rowsOf(fresh, Some(existing)))
+        }
+      rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(next)
+    }
+
   /** Spread a partition-dir write across `writeSalt` tasks PER
     * partition value while keeping the `part=` directory layout —
     * without the salt, write parallelism is capped at the
@@ -1285,7 +1381,7 @@ object SidecarMaintenance {
   }
 
   /** Completes or rolls back an interrupted [[commitDelta]] (or
-    * [[publishDir]]). Publish healing runs first: a rebuild crash can
+    * [[rebuild]] publish). Publish healing runs first: a rebuild crash can
     * leave the sidecar itself renamed aside, and the journal (if any)
     * rode along inside it. */
   def recover(spark: SparkSession, dir: String): Unit = {
@@ -1443,14 +1539,26 @@ object SidecarMaintenance {
   private val Publish =
     DirSwap(".next", ".old", PublishMarker, rollForwardOverLive = true)
 
-  /** Publish a fully-built, guard-passed `<dest>.next` over `dest`. */
-  def publishDir(spark: SparkSession, dest: String): Unit =
-    Publish.commit(fsFor(spark, dest), dest)
+  /** The one full rebuild of an index directory: heal an interrupted
+    * publish, drop a stale `<dest>.next`, `fill` it (the fill's jobs
+    * run as `sidecar: build <dest>`), and publish it over `dest`. A
+    * fill that throws — a failed job or a layout-guard trip — deletes
+    * `.next` and rethrows, so the previous index keeps serving and
+    * nothing unchecked can be rolled forward. */
+  def rebuild(spark: SparkSession, dest: String)(fill: String => Unit): Unit = {
+    val fs = fsFor(spark, dest)
+    val next = Publish.staging(dest)
+    recoverPublish(spark, dest)
+    fs.delete(new Path(next), true)
+    try graft.core.Jobs.described(spark, s"sidecar: build ${new Path(dest).getName}")(fill(next))
+    catch { case e: Throwable => fs.delete(new Path(next), true); throw e }
+    Publish.commit(fs, dest)
+  }
 
-  /** Heal any interrupted [[publishDir]] around `dest` — called on
-    * entry by every maintenance operation (refresh / compact /
+  /** Heal any interrupted [[rebuild]] publish around `dest` — called
+    * on entry by every maintenance operation (refresh / compact /
     * collect), so "the next maintenance entry restores a serving
     * index" holds for every crash point of a rebuild. */
-  def recoverPublish(spark: SparkSession, dest: String): Unit =
+  private def recoverPublish(spark: SparkSession, dest: String): Unit =
     Publish.recover(fsFor(spark, dest), dest)
 }

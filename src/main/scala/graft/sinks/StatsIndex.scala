@@ -1,7 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-file min/max statistics index for a lake table — the
@@ -62,64 +61,22 @@ object StatsIndex {
           min(col(c)).as(s"min_$c"),
           max(col(c)).as(s"max_$c"))): _*)
 
-  private def dataFilePaths(spark: SparkSession, table: String): Seq[String] = {
-    val dir = new Path(table)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Hive-partitioned tables nest files one level down; both layouts
-    // share the hidden-file convention (`_`/`.` prefixes skipped).
-    def visible(p: Path): Boolean =
-      !p.getName.startsWith("_") && !p.getName.startsWith(".")
-    fs.listStatus(dir).toSeq.filter(s => visible(s.getPath)).flatMap { s =>
-      if (s.isDirectory)
-        fs.listStatus(s.getPath).toSeq
-          .filter(f => f.isFile && visible(f.getPath))
-          .map(_.getPath.toString)
-      else Seq(s.getPath.toString)
-    }.sorted
-  }
-
-  /** Full (re)build of the index: one scan of the table. */
-  def collect(spark: SparkSession, table: String, cols: Seq[String]): Unit = {
-    val files = dataFilePaths(spark, table)
-    require(files.nonEmpty, s"no data files under $table")
-    statsOf(spark, table, files, cols)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(indexPath(table))
-  }
+  /** Full (re)build of the index: one scan of the table, published
+    * through the recoverable swap of [[SidecarMaintenance.rebuild]]. */
+  def collect(spark: SparkSession, table: String, cols: Seq[String]): Unit =
+    SidecarMaintenance.rebuildPerFile(spark, table, indexPath(table), refresh = false)(
+      (files, _) => statsOf(spark, table, files, cols))
 
   /** Incremental maintenance: stats are collected ONLY for files not
     * yet in the index; rows for vanished files (compaction, merge
     * swap) are dropped; surviving rows are carried verbatim — file
     * immutability makes that sound, and the poisoned-row spec proves
     * no old file is rescanned. Cost is O(new files) + one tiny index
-    * rewrite, published through the recoverable swap of
-    * [[SidecarMaintenance.publishDir]] and healed on entry. */
-  def refresh(spark: SparkSession, table: String, cols: Seq[String]): Unit = {
-    val idx = indexPath(table)
-    val fs = new Path(table)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    SidecarMaintenance.recoverPublish(spark, idx)
-    if (!fs.exists(new Path(idx))) { collect(spark, table, cols); return }
-    val current = dataFilePaths(spark, table).toSet
-    // Bounded collect: one (file, …stats) row per data file — the
-    // same O(#files) scale as the directory listing itself.
-    val existing = spark.read.parquet(idx).localCheckpoint(true)
-    val indexed = existing.select("file").collect().map(_.getString(0)).toSet
-    val fresh = (current -- indexed).toSeq.sorted
-    // anti-join on the (small) vanished set — never a
-    // file-count-sized IN expression
-    val kept = {
-      import spark.implicits._
-      existing.join(
-        broadcast((indexed -- current).toSeq.toDF("file")),
-        Seq("file"), "left_anti")
-    }
-    val merged =
-      if (fresh.isEmpty) kept
-      else kept.unionByName(statsOf(spark, table, fresh, cols))
-    merged.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$idx.next")
-    SidecarMaintenance.publishDir(spark, idx)
-  }
+    * rewrite ([[SidecarMaintenance.rebuildPerFile]]). Without an
+    * index it is [[collect]]. */
+  def refresh(spark: SparkSession, table: String, cols: Seq[String]): Unit =
+    SidecarMaintenance.rebuildPerFile(spark, table, indexPath(table), refresh = true)(
+      (files, _) => statsOf(spark, table, files, cols))
 
   /** Files whose `[min, max]` interval for `column` can intersect
     * `[lo, hi]` — all-null files (`min`/`max` NULL) are pruned, which

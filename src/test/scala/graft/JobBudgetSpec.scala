@@ -2,7 +2,10 @@ package graft
 
 import graft.core.{Clock, DatasetRef, LakePaths, Meter}
 import graft.operators.IncrementalPromote
-import graft.sinks.MergeUpsert
+import graft.queries.Fixtures
+import graft.sinks.{BloomIndex, InvertedIndex, IvfIndex, LshIndex, MergeUpsert, PqIndex, StatsIndex}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The job budget: the exact number of Spark jobs a public engine
@@ -13,8 +16,16 @@ class JobBudgetSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  private val sf = "/root/testdata/sf0.001"
+
   private def assertJobs(r: Meter.Reading, expected: Int): Unit =
     assert(r.jobs.size === expected, r.labels.mkString("\n"))
+
+  /** A build or refresh: `expected` jobs, each with a description. */
+  private def assertBuild(r: Meter.Reading, expected: Int): Unit = {
+    assertJobs(r, expected)
+    assert(r.jobs.forall(_.description.nonEmpty), r.labels.mkString("\n"))
+  }
 
   test("IncrementalPromote.run merging one new WORK file into a stored TRUSTED") {
     val lake = LakePaths(SparkTestSession.tmp("budget-promote").toString)
@@ -38,5 +49,116 @@ class JobBudgetSpec extends AnyFunSuite {
       MergeUpsert.mergeInto(spark, trusted, (30L until 50L).map(i => (i, s"w$i")).toDF("sk", "v")))
     assert(spark.read.parquet(trusted).count() === 50L)
     assertJobs(r, 2)
+  }
+
+  // ── sidecar-index entries ─────────────────────────────────────────
+  // One small vector table (200 ids in 3 files) or document table,
+  // indexed, then one file appended where a refresh is counted.
+
+  private def vectors(name: String): String = {
+    val path = SparkTestSession.tmp(name).toString + "/v"
+    Fixtures.tbl(spark, sf, "embeddings").where(col("vec_id") < 200)
+      .repartition(3).write.parquet(path)
+    path
+  }
+
+  private def appendVectors(path: String): Unit =
+    Fixtures.tbl(spark, sf, "embeddings")
+      .where(col("vec_id") >= 200 && col("vec_id") < 210)
+      .coalesce(1).write.mode("append").parquet(path)
+
+  /** The probe queries, planned before the count starts. */
+  private def queries(path: String): DataFrame =
+    spark.read.parquet(path).where(col("vec_id") < 5)
+
+  /** The jobs of building and collecting `probe` once more after a
+    * warm-up run: the probe's steady state. */
+  private def steady(probe: => DataFrame): Meter.Reading = {
+    probe.collect()
+    Meter.during(spark)(probe.collect())._2
+  }
+
+  /** The jobs of `refresh` over one appended file after `index`. */
+  private def refreshed(index: String => Unit)(refresh: String => Unit): Meter.Reading = {
+    val path = vectors("budget-idx")
+    index(path)
+    appendVectors(path)
+    Meter.during(spark)(refresh(path))._2
+  }
+
+  test("IvfIndex.collect") {
+    val path = vectors("budget-ivf")
+    assertBuild(Meter.during(spark)(IvfIndex.collect(spark, path, nCells = 4))._2, 24)
+  }
+
+  test("IvfIndex.refresh over one appended file") {
+    assertBuild(refreshed(IvfIndex.collect(spark, _, nCells = 4))(IvfIndex.refresh(spark, _)), 7)
+  }
+
+  test("IvfIndex.topK collect, steady state") {
+    val path = vectors("budget-ivf-probe")
+    IvfIndex.collect(spark, path, nCells = 4)
+    val q = queries(path)
+    assertJobs(steady(IvfIndex.topK(spark, path, q, k = 5, nProbe = 2)), 4)
+  }
+
+  test("IvfIndex.refreshRefs over one appended file") {
+    assertBuild(refreshed(IvfIndex.collectRefs(spark, _, nCells = 4))(IvfIndex.refreshRefs(spark, _)), 7)
+  }
+
+  test("LshIndex.refreshRefs over one appended file") {
+    assertBuild(refreshed(LshIndex.collectRefs(spark, _, planes = 3))(LshIndex.refreshRefs(spark, _)), 7)
+  }
+
+  test("LshIndex.refresh over one appended file") {
+    assertBuild(refreshed(LshIndex.collect(spark, _, planes = 3))(LshIndex.refresh(spark, _)), 7)
+  }
+
+  test("LshIndex.topK collect, steady state") {
+    val path = vectors("budget-lsh-probe")
+    LshIndex.collect(spark, path, planes = 3)
+    val q = queries(path)
+    assertJobs(steady(LshIndex.topK(spark, path, q, k = 5, probeRadius = 1)), 4)
+  }
+
+  test("PqIndex.refresh over one appended file") {
+    assertBuild(refreshed(PqIndex.collect(spark, _, m = 8, ks = 16))(PqIndex.refresh(spark, _)), 8)
+  }
+
+  test("PqIndex.topK collect, steady state") {
+    val path = vectors("budget-pq-probe")
+    PqIndex.collect(spark, path, m = 8, ks = 16)
+    val q = queries(path)
+    assertJobs(steady(PqIndex.topK(spark, path, q, k = 5, candidateK = 20)), 6)
+  }
+
+  test("InvertedIndex.refresh over one appended file") {
+    val path = SparkTestSession.tmp("budget-inv").toString + "/d"
+    Fixtures.tbl(spark, sf, "documents").where(col("doc_id") < 40)
+      .select("doc_id", "text").repartition(2).write.parquet(path)
+    InvertedIndex.collect(spark, path, "text", "doc_id")
+    Fixtures.tbl(spark, sf, "documents").where(col("doc_id") >= 40 && col("doc_id") < 50)
+      .select("doc_id", "text").coalesce(1).write.mode("append").parquet(path)
+    assertBuild(Meter.during(spark)(InvertedIndex.refresh(spark, path, "text", "doc_id"))._2, 9)
+  }
+
+  /** Two files of (sk, v), indexed, then a third appended. */
+  private def keyed(name: String)(index: String => Unit): String = {
+    val path = SparkTestSession.tmp(name).toString + "/t"
+    (1 to 20).map(i => (s"k$i", i)).toDF("sk", "v").repartition(2).write.parquet(path)
+    index(path)
+    (21 to 30).map(i => (s"k$i", i)).toDF("sk", "v").coalesce(1)
+      .write.mode("append").parquet(path)
+    path
+  }
+
+  test("StatsIndex.refresh over one appended file") {
+    val path = keyed("budget-stats")(StatsIndex.collect(spark, _, Seq("v")))
+    assertBuild(Meter.during(spark)(StatsIndex.refresh(spark, path, Seq("v")))._2, 6)
+  }
+
+  test("BloomIndex.refresh over one appended file") {
+    val path = keyed("budget-bloom")(BloomIndex.collect(spark, _, "sk", 100L))
+    assertBuild(Meter.during(spark)(BloomIndex.refresh(spark, path, "sk"))._2, 6)
   }
 }

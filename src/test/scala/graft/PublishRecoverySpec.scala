@@ -1,6 +1,6 @@
 package graft
 
-import graft.sinks.{InvertedIndex, IvfIndex, SidecarMaintenance}
+import graft.sinks.{BloomIndex, InvertedIndex, IvfIndex, SidecarMaintenance, StatsIndex}
 import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -165,5 +165,28 @@ class PublishRecoverySpec extends AnyFunSuite {
       assert(viaIdx.nonEmpty && viaIdx === direct)
     } finally new graft.core.LakeStorage(
       spark.sparkContext.hadoopConfiguration).truncate(root)
+  }
+
+  test("a crash during a stats or bloom re-collect leaves the old index readable") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.faultfs.impl", classOf[FaultFs].getName)
+    val local = SparkTestSession.tmp("recollect").toString
+    val t = s"faultfs://$local/t"
+    (1 to 20).map(i => (s"k$i", i)).toDF("sk", "v").repartition(2).write.parquet(t)
+    StatsIndex.collect(spark, t, Seq("v"))
+    BloomIndex.collect(spark, t, "sk", 100L)
+    (21 to 30).map(i => (s"k$i", i)).toDF("sk", "v").coalesce(1)
+      .write.mode("append").parquet(t)
+    Seq[(String, () => Unit)](
+      StatsIndex.indexPath(t) -> (() => StatsIndex.collect(spark, t, Seq("v"))),
+      BloomIndex.indexPath(t) -> (() => BloomIndex.collect(spark, t, "sk", 100L))
+    ).foreach { case (idx, recollect) =>
+      // the writer dies at its first file create: the rebuilt index's
+      // job-commit marker, every data file already written
+      FaultFs.arm(local, 1, _.startsWith("create"))
+      try intercept[Exception](recollect()) finally FaultFs.disarm()
+      assert(spark.read.parquet(idx).count() === 2L,
+        s"$idx: the old index (one row per original file) must still serve")
+    }
   }
 }

@@ -736,6 +736,29 @@ class SidecarMaintenanceSpec extends AnyFunSuite {
     }
   }
 
+  test("a lease is never seen without its owner id") {
+    val dir = SparkTestSession.tmp("lease").toString
+    val fs = fsOf(dir)
+    val lease = java.nio.file.Paths.get(dir, "_maint_lease")
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val (seen, empty) = (new java.util.concurrent.atomic.AtomicLong,
+      new java.util.concurrent.atomic.AtomicLong)
+    val reader = new Thread(() => while (!done.get) {
+      try {
+        val bytes = java.nio.file.Files.readAllBytes(lease)
+        seen.incrementAndGet()
+        if (bytes.isEmpty) empty.incrementAndGet()
+      } catch { case _: java.io.IOException => () } // released
+    })
+    reader.start()
+    try (1 to 200).foreach { i =>
+      SidecarMaintenance.acquireLease(fs, dir, owner = s"maint-$i")
+      fs.delete(SidecarMaintenance.leasePath(dir), false)
+    } finally { done.set(true); reader.join() }
+    assert(seen.get > 0, "the reader never caught a held lease")
+    assert(empty.get === 0L, s"${empty.get} of ${seen.get} reads saw an empty lease")
+  }
+
   test("a second maintainer whose commit overlaps a live one fails loudly at the lease") {
     withTable() { path =>
       IvfIndex.collect(spark, path, nCells = 4)
