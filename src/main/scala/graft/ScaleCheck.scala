@@ -958,7 +958,10 @@ object ScaleCheck {
         .createTempDirectory("graft-scale-annidx").toString
       def prep(d: DataFrame, tag: String): String = {
         val p = s"$root/$tag"
-        d.repartition(8).write.parquet(p)
+        // ONE file: a local listing's order changes between two writes
+        // of the same files, a scan packs equal-sized files in listing
+        // order, and that order is the KMeans fit input's order
+        d.coalesce(1).write.parquet(p)
         graft.sinks.IvfIndex.collect(spark, p, nCells = 16)
         p
       }

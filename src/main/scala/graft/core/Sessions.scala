@@ -47,8 +47,9 @@ object Sessions {
       // maxFields=100 would silently drop those plans out of
       // whole-stage codegen (interpreted row-at-a-time, ~4x slower).
       .config("spark.sql.codegen.maxFields", "512")
-      // native whole-operator extensions (as-of join rewrite rule +
-      // planner strategy) — inert for plans that carry no marker
+      // native whole-operator extensions (as-of join rewrite rule and
+      // strategy, the ANN probes' per-query top-k strategy) — inert
+      // for plans that carry neither node
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       // `file:` lakes without libhadoop: the stock local filesystem

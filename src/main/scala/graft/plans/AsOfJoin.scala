@@ -272,6 +272,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(session => new MvRewriteRule(session))
     e.injectOptimizerRule(session => new JoinElimRule(session))
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => RankTopKStrategy)
   }
 }
 

@@ -1,11 +1,14 @@
 package graft.sinks
 
+import graft.core.Jobs
 import graft.ext.IvfSearch
 import graft.functions.VectorFunctions
+import graft.plans.RankTopK
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftglue.ColumnGlue
 import org.apache.spark.sql.types._
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -502,10 +505,9 @@ object IvfIndex {
   }
 
   /** The probe set of a query batch: every `(q_id, q_vec)` row of `q`
-    * paired with each of its `nProbe` nearest cells, and the distinct
-    * probed cells. Ranked on the driver over the memoized centroid
-    * rows, so a local query set costs no Spark job (any other costs
-    * its collect) and the probe set joins as a LocalRelation. The
+    * paired with each of its `nProbe` nearest cells. Ranked on the
+    * driver over the memoized centroid rows, so a local query set
+    * costs no Spark job (any other costs its collect). The
     * answer is bit-identical to the `row_number()` window over
     * `partitionBy(q_id).orderBy(l2Sq asc, __cell asc)` on the query ×
     * centroid cross join that it replaces:
@@ -519,10 +521,9 @@ object IvfIndex {
     *    Spark does for partition keys) ranked together.
     * Vector elements must be integral, float or double. */
   private[graft] def probeSet(
-      spark: SparkSession,
       q: DataFrame,
       centroids: (StructType, Array[Row]),
-      nProbe: Int): (DataFrame, Array[Any]) = {
+      nProbe: Int): Probes = {
     val (centSchema, centRows) = centroids
     Seq(q.schema(1), centSchema("__centroid")).foreach(f => f.dataType match {
       case ArrayType(ByteType | ShortType | IntegerType | LongType |
@@ -570,9 +571,14 @@ object IvfIndex {
       }.toArray.sortBy(p => (p._2, p._3))(nearestFirst).iterator
         .take(nProbe).map { case (r, _, cell) => Row(r.get(0), r.get(1), cell) }
     }.toArray
-    val schema = StructType(q.schema.fields :+ centSchema("__cell"))
-    (spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema),
-      rows.map(_.get(2)).distinct)
+    Probes(StructType(q.schema.fields :+ centSchema("__cell")), rows)
+  }
+
+  /** A query batch's probe set, held on the driver: `(q_id, q_vec,
+    * part)` rows, one per query and cell or bucket it probes. */
+  private[graft] final case class Probes(schema: StructType, rows: Array[Row]) {
+    /** The distinct probed cells or buckets. */
+    def parts: Seq[Any] = rows.map(_.get(2)).distinct.toSeq
   }
 
   /** Probe off the REFS sidecar: the probed cell set pushes as a
@@ -599,20 +605,19 @@ object IvfIndex {
     // duration ([[SidecarMaintenance.snapshotRead]])
     val refsSnap = SidecarMaintenance.snapshotRead(spark, refsPath(table))
     // cells ranked on the driver over the memoized centroids
-    // ([[probeSet]]): a local query set pays no job before the
-    // scoring query, and the probe set joins as a LocalRelation
-    val (probes, probedCells) = probeSet(spark,
+    // ([[probeSet]]): a local query set pays no job before the probe
+    val probes = Jobs.described(spark, s"ann: ivf refs queries $table")(probeSet(
       queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
-      ParquetMemo.metaRows(spark, refsCentroidsPath(table)), nProbe)
-    probeTopK(spark, table, refsSnap, "__cell", probedCells, probes, k,
-      refs = true, idCol, vecCol)
+      ParquetMemo.metaRows(spark, refsCentroidsPath(table)), nProbe))
+    probeTopK(spark, table, refsSnap, "__cell", probes, k, "ivf", refs = true,
+      idCol, vecCol)
   }
 
   /** Probe the persisted index: rank cells per query against the
-    * broadcast centroids, push the probed cell set as a STATIC
-    * partition filter (the probed set is bounded by queries × nProbe
-    * — query sets are small by contract, so the collect is bounded),
-    * exact cosine top-k inside the probed cells only. */
+    * memoized centroids on the driver, push the probed cell set as a
+    * STATIC partition filter (the probed set is bounded by queries ×
+    * nProbe — query sets are small by contract, so the collect is
+    * bounded), exact cosine top-k inside the probed cells only. */
   def topK(
       spark: SparkSession,
       table: String,
@@ -625,17 +630,23 @@ object IvfIndex {
     // the pre-commit truth ([[SidecarMaintenance.snapshotRead]])
     val cellsSnap = SidecarMaintenance.snapshotRead(spark, cellsPath(table))
     // driver-side cell ranking, as in [[topKRefs]]
-    val (probes, probedCells) = probeSet(spark,
+    val probes = Jobs.described(spark, s"ann: ivf queries $table")(probeSet(
       queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec")),
-      ParquetMemo.metaRows(spark, centroidsPath(table)), nProbe)
-    probeTopK(spark, table, cellsSnap, "__cell", probedCells, probes, k,
-      refs = false, idCol, vecCol)
+      ParquetMemo.metaRows(spark, centroidsPath(table)), nProbe))
+    probeTopK(spark, table, cellsSnap, "__cell", probes, k, "ivf", refs = false,
+      idCol, vecCol)
   }
 
-  /** The probe tail of the IVF and LSH indexes: the rows of the
-    * sidecar snapshot `snap` in the probed partitions (`part` in
-    * `probed`, a STATIC partition filter) pair with the `probes` rows
-    * (q_id, q_vec, part) that probe them, a query never with itself.
+  /** The probe tail of the IVF and LSH indexes, lazy: the rows of the
+    * sidecar snapshot `snap` in the probed partitions (`part` in the
+    * probed set, a STATIC partition filter) pair with the queries that
+    * probe them, a query never with itself. The pairing is a narrow
+    * generator over a literal of the driver-side probe set, so the
+    * cells or buckets sidecar plan has no exchange (no broadcast job,
+    * no adaptive re-plan). Every probe ends in the exact cosine top-k
+    * [[RankTopK]], ranked inside the tasks that score the candidates:
+    * no rank shuffle, and collecting a cells or buckets probe is ONE
+    * Spark job, labelled `ann: <family> [refs] probe <table>`.
     * Candidate vectors come from the sidecar's `embedding` column, or
     * for a refs sidecar (`refs`) from ONE corpus read of just the
     * candidate FILES, column-pruned to (id, vector) — at partial
@@ -647,55 +658,43 @@ object IvfIndex {
     * EXCEPTION-DRIVEN ([[SidecarMaintenance.readCandidateFiles]]):
     * zero extra metadata RPCs in the steady state, one batched corpus
     * listing + retry only when a path vanished; dropped files'
-    * candidates score absent. Exact cosine top-k
-    * ([[rankByCosine]]). */
+    * candidates score absent. */
   private[sinks] def probeTopK(
       spark: SparkSession,
       table: String,
       snap: DataFrame,
       part: String,
-      probed: Seq[Any],
-      probes: DataFrame,
+      probes: Probes,
       k: Int,
+      family: String,
       refs: Boolean,
       idCol: String,
       vecCol: String): DataFrame = {
     import spark.implicits._
-    val inProbed = snap.where(col(part).isin(probed: _*))
-    if (!refs) return rankByCosine(inProbed
-      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"), col(part))
-      .join(broadcast(probes), Seq(part))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec"))), k)
-    val candidates = inProbed
-      .select(col("vec_id").as("neighbor_id"), col(part))
-      .join(broadcast(probes), Seq(part))
-      .where(col("q_id") =!= col("neighbor_id"))
-      .select("q_id", "q_vec", "neighbor_id")
-    val candFiles = inProbed.select("file").distinct().as[String].collect().toSeq.sorted
-    SidecarMaintenance.readCandidateFiles(spark, table, candFiles) match {
-      case Some(corpus) => rankByCosine(candidates
+    val inProbed = snap.where(col(part).isin(probes.parts: _*))
+    val byPart = probes.rows.groupBy(_.get(2)).map { case (p, rs) =>
+      p -> rs.map(r => Row(r.get(0), r.get(1))).toSeq }
+    val queriesOf = ColumnGlue.column(Literal.create(byPart, MapType(
+      probes.schema(2).dataType, ArrayType(StructType(probes.schema.take(2))))))
+    def paired(cands: DataFrame): DataFrame =
+      cands.select(col("*"), inline(element_at(queriesOf, col(part))))
+        .where(col("q_id") =!= col("neighbor_id"))
+    val kind = if (refs) s"$family refs" else family
+    val label = s"ann: $kind probe $table"
+    if (!refs) return RankTopK.frame(paired(inProbed
+      .select(col("vec_id").as("neighbor_id"), col("embedding").as("c_vec"), col(part)))
+      .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec"))), k, label)
+    val candidates = paired(inProbed.select(col("vec_id").as("neighbor_id"), col(part)))
+    val candFiles = Jobs.described(spark, s"ann: $kind files $table")(
+      inProbed.select("file").distinct().as[String].collect().toSeq.sorted)
+    val scored = SidecarMaintenance.readCandidateFiles(spark, table, candFiles) match {
+      case Some(corpus) => candidates
         .join(corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec")),
           Seq("neighbor_id"))
-        .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec"))), k)
-      case None =>
-        // same schema as the non-empty path (q_id/neighbor_id take the
-        // id column's type), just zero rows
-        probes.select(col("q_id"), col("q_id").as("neighbor_id"))
-          .withColumn("rank", lit(0L)).limit(0)
+        .withColumn("cos", VectorFunctions.cosine(col("q_vec"), col("c_vec")))
+      // no candidate file survives: nothing to score
+      case None => candidates.withColumn("cos", lit(null).cast("double")).limit(0)
     }
-  }
-
-  /** The exact re-rank every ANN probe ends with: per query, the
-    * scored candidates by `cos` descending, ties to the lower
-    * neighbor id, the first `k` as (q_id, neighbor_id, rank). */
-  private[sinks] def rankByCosine(scored: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored
-      .select(col("q_id"), col("neighbor_id"), col("cos"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("rank"))
+    RankTopK.frame(scored, k, label)
   }
 }

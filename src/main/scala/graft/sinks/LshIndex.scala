@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.core.Jobs
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -298,10 +299,10 @@ object LshIndex {
     // ([[SidecarMaintenance.snapshotRead]]): the probe runs THROUGH a
     // live refresh's commit window on the pre-commit truth
     val refsSnap = SidecarMaintenance.snapshotRead(spark, refsPath(table))
-    val (q, probedBuckets) = probeSet(spark, queries,
-      modelAt(spark, refsMetaPath(table)), probeRadius, idCol, vecCol)
-    IvfIndex.probeTopK(spark, table, refsSnap, "bucket", probedBuckets, q, k,
-      refs = true, idCol, vecCol)
+    val probes = Jobs.described(spark, s"ann: lsh refs queries $table")(probeSet(
+      queries, modelAt(spark, refsMetaPath(table)), probeRadius, idCol, vecCol))
+    IvfIndex.probeTopK(spark, table, refsSnap, "bucket", probes, k, "lsh", refs = true,
+      idCol, vecCol)
   }
 
   /** Multi-probe search off the persisted buckets: each query probes
@@ -319,28 +320,25 @@ object LshIndex {
     // committed-snapshot read: serves through a live commit window
     // ([[SidecarMaintenance.snapshotRead]])
     val bucketsSnap = SidecarMaintenance.snapshotRead(spark, bucketsPath(table))
-    val (q, probedBuckets) = probeSet(spark, queries, readMeta(spark, table),
-      probeRadius, idCol, vecCol)
-    IvfIndex.probeTopK(spark, table, bucketsSnap, "bucket", probedBuckets, q, k,
-      refs = false, idCol, vecCol)
+    val probes = Jobs.described(spark, s"ann: lsh queries $table")(probeSet(
+      queries, readMeta(spark, table), probeRadius, idCol, vecCol))
+    IvfIndex.probeTopK(spark, table, bucketsSnap, "bucket", probes, k, "lsh", refs = false,
+      idCol, vecCol)
   }
 
   /** The probe set of a query batch: every query (q_id, q_vec) with
     * each bucket within Hamming radius `probeRadius` of its home
-    * signature under `model` (planes, seed), and the distinct probed
-    * buckets. Collected ONCE (driver-bounded by contract: queries ×
-    * Hamming ball) and re-joined as a LocalRelation — replaces the
-    * localCheckpoint + distinct-collect + broadcast-build jobs. The
+    * signature under `model` (planes, seed). Collected ONCE
+    * (driver-bounded by contract: queries × Hamming ball). The
     * buckets are INTEGER, the type partition inference reads
     * `bucket=N` directories back as: a long literal would wrap the
     * partition column in a cast and kill the pruning. */
   private def probeSet(
-      spark: SparkSession,
       queries: DataFrame,
       model: (Int, Long),
       probeRadius: Int,
       idCol: String,
-      vecCol: String): (DataFrame, Seq[Any]) = {
+      vecCol: String): IvfIndex.Probes = {
     val (planes, seed) = model
     require(probeRadius >= 0 && probeRadius <= planes,
       s"probeRadius ($probeRadius) must be in [0, planes=$planes]")
@@ -352,9 +350,8 @@ object LshIndex {
       .withColumn("sig0",
         VectorFunctions.hyperplaneSignature(col(vecCol), planes, seed))
       .withColumn("bucket", explode(probes))
-      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"), col("bucket"))
-    val qRows = qPlan.collect()
-    (spark.createDataFrame(java.util.Arrays.asList(qRows: _*), qPlan.schema),
-      qRows.map(_.getLong(2).toInt).distinct.toSeq)
+      .select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
+        col("bucket").cast("int").as("bucket"))
+    IvfIndex.Probes(qPlan.schema, qPlan.collect())
   }
 }

@@ -2,6 +2,7 @@ package graft.sinks
 
 import graft.ext.PqSearch
 import graft.functions.{PqAdcScore, PqCodebooks, PqEncode, PqLut, VectorFunctions}
+import graft.plans.RankTopK
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -170,10 +171,10 @@ object PqIndex {
     val corpusVecs = ParquetMemo.readDir(spark, table)
       .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
         VectorFunctions.norm(col(vecCol)).as("c_nrm"))
-    IvfIndex.rankByCosine(corpusVecs.join(broadcast(cands), Seq("neighbor_id"))
+    RankTopK.frame(corpusVecs.join(broadcast(cands), Seq("neighbor_id"))
       .join(qVec, Seq("q_id"))
       .withColumn("cos",
         VectorFunctions.dot(col("q_vec"), col("c_vec"))
-          / (col("q_nrm") * col("c_nrm"))), k)
+          / (col("q_nrm") * col("c_nrm"))), k, s"ann: pq probe $table")
   }
 }

@@ -435,6 +435,8 @@ class IvfIndexSpec extends AnyFunSuite {
       Row(9L, Seq(-0.0, 1.0)))
     def asQuery(rows: Seq[Row]): DataFrame =
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), qSchema)
+    def asFrame(p: IvfIndex.Probes): DataFrame =
+      spark.createDataFrame(java.util.Arrays.asList(p.rows: _*), p.schema)
     // NaN != NaN under Row equality: compare rendered rows
     def rendered(df: DataFrame): Seq[String] =
       df.collect().map(_.toString).toSeq.sorted
@@ -446,7 +448,8 @@ class IvfIndexSpec extends AnyFunSuite {
       val q0 = asQuery(rows)
       val q = if (floats) q0.withColumn("q_vec", col("q_vec").cast("array<float>")) else q0
       val want = windowProbes(q, cents, nProbe)
-      val (got, cells) = IvfIndex.probeSet(spark, q, (centSchema, centRows), nProbe)
+      val probes = IvfIndex.probeSet(q, (centSchema, centRows), nProbe)
+      val (got, cells) = (asFrame(probes), probes.parts)
       val clue = s"rows=${rows.size} floats=$floats nProbe=$nProbe"
       assert(got.schema === want.schema, clue)
       assert(rendered(got) === rendered(want), clue)
@@ -459,7 +462,7 @@ class IvfIndexSpec extends AnyFunSuite {
       Row(0.0, Seq(0.1, 0.1)), Row(-0.0, Seq(1.8, 0.3)),
       Row(nan, Seq(0.2, 1.7)), Row(nan, Seq(-1.6, -0.1))), dSchema)
     for (nProbe <- Seq(1, 2, 3)) {
-      val (got, _) = IvfIndex.probeSet(spark, dq, (centSchema, centRows), nProbe)
+      val got = asFrame(IvfIndex.probeSet(dq, (centSchema, centRows), nProbe))
       assert(rendered(got) === rendered(windowProbes(dq, cents, nProbe)), s"nProbe=$nProbe")
     }
   }

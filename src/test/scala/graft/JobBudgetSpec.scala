@@ -7,6 +7,7 @@ import graft.sinks.{BloomIndex, InvertedIndex, IvfIndex, LshIndex, MergeUpsert, 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The job budget: the exact number of Spark jobs a public engine
   * entry submits on a small fixture, counted by [[Meter]]. A change
@@ -21,8 +22,9 @@ class JobBudgetSpec extends AnyFunSuite {
   private def assertJobs(r: Meter.Reading, expected: Int): Unit =
     assert(r.jobs.size === expected, r.labels.mkString("\n"))
 
-  /** A build or refresh: `expected` jobs, each with a description. */
-  private def assertBuild(r: Meter.Reading, expected: Int): Unit = {
+  /** A build, refresh or labelled probe: `expected` jobs, each with a
+    * description. */
+  private def assertLabelled(r: Meter.Reading, expected: Int): Unit = {
     assertJobs(r, expected)
     assert(r.jobs.forall(_.description.nonEmpty), r.labels.mkString("\n"))
   }
@@ -78,6 +80,16 @@ class JobBudgetSpec extends AnyFunSuite {
     Meter.during(spark)(probe.collect())._2
   }
 
+  /** The bytes the calling thread reads from `file:` filesystems
+    * while `f` runs. */
+  private def driverBytesRead(f: => Unit): Long = {
+    def read = org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .filter(_.getScheme == "file").map(_.getThreadStatistics.getBytesRead).sum
+    val before = read
+    f
+    read - before
+  }
+
   /** The jobs of `refresh` over one appended file after `index`. */
   private def refreshed(index: String => Unit)(refresh: String => Unit): Meter.Reading = {
     val path = vectors("budget-idx")
@@ -88,48 +100,82 @@ class JobBudgetSpec extends AnyFunSuite {
 
   test("IvfIndex.collect") {
     val path = vectors("budget-ivf")
-    assertBuild(Meter.during(spark)(IvfIndex.collect(spark, path, nCells = 4))._2, 24)
+    assertLabelled(Meter.during(spark)(IvfIndex.collect(spark, path, nCells = 4))._2, 24)
   }
 
   test("IvfIndex.refresh over one appended file") {
-    assertBuild(refreshed(IvfIndex.collect(spark, _, nCells = 4))(IvfIndex.refresh(spark, _)), 7)
+    assertLabelled(refreshed(IvfIndex.collect(spark, _, nCells = 4))(IvfIndex.refresh(spark, _)), 7)
   }
+
+  // The probes below collect a non-local query set (one job), then
+  // run the probe. The cells and buckets probes have no exchange: the
+  // probe is one job, labelled. The refs and PQ probes join the corpus,
+  // and adaptive execution submits those stages under the caller's
+  // label, here none.
 
   test("IvfIndex.topK collect, steady state") {
     val path = vectors("budget-ivf-probe")
     IvfIndex.collect(spark, path, nCells = 4)
     val q = queries(path)
-    assertJobs(steady(IvfIndex.topK(spark, path, q, k = 5, nProbe = 2)), 4)
+    assertLabelled(steady(IvfIndex.topK(spark, path, q, k = 5, nProbe = 2)), 2)
+  }
+
+  test("IvfIndex.topK over no queries after a refresh: no job, the metadata reads paid") {
+    val path = vectors("budget-ivf-reopen")
+    IvfIndex.collect(spark, path, nCells = 4)
+    val q = spark.createDataFrame(queries(path).collectAsList(), queries(path).schema)
+    IvfIndex.topK(spark, path, q, k = 5, nProbe = 2).collect()
+    appendVectors(path)
+    IvfIndex.refresh(spark, path)
+    assertJobs(Meter.during(spark)(
+      IvfIndex.topK(spark, path, q.limit(0), k = 5, nProbe = 2))._2, 0)
+    // the empty probe resolved the new snapshot and the centroids: the
+    // next probe's build reads no byte of the lake on the driver
+    assert(driverBytesRead(IvfIndex.topK(spark, path, q, k = 5, nProbe = 2)) === 0L)
+  }
+
+  test("IvfIndex.topKRefs collect, steady state") {
+    val path = vectors("budget-ivf-refs-probe")
+    IvfIndex.collectRefs(spark, path, nCells = 4)
+    val q = queries(path)
+    assertJobs(steady(IvfIndex.topKRefs(spark, path, q, k = 5, nProbe = 2)), 5)
   }
 
   test("IvfIndex.refreshRefs over one appended file") {
-    assertBuild(refreshed(IvfIndex.collectRefs(spark, _, nCells = 4))(IvfIndex.refreshRefs(spark, _)), 7)
+    assertLabelled(refreshed(IvfIndex.collectRefs(spark, _, nCells = 4))(IvfIndex.refreshRefs(spark, _)), 7)
   }
 
   test("LshIndex.refreshRefs over one appended file") {
-    assertBuild(refreshed(LshIndex.collectRefs(spark, _, planes = 3))(LshIndex.refreshRefs(spark, _)), 7)
+    assertLabelled(refreshed(LshIndex.collectRefs(spark, _, planes = 3))(LshIndex.refreshRefs(spark, _)), 7)
   }
 
   test("LshIndex.refresh over one appended file") {
-    assertBuild(refreshed(LshIndex.collect(spark, _, planes = 3))(LshIndex.refresh(spark, _)), 7)
+    assertLabelled(refreshed(LshIndex.collect(spark, _, planes = 3))(LshIndex.refresh(spark, _)), 7)
   }
 
   test("LshIndex.topK collect, steady state") {
     val path = vectors("budget-lsh-probe")
     LshIndex.collect(spark, path, planes = 3)
     val q = queries(path)
-    assertJobs(steady(LshIndex.topK(spark, path, q, k = 5, probeRadius = 1)), 4)
+    assertLabelled(steady(LshIndex.topK(spark, path, q, k = 5, probeRadius = 1)), 2)
+  }
+
+  test("LshIndex.topKRefs collect, steady state") {
+    val path = vectors("budget-lsh-refs-probe")
+    LshIndex.collectRefs(spark, path, planes = 3)
+    val q = queries(path)
+    assertJobs(steady(LshIndex.topKRefs(spark, path, q, k = 5, probeRadius = 1)), 5)
   }
 
   test("PqIndex.refresh over one appended file") {
-    assertBuild(refreshed(PqIndex.collect(spark, _, m = 8, ks = 16))(PqIndex.refresh(spark, _)), 8)
+    assertLabelled(refreshed(PqIndex.collect(spark, _, m = 8, ks = 16))(PqIndex.refresh(spark, _)), 8)
   }
 
   test("PqIndex.topK collect, steady state") {
     val path = vectors("budget-pq-probe")
     PqIndex.collect(spark, path, m = 8, ks = 16)
     val q = queries(path)
-    assertJobs(steady(PqIndex.topK(spark, path, q, k = 5, candidateK = 20)), 6)
+    assertJobs(steady(PqIndex.topK(spark, path, q, k = 5, candidateK = 20)), 5)
   }
 
   test("InvertedIndex.refresh over one appended file") {
@@ -139,7 +185,7 @@ class JobBudgetSpec extends AnyFunSuite {
     InvertedIndex.collect(spark, path, "text", "doc_id")
     Fixtures.tbl(spark, sf, "documents").where(col("doc_id") >= 40 && col("doc_id") < 50)
       .select("doc_id", "text").coalesce(1).write.mode("append").parquet(path)
-    assertBuild(Meter.during(spark)(InvertedIndex.refresh(spark, path, "text", "doc_id"))._2, 9)
+    assertLabelled(Meter.during(spark)(InvertedIndex.refresh(spark, path, "text", "doc_id"))._2, 9)
   }
 
   /** Two files of (sk, v), indexed, then a third appended. */
@@ -154,11 +200,11 @@ class JobBudgetSpec extends AnyFunSuite {
 
   test("StatsIndex.refresh over one appended file") {
     val path = keyed("budget-stats")(StatsIndex.collect(spark, _, Seq("v")))
-    assertBuild(Meter.during(spark)(StatsIndex.refresh(spark, path, Seq("v")))._2, 6)
+    assertLabelled(Meter.during(spark)(StatsIndex.refresh(spark, path, Seq("v")))._2, 6)
   }
 
   test("BloomIndex.refresh over one appended file") {
     val path = keyed("budget-bloom")(BloomIndex.collect(spark, _, "sk", 100L))
-    assertBuild(Meter.during(spark)(BloomIndex.refresh(spark, path, "sk"))._2, 6)
+    assertLabelled(Meter.during(spark)(BloomIndex.refresh(spark, path, "sk"))._2, 6)
   }
 }
